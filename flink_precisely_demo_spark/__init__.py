@@ -9,8 +9,7 @@ tumbling-window SUM -> Kafka sink), built Spark-first:
   optimized by Catalyst (the reference delegated to the Blink
   planner; we delegate to Catalyst — no custom optimizer rules),
 - streaming uses Structured Streaming (watermarks, windowed aggs,
-  applyInPandasWithState / transformWithStateInPandas for the
-  stateful enrichment join),
+  applyInPandasWithState for the stateful enrichment join),
 - extension operators for large-scale training-data pipelines
   (dedup, similarity search, text analysis, multimodal columns)
   are first-class citizens under ``operators/``.

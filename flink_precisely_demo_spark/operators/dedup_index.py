@@ -13,10 +13,8 @@ index of per-document band digests, partitioned by ``band_id``:
 - ``build_band_index``: band the corpus (the exact
   ``_minhash_banded`` kernel the in-corpus pipeline uses — one
   banding rule, no drift) and write ``(doc_id, band_key)`` parquet
-  under ``bands/band_id=B/``, published with the same atomic
-  nonce-stage + double-rename protocol as the ANN index (the
-  staging/marker helpers are imported from operators/ann_index —
-  one publish protocol in the codebase, not two).
+  under ``bands/band_id=B/``, published as a new base
+  (operators/lsm.py).
 - ``ingest_batch``: band ONLY the incoming batch, union with the
   index's band rows, and label each new document novel-or-duplicate
   in one bucket-grouped aggregation — no pairwise explosion: per
@@ -30,10 +28,8 @@ index of per-document band digests, partitioned by ``band_id``:
   pipeline applies, measured over the COMBINED (index + batch)
   bucket population.
 - ``append_bands``: the accepted batch's band rows become a delta
-  generation (``deltas/delta-NNNNNN-*/``, atomic-marker publish —
-  the ANN index's LSM shape re-expressed for band digests), so
-  tomorrow's ingest sees today's documents without a rebuild;
-  ``compact_band_index`` folds deltas into a fresh base.
+  generation, so tomorrow's ingest sees today's documents without a
+  rebuild; ``compact_band_index`` folds deltas into a fresh base.
 - **maintained clusters** (r14): ``build_band_index(clusters=True)``
   seeds persistent cluster membership (``clusters/`` — the
   non-trivial min-id labels of the build corpus's capped-bucket
@@ -63,18 +59,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ann_index import (
-    _delta_dirs,
-    _nonce,
-    _persist_tags,
-    _publish_index,
-    _reap_stale_delta_stages,
-    _reap_stale_dirs,
-    applied_tags,
-    delta_tags,
-    index_ok,
-)
 from .dedup import _minhash_banded, connected_components
+from .lsm import (
+    all_generations,
+    delta_count,
+    delta_frames,
+    index_ok,
+    new_base,
+    new_delta,
+)
 
 _DEFAULTS = dict(num_hashes=16, bands=4, shingle_n=3)
 
@@ -126,40 +119,30 @@ def build_band_index(corpus: DataFrame, index_path: str,
     singletons are implicit), so later ingests can extend cluster
     membership without ever re-banding the corpus
     (:func:`ingest_cluster_edges` / :func:`cluster_labels`)."""
-    _reap_stale_dirs(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
-    banded = _minhash_banded(corpus, text_col, id_col,
-                             num_hashes, bands, shingle_n)
-    if clusters:
-        banded = banded.persist()       # bands write + edge pass share it
-    try:
-        _write_bands(banded, f"{stage}/bands")
+    with new_base(index_path) as stage:
+        banded = _minhash_banded(corpus, text_col, id_col,
+                                 num_hashes, bands, shingle_n)
         if clusters:
-            comp = connected_components(
-                _star_edges(banded, id_col, max_bucket_size), "a", "b")
-            (comp.filter(F.col("node") != F.col("label"))
-             .select(F.col("node").alias(id_col),
-                     F.col("label").alias("cluster_id"))
-             .write.mode("overwrite").parquet(f"{stage}/clusters"))
-    finally:
-        if clusters:
-            banded.unpersist()
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
+            banded = banded.persist()   # bands write + edge pass share it
+        try:
+            _write_bands(banded, f"{stage}/bands")
+            if clusters:
+                comp = connected_components(
+                    _star_edges(banded, id_col, max_bucket_size), "a", "b")
+                (comp.filter(F.col("node") != F.col("label"))
+                 .select(F.col("node").alias(id_col),
+                         F.col("label").alias("cluster_id"))
+                 .write.mode("overwrite").parquet(f"{stage}/clusters"))
+        finally:
+            if clusters:
+                banded.unpersist()
 
 
 def _index_bands(spark: SparkSession, index_path: str,
                  id_col: str) -> DataFrame:
     """Base + published delta generations of (id, band_id, band_key)."""
-    from functools import reduce
-
-    frames = [spark.read.parquet(f"{index_path}/bands")]
-    for _, d in _delta_dirs(index_path):
-        frames.append(spark.read.parquet(os.path.join(d, "bands")))
-    out = reduce(lambda a, b: a.unionByName(b), frames)
-    return out.select(id_col, F.col("band_id").cast("long"), "band_key")
+    return all_generations(spark, index_path, "bands") \
+        .select(id_col, F.col("band_id").cast("long"), "band_key")
 
 
 def _ingest_candidates(spark: SparkSession, index_path: str,
@@ -279,13 +262,11 @@ def append_bands(spark: SparkSession, index_path: str, batch: DataFrame,
                  banded: DataFrame | None = None,
                  cluster_edges: DataFrame | None = None) -> int:
     """Publish the batch's band rows as a delta generation so the
-    next ingest sees them; returns the generation number. ``tag``
-    rides the delta's atomic rename (the ANN index's writer-tag
-    contract) so a micro-batch sink can make appends idempotent;
+    next ingest sees them; returns the generation number.
     ``banded`` reuses a pre-computed banding (see ingest_batch);
     ``cluster_edges`` (from :func:`ingest_cluster_edges`) rides the
-    SAME atomic rename so cluster maintenance can never observe a
-    delta whose bands landed but whose edges did not.
+    same delta, so cluster maintenance can never observe bands
+    without their edges.
 
     On an index that carries cluster state (``clusters/`` present),
     ``cluster_edges`` is REQUIRED: cluster_labels folds only deltas
@@ -296,8 +277,6 @@ def append_bands(spark: SparkSession, index_path: str, batch: DataFrame,
     re-reading historical text). Pass ``cluster_edges=`` (the
     streaming sink auto-detects and does this) or build the index
     with ``clusters=False``."""
-    if not index_ok(index_path):
-        raise FileNotFoundError(f"no published index at {index_path}")
     if cluster_edges is None and \
             os.path.isdir(os.path.join(index_path, "clusters")):
         raise ValueError(
@@ -306,27 +285,14 @@ def append_bands(spark: SparkSession, index_path: str, batch: DataFrame,
             "cluster_edges — the delta's links would be silently lost "
             "at the next compaction; pass "
             "cluster_edges=ingest_cluster_edges(...)")
-    deltas = _delta_dirs(index_path)
-    seq = (deltas[-1][0] + 1) if deltas else 1
-    root = os.path.join(index_path, "deltas")
-    os.makedirs(root, exist_ok=True)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = os.path.join(root, f".stage-{nonce}")
-    final = os.path.join(root, f"delta-{seq:06d}-{nonce}")
-    if banded is None:
-        banded = _minhash_banded(batch, text_col, id_col,
-                                 num_hashes, bands, shingle_n)
-    _write_bands(banded, f"{stage}/bands")
-    if cluster_edges is not None:
-        cluster_edges.write.mode("overwrite") \
-            .parquet(f"{stage}/cluster_edges")
-    if tag is not None:
-        with open(os.path.join(stage, "_TAG"), "w") as f:
-            f.write(tag + "\n")
-    with open(os.path.join(stage, "_DELTA_OK"), "w") as f:
-        f.write("ok\n")
-    os.rename(stage, final)
+    with new_delta(index_path, tag) as (stage, seq):
+        if banded is None:
+            banded = _minhash_banded(batch, text_col, id_col,
+                                     num_hashes, bands, shingle_n)
+        _write_bands(banded, f"{stage}/bands")
+        if cluster_edges is not None:
+            cluster_edges.write.mode("overwrite") \
+                .parquet(f"{stage}/cluster_edges")
     return seq
 
 
@@ -354,16 +320,13 @@ def cluster_labels(spark: SparkSession, index_path: str,
             f"index at {index_path} has no cluster state — build with "
             "build_band_index(..., clusters=True)")
     base = spark.read.parquet(cl)
-    edge_dirs = [os.path.join(d, "cluster_edges")
-                 for _, d in _delta_dirs(index_path)]
-    edge_dirs = [d for d in edge_dirs if os.path.isdir(d)]
-    if not edge_dirs:
+    edge_frames = delta_frames(spark, index_path, "cluster_edges")
+    if not edge_frames:
         return base.select(id_col, "cluster_id")
     from functools import reduce
 
-    delta_e = reduce(lambda a, b: a.unionByName(b),
-                     [spark.read.parquet(d).select("a", "b")
-                      for d in edge_dirs])
+    delta_e = reduce(DataFrame.unionByName,
+                     [e.select("a", "b") for e in edge_frames])
     edges = base.select(F.col(id_col).alias("a"),
                         F.col("cluster_id").alias("b")) \
                 .unionByName(delta_e)
@@ -402,32 +365,20 @@ def band_index_stats(spark: SparkSession, index_path: str,
 
 def compact_band_index(spark: SparkSession, index_path: str,
                        id_col: str = "doc_id") -> int:
-    """Fold deltas into a fresh base (atomic double-rename publish);
-    returns the number of generations folded. Live writer tags are
-    persisted to the sibling ``.applied.json`` manifest first, so an
-    out-of-band compact never erases a streaming sink's idempotence
-    record (the same contract as compact_ann_index). On a clustered
-    index the maintained labels fold too: the union-find forest
-    (base star edges + delta cluster edges) collapses into a fresh
-    non-trivial label table, so post-compaction cluster reads are a
-    plain scan again."""
-    deltas = _delta_dirs(index_path)
-    if not deltas:
-        return 0
-    if delta_tags(index_path):
-        _persist_tags(index_path, applied_tags(index_path))
-    _reap_stale_dirs(index_path)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
-    allb = _index_bands(spark, index_path, id_col)
-    _write_bands(allb, f"{stage}/bands")
-    if os.path.isdir(os.path.join(index_path, "clusters")):
-        # fold BEFORE the publish swaps the old base out: the write
-        # materializes the propagation while base+deltas still exist
-        cluster_labels(spark, index_path, id_col) \
-            .write.mode("overwrite").parquet(f"{stage}/clusters")
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
-    return len(deltas)
+    """Fold deltas into a fresh base; returns the number of
+    generations folded. On a clustered index the maintained labels
+    fold too: the union-find forest (base star edges + delta cluster
+    edges) collapses into a fresh non-trivial label table, so
+    post-compaction cluster reads are a plain scan again."""
+    folded = delta_count(index_path)
+    with new_base(index_path, compact=True) as stage:
+        if stage is None:
+            return 0
+        _write_bands(_index_bands(spark, index_path, id_col),
+                     f"{stage}/bands")
+        if os.path.isdir(os.path.join(index_path, "clusters")):
+            # fold BEFORE the publish swaps the old base out: the write
+            # materializes the propagation while base+deltas still exist
+            cluster_labels(spark, index_path, id_col) \
+                .write.mode("overwrite").parquet(f"{stage}/clusters")
+    return folded

@@ -9,9 +9,8 @@ stride-1 k-token window hashing) over the WHOLE corpus on every run.
 A production pipeline asks the ingest-shaped question instead: "which
 verbatim spans does today's batch share with the 100 TB we already
 keep?" This module materializes the window-hash table once as an LSM
-index (the same delta/compact/writer-tag protocol as the band and ANN
-indexes — operators/{dedup_index,ann_index}.py; one publish protocol
-in the codebase, not three):
+index (the generation protocol of operators/lsm.py, shared with the
+band, ANN and text indexes):
 
 - ``build_substring_index``: fold the corpus text once and persist
   ``windows/`` (win_hash, id, pos — 16-hex + two longs, linear in
@@ -26,7 +25,7 @@ in the codebase, not three):
   ``exact_substring_spans`` over the cumulative corpus (pinned by
   tests/test_substring_index.py).
 - ``append_windows``: the accepted batch's window rows + per-hash
-  stat partials become a tagged delta generation; ``compact`` folds
+  stat partials become a delta generation; ``compact`` folds
   deltas into a fresh base AND prunes window rows of hashes whose
   folded df/tot exceed the manifest caps — safe because the corpus
   is append-only, so an over-cap anchor can never fall back under
@@ -63,23 +62,26 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ann_index import (
-    _delta_dirs,
-    _nonce,
-    _persist_tags,
-    _publish_index,
-    _reap_stale_delta_stages,
-    _reap_stale_dirs,
-    applied_tags,
-    delta_tags,
-    index_ok,
-)
 from .dedup import sliding_window_hashes, spans_from_windows
+from .lsm import (
+    all_generations,
+    delta_count,
+    index_ok,
+    new_base,
+    new_delta,
+)
+
+_MANIFEST = "substring_manifest.json"
 
 
 def _manifest(index_path: str) -> dict:
-    with open(os.path.join(index_path, "substring_manifest.json")) as f:
+    with open(os.path.join(index_path, _MANIFEST)) as f:
         return json.load(f)
+
+
+def _write_manifest(dest: str, man: dict) -> None:
+    with open(os.path.join(dest, _MANIFEST), "w") as f:
+        json.dump(man, f)
 
 
 def _hash_stats(w: DataFrame, id_col: str) -> DataFrame:
@@ -117,39 +119,23 @@ def build_substring_index(corpus: DataFrame, index_path: str,
     makes the prune lossless."""
     if max_occ is None:
         max_occ = 4 * max_df
-    _reap_stale_dirs(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
-    w = sliding_window_hashes(corpus, text_col, id_col, k)
-    _write_gen(w, id_col, stage)
-    with open(os.path.join(stage, "substring_manifest.json"), "w") as f:
-        json.dump({"k": k, "id_col": id_col, "max_df": max_df,
-                   "max_occ": max_occ}, f)
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
+    with new_base(index_path) as stage:
+        _write_gen(sliding_window_hashes(corpus, text_col, id_col, k),
+                   id_col, stage)
+        _write_manifest(stage, {"k": k, "id_col": id_col,
+                                "max_df": max_df, "max_occ": max_occ})
 
 
 def _index_windows(spark: SparkSession, index_path: str) -> DataFrame:
     """Absorbed window rows: base + every published delta."""
-    from functools import reduce
-
-    frames = [spark.read.parquet(f"{index_path}/windows")]
-    for _, d in _delta_dirs(index_path):
-        frames.append(spark.read.parquet(os.path.join(d, "windows")))
-    return reduce(lambda a, b: a.unionByName(b), frames)
+    return all_generations(spark, index_path, "windows")
 
 
 def _index_stats(spark: SparkSession, index_path: str) -> DataFrame:
     """Absorbed per-hash (df, tot): generation partials summed —
     exact because a document belongs to exactly one generation."""
-    from functools import reduce
-
-    frames = [spark.read.parquet(f"{index_path}/stats")]
-    for _, d in _delta_dirs(index_path):
-        frames.append(spark.read.parquet(os.path.join(d, "stats")))
-    allp = reduce(lambda a, b: a.unionByName(b), frames)
-    return allp.groupBy("win_hash").agg(
+    return all_generations(spark, index_path, "stats").groupBy(
+        "win_hash").agg(
         F.sum("df").cast("long").alias("df"),
         F.sum("tot").cast("long").alias("tot"))
 
@@ -159,31 +145,14 @@ def append_windows(spark: SparkSession, index_path: str,
                    id_col: str = "doc_id", tag: str | None = None,
                    windows: DataFrame | None = None) -> int:
     """Publish the batch's window rows + stat partials as a delta
-    generation (atomic nonce-stage rename; ``tag`` rides it for the
-    writer-idempotence contract). ``windows`` reuses a pre-computed
+    generation carrying ``tag``. ``windows`` reuses a pre-computed
     hash table so an ingest-then-append caller folds the batch text
     once. Returns the generation number."""
-    if not index_ok(index_path):
-        raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
-    deltas = _delta_dirs(index_path)
-    seq = (deltas[-1][0] + 1) if deltas else 1
-    root = os.path.join(index_path, "deltas")
-    os.makedirs(root, exist_ok=True)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = os.path.join(root, f".stage-{nonce}")
-    final = os.path.join(root, f"delta-{seq:06d}-{nonce}")
-    if windows is None:
-        windows = sliding_window_hashes(batch, text_col, id_col,
-                                        man["k"])
-    _write_gen(windows, id_col, stage)
-    if tag is not None:
-        with open(os.path.join(stage, "_TAG"), "w") as f:
-            f.write(tag + "\n")
-    with open(os.path.join(stage, "_DELTA_OK"), "w") as f:
-        f.write("ok\n")
-    os.rename(stage, final)
+    with new_delta(index_path, tag) as (stage, seq):
+        if windows is None:
+            windows = sliding_window_hashes(batch, text_col, id_col,
+                                            _manifest(index_path)["k"])
+        _write_gen(windows, id_col, stage)
     return seq
 
 
@@ -271,7 +240,7 @@ def substring_index_stats(spark: SparkSession,
     exact-dedup pre-pass on the hot cohorts)."""
     man = _manifest(index_path)
     st = _index_stats(spark, index_path)
-    n_deltas = len(_delta_dirs(index_path))
+    n_deltas = delta_count(index_path)
     return st.agg(
         F.coalesce(F.sum("tot"), F.lit(0)).cast("long")
         .alias("n_anchors"),
@@ -285,39 +254,27 @@ def substring_index_stats(spark: SparkSession,
 
 def compact_substring_index(spark: SparkSession,
                             index_path: str) -> int:
-    """Fold deltas into a fresh base (atomic double-rename publish)
-    and PRUNE window rows of over-cap hashes (folded df > max_df or
-    tot > max_occ — lossless for every query this index can serve,
-    per the append-only monotonicity argument). Stats rows are kept
-    in full, so later ingests still see pruned hashes as over-cap
-    instead of rediscovering them. Live writer tags persist to the
-    sibling manifest first (the shared idempotence contract).
-    Returns the number of generations folded."""
-    deltas = _delta_dirs(index_path)
-    if not deltas:
-        return 0
-    man = _manifest(index_path)
-    id_col = man["id_col"]
-    if delta_tags(index_path):
-        _persist_tags(index_path, applied_tags(index_path))
-    _reap_stale_dirs(index_path)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
-    stats = _index_stats(spark, index_path).persist()
-    try:
-        keep = (stats.filter((F.col("df") <= man["max_df"])
-                             & (F.col("tot") <= man["max_occ"]))
-                .select("win_hash"))
-        w = _index_windows(spark, index_path).join(keep, "win_hash")
-        (w.repartition("win_hash")
-         .write.mode("overwrite").parquet(f"{stage}/windows"))
-        stats.write.mode("overwrite").parquet(f"{stage}/stats")
-    finally:
-        stats.unpersist()
-    with open(os.path.join(stage, "substring_manifest.json"), "w") as f:
-        json.dump(man, f)
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
-    return len(deltas)
+    """Fold deltas into a fresh base and PRUNE window rows of
+    over-cap hashes (folded df > max_df or tot > max_occ — lossless
+    for every query this index can serve, per the append-only
+    monotonicity argument). Stats rows are kept in full, so later
+    ingests still see pruned hashes as over-cap instead of
+    rediscovering them. Returns the number of generations folded."""
+    folded = delta_count(index_path)
+    with new_base(index_path, compact=True) as stage:
+        if stage is None:
+            return 0
+        man = _manifest(index_path)
+        stats = _index_stats(spark, index_path).persist()
+        try:
+            keep = (stats.filter((F.col("df") <= man["max_df"])
+                                 & (F.col("tot") <= man["max_occ"]))
+                    .select("win_hash"))
+            w = _index_windows(spark, index_path).join(keep, "win_hash")
+            (w.repartition("win_hash")
+             .write.mode("overwrite").parquet(f"{stage}/windows"))
+            stats.write.mode("overwrite").parquet(f"{stage}/stats")
+        finally:
+            stats.unpersist()
+        _write_manifest(stage, man)
+    return folded

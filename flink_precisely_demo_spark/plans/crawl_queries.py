@@ -45,7 +45,7 @@ from ..sources.parquet import load_table
 from ..operators.broadcast import hint_broadcast_if_small
 from .dedup_queries import minhash_bands_ctes as _bands_ctes_from
 from .dedup_queries import substr_contam_ids_ctes as _contam_ctes
-from .queries import query
+from .queries import query, staged_fixture
 from .text_queries import _lang_case_sql, _marker_count, _TOKS, canonical_sql
 from ..scratch import scratch_dir
 
@@ -732,9 +732,6 @@ def _csv_ingest_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN upsert, one foreachBatch pipeline (streaming/corpus_pipeline.py)
 # ---------------------------------------------------------------------------
 
-_CORPUS_PIPE_CACHE: dict[str, str] = {}
-
-
 def _corpus_pipeline_root(spark: SparkSession, sf_dir: str) -> str:
     """Build-once fixture: band + ANN indexes over the GATED
     historical corpus (doc_id % 5 != 0), then the %5==0 documents
@@ -744,82 +741,65 @@ def _corpus_pipeline_root(spark: SparkSession, sf_dir: str) -> str:
     benchmark split (raw documents with doc_id % 7 == 3 — overlaps
     both the historical corpus and the stream, so benchmark documents
     crawled into the feed are cut, the real leakage story).
-    Everything stages under a nonce dir with ONE atomic publish — a
-    published root is by construction a fully-drained pipeline, so
-    completeness is just the markers."""
+    Everything stages as ONE new base — a published root is by
+    construction a fully-drained pipeline, so completeness is just
+    the markers."""
     import os
-    import re
     import shutil
-    import tempfile
 
-    from ..operators.ann_index import (_nonce, _publish_index,
-                                       _reap_stale_dirs, build_ann_index,
-                                       index_ok)
+    from ..operators.ann_index import build_ann_index
     from ..operators.dedup_index import build_band_index
+    from ..operators.lsm import index_ok
+    from ..operators.text_index import build_text_index
     from ..streaming.corpus_pipeline import (DEFAULT_QUALITY_GATE,
                                              run_corpus_ingest,
                                              synthesize_documents_envelope)
     from ..streaming.replay_stage import stage_trigger_text_files
 
-    cached = _CORPUS_PIPE_CACHE.get(sf_dir)
-    if cached is None:
-        slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
-        # pipe3: the late-r15 shape (decontamination + text-index
-        # legs) — the bumped slug can never resurrect an earlier
-        # published root missing a leg
-        path = os.path.join(tempfile.gettempdir(), f"corpus_pipe3_{slug}")
-        band = os.path.join(path, "band_index")
-        ann = os.path.join(path, "ann_index")
-        tixp = os.path.join(path, "text_index")
-        verd = os.path.join(path, "verdicts")
-        dec = os.path.join(path, "decontam")
-        if not (index_ok(band) and index_ok(ann) and index_ok(tixp)
-                and os.path.isdir(verd) and os.path.isdir(dec)):
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            shutil.rmtree(stage, ignore_errors=True)
-            os.makedirs(stage)
-            docs = load_table(spark, sf_dir, "documents") \
-                .select("doc_id", "text")
-            emb = load_table(spark, sf_dir, "embeddings") \
-                .select(F.col("vec_id").alias("doc_id"), "embedding")
-            gate = ((quality_score("text") >= F.lit(DEFAULT_QUALITY_GATE))
-                    & (language_id("text") != F.lit("und")))
-            hist = docs.filter((F.col("doc_id") % 5 != 0) & gate)
-            build_band_index(hist, os.path.join(stage, "band_index"))
-            build_ann_index(hist.select("doc_id").join(emb, "doc_id"),
-                            os.path.join(stage, "ann_index"),
-                            id_col="doc_id")
-            from ..operators.text_index import build_text_index
-            build_text_index(hist, os.path.join(stage, "text_index"))
-            work = scratch_dir(prefix="corpus_pipe_replay_")
-            try:
-                feed_dir = stage_trigger_text_files(
-                    synthesize_documents_envelope(
-                        docs.filter(F.col("doc_id") % 5 == 0),
-                        extra_cols=[
-                            F.when(F.col("doc_id") % 10 == 0, 0)
-                            .otherwise(1).alias("b")]),
-                    work, F.col("b"), "cdc_docs")
-                raw = (spark.readStream.format("text")
-                       .option("maxFilesPerTrigger", 1).load(feed_dir))
-                run_corpus_ingest(raw, os.path.join(stage, "band_index"),
-                                  os.path.join(stage, "ann_index"),
-                                  os.path.join(stage, "verdicts"), emb,
-                                  checkpoint=os.path.join(work, "ckpt"),
-                                  compact_every=2,
-                                  benchmark=docs.filter(
-                                      F.col("doc_id") % 7 == 3),
-                                  decontam_path=os.path.join(
-                                      stage, "decontam"),
-                                  text_index_path=os.path.join(
-                                      stage, "text_index"))
-            finally:
-                shutil.rmtree(work, ignore_errors=True)
-            _publish_index(stage, path, nonce)
-        _CORPUS_PIPE_CACHE[sf_dir] = path
-    return _CORPUS_PIPE_CACHE[sf_dir]
+    def complete(path: str) -> bool:
+        return (all(index_ok(os.path.join(path, leg)) for leg in
+                    ("band_index", "ann_index", "text_index"))
+                and os.path.isdir(os.path.join(path, "verdicts"))
+                and os.path.isdir(os.path.join(path, "decontam")))
+
+    def build(stage: str) -> None:
+        os.makedirs(stage)
+        docs = load_table(spark, sf_dir, "documents") \
+            .select("doc_id", "text")
+        emb = load_table(spark, sf_dir, "embeddings") \
+            .select(F.col("vec_id").alias("doc_id"), "embedding")
+        gate = ((quality_score("text") >= F.lit(DEFAULT_QUALITY_GATE))
+                & (language_id("text") != F.lit("und")))
+        hist = docs.filter((F.col("doc_id") % 5 != 0) & gate)
+        build_band_index(hist, os.path.join(stage, "band_index"))
+        build_ann_index(hist.select("doc_id").join(emb, "doc_id"),
+                        os.path.join(stage, "ann_index"), id_col="doc_id")
+        build_text_index(hist, os.path.join(stage, "text_index"))
+        work = scratch_dir(prefix="corpus_pipe_replay_")
+        try:
+            feed_dir = stage_trigger_text_files(
+                synthesize_documents_envelope(
+                    docs.filter(F.col("doc_id") % 5 == 0),
+                    extra_cols=[F.when(F.col("doc_id") % 10 == 0, 0)
+                                .otherwise(1).alias("b")]),
+                work, F.col("b"), "cdc_docs")
+            raw = (spark.readStream.format("text")
+                   .option("maxFilesPerTrigger", 1).load(feed_dir))
+            run_corpus_ingest(
+                raw, os.path.join(stage, "band_index"),
+                os.path.join(stage, "ann_index"),
+                os.path.join(stage, "verdicts"), emb,
+                checkpoint=os.path.join(work, "ckpt"), compact_every=2,
+                benchmark=docs.filter(F.col("doc_id") % 7 == 3),
+                decontam_path=os.path.join(stage, "decontam"),
+                text_index_path=os.path.join(stage, "text_index"))
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+
+    # pipe3: the late-r15 shape (decontamination + text-index legs) —
+    # the bumped name can never resurrect an earlier published root
+    # missing a leg
+    return staged_fixture("corpus_pipe3", sf_dir, complete, build)
 
 
 @query(

@@ -20,7 +20,7 @@ from ..operators.dedup import (
     simhash_near_dup_pairs,
 )
 from ..sources.parquet import load_table
-from .queries import query
+from .queries import fixture_path, query, staged_fixture
 from ..scratch import scratch_dir
 
 # shared SQL fragments (must stay in lockstep with functions/text.py
@@ -570,10 +570,9 @@ def _band_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per process+dataset) the persisted LSH band index
     over the HISTORICAL corpus slice (doc_id % 5 != 0)."""
     import os
-    import re
-    import tempfile
 
-    from ..operators.dedup_index import build_band_index, index_ok
+    from ..operators.dedup_index import build_band_index
+    from ..operators.lsm import index_ok
 
     def _ok(p: str) -> bool:
         # clusters/ required since r14: the streaming ingest fixture
@@ -583,8 +582,7 @@ def _band_index_path(spark: SparkSession, sf_dir: str) -> str:
 
     cached = _BAND_INDEX_CACHE.get(sf_dir)
     if cached is None or not _ok(cached):
-        slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
-        path = os.path.join(tempfile.gettempdir(), f"band_index_{slug}")
+        path = fixture_path("band_index", sf_dir)
         if not _ok(path):
             hist = load_table(spark, sf_dir, "documents") \
                 .filter(F.col("doc_id") % 5 != 0)
@@ -653,64 +651,44 @@ def _dedup_ingest_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest_batch(spark, path, batch)
 
 
-_INGEST_CLUSTER_CACHE: dict[str, str] = {}
-
-
 def _ingest_cluster_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once fixture for the maintained-cluster pair: the
     historical corpus (doc_id % 5 != 0) is banded WITH cluster state,
     two ingest waves (doc_id % 10 == 0, then % 10 == 5) append
     edge-carrying deltas, and a final compaction folds the union-find
     forest — so the published index's ``clusters/`` is the maintained
-    membership after build + 2 ingests + compact. Everything runs
-    against a nonce-staged dir with ONE atomic publish at the end
-    (the ann-queries staging rule), so a concurrent process never
-    observes a half-ingested index."""
+    membership after build + 2 ingests + compact."""
     import os
-    import re
-    import tempfile
 
-    from ..operators.ann_index import (_delta_dirs, _manifest_path,
-                                       _nonce, _publish_index,
-                                       _reap_stale_dirs, applied_tags,
-                                       index_ok)
     from ..operators.dedup import _minhash_banded
     from ..operators.dedup_index import (append_bands, build_band_index,
                                          compact_band_index,
                                          ingest_cluster_edges)
+    from ..operators.lsm import applied_tags, delta_count, index_ok
 
-    cached = _INGEST_CLUSTER_CACHE.get(sf_dir)
-    if cached is None:
-        slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
-        path = os.path.join(tempfile.gettempdir(),
-                            f"band_clusters_{slug}")
-        complete = (index_ok(path) and not _delta_dirs(path)
-                    and applied_tags(path) >= {"w0", "w1"}
-                    and os.path.isdir(os.path.join(path, "clusters")))
-        if not complete:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = load_table(spark, sf_dir, "documents") \
-                .select("doc_id", "text")
-            build_band_index(docs.filter(F.col("doc_id") % 5 != 0),
-                             stage, clusters=True)
-            for wave, mod in ((0, 0), (1, 5)):
-                batch = docs.filter(F.col("doc_id") % 10 == mod)
-                banded = _minhash_banded(batch, "text", "doc_id",
-                                         16, 4, 3).persist()
-                try:
-                    edges = ingest_cluster_edges(spark, stage,
-                                                 banded=banded)
-                    append_bands(spark, stage, batch, tag=f"w{wave}",
-                                 banded=banded, cluster_edges=edges)
-                finally:
-                    banded.unpersist()
-            compact_band_index(spark, stage)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
-        _INGEST_CLUSTER_CACHE[sf_dir] = path
-    return _INGEST_CLUSTER_CACHE[sf_dir]
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents") \
+            .select("doc_id", "text")
+        build_band_index(docs.filter(F.col("doc_id") % 5 != 0),
+                         stage, clusters=True)
+        for wave, mod in ((0, 0), (1, 5)):
+            batch = docs.filter(F.col("doc_id") % 10 == mod)
+            banded = _minhash_banded(batch, "text", "doc_id",
+                                     16, 4, 3).persist()
+            try:
+                edges = ingest_cluster_edges(spark, stage, banded=banded)
+                append_bands(spark, stage, batch, tag=f"w{wave}",
+                             banded=banded, cluster_edges=edges)
+            finally:
+                banded.unpersist()
+        compact_band_index(spark, stage)
+
+    return staged_fixture(
+        "band_clusters", sf_dir,
+        lambda p: (index_ok(p) and not delta_count(p)
+                   and applied_tags(p) >= {"w0", "w1"}
+                   and os.path.isdir(os.path.join(p, "clusters"))),
+        build)
 
 
 # Shared by the batch-API pair (dedup_ingest_clusters) and its
@@ -810,9 +788,6 @@ def _dedup_ingest_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("cluster_id")))
 
 
-_STREAM_INGEST_CACHE: dict[str, tuple[str, str]] = {}
-
-
 def _stream_ingest_paths(spark: SparkSession, sf_dir: str
                          ) -> tuple[str, str]:
     """Clone the shared band index and drain the 2-wave document
@@ -820,78 +795,53 @@ def _stream_ingest_paths(spark: SparkSession, sf_dir: str
     ``compact_every=2``; returns (index_path, verdicts_path). The
     end state is deterministic (compacted base absorbing both waves,
     manifest recording both tags, verdict dirs for both batches), so
-    the pair of dirs is reusable across processes; the clone stages
-    under a nonce dir and publishes by rename (the
-    ann-queries staging rule)."""
+    the pair of dirs is reusable across processes."""
     import os
-    import re
     import shutil
-    import tempfile
 
-    from ..operators.ann_index import (_delta_dirs, _manifest_path,
-                                       _nonce, _publish_index,
-                                       _reap_stale_dirs, applied_tags,
-                                       index_ok)
+    from ..operators.lsm import (applied_tags, delta_count, index_ok,
+                                 publish)
     from ..streaming.dedup_ingest import run_dedup_ingest
     from ..streaming.replay_stage import stage_trigger_files
 
-    cached = _STREAM_INGEST_CACHE.get(sf_dir)
-    if cached is None:
-        slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
-        path = os.path.join(tempfile.gettempdir(),
-                            f"band_singest_{slug}")
-        vpath = path + ".verdicts"
-        complete = (index_ok(path) and not _delta_dirs(path)
-                    and applied_tags(path) >= {"b0", "b1"}
-                    # r14: the cloned index carries cluster state and
-                    # the sink maintains it — pre-r14 cached end
-                    # states (no clusters/) rebuild once
-                    and os.path.isdir(os.path.join(path, "clusters"))
-                    and all(os.path.isdir(os.path.join(vpath, f"batch={b}"))
-                            for b in (0, 1)))
-        if not complete:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            svpath = stage + ".verdicts"
-            shutil.rmtree(svpath, ignore_errors=True)
-            shutil.copytree(_band_index_path(spark, sf_dir), stage)
-            work = scratch_dir(prefix="dedup_ingest_replay_")
-            try:
-                batch = load_table(spark, sf_dir, "documents") \
-                    .filter(F.col("doc_id") % 5 == 0) \
-                    .select("doc_id", "text")
-                feed_dir = stage_trigger_files(
-                    batch, work,
-                    F.when(F.col("doc_id") % 10 == 0, 0).otherwise(1),
-                    "docs")
-                schema = spark.read.parquet(feed_dir).schema
-                feed = (spark.readStream.schema(schema)
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(feed_dir))
-                run_dedup_ingest(feed, stage, svpath,
-                                 checkpoint=os.path.join(work, "ckpt"),
-                                 compact_every=2)
-            finally:
-                shutil.rmtree(work, ignore_errors=True)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
-            # verdicts swap with the same rename-aside protocol as the
-            # index publish (r13 advice): rmtree-then-rename left a
-            # window where a concurrent completeness check saw the
-            # verdicts missing while the index looked complete. Two
-            # renames shrink that window to nothing observable (no
-            # bulk delete between them); the aside dir is reaped last.
-            # aside name matches _reap_stale_dirs' "<base>.old-<pid>-"
-            # pattern so a crash between the renames leaves reapable
-            # litter, not a permanent orphan
-            vold = f"{path}.old-{nonce}-verdicts"
-            if os.path.isdir(vpath):
-                os.rename(vpath, vold)
-            os.rename(svpath, vpath)
-            shutil.rmtree(vold, ignore_errors=True)
-        _STREAM_INGEST_CACHE[sf_dir] = (path, vpath)
-    return _STREAM_INGEST_CACHE[sf_dir]
+    vpath = fixture_path("band_singest", sf_dir) + ".verdicts"
+
+    def complete(path: str) -> bool:
+        return (index_ok(path) and not delta_count(path)
+                and applied_tags(path) >= {"b0", "b1"}
+                # r14: the cloned index carries cluster state and the
+                # sink maintains it — pre-r14 cached end states (no
+                # clusters/) rebuild once
+                and os.path.isdir(os.path.join(path, "clusters"))
+                and all(os.path.isdir(os.path.join(vpath, f"batch={b}"))
+                        for b in (0, 1)))
+
+    def build(stage: str) -> None:
+        svpath = stage + ".verdicts"
+        shutil.copytree(_band_index_path(spark, sf_dir), stage)
+        work = scratch_dir(prefix="dedup_ingest_replay_")
+        try:
+            batch = load_table(spark, sf_dir, "documents") \
+                .filter(F.col("doc_id") % 5 == 0) \
+                .select("doc_id", "text")
+            feed_dir = stage_trigger_files(
+                batch, work,
+                F.when(F.col("doc_id") % 10 == 0, 0).otherwise(1), "docs")
+            schema = spark.read.parquet(feed_dir).schema
+            feed = (spark.readStream.schema(schema)
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(feed_dir))
+            run_dedup_ingest(feed, stage, svpath,
+                             checkpoint=os.path.join(work, "ckpt"),
+                             compact_every=2)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+        # the verdicts swap in by the same double rename as the index
+        # (no bulk delete between the renames, so a completeness check
+        # never sees them missing while the index looks complete)
+        publish(svpath, vpath)
+
+    return staged_fixture("band_singest", sf_dir, complete, build), vpath
 
 
 @query(
@@ -1158,9 +1108,6 @@ def _curation_substring_contamination(spark: SparkSession,
         k=16, min_len=24, max_df=64)
 
 
-_SUBSTRING_INDEX_CACHE: dict[str, str] = {}
-
-
 def _substring_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once fixture for the persisted exact-substring anchor
     index (operators/substring_index.py): base build over the
@@ -1168,56 +1115,39 @@ def _substring_index_path(spark: SparkSession, sf_dir: str) -> str:
     (%10==0, then %10==5) each running the against-corpus span query
     and appending its window delta (tagged), with a COMPACTION —
     exercising the over-cap prune and the post-prune append —
-    between them. Atomic nonce-stage publish; a published root is by
-    construction the fully-maintained end state."""
-    import os
-    import re
-    import tempfile
-
-    from ..operators.ann_index import (_manifest_path, _nonce,
-                                       _publish_index, _reap_stale_dirs,
-                                       applied_tags)
+    between them."""
     from ..operators.dedup import sliding_window_hashes
+    from ..operators.lsm import applied_tags, index_ok
     from ..operators.substring_index import (append_windows,
                                              build_substring_index,
                                              compact_substring_index,
-                                             index_ok,
                                              ingest_substring_spans)
 
-    cached = _SUBSTRING_INDEX_CACHE.get(sf_dir)
-    if cached is None:
-        slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
-        path = os.path.join(tempfile.gettempdir(),
-                            f"substring_index_{slug}")
-        if not (index_ok(path) and applied_tags(path) >= {"w0", "w1"}):
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = load_table(spark, sf_dir, "documents") \
-                .select("doc_id", "text")
-            build_substring_index(
-                docs.filter(F.col("doc_id") % 5 != 0), stage)
-            for wave, mod in ((0, 0), (1, 5)):
-                batch = docs.filter(F.col("doc_id") % 10 == mod)
-                w = sliding_window_hashes(batch, "text", "doc_id",
-                                          16).persist()
-                try:
-                    # the ingest read a real deployment runs per batch
-                    # (cross-side spans vs the absorbed corpus; the
-                    # cross-slice equality is pytest-pinned in
-                    # tests/test_substring_index.py)
-                    ingest_substring_spans(spark, stage, batch,
-                                           windows=w).count()
-                    append_windows(spark, stage, batch, tag=f"w{wave}",
-                                   windows=w)
-                finally:
-                    w.unpersist()
-                if wave == 0:
-                    compact_substring_index(spark, stage)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
-        _SUBSTRING_INDEX_CACHE[sf_dir] = path
-    return _SUBSTRING_INDEX_CACHE[sf_dir]
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents") \
+            .select("doc_id", "text")
+        build_substring_index(docs.filter(F.col("doc_id") % 5 != 0), stage)
+        for wave, mod in ((0, 0), (1, 5)):
+            batch = docs.filter(F.col("doc_id") % 10 == mod)
+            w = sliding_window_hashes(batch, "text", "doc_id",
+                                      16).persist()
+            try:
+                # the ingest read a real deployment runs per batch
+                # (cross-side spans vs the absorbed corpus; the
+                # cross-slice equality is pytest-pinned in
+                # tests/test_substring_index.py)
+                ingest_substring_spans(spark, stage, batch,
+                                       windows=w).count()
+                append_windows(spark, stage, batch, tag=f"w{wave}",
+                               windows=w)
+            finally:
+                w.unpersist()
+            if wave == 0:
+                compact_substring_index(spark, stage)
+
+    return staged_fixture(
+        "substring_index", sf_dir,
+        lambda p: index_ok(p) and applied_tags(p) >= {"w0", "w1"}, build)
 
 
 @query("dedup_ingest_substring", oracle=_SUBSTRING_EXACT_ORACLE)
@@ -1247,9 +1177,6 @@ def _dedup_ingest_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_spans_from_index(spark, path, min_len=24)
 
 
-_STREAM_SUBSTRING_CACHE: dict[str, str] = {}
-
-
 def _stream_substring_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Streaming twin of :func:`_substring_index_path`: the same base
     build over doc_id % 5 != 0, but the two ingest waves (%10==0,
@@ -1262,58 +1189,41 @@ def _stream_substring_index_path(spark: SparkSession, sf_dir: str) -> str:
     applied manifest recording both triggers — deterministic, so the
     dir is reusable across processes."""
     import os
-    import re
     import shutil
-    import tempfile
 
-    from ..operators.ann_index import (_manifest_path, _nonce,
-                                       _publish_index, _reap_stale_dirs,
-                                       applied_tags)
-    from ..operators.substring_index import (build_substring_index,
-                                             index_ok)
+    from ..operators.lsm import applied_tags, delta_count, index_ok
+    from ..operators.substring_index import build_substring_index
     from ..streaming.replay_stage import stage_trigger_files
     from ..streaming.substring_ingest import run_substring_ingest
 
-    cached = _STREAM_SUBSTRING_CACHE.get(sf_dir)
-    if cached is None:
-        slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
-        path = os.path.join(tempfile.gettempdir(),
-                            f"substring_sindex_{slug}")
-        from ..operators.ann_index import _delta_dirs
-        done = (index_ok(path) and not _delta_dirs(path)
-                and applied_tags(path) >= {"b0", "b1"})
-        if not done:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = load_table(spark, sf_dir, "documents") \
-                .select("doc_id", "text")
-            build_substring_index(
-                docs.filter(F.col("doc_id") % 5 != 0), stage)
-            feed_df = (docs.filter(F.col("doc_id") % 10 == 0)
-                       .withColumn("b", F.lit(0))
-                       .unionByName(
-                           docs.filter(F.col("doc_id") % 10 == 5)
-                           .withColumn("b", F.lit(1))))
-            work = scratch_dir(prefix="substr_ingest_replay_")
-            try:
-                feed_dir = stage_trigger_files(feed_df, work,
-                                               F.col("b"), "docs")
-                feed = (spark.readStream
-                        .schema("doc_id long, text string, b int")
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(feed_dir))
-                run_substring_ingest(
-                    feed.select("doc_id", "text"), stage,
-                    checkpoint=os.path.join(work, "ckpt"),
-                    spans_out=os.path.join(work, "spans"),
-                    compact_every=2)
-            finally:
-                shutil.rmtree(work, ignore_errors=True)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
-        _STREAM_SUBSTRING_CACHE[sf_dir] = path
-    return _STREAM_SUBSTRING_CACHE[sf_dir]
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents") \
+            .select("doc_id", "text")
+        build_substring_index(docs.filter(F.col("doc_id") % 5 != 0), stage)
+        feed_df = (docs.filter(F.col("doc_id") % 10 == 0)
+                   .withColumn("b", F.lit(0))
+                   .unionByName(docs.filter(F.col("doc_id") % 10 == 5)
+                                .withColumn("b", F.lit(1))))
+        work = scratch_dir(prefix="substr_ingest_replay_")
+        try:
+            feed_dir = stage_trigger_files(feed_df, work, F.col("b"),
+                                           "docs")
+            feed = (spark.readStream
+                    .schema("doc_id long, text string, b int")
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(feed_dir))
+            run_substring_ingest(
+                feed.select("doc_id", "text"), stage,
+                checkpoint=os.path.join(work, "ckpt"),
+                spans_out=os.path.join(work, "spans"),
+                compact_every=2)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+
+    return staged_fixture(
+        "substring_sindex", sf_dir,
+        lambda p: (index_ok(p) and not delta_count(p)
+                   and applied_tags(p) >= {"b0", "b1"}), build)
 
 
 @query("streaming_substring_ingest_replay", oracle=_SUBSTRING_EXACT_ORACLE)

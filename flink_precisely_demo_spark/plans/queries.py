@@ -21,6 +21,9 @@ just as much — distributed double addition is order-dependent):
 
 from __future__ import annotations
 
+import os
+import re
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -37,6 +40,7 @@ from ..functions.text import (
     tokens,
 )
 from ..operators.enrichment_join import enrich, latest_per_key
+from ..operators.lsm import new_base
 from ..operators.windowed_agg import avg_exact, sum_exact, tumbling_window_agg
 from ..sources.cdc_json import decode_envelope, flatten_after_image, synthesize_orders_envelope
 from ..sources.parquet import load_table
@@ -55,6 +59,35 @@ def query(name: str, oracle: str | None = None):
             ORACLES[name] = oracle
         return fn
     return deco
+
+
+_FIXTURES: dict[tuple[str, str], str] = {}
+
+
+def fixture_path(name: str, sf_dir: str) -> str:
+    """``<tmp>/<name>_<sf_dir slug>``: where the build-once fixture
+    ``name`` of dataset ``sf_dir`` lives, shared across processes."""
+    slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
+    return os.path.join(tempfile.gettempdir(), f"{name}_{slug}")
+
+
+def staged_fixture(name: str, sf_dir: str,
+                   complete: Callable[[str], bool],
+                   build: Callable[[str], None]) -> str:
+    """Path of the build-once index fixture ``name`` for ``sf_dir``
+    (memoized per process). A dir for which ``complete(path)`` holds
+    is reused; otherwise ``build(stage)`` fills one staged new base
+    that publishes atomically (operators/lsm.new_base), so a
+    concurrent process never sees a half-built fixture and a crashed
+    build leaves only a reapable stage."""
+    key = (name, sf_dir)
+    if key not in _FIXTURES:
+        path = fixture_path(name, sf_dir)
+        if not complete(path):
+            with new_base(path) as stage:
+                build(stage)
+        _FIXTURES[key] = path
+    return _FIXTURES[key]
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet import load_table
-from .queries import query
+from .queries import query, staged_fixture
 from .text_queries import _TOKS
 from ..scratch import scratch_dir
 
@@ -263,8 +263,6 @@ _VIS_SQL = """
       WHERE text IS NOT NULL AND doc_id % 12 <> 2
 """
 
-_TEXT_INDEX_CACHE: dict[str, str] = {}
-
 
 def _text_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once fixture for the maintained inverted index
@@ -272,58 +270,39 @@ def _text_index_path(spark: SparkSession, sf_dir: str) -> str:
     adds-only delta (% 6 == 0, tag u0), a COMPACTION, then one mixed
     delta (updates % 12 == 1 with re-defined text + adds % 6 == 3 +
     deletes % 12 == 2, tag u1) left unfolded — so the served queries
-    reconcile base + tombstoned delta state, not a fresh build.
-    Atomic nonce-stage publish; a published root is by construction
-    the fully-maintained end state."""
-    import os
-    import re
-    import tempfile
-
-    from ..operators.ann_index import (_manifest_path, _nonce,
-                                       _publish_index, _reap_stale_dirs,
-                                       applied_tags, delta_tags)
+    reconcile base + tombstoned delta state, not a fresh build."""
+    from ..operators.lsm import applied_tags, index_ok
     from ..operators.text_index import (_manifest, build_text_index,
                                         compact_text_index,
-                                        index_ok, upsert_text_index)
+                                        upsert_text_index)
 
-    cached = _TEXT_INDEX_CACHE.get(sf_dir)
-    if cached is None:
-        slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
-        path = os.path.join(tempfile.gettempdir(), f"text_index_{slug}")
-        done = (index_ok(path)
-                and (applied_tags(path) | delta_tags(path))
-                >= {"u0", "u1"}
+    def complete(path: str) -> bool:
+        return (index_ok(path)
+                and applied_tags(path) >= {"u0", "u1"}
                 and _manifest(path).get("positions", False)
                 and _manifest(path).get("store_text", False))
-        if not done:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = (load_table(spark, sf_dir, "documents")
-                    .select("doc_id", "text")
-                    .filter(F.col("text").isNotNull()))
-            build_text_index(docs.filter(F.col("doc_id") % 3 != 0),
-                             stage, positions=True, store_text=True)
-            upsert_text_index(
-                spark, stage,
-                updates=docs.filter(F.col("doc_id") % 6 == 0),
-                tag="u0")
-            compact_text_index(spark, stage)
-            upd = docs.filter(F.col("doc_id") % 12 == 1).select(
-                "doc_id", F.concat("text", F.lit(" refreshed copy"))
-                .alias("text"))
-            upsert_text_index(
-                spark, stage,
-                updates=upd.unionByName(
-                    docs.filter(F.col("doc_id") % 6 == 3)),
-                delete_ids=docs.filter(F.col("doc_id") % 12 == 2)
-                .select("doc_id"),
-                tag="u1")
-            _publish_index(stage, path, nonce)
-            if os.path.exists(_manifest_path(stage)):
-                os.replace(_manifest_path(stage), _manifest_path(path))
-        _TEXT_INDEX_CACHE[sf_dir] = path
-    return _TEXT_INDEX_CACHE[sf_dir]
+
+    def build(stage: str) -> None:
+        docs = (load_table(spark, sf_dir, "documents")
+                .select("doc_id", "text")
+                .filter(F.col("text").isNotNull()))
+        build_text_index(docs.filter(F.col("doc_id") % 3 != 0),
+                         stage, positions=True, store_text=True)
+        upsert_text_index(
+            spark, stage,
+            updates=docs.filter(F.col("doc_id") % 6 == 0), tag="u0")
+        compact_text_index(spark, stage)
+        upd = docs.filter(F.col("doc_id") % 12 == 1).select(
+            "doc_id", F.concat("text", F.lit(" refreshed copy"))
+            .alias("text"))
+        upsert_text_index(
+            spark, stage,
+            updates=upd.unionByName(docs.filter(F.col("doc_id") % 6 == 3)),
+            delete_ids=docs.filter(F.col("doc_id") % 12 == 2)
+            .select("doc_id"),
+            tag="u1")
+
+    return staged_fixture("text_index", sf_dir, complete, build)
 
 
 # shared by the batch pair (uncompacted reconciling read) and the
@@ -453,9 +432,6 @@ def _search_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_index_stats(spark, path)
 
 
-_STREAM_TEXT_INDEX_CACHE: dict[str, str] = {}
-
-
 def _stream_text_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Streaming twin of :func:`_text_index_path`: the same base
     build over doc_id % 3 != 0, but both maintenance waves arrive as
@@ -466,78 +442,57 @@ def _stream_text_index_path(spark: SparkSession, sf_dir: str) -> str:
     applied-batch manifest records both triggers; that end state is
     deterministic, making the dir reusable across processes."""
     import os
-    import re
-    import tempfile
+    import shutil
 
-    from ..operators.ann_index import (_delta_dirs, _manifest_path,
-                                       _nonce, _publish_index,
-                                       _reap_stale_dirs, applied_tags)
-    from ..operators.text_index import build_text_index, index_ok
+    from ..operators.lsm import applied_tags, delta_count, index_ok
+    from ..operators.text_index import build_text_index
     from ..streaming.replay_stage import stage_trigger_files
     from ..streaming.text_index_ingest import run_text_index_ingest
 
-    cached = _STREAM_TEXT_INDEX_CACHE.get(sf_dir)
-    if cached is None:
-        slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
-        path = os.path.join(tempfile.gettempdir(),
-                            f"text_sindex_{slug}")
-        done = (index_ok(path) and not _delta_dirs(path)
-                and applied_tags(path) >= {"b0", "b1"})
-        if not done:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = (load_table(spark, sf_dir, "documents")
-                    .select("doc_id", "text")
-                    .filter(F.col("text").isNotNull()))
-            build_text_index(docs.filter(F.col("doc_id") % 3 != 0),
-                             stage)
-            # trigger 0: wave-u0 adds; trigger 1: re-defined texts +
-            # adds + takedowns — the exact batch-fixture waves as a
-            # mutation stream (op D rows carry no text)
-            muts = (docs.filter(F.col("doc_id") % 6 == 0)
+    def build(stage: str) -> None:
+        docs = (load_table(spark, sf_dir, "documents")
+                .select("doc_id", "text")
+                .filter(F.col("text").isNotNull()))
+        build_text_index(docs.filter(F.col("doc_id") % 3 != 0), stage)
+        # trigger 0: wave-u0 adds; trigger 1: re-defined texts +
+        # adds + takedowns — the exact batch-fixture waves as a
+        # mutation stream (op D rows carry no text)
+        muts = (docs.filter(F.col("doc_id") % 6 == 0)
+                .select("doc_id", "text", F.lit("U").alias("op"),
+                        F.lit(0).alias("b"))
+                .unionByName(
+                    docs.filter(F.col("doc_id") % 12 == 1)
+                    .select("doc_id",
+                            F.concat("text", F.lit(" refreshed copy"))
+                            .alias("text"),
+                            F.lit("U").alias("op"), F.lit(1).alias("b")))
+                .unionByName(
+                    docs.filter(F.col("doc_id") % 6 == 3)
                     .select("doc_id", "text", F.lit("U").alias("op"),
-                            F.lit(0).alias("b"))
-                    .unionByName(
-                        docs.filter(F.col("doc_id") % 12 == 1)
-                        .select("doc_id",
-                                F.concat("text",
-                                         F.lit(" refreshed copy"))
-                                .alias("text"),
-                                F.lit("U").alias("op"),
-                                F.lit(1).alias("b")))
-                    .unionByName(
-                        docs.filter(F.col("doc_id") % 6 == 3)
-                        .select("doc_id", "text",
-                                F.lit("U").alias("op"),
-                                F.lit(1).alias("b")))
-                    .unionByName(
-                        docs.filter(F.col("doc_id") % 12 == 2)
-                        .select("doc_id",
-                                F.lit(None).cast("string")
-                                .alias("text"),
-                                F.lit("D").alias("op"),
-                                F.lit(1).alias("b"))))
-            work = scratch_dir(prefix="text_index_replay_")
-            try:
-                feed_dir = stage_trigger_files(muts, work, F.col("b"),
-                                               "mutations")
-                feed = (spark.readStream
-                        .schema("doc_id long, text string, op string,"
-                                " b int")
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(feed_dir))
-                run_text_index_ingest(
-                    feed, stage,
-                    checkpoint=os.path.join(work, "ckpt"),
-                    compact_every=2)
-            finally:
-                import shutil
-                shutil.rmtree(work, ignore_errors=True)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
-        _STREAM_TEXT_INDEX_CACHE[sf_dir] = path
-    return _STREAM_TEXT_INDEX_CACHE[sf_dir]
+                            F.lit(1).alias("b")))
+                .unionByName(
+                    docs.filter(F.col("doc_id") % 12 == 2)
+                    .select("doc_id", F.lit(None).cast("string")
+                            .alias("text"),
+                            F.lit("D").alias("op"), F.lit(1).alias("b"))))
+        work = scratch_dir(prefix="text_index_replay_")
+        try:
+            feed_dir = stage_trigger_files(muts, work, F.col("b"),
+                                           "mutations")
+            feed = (spark.readStream
+                    .schema("doc_id long, text string, op string, b int")
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(feed_dir))
+            run_text_index_ingest(feed, stage,
+                                  checkpoint=os.path.join(work, "ckpt"),
+                                  compact_every=2)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+
+    return staged_fixture(
+        "text_sindex", sf_dir,
+        lambda p: (index_ok(p) and not delta_count(p)
+                   and applied_tags(p) >= {"b0", "b1"}), build)
 
 
 @query("streaming_search_index_replay", oracle=_INDEX_TOPK_ORACLE)

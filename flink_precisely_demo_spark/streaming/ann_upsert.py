@@ -1,53 +1,23 @@
-"""Streaming maintenance of the served ANN index: foreachBatch
-delta appends with retry-safe idempotence and scheduled compaction.
-
-A production embedding pipeline emits a continuous stream of
+"""Streaming maintenance of the served ANN index: each micro-batch of
 (id, vector, op) mutations — fresh documents, re-embeddings,
-takedowns. Structured Streaming's idiom for feeding a keyed external
-store is ``foreachBatch``; here each micro-batch becomes exactly ONE
-delta generation of the LSM index (operators/ann_index.py):
-updates assign to cells under the existing centroids, deletes become
-tombstones, and the generation publishes atomically.
-
-Idempotence: foreachBatch re-runs a batch whose epoch did not commit,
-and a delta APPEND — unlike the versioned-rewrite recipe
-streaming/cdc_upsert.py uses — is not naturally retry-safe (the
-retry would append a second generation). Each batch therefore
-publishes its delta carrying tag ``b<batch_id>`` (the tag rides the
-same atomic rename as the delta itself), and an applied batch is
-skipped on retry. Because compaction folds deltas — and their tags —
-away, ``compact_ann_index`` itself persists the union of seen tags
-to a SIBLING manifest ``<index_path>.applied.json`` (outside the
-index dir, so the compactor's double-rename publish never touches
-it) before folding — so scheduled compaction is retry-safe whether
-the sink triggers it or an operator runs it out of band (r12
-advisory); the applied set is always manifest ∪ live delta tags, so
-a crash between the manifest write and the compact only duplicates
-tags in set-union, never loses one.
-
-Checkpoint/store binding: like cdc_upsert_sink, a fresh checkpoint
-restarting batch ids at 0 against an index that already absorbed
-later batches means the checkpoint does not belong to this store —
-fail fast rather than silently re-mutating.
+takedowns — becomes one delta generation of the LSM index
+(operators/ann_index.upsert_ann_index): updates assign to cells under
+the existing centroids, deletes become tombstones. Tags, retry
+no-ops, the checkpoint binding and scheduled compaction are the
+shared sink contract (operators/lsm.index_sink).
 
 Scale: per trigger the work is delta-sized (one assignment scan over
-the batch + a cell-partitioned write); reads pay the accumulated
-delta until the scheduled compaction (``compact_every`` published
-generations) resets the base — the knob that keeps the tombstone
-set broadcast-sized forever on an unbounded stream.
+the batch + a cell-partitioned write).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from functools import partial
 
-from ..operators.ann_index import (
-    _delta_dirs,
-    applied_tags as _applied_tags,
-    compact_ann_index,
-    upsert_ann_index,
-)
+from pyspark.sql import DataFrame
+
+from ..operators.ann_index import compact_ann_index, upsert_ann_index
+from ..operators.lsm import drain, index_sink, split_mutations
 
 
 def ann_upsert_sink(index_path: str, id_col: str = "vec_id",
@@ -59,56 +29,22 @@ def ann_upsert_sink(index_path: str, id_col: str = "vec_id",
     With ``compact_every=k``, the index compacts whenever k delta
     generations have accumulated."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        applied = _applied_tags(index_path)
-        if tag in applied:
-            return                       # foreachBatch retry: no-op
-        later = [t for t in applied
-                 if t.startswith("b") and t[1:].isdigit()
-                 and int(t[1:]) > batch_id]
-        if later:
-            raise RuntimeError(
-                f"ann_upsert_sink: index {index_path!r} already "
-                f"absorbed batch {max(int(t[1:]) for t in later)} but "
-                f"this query is writing batch {batch_id} — the "
-                "checkpoint does not belong to this store "
-                "(deleted/replaced checkpoint?). Restore the matching "
-                "checkpoint or point the sink at a fresh index.")
-        if op_col is not None:
-            updates = batch_df.filter(F.col(op_col) != "D") \
-                              .select(id_col, vec_col)
-            deletes = batch_df.filter(F.col(op_col) == "D") \
-                              .select(id_col)
-            if deletes.isEmpty():
-                deletes = None
-        else:
-            updates, deletes = batch_df.select(id_col, vec_col), None
-        if updates.isEmpty():
-            if deletes is None:
-                return                   # empty trigger: nothing to apply
-            updates = None
-        upsert_ann_index(spark, index_path, updates, deletes,
-                         id_col=id_col, vec_col=vec_col, tag=tag)
-        if compact_every and len(_delta_dirs(index_path)) >= compact_every:
-            # compact_ann_index itself persists the live tags to the
-            # sibling manifest before folding (so out-of-band
-            # scheduled compaction is equally retry-safe)
-            compact_ann_index(spark, index_path, id_col=id_col,
-                              vec_col=vec_col)
+    def apply(batch_df: DataFrame, batch_id: int, tag: str) -> None:
+        updates, deletes = split_mutations(batch_df, op_col, id_col,
+                                           vec_col)
+        if updates is not None or deletes is not None:
+            upsert_ann_index(batch_df.sparkSession, index_path, updates,
+                             deletes, id_col=id_col, vec_col=vec_col,
+                             tag=tag)
 
-    return apply_batch
+    return index_sink(index_path, apply,
+                      partial(compact_ann_index, id_col=id_col,
+                              vec_col=vec_col), compact_every)
 
 
 def run_ann_upsert(mutations: DataFrame, index_path: str,
                    checkpoint: str, **kwargs):
     """Drain a streaming mutation DataFrame into the index
     (availableNow). Returns the finished StreamingQuery."""
-    q = (mutations.writeStream
-         .foreachBatch(ann_upsert_sink(index_path, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(mutations, ann_upsert_sink(index_path, **kwargs),
+                 checkpoint)

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import language_id, quality_score
+from ..operators.lsm import drain
 from ..sources.cdc_json import decode_envelope, flatten_after_image
 from .ann_upsert import ann_upsert_sink
 from .dedup_ingest import dedup_ingest_sink
@@ -188,12 +189,7 @@ def run_corpus_ingest(raw: DataFrame, band_index_path: str,
                       embeddings: DataFrame, checkpoint: str, **kwargs):
     """Drain a streaming DataFrame of CDC JSON ``value`` lines through
     the composed sink (availableNow). Returns the finished query."""
-    q = (raw.writeStream
-         .foreachBatch(corpus_ingest_sink(band_index_path,
-                                          ann_index_path, verdicts_path,
-                                          embeddings, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(raw, corpus_ingest_sink(band_index_path,
+                                         ann_index_path, verdicts_path,
+                                         embeddings, **kwargs),
+                 checkpoint)

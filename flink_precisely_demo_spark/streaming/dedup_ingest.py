@@ -8,32 +8,26 @@ delta, so near-dup CLUSTER membership is maintained across triggers
 too (operators/dedup_index.cluster_labels folds it; compaction
 collapses the forest).
 
-The idempotence contract is the ANN mutation sink's
-(streaming/ann_upsert.py), re-used verbatim: a batch publishes its
-delta carrying tag ``b<batch_id>`` atomically with the delta itself;
-a foreachBatch retry of an applied batch no-ops; compaction persists
-live tags to the sibling ``.applied.json`` manifest before folding;
-and a fresh checkpoint writing batch 0 against an index that already
-absorbed later batches fails fast (checkpoint/store binding).
-Verdicts are additionally idempotent on their own: each batch writes
+Tags, retry no-ops, the checkpoint binding and scheduled compaction
+are the shared sink contract (operators/lsm.index_sink). Verdicts
+are additionally idempotent on their own: each batch writes
 ``<verdicts_path>/batch=<id>/`` with overwrite semantics, so a retry
 that died between the verdict write and the delta publish rewrites
 the same rows instead of duplicating them.
 
 Scale: per trigger the work is batch-sized — band the batch, one
 bucket-grouped min-aggregation against the index digests, one
-delta-partitioned write. Reads pay the accumulated delta digests
-until the scheduled compaction folds them; the historical corpus's
-text is never touched.
+delta-partitioned write; the historical corpus's text is never
+touched.
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame
 
-from ..operators.ann_index import _delta_dirs, applied_tags
 from ..operators.dedup import _minhash_banded
 from ..operators.dedup_index import (
     append_bands,
@@ -42,6 +36,7 @@ from ..operators.dedup_index import (
     ingest_cluster_edges,
     verdicts_from_edges,
 )
+from ..operators.lsm import drain, index_sink
 
 
 def dedup_ingest_sink(index_path: str, verdicts_path: str,
@@ -53,25 +48,10 @@ def dedup_ingest_sink(index_path: str, verdicts_path: str,
     verdicts exactly-once, append the batch's bands as a tagged
     delta, compact every ``compact_every`` published generations."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        applied = applied_tags(index_path)
-        if tag in applied:
-            return                       # foreachBatch retry: no-op
-        later = [t for t in applied
-                 if t.startswith("b") and t[1:].isdigit()
-                 and int(t[1:]) > batch_id]
-        if later:
-            raise RuntimeError(
-                f"dedup_ingest_sink: index {index_path!r} already "
-                f"absorbed batch {max(int(t[1:]) for t in later)} but "
-                f"this query is writing batch {batch_id} — the "
-                "checkpoint does not belong to this store. Restore "
-                "the matching checkpoint or point the sink at a "
-                "fresh index.")
+    def apply(batch_df: DataFrame, batch_id: int, tag: str) -> None:
         if batch_df.isEmpty():
-            return
+            return                       # empty trigger: nothing to apply
+        spark = batch_df.sparkSession
         # band the batch ONCE: both the verdict computation and the
         # delta append consume the persisted band rows, so the
         # shingle -> minhash -> band lineage (the dominant per-batch
@@ -82,11 +62,9 @@ def dedup_ingest_sink(index_path: str, verdicts_path: str,
         try:
             # cluster maintenance rides automatically when the index
             # carries cluster state (built with clusters=True): the
-            # batch's per-bucket link edges land in the SAME tagged
-            # delta rename as its bands, so the maintained membership
-            # is exactly as idempotent/atomic as the bands themselves
-            # and compaction folds both (r14). When edges are
-            # computed, the verdicts DERIVE from them
+            # batch's per-bucket link edges land in the same delta as
+            # its bands. When edges are computed, the verdicts DERIVE
+            # from them
             # (verdicts_from_edges — the global min over per-bucket
             # links IS the verdict), so the index-band candidate pass
             # runs once per trigger, not twice; edges persist because
@@ -117,21 +95,15 @@ def dedup_ingest_sink(index_path: str, verdicts_path: str,
             banded.unpersist()
             if edges is not None:
                 edges.unpersist()
-        if compact_every and len(_delta_dirs(index_path)) >= compact_every:
-            compact_band_index(spark, index_path, id_col=id_col)
 
-    return apply_batch
+    return index_sink(index_path, apply,
+                      partial(compact_band_index, id_col=id_col),
+                      compact_every)
 
 
 def run_dedup_ingest(docs: DataFrame, index_path: str,
                      verdicts_path: str, checkpoint: str, **kwargs):
     """Drain a streaming document DataFrame through the ingest sink
     (availableNow). Returns the finished StreamingQuery."""
-    q = (docs.writeStream
-         .foreachBatch(dedup_ingest_sink(index_path, verdicts_path,
-                                         **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(docs, dedup_ingest_sink(index_path, verdicts_path,
+                                         **kwargs), checkpoint)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.windowed_agg import sum_exact
+from .pipeline import drain_query
 from .stateful_join import enrich_stream
 
 
@@ -40,7 +41,7 @@ def _run_stage(df: DataFrame, path: str, checkpoint: str, timeout: int) -> None:
          .format("json").option("path", path)
          .option("checkpointLocation", checkpoint)
          .trigger(availableNow=True).start())
-    q.awaitTermination(timeout)
+    drain_query(q, timeout, f"replay stage {os.path.basename(path)}")
 
 
 def streaming_flagship_full(spark: SparkSession, orders_dir: str,
@@ -48,6 +49,8 @@ def streaming_flagship_full(spark: SparkSession, orders_dir: str,
                             work_dir: str, timeout: int = 120) -> DataFrame:
     """Drive the staged topology to completion (availableNow per
     stage) and return the final windowed result as a batch DataFrame.
+    A stage still running after ``timeout`` seconds raises
+    ``TimeoutError`` instead of returning partial output.
 
     Inputs are JSON-lines directories of already-projected rows (the
     sql/{orders,address,states}.sql shapes); production would point
@@ -101,5 +104,5 @@ def streaming_flagship_full(spark: SparkSession, orders_dir: str,
          .format("memory").queryName("flagship_full")
          .option("checkpointLocation", os.path.join(work_dir, "ck3"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(timeout)
+    drain_query(q, timeout, "flagship_full window aggregation")
     return spark.sql("SELECT * FROM flagship_full")

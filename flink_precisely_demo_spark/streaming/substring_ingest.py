@@ -1,36 +1,24 @@
-"""Streaming maintenance of the exact-substring anchor index:
-foreachBatch window-delta appends with retry-safe idempotence,
-per-batch against-corpus span output, and scheduled compaction —
-the fourth maintained index's streaming twin (same contract as
-streaming/{dedup_ingest,ann_upsert,text_index_ingest}.py; one sink
-shape across the whole served-index family).
+"""Streaming maintenance of the exact-substring anchor index. Each
+micro-batch of fresh documents:
 
-Each micro-batch of fresh documents:
 1. folds its own text ONCE into stride-1 window hashes,
-2. runs the ingest-shaped query — "which verbatim spans does this
-   batch share with the absorbed corpus?" — reusing that fold
+2. optionally runs the ingest-shaped query — "which verbatim spans
+   does this batch share with the absorbed corpus?" — off that fold
    (``ingest_substring_spans(windows=...)``), writing the spans to a
-   per-batch output dir (overwrite mode, so a retried batch
-   re-writes rather than duplicates),
+   per-batch output dir in overwrite mode, so a retried batch
+   re-writes rather than duplicates, and
 3. appends the fold as one tagged window delta
-   (``append_windows(windows=...)`` — atomic rename; the tag rides
-   it for the idempotence contract), and
-4. compacts on schedule (``compact_every`` published generations —
-   ``compact_substring_index`` persists live tags to the sibling
-   manifest before folding, so out-of-band compaction stays
-   retry-safe).
+   (``append_windows(windows=...)``).
 
 A retried batch whose tag is already absorbed re-emits NOTHING: the
-span output is part of the skipped work by design — the previous
-attempt's overwrite-mode write either completed (the spans exist) or
-the whole batch re-runs (tag absent). The stale-checkpoint binding
-guard is the shared one: a checkpoint restarting behind the index's
-absorbed batches fails fast.
+previous attempt's overwrite-mode span write either completed or the
+whole batch re-runs (tag absent). Tags, the checkpoint binding and
+scheduled compaction are the shared sink contract
+(operators/lsm.index_sink).
 
 Scale: per trigger the work is batch-sized (one O(n·k) window fold
 over the batch text + the stats-gated anchor join against matching
-absorbed hashes only); historical text is never re-read; reads pay
-the uncompacted window until the scheduled compaction resets it.
+absorbed hashes only); historical text is never re-read.
 """
 
 from __future__ import annotations
@@ -39,9 +27,8 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ..operators.ann_index import _delta_dirs
-from ..operators.ann_index import applied_tags as _applied_tags
 from ..operators.dedup import sliding_window_hashes
+from ..operators.lsm import drain, index_sink
 from ..operators.substring_index import (
     _manifest,
     append_windows,
@@ -59,25 +46,10 @@ def substring_index_sink(index_path: str, text_col: str = "text",
     each batch's against-corpus span set lands at
     ``spans_out/batch=<id>/`` (overwrite per batch — retry-safe)."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        applied = _applied_tags(index_path)
-        if tag in applied:
-            return                       # foreachBatch retry: no-op
-        later = [t for t in applied
-                 if t.startswith("b") and t[1:].isdigit()
-                 and int(t[1:]) > batch_id]
-        if later:
-            raise RuntimeError(
-                f"substring_index_sink: index {index_path!r} already "
-                f"absorbed batch {max(int(t[1:]) for t in later)} but "
-                f"this query is writing batch {batch_id} — the "
-                "checkpoint does not belong to this store "
-                "(deleted/replaced checkpoint?). Restore the matching "
-                "checkpoint or point the sink at a fresh index.")
+    def apply(batch_df: DataFrame, batch_id: int, tag: str) -> None:
         if batch_df.isEmpty():
             return                       # empty trigger: nothing to apply
+        spark = batch_df.sparkSession
         k = _manifest(index_path)["k"]
         w = sliding_window_hashes(batch_df, text_col, id_col,
                                   k).persist()
@@ -93,20 +65,14 @@ def substring_index_sink(index_path: str, text_col: str = "text",
                            tag=tag, windows=w)
         finally:
             w.unpersist()
-        if compact_every and len(_delta_dirs(index_path)) >= compact_every:
-            compact_substring_index(spark, index_path)
 
-    return apply_batch
+    return index_sink(index_path, apply, compact_substring_index,
+                      compact_every)
 
 
 def run_substring_ingest(docs: DataFrame, index_path: str,
                          checkpoint: str, **kwargs):
     """Drain a streaming document DataFrame into the index
     (availableNow). Returns the finished StreamingQuery."""
-    q = (docs.writeStream
-         .foreachBatch(substring_index_sink(index_path, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(docs, substring_index_sink(index_path, **kwargs),
+                 checkpoint)

@@ -229,8 +229,7 @@ def check_dedup_ingest(spark, n_triggers: int = 50,
     is the deployment's own linear cost, not a leak."""
     from pyspark.sql import functions as F
 
-    from flink_precisely_demo_spark.operators.ann_index import (
-        _delta_dirs)
+    from flink_precisely_demo_spark.operators.lsm import delta_count
     from flink_precisely_demo_spark.operators.dedup_index import (
         build_band_index, cluster_labels, compact_band_index)
     from flink_precisely_demo_spark.streaming.dedup_ingest import (
@@ -258,7 +257,7 @@ def check_dedup_ingest(spark, n_triggers: int = 50,
             t0 = time.monotonic()
             sink(batch, i)
             times.append(round((time.monotonic() - t0) * 1000, 1))
-            n_deltas = len(_delta_dirs(idx))
+            n_deltas = delta_count(idx)
             if n_deltas >= compact_every:
                 violations.append(
                     f"trigger {i}: {n_deltas} deltas survive "
@@ -302,7 +301,8 @@ def check_ann_upsert(spark, n_triggers: int = 50,
     from pyspark.sql import functions as F
 
     from flink_precisely_demo_spark.operators.ann_index import (
-        _delta_dirs, build_ann_index, index_stats)
+        build_ann_index, index_stats)
+    from flink_precisely_demo_spark.operators.lsm import delta_count
     from flink_precisely_demo_spark.streaming.ann_upsert import (
         ann_upsert_sink)
 
@@ -328,7 +328,7 @@ def check_ann_upsert(spark, n_triggers: int = 50,
             t0 = time.monotonic()
             sink(ups, i)
             times.append(round((time.monotonic() - t0) * 1000, 1))
-            n_deltas = len(_delta_dirs(idx))
+            n_deltas = delta_count(idx)
             if n_deltas >= compact_every:
                 violations.append(
                     f"trigger {i}: {n_deltas} deltas survive "
@@ -444,8 +444,7 @@ def check_substring_ingest(spark, n_triggers: int = 50,
     exact_substring_spans over the cumulative corpus — the LSM's
     whole correctness claim, re-proven after 50 generations of
     append/prune/compact."""
-    from flink_precisely_demo_spark.operators.ann_index import (
-        _delta_dirs)
+    from flink_precisely_demo_spark.operators.lsm import delta_count
     from flink_precisely_demo_spark.operators.dedup import (
         exact_substring_spans)
     from flink_precisely_demo_spark.operators.substring_index import (
@@ -480,10 +479,10 @@ def check_substring_ingest(spark, n_triggers: int = 50,
             t0 = time.monotonic()
             ingest_substring_spans(spark, idx, batch).count()
             append_windows(spark, idx, batch, tag=f"b{i}")
-            if len(_delta_dirs(idx)) >= compact_every:
+            if delta_count(idx) >= compact_every:
                 compact_substring_index(spark, idx)
             times.append(round((time.monotonic() - t0) * 1000, 1))
-            n_deltas = len(_delta_dirs(idx))
+            n_deltas = delta_count(idx)
             if n_deltas >= compact_every:
                 violations.append(
                     f"trigger {i}: {n_deltas} deltas survive "
@@ -519,8 +518,7 @@ def check_text_index(spark, n_triggers: int = 50,
     state equals a from-scratch build over the visible cumulative
     corpus — the LSM correctness claim re-proven after 50
     generations of shadowing, tombstones, and folds."""
-    from flink_precisely_demo_spark.operators.ann_index import (
-        _delta_dirs)
+    from flink_precisely_demo_spark.operators.lsm import delta_count
     from flink_precisely_demo_spark.operators.text_index import (
         build_text_index, compact_text_index, search_text_index,
         upsert_text_index)
@@ -563,7 +561,7 @@ def check_text_index(spark, n_triggers: int = 50,
             t0 = time.monotonic()
             upsert_text_index(spark, idx, updates=batch,
                               delete_ids=dels, tag=f"b{i}")
-            if len(_delta_dirs(idx)) >= compact_every:
+            if delta_count(idx) >= compact_every:
                 compact_text_index(spark, idx)
             times.append(round((time.monotonic() - t0) * 1000, 1))
             for d, t in rows:
@@ -571,7 +569,7 @@ def check_text_index(spark, n_triggers: int = 50,
             for d in dels or []:
                 visible.pop(d, None)
             prev_rows = rows
-            n_deltas = len(_delta_dirs(idx))
+            n_deltas = delta_count(idx)
             if n_deltas >= compact_every:
                 violations.append(
                     f"trigger {i}: {n_deltas} deltas survive "

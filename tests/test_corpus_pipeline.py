@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_precisely_demo_spark.functions.text import (
@@ -13,13 +14,15 @@ from flink_precisely_demo_spark.functions.text import (
     quality_score,
 )
 from flink_precisely_demo_spark.operators.ann_index import (
-    _delta_dirs,
     _live_vectors,
-    applied_tags,
     build_ann_index,
 )
 from flink_precisely_demo_spark.operators.dedup_index import (
     build_band_index,
+)
+from flink_precisely_demo_spark.operators.lsm import (
+    _delta_dirs,
+    applied_tags,
 )
 from flink_precisely_demo_spark.sources.cdc_json import (
     decode_envelope,
@@ -166,8 +169,6 @@ def test_decontamination_cuts_before_all_state(spark, tmp_path):
 
 
 def test_benchmark_without_decontam_path_rejected(spark, tmp_path):
-    import pytest
-
     _, emb, band, ann, verd, _ = _fixture(spark, tmp_path)
     bench = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     with pytest.raises(ValueError, match="decontam_path"):

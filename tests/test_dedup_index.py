@@ -125,46 +125,6 @@ def test_ingest_matches_incorpus_pipeline_on_split(spark, tmp_path):
             assert (min(dup, nid), max(dup, nid)) in pairs, (nid, dup)
 
 
-def test_streaming_sink_retry_and_binding(spark, tmp_path):
-    """foreachBatch retry of an applied batch must no-op (no second
-    delta, verdicts unchanged); a fresh checkpoint writing an older
-    batch id against a store that absorbed later batches must fail
-    fast; and an out-of-band compact must not erase the applied
-    record."""
-    import pytest
-
-    from flink_precisely_demo_spark.operators.ann_index import (
-        _delta_dirs, applied_tags)
-    from flink_precisely_demo_spark.streaming.dedup_ingest import (
-        dedup_ingest_sink)
-
-    hist = _docs(spark).filter(F.col("doc_id") < 50)
-    path = str(tmp_path / "idx")
-    vpath = str(tmp_path / "verdicts")
-    build_band_index(hist, path)
-    sink = dedup_ingest_sink(path, vpath)
-    t = "retry wave payload about copper kites " * 4
-    b0 = spark.createDataFrame([(5000, t)], "doc_id long, text string")
-    sink(b0, 0)
-    assert [s for s, _ in _delta_dirs(path)] == [1]
-    v0 = sorted(map(tuple, spark.read.parquet(
-        os.path.join(vpath, "batch=0")).collect()))
-    sink(b0, 0)                          # retry: no-op
-    assert [s for s, _ in _delta_dirs(path)] == [1]
-    assert sorted(map(tuple, spark.read.parquet(
-        os.path.join(vpath, "batch=0")).collect())) == v0
-    # out-of-band compact keeps the applied record
-    compact_band_index(spark, path)
-    assert _delta_dirs(path) == []
-    assert applied_tags(path) >= {"b0"}
-    sink(b0, 0)                          # late retry after compact
-    assert _delta_dirs(path) == []
-    # checkpoint/store binding: batch 2 applied, then batch 1 arrives
-    sink(b0.select((F.col("doc_id") + 1).alias("doc_id"), "text"), 2)
-    with pytest.raises(RuntimeError, match="checkpoint"):
-        sink(b0, 1)
-
-
 def _labels(spark, path):
     from flink_precisely_demo_spark.operators.dedup_index import (
         cluster_labels)

@@ -547,12 +547,13 @@ def test_no_unconditional_broadcast_on_sf_growing_sides():
                                                      # (n_salts rows each:
                                                      # salted_broadcast_left +
                                                      # salted_shuffle_join, r13)
-        (p + "operators/text_index.py", "cf909e6d"): 2,  # df_: one row per
-                                                     # query term (r15;
-                                                     # term + doc serving)
-        (p + "operators/text_index.py", "fa62bde5"): 2,  # corpus: 1-row
-                                                     # N/total agg (r15;
-                                                     # term + doc serving)
+        (p + "operators/text_index.py", "cf909e6d"): 1,  # df_: one row per
+                                                     # query term (term +
+                                                     # doc serving share
+                                                     # _scored_hits)
+        (p + "operators/text_index.py", "fa62bde5"): 1,  # corpus: 1-row
+                                                     # N/total agg (same
+                                                     # shared site)
         (p + "plans/ann_queries.py", "668a2dc1"): 1,  # cb1: PQ codebook (k<=256)
         (p + "plans/ann_queries.py", "8ce08c39"): 1,  # cb2: PQ codebook
         (p + "plans/ann_queries.py", "9af45f1c"): 1,  # qcb1: PQ codebook

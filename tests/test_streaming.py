@@ -196,148 +196,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert got == [(1, "first"), (2, "other")]
 
 
-class _FakeValueState:
-    def __init__(self):
-        self.v = None
-
-    def exists(self):
-        return self.v is not None
-
-    def get(self):
-        return self.v
-
-    def update(self, v):
-        self.v = v
-
-    def clear(self):
-        self.v = None
-
-
-class _FakeListState:
-    def __init__(self):
-        self.items = []
-
-    def get(self):
-        return iter(self.items)
-
-    def appendList(self, items):
-        self.items.extend(items)
-
-    def clear(self):
-        self.items = []
-
-
-class _FakeHandle:
-    """Duck-typed StatefulProcessorHandle: just the two getters the
-    processor uses, backed by plain Python state."""
-
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema):
-        return self.states.setdefault(name, _FakeValueState())
-
-    def getListState(self, name, schema):
-        return self.states.setdefault(name, _FakeListState())
-
-
-def test_tws_processor_logic_against_fake_state():
-    """The TWS StatefulProcessor's buffer/flush/latest-wins semantics,
-    exercised directly against a faked state handle — this runs where
-    the full transformWithStateInPandas protocol cannot (its Python
-    worker imports protobuf, absent here), so the processor body has
-    executed coverage either way. Semantics pinned (EnrichmentJoin
-    buffer/flush paths): facts before any dim buffer silently; a dim
-    arrival flushes the buffer in order; later facts join immediately;
-    a newer dim wins for subsequent facts; state round-trips across
-    handleInputRows calls as JSON."""
-    import json as _json
-
-    import pandas as pd
-
-    from flink_precisely_demo_spark.streaming.stateful_join_tws import (
-        _EnrichProcessor,
-    )
-
-    proc = _EnrichProcessor(out_cols=["k", "ord", "fval", "dval"],
-                            dim_carry=["dval"], ts_fields=[])
-    handle = _FakeHandle()
-    proc.init(handle)
-
-    def batch(rows):
-        pdf = pd.DataFrame(rows, columns=["__ord", "__side", "__payload"])
-        return list(proc.handleInputRows((7,), iter([pdf]), None))
-
-    def fact(ordv, fval):
-        return (ordv, 1, _json.dumps({"k": 7, "ord": ordv, "fval": fval}))
-
-    def dim(ordv, dval):
-        return (ordv, 0, _json.dumps({"k": 7, "ord": ordv, "dval": dval}))
-
-    # batch 1: facts only -> nothing emitted, both buffered in order
-    assert batch([fact(3.0, "f2"), fact(1.0, "f1")]) == []
-    assert not handle.states["dim"].exists()
-    buffered = [_json.loads(t[0])["fval"]
-                for t in handle.states["buffer"].items]
-    assert buffered == ["f1", "f2"]          # event-time order, not arrival
-
-    # batch 2: dim flushes the buffer, a later fact joins immediately,
-    # a newer dim wins for the fact after it
-    out = batch([dim(2.0, "v1"), fact(2.5, "f3"), dim(4.0, "v2"),
-                 fact(5.0, "f4")])
-    got = [(r["fval"], r["dval"]) for r in out[0].to_dict("records")]
-    assert got == [("f1", "v1"), ("f2", "v1"), ("f3", "v1"), ("f4", "v2")]
-    assert handle.states["buffer"].items == []
-    assert _json.loads(handle.states["dim"].get()[0])["dval"] == "v2"
-
-    # batch 3: state persisted across calls — new fact joins v2
-    out = batch([fact(6.0, "f5")])
-    assert [(r["fval"], r["dval"]) for r in out[0].to_dict("records")] \
-        == [("f5", "v2")]
-
-
-def test_stateful_enrich_tws_variant(spark, tmp_path):
-    """transformWithStateInPandas twin (ValueState/ListState 1:1 with
-    the reference) produces the same buffer/flush/latest results."""
-    # the TWS state protocol needs protobuf, absent in this container
-    pytest.importorskip("google.protobuf.descriptor")
-    pytest.importorskip("pyspark.sql.streaming.stateful_processor")
-    from flink_precisely_demo_spark.streaming.stateful_join_tws import (
-        enrich_stream_tws,
-        tws_session_confs,
-    )
-    old = {}
-    for k, v in tws_session_confs().items():
-        old[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
-        fact_dir = tmp_path / "facts"; fact_dir.mkdir()
-        dim_dir = tmp_path / "dims"; dim_dir.mkdir()
-        _write_jsonl(fact_dir / "f.json", [
-            {"k": 7, "ord": 1.0, "fval": "f1"},
-            {"k": 7, "ord": 3.0, "fval": "f2"},
-            {"k": 7, "ord": 5.0, "fval": "f3"},
-        ])
-        _write_jsonl(dim_dir / "d.json", [
-            {"k": 7, "ord": 2.0, "dval": "v1"},
-            {"k": 7, "ord": 4.0, "dval": "v2"},
-        ])
-        fact = (spark.readStream.schema("k int, ord double, fval string")
-                .json(str(fact_dir)))
-        dim = (spark.readStream.schema("k int, ord double, dval string")
-               .json(str(dim_dir)))
-        res = run_to_memory(enrich_stream_tws(fact, dim, "k", "ord"),
-                            "enrich_tws", spark)
-        rows = {r["fval"]: r["dval"] for r in res.collect()}
-        assert rows == {"f1": "v1", "f2": "v1", "f3": "v2"}
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def test_checkpoint_restart_preserves_state(spark, tmp_path):
     """Fault tolerance (M3/SURVEY §5.3): stop a windowed-agg query,
     append more data, restart from the same checkpoint — the restarted
@@ -422,6 +280,32 @@ def test_fully_streaming_three_source_pipeline(spark, tmp_path):
     assert got == {"2020-04-02T10:00:00": 150.0,
                    "2020-04-02T10:10:00": 25.0}
     assert res.columns == ["OrderPeriod", "TotalDue", "Country", "State"]
+
+
+def test_fully_streaming_pipeline_times_out_loudly(spark, tmp_path):
+    """A replay stage still running at its timeout must raise, never
+    hand back the partial output written so far."""
+    from flink_precisely_demo_spark.streaming.full_pipeline import (
+        streaming_flagship_full,
+    )
+    dirs = []
+    for name, row in (
+            ("states", {"StateProvinceID": 10, "CountryRegionCode": "US",
+                        "StateName": "Illinois", "StatesAsOf": 1.0}),
+            ("addr", {"AddressID": 1, "City": "Springfield",
+                      "StateProvinceID": 10, "AddressAsOf": 2.0}),
+            ("orders", {"SalesOrderId": 1, "AddressId": 1,
+                        "TotalDue": 100.0,
+                        "OrderAsOf": "2020-04-02T10:01:00"})):
+        d = tmp_path / name
+        d.mkdir()
+        _write_jsonl(d / "x.json", [row])
+        dirs.append(str(d))
+    states, addr, orders = dirs
+    with pytest.raises(TimeoutError):
+        streaming_flagship_full(spark, orders, addr, states,
+                                str(tmp_path / "work"), timeout=0.001)
+    assert not spark.streams.active
 
 
 def test_stateful_enrich_ttl_evicts_state(spark, tmp_path):

@@ -11,12 +11,12 @@ import os
 
 from pyspark.sql import functions as F
 
-from flink_precisely_demo_spark.operators.ann_index import (
-    _delta_dirs,
-    applied_tags,
-)
 from flink_precisely_demo_spark.operators.dedup import (
     exact_substring_spans,
+)
+from flink_precisely_demo_spark.operators.lsm import (
+    _delta_dirs,
+    applied_tags,
 )
 from flink_precisely_demo_spark.operators.substring_index import (
     append_windows,
@@ -154,40 +154,3 @@ def test_unmarked_stage_is_invisible(spark, tmp_path):
     assert _span_set(substring_spans_from_index(spark, path)) == base
 
 
-def test_streaming_sink_idempotence_and_binding_guard(spark, tmp_path):
-    """The foreachBatch sink contract for the anchor index
-    (streaming/substring_ingest.py): a retried batch tag is a no-op
-    (including its span output, by the overwrite-or-rerun argument),
-    and a checkpoint restarting behind the absorbed batches fails
-    fast."""
-    import pytest
-
-    from flink_precisely_demo_spark.operators.ann_index import (
-        _delta_dirs,
-    )
-    from flink_precisely_demo_spark.streaming.substring_ingest import (
-        substring_index_sink,
-    )
-
-    docs = _docs(spark)
-    path = os.path.join(str(tmp_path), "idx")
-    build_substring_index(docs.filter(F.col("doc_id") % 5 != 0), path)
-    spans_out = os.path.join(str(tmp_path), "spans")
-    sink = substring_index_sink(path, spans_out=spans_out)
-    b1 = docs.filter(F.col("doc_id") % 10 == 0)
-    sink(b1, 1)
-    assert len(_delta_dirs(path)) == 1
-    assert os.path.isdir(os.path.join(spans_out, "batch=1"))
-    sink(b1, 1)                          # foreachBatch retry: no-op
-    assert len(_delta_dirs(path)) == 1
-    with pytest.raises(RuntimeError, match="does not belong"):
-        sink(b1, 0)                      # stale checkpoint guard
-    # scheduled compaction folds the streamed generations + tags
-    sink2 = substring_index_sink(path, compact_every=2)
-    sink2(docs.filter(F.col("doc_id") % 10 == 5), 2)
-    assert len(_delta_dirs(path)) == 0
-    assert applied_tags(path) >= {"b1", "b2"}
-    # absorbed spans equal from-scratch over the cumulative corpus
-    got = _span_set(substring_spans_from_index(spark, path))
-    want = _span_set(exact_substring_spans(docs))
-    assert got == want

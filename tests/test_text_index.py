@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from flink_precisely_demo_spark.operators.ann_index import (
+from flink_precisely_demo_spark.operators.lsm import (
     applied_tags,
     delta_tags,
 )
@@ -203,45 +203,6 @@ def test_zero_token_docs_carry_corpus_weight(spark, tmp_path):
     # n_docs=3 flows into the score: (2N-2df+1)=3 with df=2
     r = hits.filter(F.col("doc_id") == 3).head()
     assert r["df"] == 2 and r["dl"] == 1
-
-
-def test_streaming_sink_idempotence_and_binding_guard(spark, tmp_path):
-    """The foreachBatch sink contract (streaming/text_index_ingest):
-    a retried batch tag is a no-op, and a checkpoint that restarts
-    behind the index's absorbed batches fails fast."""
-    import pytest
-
-    from flink_precisely_demo_spark.streaming.text_index_ingest import (
-        text_index_sink,
-    )
-
-    path = os.path.join(str(tmp_path), "tiny")
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "alpha")],
-        "doc_id long, text string")
-    build_text_index(corpus, path, n_buckets=4)
-    sink = text_index_sink(path)
-    b1 = spark.createDataFrame([(3, "gamma alpha", "U")],
-                               "doc_id long, text string, op string")
-    sink(b1, 1)
-    n1 = text_index_stats(spark, path).head()["n_deltas"]
-    sink(b1, 1)                          # foreachBatch retry: no-op
-    assert text_index_stats(spark, path).head()["n_deltas"] == n1 == 1
-    with pytest.raises(RuntimeError, match="does not belong"):
-        sink(b1, 0)                      # stale checkpoint guard
-    # delete through the sink, then scheduled compaction folds it
-    sink2 = text_index_sink(path, compact_every=2)
-    b2 = spark.createDataFrame([(2, None, "D")],
-                               "doc_id long, text string, op string")
-    sink2(b2, 2)
-    st = text_index_stats(spark, path).head()
-    assert st["n_deltas"] == 0           # compact_every=2 fired
-    hits = search_text_index(spark, path, ("alpha",), k=10)
-    assert {r["doc_id"] for r in hits.collect()} == {1, 3}
-    from flink_precisely_demo_spark.operators.ann_index import (
-        applied_tags as _at,
-    )
-    assert _at(path) >= {"b1", "b2"}     # tags survive the fold
 
 
 def test_doc_ranking_equals_scratch_and_sums_terms(spark, tmp_path):
