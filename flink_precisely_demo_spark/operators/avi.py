@@ -1,5 +1,5 @@
 """MJPEG/AVI container codec in pure Python — the real demux step
-behind ``multimodal.frame_sample``.
+behind ``multimodal.video_features``.
 
 AVI is a RIFF container (the same chunk grammar as WAV): a ``hdrl``
 list carries the main header (``avih``, frame period in µs) and one
@@ -13,28 +13,35 @@ filtered frame streams as playable files (ffplay/VLC read them).
 
 Scope: single video stream, MJPG fourcc, no interleaved audio.
 Streams outside it (mp4/mkv/avi-with-other-codecs) raise
-:class:`~.jpeg.UnsupportedCodecError`, surfaced per row by
-``frame_sample`` — never a job abort.
+:class:`~.codec.UnsupportedCodecError`, surfaced per row by
+``video_features`` — never a job abort.
 """
 
 from __future__ import annotations
 
 import struct
 
-from .jpeg import UnsupportedCodecError
+from .codec import UnsupportedCodecError, decoder
 
 
 def _chunks(buf: bytes, start: int, end: int):
     """Yield (fourcc, payload_start, payload_size) walking a RIFF
-    chunk sequence; chunks are word-aligned."""
+    chunk sequence; chunks are word-aligned. A chunk whose declared
+    size runs past ``end`` (its parent's end, or the end of a
+    truncated file) raises ``ValueError`` rather than yielding a cut
+    payload."""
     i = start
     while i + 8 <= end:
         fourcc = buf[i:i + 4]
         (size,) = struct.unpack("<I", buf[i + 4:i + 8])
+        if i + 8 + size > end:
+            raise ValueError(
+                f"AVI chunk {fourcc!r} at {i} overruns its parent")
         yield fourcc, i + 8, size
         i += 8 + size + (size & 1)
 
 
+@decoder
 def demux_mjpeg_avi(payload: bytes) -> tuple[list[bytes], float]:
     """AVI bytes -> (list of per-frame JPEG bytes, frames_per_second).
 

@@ -8,7 +8,7 @@ audio beyond WAV, no external library.
   raw-escape partitions), wasted bits, and all four channel
   assignments (independent, left/side, right/side, mid/side).
   Unsupported profiles (non-8/16-bit samples) raise
-  :class:`~.jpeg.UnsupportedCodecError`; malformed data raises
+  :class:`~.codec.UnsupportedCodecError`; malformed data raises
   ``ValueError``. CRCs are not verified (decode-for-features, not
   archival validation — same stance as the JPEG decoder).
 - ENCODE: fixed-blocksize, 16-bit, mono or stereo (independent
@@ -28,51 +28,10 @@ import struct
 
 import numpy as np
 
-from .jpeg import UnsupportedCodecError
+from .codec import MsbReader, MsbWriter, UnsupportedCodecError, decoder
 
 
-class _Bits:
-    """MSB-first bit reader (FLAC bit order)."""
-
-    __slots__ = ("data", "i", "acc", "nbits")
-
-    def __init__(self, data: bytes, start: int = 0):
-        self.data = data
-        self.i = start
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.i >= len(self.data):
-                raise ValueError("flac: bitstream underrun")
-            self.acc = (self.acc << 8) | self.data[self.i]
-            self.i += 1
-            self.nbits += 8
-        self.nbits -= n
-        v = (self.acc >> self.nbits) & ((1 << n) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return v
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v >= (1 << (n - 1)) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-        return q
-
-    def align(self) -> None:
-        self.nbits -= self.nbits % 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def byte_pos(self) -> int:
-        return self.i - self.nbits // 8
-
-
-def _rice_read(bits: _Bits, param: int) -> int:
+def _rice_read(bits: MsbReader, param: int) -> int:
     q = bits.unary()
     r = bits.read(param) if param else 0
     v = (q << param) | r
@@ -90,7 +49,7 @@ _RATE_CODE = {1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000,
               11: 96000}
 
 
-def _read_utf8_number(bits: _Bits) -> int:
+def _read_utf8_number(bits: MsbReader) -> int:
     first = bits.read(8)
     if first < 0x80:
         return first
@@ -108,7 +67,8 @@ def _read_utf8_number(bits: _Bits) -> int:
     return v
 
 
-def _decode_residual(bits: _Bits, block_size: int, order: int) -> list[int]:
+def _decode_residual(bits: MsbReader, block_size: int,
+                     order: int) -> list[int]:
     method = bits.read(2)
     if method not in (0, 1):
         raise ValueError(f"flac: bad residual method {method}")
@@ -131,7 +91,7 @@ def _decode_residual(bits: _Bits, block_size: int, order: int) -> list[int]:
     return res
 
 
-def _decode_subframe(bits: _Bits, block_size: int, bps: int) -> list[int]:
+def _decode_subframe(bits: MsbReader, block_size: int, bps: int) -> list[int]:
     if bits.read(1):
         raise ValueError("flac: subframe padding bit set")
     sf_type = bits.read(6)
@@ -172,6 +132,7 @@ def _decode_subframe(bits: _Bits, block_size: int, bps: int) -> list[int]:
     return out
 
 
+@decoder
 def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
     """FLAC bytes -> (mono float32 samples in [-1, 1], sample_rate).
     Multi-channel audio is mean-mixed to mono (the WAV decoder's
@@ -206,7 +167,7 @@ def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
 
     channels: list[list[int]] = [[] for _ in range(n_channels)]
     while i < len(payload) - 1:
-        bits = _Bits(payload, i)
+        bits = MsbReader(payload, i, underrun="flac: bitstream underrun")
         sync = bits.read(14)
         if sync != 0x3FFE:
             raise ValueError("flac: lost frame sync")
@@ -277,33 +238,6 @@ def decode_flac(payload: bytes) -> tuple[np.ndarray, int]:
 
 # ------------------------------------------------------------- encoder
 
-class _BitW:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc = (self.acc << n) | (v & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-            self.acc &= (1 << self.nbits) - 1
-
-    def unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-
 def _crc8(data: bytes) -> int:
     crc = 0
     for b in data:
@@ -338,7 +272,7 @@ def _utf8_number(n: int) -> bytes:
     return bytes(out)
 
 
-def _rice_write(w: _BitW, v: int, param: int) -> None:
+def _rice_write(w: MsbWriter, v: int, param: int) -> None:
     u = (v << 1) if v >= 0 else ((-v) << 1) - 1
     w.unary(u >> param)
     if param:
@@ -385,19 +319,18 @@ def encode_flac(samples: np.ndarray, rate: int,
         header += _utf8_number(frame_idx)
         header += struct.pack(">H", bs - 1)
         header.append(_crc8(bytes(header)))
-        w = _BitW()
+        w = MsbWriter()
         for b in bytes(header):
             w.write(b, 8)
         for c in range(ch):
             col = blk[:, c].tolist()
             _write_subframe(w, col)
-        w.align()
-        frame = bytes(w.out)
+        frame = w.flush()
         out += frame + struct.pack(">H", _crc16(frame))
     return bytes(out)
 
 
-def _write_subframe(w: _BitW, col: list[int]) -> None:
+def _write_subframe(w: MsbWriter, col: list[int]) -> None:
     if all(v == col[0] for v in col):              # CONSTANT
         w.write(0, 1)
         w.write(0, 6)

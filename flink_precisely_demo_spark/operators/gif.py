@@ -2,15 +2,15 @@
 
 - DECODE: GIF87a/GIF89a, global and local color tables, interlaced
   images, variable-width LZW with CLEAR/END handling and the 12-bit
-  dict cap. Returns the FIRST frame as (h, w, 3) RGB (animation is a
-  frame-sampling concern — ``frame_sample``'s territory — not a
-  still-image-features one); transparency is ignored like PNG alpha.
+  dict cap. Returns the FIRST frame as (h, w, 3) RGB (animation is
+  not a still-image-features concern); transparency is ignored like
+  PNG alpha.
 - ENCODE: single-frame GIF89a from a palette-sized image (≤ 256
   distinct colors), non-interlaced, real LZW compression. Exists so
   the decoder round-trips without any imaging library.
 
-GIF packs LZW codes LSB-first (the opposite bit order of JPEG's
-entropy stream) — both bit readers live with their formats.
+The LZW itself is :func:`.codec.lzw_encode`/:func:`.codec.lzw_decode`
+in its GIF flavour: codes packed LSB-first, no early change.
 """
 
 from __future__ import annotations
@@ -19,57 +19,12 @@ import struct
 
 import numpy as np
 
-from .jpeg import UnsupportedCodecError
-
-
-def _lzw_decode(min_code_size: int, data: bytes) -> list[int]:
-    """GIF-flavor LZW: variable code width, LSB-first packing."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    code_size = min_code_size + 1
-    table: list[list[int]] = [[i] for i in range(clear)] + [[], []]
-    out: list[int] = []
-    prev: list[int] | None = None
-
-    acc = 0
-    nbits = 0
-    pos = 0
-    n = len(data)
-    while True:
-        while nbits < code_size:
-            if pos >= n:
-                return out          # missing END: tolerate truncation
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << code_size) - 1)
-        acc >>= code_size
-        nbits -= code_size
-
-        if code == clear:
-            table = [[i] for i in range(clear)] + [[], []]
-            code_size = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            return out
-        if code < len(table) and table[code]:
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]          # the KwKwK case
-        else:
-            raise ValueError(f"gif: bad LZW code {code}")
-        out.extend(entry)
-        if prev is not None:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << code_size) and code_size < 12:
-                code_size += 1
-        prev = entry
-
+from .codec import decoder, lzw_decode, lzw_encode
 
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
+@decoder
 def decode_gif(payload: bytes) -> np.ndarray:
     """GIF bytes -> first frame as (h, w, 3) RGB uint8."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
@@ -111,12 +66,15 @@ def decode_gif(payload: bytes) -> np.ndarray:
                 data += payload[i + 1:i + 1 + ln]
                 i += 1 + ln
             i += 1
-            idx = _lzw_decode(min_code_size, bytes(data))
+            idx = lzw_decode(bytes(data), min_code_size, msb=False,
+                             early=0, bad_first="gif: bad LZW code {}",
+                             bad_code="gif: bad LZW code {}")
             if len(idx) < w * h:
                 raise ValueError(
                     f"gif: LZW stream yields {len(idx)} pixels for "
                     f"{w}x{h} frame")
-            grid = np.asarray(idx[:w * h], dtype=np.int32).reshape(h, w)
+            grid = np.frombuffer(idx, np.uint8, w * h).astype(
+                np.int32).reshape(h, w)
             if ipacked & 0x40:               # interlaced row order
                 rows = [r for start, step in _INTERLACE_PASSES
                         for r in range(start, h, step)]
@@ -131,57 +89,6 @@ def decode_gif(payload: bytes) -> np.ndarray:
         else:
             raise ValueError(f"gif: unknown block 0x{block:02X}")
     raise ValueError("gif: no image data found")
-
-
-def _lzw_encode(min_code_size: int, indices: list[int]) -> bytes:
-    clear = 1 << min_code_size
-    end = clear + 1
-    code_size = min_code_size + 1
-    table: dict[tuple[int, ...], int] = {(i,): i for i in range(clear)}
-    next_code = end + 1
-
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    run: tuple[int, ...] = ()
-    for sym in indices:
-        cand = run + (sym,)
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run])
-        table[cand] = next_code
-        next_code += 1
-        # the encoder's table is one entry AHEAD of the decoder's (the
-        # decoder materializes entry i only when reading code i+1), so
-        # widen at 2^cs + 1 to land on the same code boundary as the
-        # decoder's len==2^cs rule; reset at 4096 so a 13-bit code is
-        # never assigned
-        if next_code == (1 << code_size) + 1 and code_size < 12:
-            code_size += 1
-        if next_code == (1 << 12):           # dict full: reset
-            emit(clear)
-            table = {(i,): i for i in range(clear)}
-            next_code = end + 1
-            code_size = min_code_size + 1
-        run = (sym,)
-    if run:
-        emit(table[run])
-    emit(end)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
 
 
 def encode_gif(img: np.ndarray) -> bytes:
@@ -204,7 +111,8 @@ def encode_gif(img: np.ndarray) -> bytes:
     out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
     min_code_size = max(bits, 2)
     out.append(min_code_size)
-    lzw = _lzw_encode(min_code_size, inverse.tolist())
+    lzw = lzw_encode(inverse.astype(np.uint8).tobytes(), min_code_size,
+                     msb=False, early=0)
     for off in range(0, len(lzw), 255):
         chunk = lzw[off:off + 255]
         out.append(len(chunk))

@@ -14,11 +14,11 @@ Scope (and the typed error for everything outside it):
 - ENCODE: baseline (standard Huffman tables) and progressive (flat
   tables, spectral-selection or full successive-approximation scan
   scripts), quality-scaled Annex-K-style quantization, grayscale /
-  4:4:4 / 4:2:0. The encoders exist so resize can re-emit compressed
-  payloads and so the decoder is round-trip tested without any media
-  library in the container; baseline and progressive encodings of
-  the same image decode to bit-identical pixels (same quantized
-  coefficients), which is what the round-trip tests pin.
+  4:4:4 / 4:2:0. The encoders exist so the query fixtures can
+  synthesize payloads and so the decoder is round-trip tested without
+  any media library in the container; baseline and progressive
+  encodings of the same image decode to bit-identical pixels (same
+  quantized coefficients), which is what the round-trip tests pin.
 
 The per-block transforms (dequantize, IDCT/FDCT, level shift, chroma
 up/down-sampling, colorspace) are all vectorized numpy over every
@@ -36,12 +36,14 @@ import struct
 
 import numpy as np
 
-
-class UnsupportedCodecError(ValueError):
-    """Payload is a recognized format but outside the supported
-    profile (progressive JPEG, arithmetic coding, mp3, ...). Feature
-    operators surface this per row instead of failing the job."""
-
+from .codec import (
+    MsbReader,
+    MsbWriter,
+    UnsupportedCodecError,
+    canonical_codes,
+    decoder,
+    encoder_codes,
+)
 
 # zigzag scan position -> row-major coefficient index
 ZIGZAG = np.array([
@@ -114,55 +116,21 @@ _AC_CHROMA = ([0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77], [
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA])
 
 
-def _canonical_codes(counts, symbols):
-    """(counts, symbols) -> {(length, code): symbol} canonical map."""
-    table, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[(length, code)] = symbols[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
+def _huffman_table(counts, symbols) -> dict:
+    """DHT (code counts per length 1..16, symbols in code order) ->
+    decode table (see :func:`.codec.canonical_codes`)."""
+    lengths = [n for n in range(1, 17) for _ in range(counts[n - 1])]
+    return canonical_codes([(n, symbols[k]) for k, n in enumerate(lengths)])
 
 
 def _encode_codes(counts, symbols):
     """(counts, symbols) -> {symbol: (code, length)} for the writer."""
-    return {sym: (code, length)
-            for (length, code), sym in _canonical_codes(counts, symbols).items()}
+    return encoder_codes(_huffman_table(counts, symbols))
 
 
-class _BitReader:
-    """MSB-first bit reader over unstuffed entropy-coded bytes."""
-
-    __slots__ = ("data", "i", "acc", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.i = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def receive(self, s: int) -> int:
-        while self.nbits < s:
-            # past the end: pad with 1s (spec: fill bits are 1s)
-            byte = self.data[self.i] if self.i < len(self.data) else 0xFF
-            self.i += 1
-            self.acc = (self.acc << 8) | byte
-            self.nbits += 8
-        self.nbits -= s
-        v = (self.acc >> self.nbits) & ((1 << s) - 1)
-        self.acc &= (1 << self.nbits) - 1
-        return v
-
-    def decode_huff(self, table: dict) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.receive(1)
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in entropy stream")
+#: writer tables (DC, AC) for the standard luma and chroma DHTs
+_CODES_LUMA = _encode_codes(*_DC_LUMA), _encode_codes(*_AC_LUMA)
+_CODES_CHROMA = _encode_codes(*_DC_CHROMA), _encode_codes(*_AC_CHROMA)
 
 
 def _extend(v: int, s: int) -> int:
@@ -235,6 +203,7 @@ def _scan_mcu_count(scan, frame) -> int:
     return scan[0]["bw"] * scan[0]["bh"]
 
 
+@decoder
 def decode_jpeg(payload: bytes) -> np.ndarray:
     """Baseline (SOF0/1) or progressive (SOF2) JPEG -> (h, w, 3) RGB
     uint8 (grayscale replicated).
@@ -288,7 +257,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 counts = list(seg[p + 1:p + 17])
                 nsym = sum(counts)
                 symbols = list(seg[p + 17:p + 17 + nsym])
-                huff[(tc, th)] = _canonical_codes(counts, symbols)
+                huff[(tc, th)] = _huffman_table(counts, symbols)
                 p += 17 + nsym
         elif marker in (0xC0, 0xC1, 0xC2):   # SOF0/1 baseline, SOF2 prog
             progressive = marker == 0xC2
@@ -346,7 +315,7 @@ def _baseline_scan(scan, entropy_segs, huff, blocks, frame,
     total = _scan_mcu_count(scan, frame)
     per_seg = restart_interval or total
     for seg_idx, seg in enumerate(entropy_segs):
-        reader = _BitReader(seg)
+        reader = MsbReader(seg, fill=0xFF)   # fill bits are 1s
         pred = {c["id"]: 0 for c in scan}
         first = seg_idx * per_seg
         for mcu in range(first, min(first + per_seg, total)):
@@ -355,12 +324,12 @@ def _baseline_scan(scan, entropy_segs, huff, blocks, frame,
                 ac_tbl = huff.get((1, c["ta"]))
                 if dc_tbl is None or ac_tbl is None:
                     raise ValueError("jpeg: missing Huffman table")
-                s = reader.decode_huff(dc_tbl)
-                pred[c["id"]] += _extend(reader.receive(s), s)
+                s = reader.symbol(dc_tbl)
+                pred[c["id"]] += _extend(reader.read(s), s)
                 coef[0] = pred[c["id"]]
                 k = 1
                 while k < 64:
-                    rs = reader.decode_huff(ac_tbl)
+                    rs = reader.symbol(ac_tbl)
                     r, s = rs >> 4, rs & 15
                     if s == 0:
                         if r != 15:
@@ -370,7 +339,7 @@ def _baseline_scan(scan, entropy_segs, huff, blocks, frame,
                     k += r
                     if k > 63:
                         raise ValueError("jpeg: AC index overflow")
-                    coef[k] = _extend(reader.receive(s), s)
+                    coef[k] = _extend(reader.read(s), s)
                     k += 1
 
 
@@ -389,7 +358,7 @@ def _progressive_scan(scan, entropy_segs, huff, blocks, frame,
     total = _scan_mcu_count(scan, frame)
     per_seg = restart_interval or total
     for seg_idx, seg in enumerate(entropy_segs):
-        reader = _BitReader(seg)
+        reader = MsbReader(seg, fill=0xFF)   # fill bits are 1s
         pred = {c["id"]: 0 for c in scan}
         eobrun = 0
         first = seg_idx * per_seg
@@ -400,10 +369,10 @@ def _progressive_scan(scan, entropy_segs, huff, blocks, frame,
                         dc_tbl = huff.get((0, c["td"]))
                         if dc_tbl is None:
                             raise ValueError("jpeg: missing Huffman table")
-                        s = reader.decode_huff(dc_tbl)
-                        pred[c["id"]] += _extend(reader.receive(s), s)
+                        s = reader.symbol(dc_tbl)
+                        pred[c["id"]] += _extend(reader.read(s), s)
                         coef[0] = pred[c["id"]] << al
-                    elif reader.receive(1):          # DC refinement
+                    elif reader.read(1):          # DC refinement
                         coef[0] |= 1 << al
             else:
                 c = scan[0]
@@ -426,20 +395,20 @@ def _ac_first_block(reader, coef, ac_tbl, ss, se, al, eobrun) -> int:
         return eobrun - 1
     k = ss
     while k <= se:
-        rs = reader.decode_huff(ac_tbl)
+        rs = reader.symbol(ac_tbl)
         r, s = rs >> 4, rs & 15
         if s == 0:
             if r != 15:                  # EOBn: run of 2^r + bits blocks
                 eobrun = (1 << r) - 1    # current block counted here
                 if r:
-                    eobrun += reader.receive(r)
+                    eobrun += reader.read(r)
                 return eobrun
             k += 16                      # ZRL
             continue
         k += r
         if k > se:
             raise ValueError("jpeg: AC index overflow")
-        coef[k] = _extend(reader.receive(s), s) << al
+        coef[k] = _extend(reader.read(s), s) << al
         k += 1
     return 0
 
@@ -454,21 +423,21 @@ def _ac_refine_block(reader, coef, ac_tbl, ss, se, al, eobrun) -> int:
     k = ss
     if eobrun == 0:
         while k <= se:
-            rs = reader.decode_huff(ac_tbl)
+            rs = reader.symbol(ac_tbl)
             r, s = rs >> 4, rs & 15
             val = 0
             if s == 0:
                 if r != 15:
                     eobrun = 1 << r
                     if r:
-                        eobrun += reader.receive(r)
+                        eobrun += reader.read(r)
                     break                # rest handled by EOB logic
                 # r == 15: ZRL — advance over 16 zero-history coeffs
             else:
-                val = p1 if reader.receive(1) else m1
+                val = p1 if reader.read(1) else m1
             while k <= se:
                 if coef[k] != 0:
-                    if reader.receive(1) and (coef[k] & p1) == 0:
+                    if reader.read(1) and (coef[k] & p1) == 0:
                         coef[k] += p1 if coef[k] >= 0 else m1
                 else:
                     if r == 0:
@@ -482,7 +451,7 @@ def _ac_refine_block(reader, coef, ac_tbl, ss, se, al, eobrun) -> int:
         # EOB run covers this block: only correction bits remain
         while k <= se:
             if coef[k] != 0:
-                if reader.receive(1) and (coef[k] & p1) == 0:
+                if reader.read(1) and (coef[k] & p1) == 0:
                     coef[k] += p1 if coef[k] >= 0 else m1
             k += 1
         eobrun -= 1
@@ -533,30 +502,10 @@ def _quality_tables(quality: int) -> tuple[np.ndarray, np.ndarray]:
     return q(_QT_LUMA), q(_QT_CHROMA)
 
 
-class _BitWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | code
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            byte = (self.acc >> self.nbits) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)       # byte stuffing
-            self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # 1-fill to byte boundary
-        return bytes(self.out)
+def _entropy_bytes(bw_: MsbWriter) -> bytes:
+    """Flush an entropy segment: 1-fill to a byte boundary, then stuff
+    a 0x00 after every 0xFF so no data byte reads as a marker."""
+    return bw_.flush(fill=1).replace(b"\xff", b"\xff\x00")
 
 
 def _fdct_blocks(plane: np.ndarray) -> np.ndarray:
@@ -578,7 +527,7 @@ def _magnitude(v: int) -> tuple[int, int]:
     return s, (v if v > 0 else v + (1 << s) - 1)
 
 
-def _encode_block(bw_: _BitWriter, coef: np.ndarray, pred: int,
+def _encode_block(bw_: MsbWriter, coef: np.ndarray, pred: int,
                   dc_codes: dict, ac_codes: dict) -> int:
     dc = int(coef[0])
     s, code = _magnitude(dc - pred)
@@ -613,8 +562,8 @@ def _pad_to(plane: np.ndarray, mult: int) -> np.ndarray:
 
 def _quantized_blocks(img: np.ndarray, quality: int, subsampling: str):
     """Shared encoder front half: colorspace, subsampling, FDCT and
-    quantization. Returns (comp_blocks, samp, h, w, qtl, qtc, gray,
-    mcus_x, mcus_y); comp_blocks[ci] has shape
+    quantization. Returns (comp_blocks, samp, h, w, qtl, qtc, mcus_x,
+    mcus_y); comp_blocks[ci] has shape
     (mcus_y * sv, mcus_x * sh, 64) in zigzag order."""
     img = np.asarray(img, dtype=np.uint8)
     gray = img.ndim == 2
@@ -656,7 +605,28 @@ def _quantized_blocks(img: np.ndarray, quality: int, subsampling: str):
         qz = qtl if ci == 0 else qtc
         quant = np.round(coeffs / qz[None, :]).astype(np.int32)
         comp_blocks.append(quant.reshape(mcus_y * sv, mcus_x * sh, 64))
-    return comp_blocks, samp, h, w, qtl, qtc, gray, mcus_x, mcus_y
+    return comp_blocks, samp, h, w, qtl, qtc, mcus_x, mcus_y
+
+
+def _seg(marker: int, body: bytes) -> bytes:
+    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+
+
+def _dht(tc: int, th: int, spec) -> bytes:
+    counts, symbols = spec
+    return _seg(0xC4, bytes([tc << 4 | th]) + bytes(counts) + bytes(symbols))
+
+
+def _frame_header(sof: int, qtl, qtc, samp, h: int, w: int) -> bytearray:
+    """SOI, the quantization tables and the SOF segment."""
+    out = bytearray(b"\xff\xd8")
+    out += _seg(0xDB, b"\x00" + qtl.astype(np.uint8).tobytes())
+    if len(samp) > 1:
+        out += _seg(0xDB, b"\x01" + qtc.astype(np.uint8).tobytes())
+    body = struct.pack(">BHHB", 8, h, w, len(samp))
+    for ci, (sh, sv) in enumerate(samp):
+        body += bytes([ci + 1, sh << 4 | sv, 0 if ci == 0 else 1])
+    return out + _seg(sof, body)
 
 
 def encode_jpeg(img: np.ndarray, quality: int = 85,
@@ -669,20 +639,19 @@ def encode_jpeg(img: np.ndarray, quality: int = 85,
     ``restart_interval``: emit a DRI segment and RSTn markers every N
     MCUs (0 = none) — what a streaming/error-resilient producer does.
     """
-    (comp_blocks, samp, h, w, qtl, qtc, gray,
+    (comp_blocks, samp, h, w, qtl, qtc,
      mcus_x, mcus_y) = _quantized_blocks(img, quality, subsampling)
 
-    dc_l, ac_l = _encode_codes(*_DC_LUMA), _encode_codes(*_AC_LUMA)
-    dc_c, ac_c = _encode_codes(*_DC_CHROMA), _encode_codes(*_AC_CHROMA)
+    (dc_l, ac_l), (dc_c, ac_c) = _CODES_LUMA, _CODES_CHROMA
 
     entropy = bytearray()
-    bw_ = _BitWriter()
+    bw_ = MsbWriter()
     preds = [0] * len(comp_blocks)
     for mcu in range(mcus_x * mcus_y):
         if restart_interval and mcu and mcu % restart_interval == 0:
-            entropy += bw_.flush()
+            entropy += _entropy_bytes(bw_)
             entropy += bytes([0xFF, 0xD0 + (mcu // restart_interval - 1) % 8])
-            bw_ = _BitWriter()
+            bw_ = MsbWriter()
             preds = [0] * len(comp_blocks)
         my, mx = divmod(mcu, mcus_x)
         for ci, (sh, sv) in enumerate(samp):
@@ -693,36 +662,20 @@ def encode_jpeg(img: np.ndarray, quality: int = 85,
                     coef = comp_blocks[ci][my * sv + by, mx * sh + bx]
                     preds[ci] = _encode_block(bw_, coef, preds[ci],
                                               dc_codes, ac_codes)
-    entropy += bw_.flush()
+    entropy += _entropy_bytes(bw_)
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    def dht(tc: int, th: int, spec) -> bytes:
-        counts, symbols = spec
-        return seg(0xC4, bytes([tc << 4 | th]) + bytes(counts)
-                   + bytes(symbols))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, b"\x00" + qtl.astype(np.uint8).tobytes())
-    if not gray:
-        out += seg(0xDB, b"\x01" + qtc.astype(np.uint8).tobytes())
-    ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        sh, sv = samp[ci]
-        sof += bytes([ci + 1, sh << 4 | sv, 0 if ci == 0 else 1])
-    out += seg(0xC0, sof)
-    out += dht(0, 0, _DC_LUMA) + dht(1, 0, _AC_LUMA)
-    if not gray:
-        out += dht(0, 1, _DC_CHROMA) + dht(1, 1, _AC_CHROMA)
+    out = _frame_header(0xC0, qtl, qtc, samp, h, w)
+    out += _dht(0, 0, _DC_LUMA) + _dht(1, 0, _AC_LUMA)
+    if len(samp) > 1:
+        out += _dht(0, 1, _DC_CHROMA) + _dht(1, 1, _AC_CHROMA)
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    ncomp = len(samp)
     sos = bytes([ncomp])
     for ci in range(ncomp):
         sos += bytes([ci + 1, 0 if ci == 0 else 0x11])
     sos += b"\x00\x3f\x00"
-    out += seg(0xDA, sos)
+    out += _seg(0xDA, sos)
     out += entropy
     out += b"\xff\xd9"
     return bytes(out)
@@ -744,9 +697,10 @@ _AC_PROG_SYMBOLS = ([r << 4 for r in range(15)] + [0xF0]
                        for s in range(1, 11)])
 _AC_PROG = ([0, 0, 0, 0, 0, 0, 0, len(_AC_PROG_SYMBOLS),
              0, 0, 0, 0, 0, 0, 0, 0], _AC_PROG_SYMBOLS)
+_CODES_PROG = _encode_codes(*_DC_PROG), _encode_codes(*_AC_PROG)
 
 
-def _emit_eobrun(bw_: _BitWriter, ac_codes: dict, state: dict) -> None:
+def _emit_eobrun(bw_: MsbWriter, ac_codes: dict, state: dict) -> None:
     """Flush the pending EOB run (EOBn symbol + extension bits) and
     the correction bits buffered behind it (refinement scans)."""
     if state["eobrun"] > 0:
@@ -843,11 +797,10 @@ def encode_jpeg_progressive(img: np.ndarray, quality: int = 85,
     pass (Ah=1, Al=0), exercising every progressive decode path:
     DC/AC first, DC/AC refinement, EOB runs, correction bits.
     """
-    (comp_blocks, samp, h, w, qtl, qtc, gray,
+    (comp_blocks, samp, h, w, qtl, qtc,
      mcus_x, mcus_y) = _quantized_blocks(img, quality, subsampling)
     ncomp = len(comp_blocks)
-    dc_codes = _encode_codes(*_DC_PROG)
-    ac_codes = _encode_codes(*_AC_PROG)
+    dc_codes, ac_codes = _CODES_PROG
 
     # per-component block dims for non-interleaved AC scans (exclude
     # MCU padding blocks, mirroring the decoder's _frame_geometry)
@@ -859,19 +812,16 @@ def encode_jpeg_progressive(img: np.ndarray, quality: int = 85,
         ch = -(-(h * sv) // vmax)
         comp_bdims.append((-(-ch // 8), -(-cw // 8)))
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
     def sos_header(comp_ids: list[int], ss: int, se: int,
                    ah: int, al: int) -> bytes:
         body = bytes([len(comp_ids)])
         for cid in comp_ids:
             body += bytes([cid, 0x00])     # td=0, ta=0 (flat tables)
         body += bytes([ss, se, (ah << 4) | al])
-        return seg(0xDA, body)
+        return _seg(0xDA, body)
 
     def dc_scan(al: int, refine: bool) -> bytes:
-        bw_ = _BitWriter()
+        bw_ = MsbWriter()
         preds = [0] * ncomp
         for mcu in range(mcus_x * mcus_y):
             my, mx = divmod(mcu, mcus_x)
@@ -890,10 +840,10 @@ def encode_jpeg_progressive(img: np.ndarray, quality: int = 85,
                             if s:
                                 bw_.write(code, s)
                             preds[ci] = v
-        return bw_.flush()
+        return _entropy_bytes(bw_)
 
     def ac_scan(ci: int, al: int, refine: bool) -> bytes:
-        bw_ = _BitWriter()
+        bw_ = MsbWriter()
         state = {"eobrun": 0, "pending": []}
         bh, bwid = comp_bdims[ci]
         for by in range(bh):
@@ -906,23 +856,10 @@ def encode_jpeg_progressive(img: np.ndarray, quality: int = 85,
                     _first_ac_block(bw_, coef, 1, 63, al, ac_codes,
                                     state)
         _emit_eobrun(bw_, ac_codes, state)
-        return bw_.flush()
+        return _entropy_bytes(bw_)
 
-    def dht(tc: int, th: int, spec) -> bytes:
-        counts, symbols = spec
-        return seg(0xC4, bytes([tc << 4 | th]) + bytes(counts)
-                   + bytes(symbols))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, b"\x00" + qtl.astype(np.uint8).tobytes())
-    if not gray:
-        out += seg(0xDB, b"\x01" + qtc.astype(np.uint8).tobytes())
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for ci in range(ncomp):
-        sh, sv = samp[ci]
-        sof += bytes([ci + 1, sh << 4 | sv, 0 if ci == 0 else 1])
-    out += seg(0xC2, sof)                      # SOF2: progressive
-    out += dht(0, 0, _DC_PROG) + dht(1, 0, _AC_PROG)
+    out = _frame_header(0xC2, qtl, qtc, samp, h, w)   # SOF2: progressive
+    out += _dht(0, 0, _DC_PROG) + _dht(1, 0, _AC_PROG)
 
     all_ids = [ci + 1 for ci in range(ncomp)]
     first_al = 1 if successive else 0

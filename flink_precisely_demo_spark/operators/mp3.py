@@ -26,7 +26,7 @@ multimodal family).
 
 from __future__ import annotations
 
-from .jpeg import UnsupportedCodecError
+from .codec import UnsupportedCodecError, decoder
 
 # bitrate kbps by [version_group][layer][index]; version_group 0 =
 # MPEG-1, 1 = MPEG-2/2.5 (which share tables); layer index 1/2/3
@@ -123,6 +123,7 @@ def _xing_frames(data: bytes, off: int,
     return None, None
 
 
+@decoder
 def mp3_stream_info(payload: bytes) -> dict:
     """Stream-level stats from walking every frame header.
 

@@ -4,17 +4,18 @@ Image/audio/video payloads are opaque ``binary`` columns with a typed
 metadata struct — the lakehouse-native layout for multimodal training
 data (payload bytes stay columnar; metadata prunes without touching
 bytes). Codecs that need no external library decode FOR REAL:
-baseline JPEG (:mod:`.jpeg`, pure numpy), PNG (:mod:`.png`, numpy +
-stdlib zlib), MJPEG/AVI video demux (:mod:`.avi`, RIFF walk),
-GIF with real LZW (:mod:`.gif`), WebP-lossless/VP8L incl. all four
-transforms (:mod:`.webp`), baseline TIFF incl. PackBits and
-both byte orders (:mod:`.tiff`), FLAC incl. LPC/Rice (:mod:`.flac`),
-WAV/PCM16 (stdlib ``wave`` + numpy), AIFF/AIFC PCM16 and Sun AU
-incl. G.711 mu-law (formula codec), uncompressed 24-bit BMP and
-binary PPM (pure numpy). The remaining formats — all lossy-
+baseline and progressive JPEG (:mod:`.jpeg`, pure numpy), PNG
+(:mod:`.png`, numpy + stdlib zlib), MJPEG/AVI video demux
+(:mod:`.avi`, RIFF walk), GIF with real LZW (:mod:`.gif`),
+WebP-lossless/VP8L incl. all four transforms (:mod:`.webp`), baseline
+TIFF incl. LZW, PackBits and both byte orders (:mod:`.tiff`), FLAC
+incl. LPC/Rice (:mod:`.flac`), WAV/PCM16 (stdlib ``wave`` + numpy),
+AIFF/AIFC PCM16 and Sun AU incl. G.711 mu-law (formula codec),
+uncompressed 24-bit BMP and binary PPM (pure numpy); their shared
+primitives live in :mod:`.codec`. The remaining formats — all lossy-
 transform codecs needing a DSP stack (VP8-lossy webp, mp3, aac,
 mp4) — raise a typed
-:class:`~.jpeg.UnsupportedCodecError`, which the feature operators
+:class:`~.codec.UnsupportedCodecError`, which the feature operators
 surface PER ROW in an ``error`` column — a corrupt or exotic payload
 can never abort a 100 TB decode job. A real deployment swaps the
 `_decode_*` bodies for PIL / soundfile / pyav; batch shapes, error
@@ -27,8 +28,6 @@ Scale notes:
 - Arrow moves the binary payloads zero-copy into the Python worker;
   the returned feature arrays are small, so the expensive direction
   (bytes in) never crosses twice.
-- ``spark.read.format("binaryFile")`` ingests raw media directories
-  into this layout (path, modificationTime, length, content).
 """
 
 from __future__ import annotations
@@ -41,7 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .jpeg import UnsupportedCodecError, decode_jpeg, encode_jpeg
+from .codec import UnsupportedCodecError
+from .jpeg import decode_jpeg
 
 MEDIA_META = T.StructType([
     T.StructField("media_type", T.StringType()),   # image|audio|video
@@ -60,96 +60,16 @@ MEDIA_SCHEMA = T.StructType([
 ])
 
 
-#: (format, media_type) sniffed from payload magic bytes. A crawled
-#: corpus's file suffixes lie constantly; the payload header doesn't.
-_MAGIC = [
-    (b"\xff\xd8\xff", "jpeg", "image"),
-    (b"\x89PNG\r\n\x1a\n", "png", "image"),
-    (b"GIF8", "gif", "image"),
-    (b"BM", "bmp", "image"),
-    (b"P6", "ppm", "image"),
-    (b"ID3", "mp3", "audio"),
-    (b"fLaC", "flac", "audio"),
-    (b"II*\x00", "tiff", "image"),
-    (b"MM\x00*", "tiff", "image"),
-    (b"%PDF-", "pdf", "document"),
-]
-
-
-def probe_format(payload: bytes) -> tuple[str, str]:
-    """(format, media_type) from payload magic bytes; ('unknown',
-    'unknown') when nothing matches. RIFF containers disambiguate on
-    the form type (WAVE vs AVI); ISO-BMFF (mp4/mov) on the ftyp box."""
-    for magic, fmt, mt in _MAGIC:
-        if payload[:len(magic)] == magic:
-            return fmt, mt
-    if payload[:4] == b"RIFF":
-        if payload[8:12] == b"WAVE":
-            return "wav", "audio"
-        if payload[8:12] == b"AVI ":
-            return "avi", "video"
-        if payload[8:12] == b"WEBP":
-            return "webp", "image"
-    if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
-        return "aiff", "audio"
-    if payload[:4] == b".snd":
-        return "au", "audio"
-    if payload[4:8] == b"ftyp":
-        return "mp4", "video"
-    if (len(payload) >= 2 and payload[0] == 0xFF
-            and payload[1] & 0xE0 == 0xE0        # 11-bit frame sync
-            and (payload[1] >> 1) & 0x3 != 0     # layer bits != reserved
-            and (payload[1] >> 3) & 0x3 != 1):   # version bits != reserved
-        return "mp3", "audio"     # bare MPEG audio frame sync (CRC or not)
-    return "unknown", "unknown"
-
-
-def ingest_binary_dir(spark, path: str) -> DataFrame:
-    """Raw media directory -> (media_id, meta, payload) rows via the
-    binaryFile source. ``format``/``media_type`` come from sniffing
-    each payload's magic bytes (mapInPandas over the binary column —
-    suffixes mislead on real crawls), falling back to the lowercased
-    file suffix when no signature matches."""
-    raw = spark.read.format("binaryFile").load(path).select(
-        F.xxhash64("path").alias("media_id"),
-        F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
-         .alias("__suffix"),
-        F.col("content").alias("payload"))
-
-    suffix_mt = {"png": "image", "jpg": "image", "jpeg": "image",
-                 "gif": "image", "bmp": "image", "ppm": "image",
-                 "pnm": "image", "wav": "audio", "mp3": "audio",
-                 "flac": "audio", "mp4": "video", "avi": "video",
-                 "mkv": "video", "webp": "image", "aiff": "audio",
-                 "aif": "audio", "au": "audio", "snd": "audio"}
-
-    def sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = []
-            for suffix, payload in zip(pdf["__suffix"], pdf["payload"]):
-                fmt, mt = probe_format(bytes(payload[:16]))
-                if fmt == "unknown":
-                    fmt = suffix
-                    mt = suffix_mt.get(suffix, "unknown")
-                metas.append({"media_type": mt, "format": fmt,
-                              "width": None, "height": None,
-                              "n_channels": None, "sample_rate": None,
-                              "duration_ms": None})
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "meta": pd.Series(metas, dtype="object"),
-                "payload": pdf["payload"]})
-
-    return raw.mapInPandas(sniff, schema=MEDIA_SCHEMA)
-
-
 # --------------------------------------------------------------- codecs
 #
-# Baseline JPEG (operators/jpeg.py), PNG (operators/png.py), GIF
-# (operators/gif.py), MJPEG/AVI (operators/avi.py), WAV/PCM16, BMP
-# and PPM decode FOR REAL with no external media libraries.
-# Everything else raises UnsupportedCodecError, surfaced per row by
-# the feature operators.
+# Images: JPEG, PNG, GIF, TIFF and WebP-lossless (operators/{jpeg,png,
+# gif,tiff,webp}.py), BMP and PPM (below). Audio: WAV/PCM16, FLAC
+# (operators/flac.py), AIFF/AIFC PCM16 and Sun AU (below); MP3 stream
+# info without samples (operators/mp3.py). Video: MJPEG/AVI demux
+# (operators/avi.py). Documents: PDF text (operators/pdf.py). All of
+# them decode FOR REAL with no external media libraries. Everything
+# else (lossy VP8 WebP, mp3/aac samples, mp4/mkv) raises
+# UnsupportedCodecError, surfaced per row by the feature operators.
 
 def _decode_bmp(payload: bytes) -> np.ndarray:
     """BMP (BITMAPINFOHEADER) -> (h, w, 3) RGB uint8: uncompressed
@@ -246,9 +166,10 @@ def _decode_ppm(payload: bytes) -> np.ndarray:
 
 def _decode_image(payload: bytes, fmt: str,
                   decoders: dict | None = None) -> np.ndarray:
-    """(h, w, 3) uint8 RGB. Baseline JPEG, PNG, BMP and PPM decode
-    for real; anything else raises UnsupportedCodecError (surfaced
-    per row by the operators below, never a job abort).
+    """(h, w, 3) uint8 RGB. JPEG, PNG, GIF, TIFF, WebP-lossless, BMP
+    and PPM decode for real; anything else raises
+    UnsupportedCodecError (surfaced per row by the operators below,
+    never a job abort).
 
     ``decoders`` is the PRODUCTION SEAM for the formats this build's
     pure-numpy codecs can't handle (VP8-lossy WebP et al.): a
@@ -506,55 +427,6 @@ def image_features(media: DataFrame, partitions: int | None = None,
                        compute, schema=IMAGE_FEATURES_SCHEMA)
 
 
-def image_resize(media: DataFrame, out_w: int, out_h: int,
-                 quality: int = 90, out_format: str = "jpeg",
-                 partitions: int | None = None) -> DataFrame:
-    """Decode, nearest-neighbor resize, re-encode (baseline JPEG by
-    default; ``out_format="webp"`` re-encodes LOSSLESSLY as VP8L —
-    right for thumbnails feeding exact-dedup or pixel-level training
-    targets, where JPEG requantization would perturb content hashes),
-    and re-emit as (media_id, meta, payload) rows — the output schema
-    matches the input so resize composes with any other media
-    operator. Rows whose payload fails to decode are DROPPED (run
-    :func:`image_features` on the same input to audit them — its
-    ``error`` column names every undecodable row)."""
-    if out_format not in ("jpeg", "webp"):
-        raise ValueError(f"out_format must be jpeg|webp, got {out_format!r}")
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .webp import encode_webp_lossless
-
-        for pdf in batches:
-            ids, metas, payloads = [], [], []
-            for mid, meta, payload in zip(pdf["media_id"], pdf["meta"],
-                                          pdf["payload"]):
-                try:
-                    arr = _decode_image(bytes(payload), meta["format"])
-                except Exception:                    # noqa: BLE001
-                    continue
-                ys = (np.arange(out_h) * arr.shape[0] // out_h)
-                xs = (np.arange(out_w) * arr.shape[1] // out_w)
-                resized = arr[ys][:, xs]
-                m = dict(meta)
-                m.update(format=out_format, width=out_w, height=out_h,
-                         n_channels=3)
-                ids.append(mid)
-                metas.append(m)
-                if out_format == "webp":
-                    payloads.append(encode_webp_lossless(resized))
-                else:
-                    payloads.append(encode_jpeg(resized, quality=quality))
-            # explicit dtypes: an all-dropped batch must still yield
-            # a struct-typed empty meta column, not a float64 one
-            yield pd.DataFrame({
-                "media_id": pd.Series(ids, dtype="int64"),
-                "meta": pd.Series(metas, dtype="object"),
-                "payload": pd.Series(payloads, dtype="object")})
-
-    return _spread(media.filter(F.col("meta.media_type") == "image"),
-                   partitions).mapInPandas(compute, schema=MEDIA_SCHEMA)
-
-
 AUDIO_FEATURES_SCHEMA = ("media_id long, n_samples long, sample_rate int, "
                          "rms double, duration_ms long, error string")
 
@@ -636,45 +508,6 @@ def pdf_text_features(media: DataFrame,
         compute, schema=PDF_TEXT_SCHEMA)
 
 
-FRAME_SAMPLE_SCHEMA = ("media_id long, frame_idx int, ts_ms long, "
-                       "frame binary, error string")
-
-
-def frame_sample(media: DataFrame, every_ms: int = 1000,
-                 partitions: int | None = None) -> DataFrame:
-    """Video -> sampled frame rows (media_id, frame_idx, ts_ms, frame
-    as JPEG binary, error). MJPEG/AVI demuxes FOR REAL
-    (operators/avi.py RIFF walk; each emitted frame is a complete
-    baseline JPEG that :func:`image_features` or
-    :func:`~.jpeg.decode_jpeg` can decode). A container/codec outside
-    that profile (mp4/mkv/...) yields ONE row with null frame and the
-    typed error — per-row, same contract as the other feature
-    operators."""
-    from .avi import demux_mjpeg_avi
-
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    frames, fps = demux_mjpeg_avi(bytes(payload))
-                except Exception as e:               # noqa: BLE001
-                    out.append((mid, None, None, None,
-                                f"{type(e).__name__}: {e}"))
-                    continue
-                stride = max(int(round(every_ms * fps / 1000.0)), 1)
-                for i in range(0, len(frames), stride):
-                    out.append((mid, i, int(i * 1000 / fps),
-                                frames[i], None))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "frame_idx", "ts_ms", "frame", "error"])
-
-    return _spread(media.filter(F.col("meta.media_type") == "video"),
-                   partitions).mapInPandas(
-                       compute, schema=FRAME_SAMPLE_SCHEMA)
-
-
 VIDEO_FEATURES_SCHEMA = ("media_id long, n_frames int, fps double, "
                          "duration_ms long, mean_frame_bytes double, "
                          "error string")
@@ -717,79 +550,6 @@ def video_features(media: DataFrame, decoders: dict | None = None,
     return _spread(media.filter(F.col("meta.media_type") == "video"),
                    partitions).mapInPandas(
                        compute, schema=VIDEO_FEATURES_SCHEMA)
-
-
-def audio_resample(media: DataFrame, target_rate: int = 16_000,
-                   out_format: str = "wav",
-                   partitions: int | None = None) -> DataFrame:
-    """Decode audio, linearly resample to ``target_rate`` mono, and
-    re-emit as (media_id, meta, payload) rows — the
-    normalize-before-featurize step every audio training pipeline
-    runs. ``out_format``: "wav" (PCM16), "flac" (lossless
-    compression for archival corpora), or "au" (mu-law, telephony
-    8-bit). Undecodable rows are DROPPED (audit them with
-    :func:`audio_features`'s error column), matching
-    :func:`image_resize`'s contract."""
-    import io
-    import wave
-
-    if out_format not in ("wav", "flac", "au"):
-        raise ValueError(
-            f"out_format must be wav|flac|au, got {out_format!r}")
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, metas, payloads = [], [], []
-            for mid, meta, payload in zip(pdf["media_id"], pdf["meta"],
-                                          pdf["payload"]):
-                try:
-                    samples, rate = _decode_audio(bytes(payload),
-                                                  meta["format"])
-                except Exception:                    # noqa: BLE001
-                    continue
-                if len(samples) == 0:
-                    # nothing to resample — dropping keeps the
-                    # documented contract (no silently relabeled rows)
-                    continue
-                if rate != target_rate:
-                    n_out = max(int(round(len(samples) * target_rate
-                                          / rate)), 1)
-                    xs = np.linspace(0, len(samples) - 1, n_out)
-                    samples = np.interp(xs, np.arange(len(samples)),
-                                        samples)
-                if out_format == "flac":
-                    from .flac import encode_flac
-                    payload_out = encode_flac(
-                        np.asarray(samples, dtype=np.float64),
-                        target_rate, block_size=4096)
-                elif out_format == "au":
-                    payload_out = encode_au(
-                        np.asarray(samples, dtype=np.float64),
-                        target_rate, mulaw=True)
-                else:
-                    buf = io.BytesIO()
-                    with wave.open(buf, "wb") as wf:
-                        wf.setnchannels(1)
-                        wf.setsampwidth(2)
-                        wf.setframerate(target_rate)
-                        wf.writeframes(np.clip(np.round(samples * 32767),
-                                               -32768, 32767)
-                                       .astype("<i2").tobytes())
-                    payload_out = buf.getvalue()
-                m = dict(meta)
-                m.update(format=out_format, sample_rate=target_rate,
-                         n_channels=1,
-                         duration_ms=int(len(samples) * 1000 / target_rate))
-                ids.append(mid)
-                metas.append(m)
-                payloads.append(payload_out)
-            yield pd.DataFrame({
-                "media_id": pd.Series(ids, dtype="int64"),
-                "meta": pd.Series(metas, dtype="object"),
-                "payload": pd.Series(payloads, dtype="object")})
-
-    return _spread(media.filter(F.col("meta.media_type") == "audio"),
-                   partitions).mapInPandas(compute, schema=MEDIA_SCHEMA)
 
 
 STREAM_INFO_SCHEMA = ("media_id long, sample_rate int, n_frames long, "

@@ -18,7 +18,7 @@ meets in the wild:
   NOT needed for text recovery, only for exact layout, which is out
   of scope), and the line operators ``Td``/``TD``/``T*``/``Tm``
   inside ``BT``/``ET`` blocks;
-- typed :class:`~.jpeg.UnsupportedCodecError` for the documented
+- typed :class:`~.codec.UnsupportedCodecError` for the documented
   exotica seam: encrypted documents (``/Encrypt``), PDF 1.5+
   cross-reference STREAMS, CID-keyed (``/Type0``) fonts, and
   unsupported stream filters — per row data, never a job abort,
@@ -39,7 +39,7 @@ from __future__ import annotations
 import re
 import zlib
 
-from .jpeg import UnsupportedCodecError
+from .codec import UnsupportedCodecError, decoder
 
 # TJ kern adjustment (thousandths of text-space units) at or below
 # which extractors read a word break; -250 is the canonical space
@@ -517,6 +517,7 @@ def _page_text(pdf: _Pdf, page: dict) -> str:
     return "\n".join(blocks)
 
 
+@decoder
 def pdf_text_pages(payload: bytes) -> list[str]:
     """Per-page extracted text of a PDF payload. Raises
     UnsupportedCodecError for the documented exotica (encryption,

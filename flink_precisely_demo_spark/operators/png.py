@@ -9,7 +9,7 @@ Scope:
   filters (None/Sub/Up/Average/Paeth). Alpha is dropped (feature
   extraction wants pixels; compositing policy belongs to the
   caller). 16-bit, sub-8-bit and Adam7-interlaced streams raise
-  :class:`~.jpeg.UnsupportedCodecError`; malformed data raises
+  :class:`~.codec.UnsupportedCodecError`; malformed data raises
   ``ValueError`` — both per-row surfaced by the feature operators.
 - ENCODE: 8-bit grayscale/RGB/RGBA, selectable scanline filter
   (exists to round-trip every unfilter path in tests and to re-emit
@@ -28,7 +28,7 @@ import zlib
 
 import numpy as np
 
-from .jpeg import UnsupportedCodecError
+from .codec import UnsupportedCodecError, decoder
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 #: color type -> raw channel count
@@ -88,6 +88,7 @@ def _defilter(raw: bytes, w: int, h: int, ch: int,
     return recon, offset + h * (stride + 1)
 
 
+@decoder
 def decode_png(payload: bytes) -> np.ndarray:
     """PNG bytes -> (h, w, 3) RGB uint8 (gray replicated, alpha
     dropped, palette resolved)."""

@@ -2,14 +2,19 @@
 
 - DECODE: both byte orders (II/MM), 8-bit grayscale (photometric 0/1,
   with 0 = white-is-zero inverted per spec) and RGB/RGBA, strip
-  layout, uncompressed (1) or PackBits (32773) compression. Extra
-  samples beyond RGB (alpha) are dropped, matching the PNG rule.
-  Anything else — tiled layout, LZW/JPEG-in-TIFF, 16-bit, planar
-  configuration 2 — raises :class:`~.jpeg.UnsupportedCodecError`,
-  surfaced per row by the feature operators.
-- ENCODE: single-strip uncompressed or PackBits, gray/RGB, either
-  byte order — exists so the decoder round-trips both endiannesses
-  and the RLE path without any imaging library.
+  layout, uncompressed (1), LZW (5) or PackBits (32773) compression,
+  optional horizontal predictor (2). Extra samples beyond RGB (alpha)
+  are dropped, matching the PNG rule. Anything else — tiled layout,
+  JPEG-in-TIFF, 16-bit, planar configuration 2 — raises
+  :class:`~.codec.UnsupportedCodecError`, surfaced per row by the
+  feature operators.
+- ENCODE: single-strip uncompressed, LZW or PackBits, gray/RGB,
+  either byte order — exists so the decoder round-trips both
+  endiannesses and every compression path without any imaging
+  library.
+
+The LZW is :func:`.codec.lzw_encode`/:func:`.codec.lzw_decode` in its
+TIFF flavour: 8-bit symbols, codes packed MSB-first, early change.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ import struct
 
 import numpy as np
 
-from .jpeg import UnsupportedCodecError
+from .codec import UnsupportedCodecError, decoder, lzw_decode, lzw_encode
 
 _TAGS = {256: "width", 257: "height", 258: "bits", 259: "compression",
          262: "photometric", 273: "strip_offsets", 277: "spp",
@@ -67,117 +72,7 @@ def _packbits_encode(data: bytes) -> bytes:
     return bytes(out)
 
 
-
-# TIFF LZW (compression 5): MSB-first code packing, ClearCode 256,
-# EOI 257, dynamic codes from 258, and the spec's EARLY code-width
-# change: the ENCODER widens as soon as its next-free code reaches
-# 2^w (512/1024/2048) — one table entry sooner than GIF, because the
-# about-to-be-stored string could be emitted at the new width — and
-# the DECODER, whose table lags the encoder's by exactly one entry,
-# widens when ITS next-free code reaches 2^w - 1 (511/1023/2047).
-# These are the libtiff / Java-ImageIO interoperable thresholds
-# (verified against a javax.imageio-encoded fixture in
-# tests/fixtures/imageio_lzw.tif).
-_LZW_CLEAR, _LZW_EOI, _LZW_FIRST = 256, 257, 258
-_LZW_BUMPS = {512: 10, 1024: 11, 2048: 12}
-_LZW_MAX = 4094          # encoder emits Clear before the table fills
-
-
-def _lzw_decode_tiff(data: bytes) -> bytes:
-    out = bytearray()
-    table: list[bytes] = []
-    width = 9
-    nxt = _LZW_FIRST
-    prev: int | None = None
-    acc = nbits = 0
-
-    def reset() -> None:
-        nonlocal table, width, nxt, prev
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width, nxt, prev = 9, _LZW_FIRST, None
-
-    reset()
-    for byte in data:
-        acc = (acc << 8) | byte
-        nbits += 8
-        while nbits >= width:
-            code = (acc >> (nbits - width)) & ((1 << width) - 1)
-            nbits -= width
-            if code == _LZW_CLEAR:
-                reset()
-                continue
-            if code == _LZW_EOI:
-                return bytes(out)
-            if prev is None:
-                if code >= 256:
-                    raise ValueError("tiff lzw: bad first code")
-                out += table[code]
-            else:
-                if code < nxt:
-                    entry = table[code]
-                elif code == nxt:
-                    entry = table[prev] + table[prev][:1]
-                else:
-                    raise ValueError("tiff lzw: code out of range")
-                out += entry
-                table.append(table[prev] + entry[:1])
-                nxt += 1
-                # the encoder registers its next entry BEFORE emitting
-                # the next code, so its table leads this one by one:
-                # widen the read width when the next-free code reaches
-                # 2^w - 1 (511/1023/2047 — libtiff's MAXCODE(n)-1)
-                if nxt + 1 in _LZW_BUMPS:
-                    width = _LZW_BUMPS[nxt + 1]
-            prev = code
-    return bytes(out)
-
-
-def _lzw_encode_tiff(data: bytes) -> bytes:
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    table: dict[bytes, int] = {}
-    width = 9
-    nxt = _LZW_FIRST
-
-    def reset() -> None:
-        nonlocal table, width, nxt
-        table = {bytes([i]): i for i in range(256)}
-        width, nxt = 9, _LZW_FIRST
-
-    reset()
-    emit(_LZW_CLEAR, width)
-    cur = b""
-    for b in data:
-        cand = cur + bytes([b])
-        if cand in table:
-            cur = cand
-            continue
-        emit(table[cur], width)
-        table[cand] = nxt
-        nxt += 1
-        if nxt in _LZW_BUMPS:
-            width = _LZW_BUMPS[nxt]
-        elif nxt > _LZW_MAX:
-            emit(_LZW_CLEAR, width)
-            reset()
-        cur = bytes([b])
-    if cur:
-        emit(table[cur], width)
-    emit(_LZW_EOI, width)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
+@decoder
 def decode_tiff(payload: bytes) -> np.ndarray:
     """TIFF bytes -> (h, w, 3) RGB uint8 (first IFD only)."""
     if payload[:4] == b"II*\x00":
@@ -241,7 +136,9 @@ def decode_tiff(payload: bytes) -> np.ndarray:
         if compression == 32773:
             strip = _packbits_decode(strip, nrows * stride)
         elif compression == 5:
-            strip = _lzw_decode_tiff(strip)
+            strip = lzw_decode(strip, 8, msb=True, early=1,
+                               bad_first="tiff lzw: bad first code",
+                               bad_code="tiff lzw: code out of range")
         data += strip[:nrows * stride]
     if len(data) < h * stride:
         raise ValueError("tiff: truncated strip data")
@@ -284,7 +181,7 @@ def encode_tiff(img: np.ndarray, byte_order: str = "<",
     if packbits:
         pix = _packbits_encode(pix)
     elif lzw:
-        pix = _lzw_encode_tiff(pix)
+        pix = lzw_encode(pix, 8, msb=True, early=1)
 
     entries = []                    # (tag, type, count, value_or_bytes)
 

@@ -33,7 +33,14 @@ from __future__ import annotations
 
 import numpy as np
 
-from .jpeg import UnsupportedCodecError
+from .codec import (
+    LsbReader,
+    LsbWriter,
+    UnsupportedCodecError,
+    canonical_codes,
+    decoder,
+    encoder_codes,
+)
 
 # Order in which code-length-code lengths are stored (spec §5.2.2).
 _CODE_LENGTH_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16,
@@ -62,79 +69,12 @@ def _subsample(size: int, bits: int) -> int:
     return (size + (1 << bits) - 1) >> bits
 
 
-# ------------------------------------------------------------- bit IO
 # VP8L packs bits LSB-first within each byte (like DEFLATE, unlike
-# JPEG); prefix codes are read MSB-of-code-first, one bit at a time.
-
-class _LsbReader:
-    __slots__ = ("data", "pos", "end")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.end = len(data) * 8
-
-    def bits(self, n: int) -> int:
-        v = got = 0
-        while got < n:
-            if self.pos >= self.end:
-                raise ValueError("VP8L bitstream truncated")
-            byte = self.data[self.pos >> 3]
-            off = self.pos & 7
-            take = min(8 - off, n - got)
-            v |= ((byte >> off) & ((1 << take) - 1)) << got
-            self.pos += take
-            got += take
-        return v
-
-    def read_code(self, table) -> int:
-        """Decode one prefix-coded symbol. ``table`` is either
-        ('single', sym) — the spec's zero-bit one-symbol code — or a
-        dict {(length, code): symbol} with codes accumulated
-        MSB-first."""
-        if table[0] == "single":
-            return table[1]
-        mapping = table[1]
-        acc = 0
-        for length in range(1, _MAX_CODE_LEN + 1):
-            acc = (acc << 1) | self.bits(1)
-            sym = mapping.get((length, acc))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid VP8L prefix code")
-
-
-class _LsbWriter:
-    __slots__ = ("buf", "cur", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.cur = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.cur |= (value & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.buf.append(self.cur & 0xFF)
-            self.cur >>= 8
-            self.nbits -= 8
-
-    def write_code(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.buf.append(self.cur & 0xFF)
-            self.cur = 0
-            self.nbits = 0
-        return bytes(self.buf)
-
+# JPEG); prefix codes are read MSB-of-code first (codec.LsbReader).
 
 # ------------------------------------------------- prefix-code plumbing
 
-def _table_from_lengths(lengths) -> tuple:
+def _table_from_lengths(lengths) -> dict:
     """Canonical prefix-code decode table from per-symbol lengths
     (codes assigned in (length, symbol) order, the DEFLATE/VP8L
     canonical rule). A single used symbol yields the spec's special
@@ -143,45 +83,36 @@ def _table_from_lengths(lengths) -> tuple:
     if not used:
         raise ValueError("VP8L prefix code with no symbols")
     if len(used) == 1:
-        return ("single", used[0][1])
+        return {1: used[0][1]}                # zero-bit code
     kraft = sum(1 << (_MAX_CODE_LEN - l) for l, _ in used)
     if kraft != 1 << _MAX_CODE_LEN:
         raise ValueError("incomplete or oversubscribed VP8L prefix code")
-    used.sort()
-    mapping = {}
-    code = 0
-    prev_len = used[0][0]
-    for l, s in used:
-        code <<= (l - prev_len)
-        mapping[(l, code)] = s
-        code += 1
-        prev_len = l
-    return ("dict", mapping)
+    return canonical_codes(sorted(used))
 
 
-def _read_prefix_code(br: _LsbReader, alphabet_size: int) -> tuple:
+def _read_prefix_code(br: LsbReader, alphabet_size: int) -> dict:
     """One prefix code: the 'simple' 1/2-symbol form or the normal
     code-length-coded form (spec §5.2.2)."""
-    if br.bits(1):  # simple
-        num_symbols = br.bits(1) + 1
-        first_8bit = br.bits(1)
+    if br.read(1):  # simple
+        num_symbols = br.read(1) + 1
+        first_8bit = br.read(1)
         lengths = [0] * alphabet_size
-        s0 = br.bits(8 if first_8bit else 1)
+        s0 = br.read(8 if first_8bit else 1)
         lengths[s0] = 1
         if num_symbols == 2:
-            s1 = br.bits(8)
+            s1 = br.read(8)
             lengths[s1] = 1
         return _table_from_lengths(lengths)
 
-    num_code_lengths = br.bits(4) + 4
+    num_code_lengths = br.read(4) + 4
     cl_lengths = [0] * 19
     for i in range(num_code_lengths):
-        cl_lengths[_CODE_LENGTH_ORDER[i]] = br.bits(3)
+        cl_lengths[_CODE_LENGTH_ORDER[i]] = br.read(3)
     cl_table = _table_from_lengths(cl_lengths)
 
-    if br.bits(1):  # an explicit count of coded symbols follows
-        length_nbits = 2 + 2 * br.bits(3)
-        max_symbol = 2 + br.bits(length_nbits)
+    if br.read(1):  # an explicit count of coded symbols follows
+        length_nbits = 2 + 2 * br.read(3)
+        max_symbol = 2 + br.read(length_nbits)
     else:
         max_symbol = alphabet_size
 
@@ -192,26 +123,26 @@ def _read_prefix_code(br: _LsbReader, alphabet_size: int) -> tuple:
         if max_symbol == 0:
             break
         max_symbol -= 1
-        code_len = br.read_code(cl_table)
+        code_len = br.symbol(cl_table)
         if code_len < 16:
             lengths[symbol] = code_len
             symbol += 1
             if code_len:
                 prev_len = code_len
         elif code_len == 16:
-            repeat = 3 + br.bits(2)
+            repeat = 3 + br.read(2)
             lengths[symbol:symbol + repeat] = [prev_len] * repeat
             symbol += repeat
         elif code_len == 17:
-            symbol += 3 + br.bits(3)
+            symbol += 3 + br.read(3)
         else:  # 18
-            symbol += 11 + br.bits(7)
+            symbol += 11 + br.read(7)
         if symbol > alphabet_size:
             raise ValueError("VP8L code lengths overflow alphabet")
     return _table_from_lengths(lengths)
 
 
-def _prefix_value(br: _LsbReader, code: int) -> int:
+def _prefix_value(br: LsbReader, code: int) -> int:
     """LZ77 length/distance prefix decoding (spec §4.2.2): 24 length
     and 40 distance codes share the value = offset + extra-bits + 1
     rule."""
@@ -219,12 +150,12 @@ def _prefix_value(br: _LsbReader, code: int) -> int:
         return code + 1
     extra_bits = (code - 2) >> 1
     offset = (2 + (code & 1)) << extra_bits
-    return offset + br.bits(extra_bits) + 1
+    return offset + br.read(extra_bits) + 1
 
 
 # -------------------------------------------------------------- decode
 
-def _read_code_group(br: _LsbReader, cache_size: int) -> list:
+def _read_code_group(br: LsbReader, cache_size: int) -> list:
     """The five prefix codes of one meta group: green+length+cache,
     red, blue, alpha, distance."""
     return [_read_prefix_code(br, 256 + 24 + cache_size),
@@ -234,7 +165,7 @@ def _read_code_group(br: _LsbReader, cache_size: int) -> list:
             _read_prefix_code(br, 40)]
 
 
-def _decode_image_stream(br: _LsbReader, xsize: int, ysize: int,
+def _decode_image_stream(br: LsbReader, xsize: int, ysize: int,
                          is_level0: bool):
     """Decode one entropy-coded image -> (pixels (n, 4) uint8 RGBA,
     transforms list, final xsize). Transforms only exist at level 0
@@ -243,22 +174,22 @@ def _decode_image_stream(br: _LsbReader, xsize: int, ysize: int,
     transforms = []
     if is_level0:
         seen = set()
-        while br.bits(1):
-            ttype = br.bits(2)
+        while br.read(1):
+            ttype = br.read(2)
             if ttype in seen:
                 raise ValueError("duplicate VP8L transform")
             seen.add(ttype)
             xsize, tdata = _read_transform(br, ttype, xsize, ysize)
             transforms.append((ttype, tdata))
 
-    cache_bits = br.bits(4) if br.bits(1) else 0
+    cache_bits = br.read(4) if br.read(1) else 0
     if cache_bits and not 1 <= cache_bits <= 11:
         raise ValueError("invalid VP8L color-cache size")
     cache_size = (1 << cache_bits) if cache_bits else 0
 
     meta = None
-    if is_level0 and br.bits(1):  # meta prefix codes
-        meta_bits = br.bits(3) + 2
+    if is_level0 and br.read(1):  # meta prefix codes
+        meta_bits = br.read(3) + 2
         mx = _subsample(xsize, meta_bits)
         my = _subsample(ysize, meta_bits)
         meta_px, _, _ = _decode_image_stream(br, mx, my, False)
@@ -274,7 +205,7 @@ def _decode_image_stream(br: _LsbReader, xsize: int, ysize: int,
     return pixels, transforms, xsize
 
 
-def _decode_pixels(br: _LsbReader, xsize: int, ysize: int,
+def _decode_pixels(br: LsbReader, xsize: int, ysize: int,
                    groups, meta, cache_bits: int) -> np.ndarray:
     """The LZ77+prefix-coded pixel loop (spec §4.2). Sequential by
     nature (back-references + adaptive color cache); runs inside an
@@ -296,19 +227,19 @@ def _decode_pixels(br: _LsbReader, xsize: int, ysize: int,
             x, y = pos % xsize, pos // xsize
             group = groups[meta_idx[(y >> meta_bits) * mx + (x >> meta_bits)]]
         g_code, r_code, b_code, a_code, d_code = group
-        s = br.read_code(g_code)
+        s = br.symbol(g_code)
         if s < 256:  # literal
             g = s
-            r = br.read_code(r_code)
-            b = br.read_code(b_code)
-            a = br.read_code(a_code)
+            r = br.symbol(r_code)
+            b = br.symbol(b_code)
+            a = br.symbol(a_code)
             out[pos] = (r, g, b, a)
             pos += 1
             if cache is not None:
                 cache_insert(r, g, b, a)
         elif s < 256 + 24:  # LZ77 back-reference
             length = _prefix_value(br, s - 256)
-            dist_code = _prefix_value(br, br.read_code(d_code))
+            dist_code = _prefix_value(br, br.symbol(d_code))
             if dist_code > 120:
                 dist = dist_code - 120
             else:
@@ -335,20 +266,20 @@ def _decode_pixels(br: _LsbReader, xsize: int, ysize: int,
 
 # ---------------------------------------------------------- transforms
 
-def _read_transform(br: _LsbReader, ttype: int, xsize: int, ysize: int):
+def _read_transform(br: LsbReader, ttype: int, xsize: int, ysize: int):
     """Read one transform's data; returns the (possibly reduced)
     xsize subsequent reads should use plus the data needed to invert
     it later."""
     if ttype == 2:  # subtract green: no data
         return xsize, None
     if ttype in (0, 1):  # predictor / color transform
-        size_bits = br.bits(3) + 2
+        size_bits = br.read(3) + 2
         bx = _subsample(xsize, size_bits)
         by = _subsample(ysize, size_bits)
         sub_px, _, _ = _decode_image_stream(br, bx, by, False)
         return xsize, (size_bits, bx, sub_px, xsize)
     if ttype == 3:  # color indexing
-        n_colors = br.bits(8) + 1
+        n_colors = br.read(8) + 1
         pal_px, _, _ = _decode_image_stream(br, n_colors, 1, False)
         # palette entries are component-wise delta coded
         palette = np.cumsum(pal_px.astype(np.int64), axis=0) % 256
@@ -521,19 +452,20 @@ def _apply_inverse_transforms(px, transforms, ysize):
 def decode_vp8l(data: bytes) -> np.ndarray:
     """VP8L chunk payload -> (h, w, 3) RGB uint8 (alpha dropped,
     matching the other image codecs)."""
-    br = _LsbReader(data)
-    if br.bits(8) != 0x2F:
+    br = LsbReader(data, underrun="VP8L bitstream truncated")
+    if br.read(8) != 0x2F:
         raise ValueError("bad VP8L signature")
-    width = br.bits(14) + 1
-    height = br.bits(14) + 1
-    br.bits(1)  # alpha-is-used hint
-    if br.bits(3) != 0:
+    width = br.read(14) + 1
+    height = br.read(14) + 1
+    br.read(1)  # alpha-is-used hint
+    if br.read(3) != 0:
         raise ValueError("unknown VP8L version")
     px, transforms, _ = _decode_image_stream(br, width, height, True)
     px = _apply_inverse_transforms(px, transforms, height)
     return px.reshape(height, width, 4)[:, :, :3].copy()
 
 
+@decoder
 def decode_webp(payload: bytes) -> np.ndarray:
     """RIFF/WEBP container -> (h, w, 3) RGB uint8. Handles simple
     and VP8X-extended lossless files; lossy VP8 raises
@@ -587,21 +519,14 @@ def _huffman_lengths(freqs: dict, max_len: int) -> dict:
         cur = {s: (f + 1) // 2 for s, f in cur.items()}
 
 
-def _canonical_codes(lengths: dict) -> dict:
+def _codes_from_lengths(lengths: dict) -> dict:
     """{symbol: (code, length)} with the canonical (length, symbol)
     assignment the decoder mirrors."""
-    codes = {}
-    code = 0
-    prev_len = None
-    for l, s in sorted((l, s) for s, l in lengths.items()):
-        code = code << (l - prev_len) if prev_len is not None else 0
-        codes[s] = (code, l)
-        code += 1
-        prev_len = l
-    return codes
+    return encoder_codes(
+        canonical_codes(sorted((l, s) for s, l in lengths.items())))
 
 
-def _write_prefix_code(bw: _LsbWriter, lengths: dict,
+def _write_prefix_code(bw: LsbWriter, lengths: dict,
                        alphabet_size: int) -> dict:
     """Write one prefix code; returns {symbol: (code, length)} for
     the payload pass. Uses the simple form for 1-2 symbols <= 255,
@@ -649,7 +574,7 @@ def _write_prefix_code(bw: _LsbWriter, lengths: dict,
     for t, _, _ in tokens:
         cl_freqs[t] = cl_freqs.get(t, 0) + 1
     cl_lengths = _huffman_lengths(cl_freqs, 7)
-    cl_codes = _canonical_codes(cl_lengths)
+    cl_codes = _codes_from_lengths(cl_lengths)
     if len(cl_lengths) == 1:
         # one used code-length symbol (e.g. every literal is exactly
         # 8 bits): the decoder's table for a single-symbol code is
@@ -672,7 +597,7 @@ def _write_prefix_code(bw: _LsbWriter, lengths: dict,
     if len(lengths) == 1:
         s = syms[0]
         return {s: (0, 0)}
-    return _canonical_codes(lengths)
+    return _codes_from_lengths(lengths)
 
 
 def _prefix_encode(v: int) -> tuple[int, int, int]:
@@ -796,7 +721,7 @@ def encode_webp_lossless(img: np.ndarray, effort: int = 1) -> bytes:
             dcode, _, _ = _prefix_encode(tok[2] + 120)
             d_freq[dcode] = d_freq.get(dcode, 0) + 1
 
-    bw = _LsbWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)

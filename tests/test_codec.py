@@ -12,10 +12,22 @@ import hashlib
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from flink_precisely_demo_spark.operators.avi import (
     demux_mjpeg_avi,
     mux_mjpeg_avi,
+)
+from flink_precisely_demo_spark.operators.codec import (
+    LsbReader,
+    LsbWriter,
+    MsbReader,
+    MsbWriter,
+    canonical_codes,
+    encoder_codes,
+    lzw_decode,
+    lzw_encode,
 )
 from flink_precisely_demo_spark.operators.flac import decode_flac, encode_flac
 from flink_precisely_demo_spark.operators.gif import decode_gif, encode_gif
@@ -267,3 +279,156 @@ def test_golden_digest(name):
     enc_digest, dec_digest = GOLDEN[name]
     assert hashlib.sha256(payload).hexdigest() == enc_digest
     assert _digest(decode(payload)) == dec_digest
+
+
+# ------------------------------------------------------ truncation fuzz
+
+#: golden payloads too large to cut at every byte in the default suite;
+#: each of their decoders keeps smaller payloads in the sweep
+_TOO_BIG_TO_SWEEP = {"flac_mono", "gif_reset", "tiff_lzw_predictor_le",
+                     "tiff_lzw_predictor_be"}
+
+
+@pytest.mark.parametrize("name", sorted(set(CASES) - _TOO_BIG_TO_SWEEP))
+def test_every_truncation_decodes_or_raises_valueerror(name):
+    """Every prefix of a golden payload either decodes or raises
+    ValueError (UnsupportedCodecError included) — never the
+    IndexError / struct.error / zlib.error of a parser running off
+    the end, which the codec docstrings rule out."""
+    build, decode = CASES[name]
+    payload = build()
+    for k in range(len(payload)):
+        try:
+            decode(payload[:k])
+        except ValueError:
+            pass
+
+
+def test_truncated_avi_raises_instead_of_cutting_a_frame():
+    """A frame chunk whose declared size runs past the end of the file
+    is an error, not a shorter frame."""
+    frames = [encode_jpeg(_img(24, 32, s), quality=90) for s in range(2)]
+    avi = mux_mjpeg_avi(frames, fps=10.0)
+    assert demux_mjpeg_avi(avi)[0] == frames
+    with pytest.raises(ValueError, match="overruns"):
+        demux_mjpeg_avi(avi[:-40])
+
+
+# ------------------------------------------------ shared primitives
+
+_LZW_FLAVOURS = {"gif": dict(msb=False, early=0),
+                 "tiff": dict(msb=True, early=1)}
+
+
+def _symbols(seed: int, min_code_size: int, n: int) -> bytes:
+    rng = np.random.default_rng(seed)
+    return rng.integers(0, 1 << min_code_size, n, dtype=np.uint8).tobytes()
+
+
+@settings(max_examples=8, deadline=None)
+@given(flavour=st.sampled_from(sorted(_LZW_FLAVOURS)),
+       min_code_size=st.integers(2, 8),
+       seed=st.integers(0, 2**32 - 1))
+def test_lzw_roundtrip_across_resets(flavour, min_code_size, seed):
+    fl = _LZW_FLAVOURS[flavour]
+    data = _symbols(seed, min_code_size, 12_000 * (10 - min_code_size))
+    enc = lzw_encode(data, min_code_size, **fl)
+    # no code is wider than 12 bits, so more than 2 x 4096 codes went
+    # out: every width bump and at least two dictionary resets
+    assert len(enc) * 8 // 12 > 2 * 4096
+    assert lzw_decode(enc, min_code_size, **fl) == data
+
+
+@settings(max_examples=40, deadline=None)
+@example(flavour="tiff", min_code_size=2, seed=0, n=2, cut=1.0)
+@given(flavour=st.sampled_from(sorted(_LZW_FLAVOURS)),
+       min_code_size=st.integers(2, 8),
+       seed=st.integers(0, 2**32 - 1),
+       n=st.integers(0, 3000),
+       cut=st.floats(0, 1))
+def test_lzw_truncated_stream_decodes_to_a_prefix(flavour, min_code_size,
+                                                  seed, n, cut):
+    fl = _LZW_FLAVOURS[flavour]
+    data = _symbols(seed, min_code_size, n)
+    enc = lzw_encode(data, min_code_size, **fl)
+    out = lzw_decode(enc[:int(cut * len(enc))], min_code_size, **fl)
+    assert data.startswith(out)
+
+
+def test_tiff_lzw_end_code_at_a_width_bump():
+    """When the last code lands on a width bump, an early-change
+    decoder widens before it reads END, so END must go out at the new
+    width (libtiff's post-encode step). Written at the old width it
+    decoded to trailing garbage or, right after a reset, raised."""
+    from flink_precisely_demo_spark.operators.tiff import decode_tiff
+
+    blob = np.random.default_rng(0).integers(0, 256, 5000, np.uint8).tobytes()
+    for n in (770, 1812, 4199, 4715):
+        enc = lzw_encode(blob[:n], 8, msb=True, early=1)
+        assert lzw_decode(enc, 8, msb=True, early=1) == blob[:n]
+    img = np.frombuffer(blob[:4199], np.uint8).reshape(1, 4199)
+    assert np.array_equal(decode_tiff(encode_tiff(img, lzw=True))[..., 0],
+                          img)
+
+
+_fields = st.lists(st.tuples(st.integers(0, 33), st.integers(0, 2**40)),
+                   max_size=60)
+
+
+@settings(max_examples=60, deadline=None)
+@given(fields=_fields)
+def test_bit_writers_and_readers_roundtrip(fields):
+    """Writers keep the low ``n`` bits of each value; readers return
+    them in order in both bit orders."""
+    want = [v & ((1 << n) - 1) for n, v in fields]
+    nbytes = -(-sum(n for n, _ in fields) // 8)
+    for writer, reader in ((MsbWriter, MsbReader), (LsbWriter, LsbReader)):
+        w = writer()
+        for n, v in fields:
+            w.write(v, n)
+        data = w.flush()
+        assert len(data) == nbytes
+        r = reader(data)
+        assert [r.read(n) for n, _ in fields] == want
+
+
+@settings(max_examples=60, deadline=None)
+@given(data=st.binary(max_size=12), head=st.integers(0, 96),
+       extra=st.integers(1, 40),
+       fill=st.sampled_from([None, 0x00, 0xFF, 0xA5]))
+def test_msb_reader_past_the_end_raises_or_fills(data, head, extra, fill):
+    head = min(head, len(data) * 8)
+    tail = bytes([fill or 0]) * 6
+    stream = int.from_bytes(data + tail, "big")
+    total = (len(data) + len(tail)) * 8
+    r = MsbReader(data, fill=fill, underrun="test: underrun")
+    assert r.read(head) == (stream >> (total - head)) & ((1 << head) - 1)
+    if fill is None and head + extra > len(data) * 8:
+        with pytest.raises(ValueError, match="test: underrun"):
+            r.read(extra)
+        with pytest.raises(ValueError, match="test: underrun"):
+            LsbReader(data, underrun="test: underrun").read(head + extra)
+    else:
+        got = r.read(extra)
+        assert got == (stream >> (total - head - extra)) & ((1 << extra) - 1)
+
+
+@settings(max_examples=40, deadline=None)
+@given(lengths=st.lists(st.integers(1, 16), min_size=2, max_size=40)
+       .filter(lambda ls: sum(2.0 ** -n for n in ls) <= 1),
+       seed=st.integers(0, 2**32 - 1))
+def test_canonical_codes_roundtrip_through_both_readers(lengths, seed):
+    """Any Kraft-valid set of code lengths gives a prefix code whose
+    encoded symbols the shared symbol reader decodes back, in either
+    bit order."""
+    table = canonical_codes(sorted((n, s) for s, n in enumerate(lengths)))
+    codes = encoder_codes(table)
+    assert sorted(codes) == list(range(len(lengths)))
+    assert all(codes[s][1] == n for s, n in enumerate(lengths))
+    msg = np.random.default_rng(seed).integers(0, len(lengths), 50).tolist()
+    msb, lsb = MsbWriter(), LsbWriter()
+    for s in msg:
+        msb.write(*codes[s])
+        lsb.write_code(*codes[s])
+    for reader in (MsbReader(msb.flush()), LsbReader(lsb.flush())):
+        assert [reader.symbol(table) for _ in msg] == msg

@@ -16,21 +16,19 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from flink_precisely_demo_spark.operators.jpeg import (
+from flink_precisely_demo_spark.operators.codec import (
+    MsbWriter,
     UnsupportedCodecError,
-    decode_jpeg,
-    encode_jpeg,
+    lzw_encode,
 )
+from flink_precisely_demo_spark.operators.jpeg import decode_jpeg, encode_jpeg
 from flink_precisely_demo_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     _decode_bmp,
     _decode_ppm,
     _decode_wav,
     audio_features,
-    frame_sample,
     image_features,
-    image_resize,
-    ingest_binary_dir,
 )
 
 
@@ -78,40 +76,6 @@ def test_image_features(media):
     assert sorted(map(tuple, feats)) == sorted(map(tuple, again))
 
 
-def test_image_resize_composes(media):
-    resized = image_resize(media, 4, 4)
-    assert resized.schema == MEDIA_SCHEMA
-    rows = resized.collect()
-    assert len(rows) == 7
-    for r in rows:
-        assert r["meta"]["format"] == "jpeg"
-        assert (r["meta"]["width"], r["meta"]["height"]) == (4, 4)
-    feats = image_features(resized).collect()
-    assert len(feats) == 7
-    for r in feats:
-        assert r["error"] is None
-        assert (r["width"], r["height"]) == (4, 4)
-
-
-def test_image_resize_webp_lossless_output(media):
-    """webp output path: thumbnails re-encode LOSSLESSLY, so two
-    resize passes of the same input are byte-identical payloads
-    (JPEG requantization would not be)."""
-    resized = image_resize(media, 4, 4, out_format="webp")
-    rows = {r["media_id"]: r for r in resized.collect()}
-    assert len(rows) == 7
-    for r in rows.values():
-        assert r["meta"]["format"] == "webp"
-        assert bytes(r["payload"])[:4] == b"RIFF"
-    again = {r["media_id"]: r
-             for r in image_resize(media, 4, 4, out_format="webp").collect()}
-    for mid in rows:
-        assert bytes(rows[mid]["payload"]) == bytes(again[mid]["payload"])
-    feats = image_features(resized).collect()
-    assert all(f["error"] is None and (f["width"], f["height"]) == (4, 4)
-               for f in feats)
-
-
 def test_audio_features(media):
     feats = audio_features(media).collect()
     assert len(feats) == 7
@@ -143,9 +107,6 @@ def test_unsupported_codec_is_per_row_error_not_job_abort(spark):
     aud = {r["media_id"]: r for r in audio_features(media).collect()}
     assert aud[3]["error"] is None and aud[3]["n_samples"] == 100
     assert "UnsupportedCodecError" in aud[4]["error"]
-    # resize drops the undecodable row, keeps the good one
-    assert [r["media_id"] for r in
-            image_resize(media, 4, 4).collect()] == [1]
 
 
 def test_corrupt_payload_is_per_row_error(spark):
@@ -156,39 +117,6 @@ def test_corrupt_payload_is_per_row_error(spark):
     out = {r["media_id"]: r for r in image_features(media).collect()}
     assert out[1]["error"] is not None
     assert out[2]["error"] is None
-
-
-def test_frame_sample_unsupported_container(media):
-    """The fixture's videos are fake mp4 bytes: each yields exactly
-    one typed-error row instead of aborting the job."""
-    rows = frame_sample(media, every_ms=1000).collect()
-    assert len(rows) == 6  # 20 // 3 videos, one error row each
-    for r in rows:
-        assert r["frame"] is None
-        assert "UnsupportedCodecError" in r["error"]
-
-
-def test_frame_sample_real_mjpeg_avi(spark):
-    """Real video path: mux JPEGs into an MJPEG AVI, demux through
-    the Spark operator at a sampling stride, decode a sampled frame
-    with the JPEG decoder, and recover the original pixels."""
-    from flink_precisely_demo_spark.operators.avi import mux_mjpeg_avi
-
-    imgs = [_grad_img(16, 24, seed=s) for s in range(10)]
-    avi = mux_mjpeg_avi([encode_jpeg(im, quality=95) for im in imgs],
-                        fps=10.0, width=24, height=16)
-    media = spark.createDataFrame(
-        [(7, _meta("video", "avi"), avi)], MEDIA_SCHEMA)
-    rows = sorted(frame_sample(media, every_ms=500).collect(),
-                  key=lambda r: r["frame_idx"])
-    # 10 frames at 10 fps sampled every 500 ms -> stride 5 -> idx 0, 5
-    assert [(r["frame_idx"], r["ts_ms"]) for r in rows] == [(0, 0), (5, 500)]
-    for r in rows:
-        assert r["error"] is None
-        dec = decode_jpeg(bytes(r["frame"]))
-        orig = imgs[r["frame_idx"]]
-        assert dec.shape == orig.shape
-        assert np.abs(dec.astype(int) - orig.astype(int)).mean() < 2.0
 
 
 def test_avi_demux_roundtrip_exact():
@@ -217,27 +145,6 @@ def test_avi_wrong_codec_raises_typed_error():
         demux_mjpeg_avi(bytes(avi))
     with pytest.raises(UnsupportedCodecError, match="AVI"):
         demux_mjpeg_avi(b"\x00\x01\x02 not riff")
-
-
-def test_ingest_binary_dir_sniffs_magic_bytes(spark, tmp_path):
-    """Formats come from payload signatures, not suffixes: a JPEG
-    named .png is typed jpeg; signature-less payloads fall back to
-    the suffix."""
-    (tmp_path / "lying.png").write_bytes(encode_jpeg(_grad_img(8, 8)))
-    (tmp_path / "real.png").write_bytes(b"\x89PNG\r\n\x1a\n fake body")
-    (tmp_path / "b.wav").write_bytes(b"RIFFxxxxWAVE fake")
-    (tmp_path / "v.bin").write_bytes(b"RIFFxxxxAVI  fake")
-    (tmp_path / "noext.ppm").write_bytes(b"P6\n1 1\n255\n\x00\x00\x00")
-    (tmp_path / "c.xyz").write_bytes(b"???")
-    df = ingest_binary_dir(spark, str(tmp_path))
-    got = {r["meta"]["format"]: r["meta"]["media_type"] for r in df.collect()}
-    assert got == {"jpeg": "image", "png": "image", "wav": "audio",
-                   "avi": "video", "ppm": "image", "xyz": "unknown"}
-    assert df.schema["payload"].dataType.typeName() == "binary"
-    # sniffed ingest composes directly with decode
-    feats = {r["media_id"]: r for r in image_features(df).collect()}
-    decoded_ok = [r for r in feats.values() if r["error"] is None]
-    assert len(decoded_ok) == 2          # the lying .png and the .ppm
 
 
 # ------------------------------------------------- real-codec round-trips
@@ -533,7 +440,6 @@ def test_gif_interlaced_decode():
 
     from flink_precisely_demo_spark.operators.gif import (
         _INTERLACE_PASSES,
-        _lzw_encode,
         decode_gif,
     )
     h, w = 11, 5
@@ -550,7 +456,7 @@ def test_gif_interlaced_decode():
     out += palette.tobytes()
     out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40)  # interlaced
     out.append(2)                                   # min LZW code size
-    lzw = _lzw_encode(2, stored)
+    lzw = lzw_encode(bytes(stored), 2, msb=False, early=0)   # GIF LZW
     for off in range(0, len(lzw), 255):
         chunk = lzw[off:off + 255]
         out.append(len(chunk))
@@ -625,18 +531,19 @@ def test_tiff_unsupported_profiles_raise_typed_error():
         decode_tiff(b"not a tiff")
 
 
-def test_tiff_features_through_spark_with_sniffing(spark, tmp_path):
-    """binaryFile ingest sniffs the TIFF magic (both byte orders) and
-    the features operator decodes for real."""
+def test_tiff_and_ppm_features_through_spark(spark):
+    """The features operator decodes TIFF (both byte orders, raw and
+    PackBits) and binary PPM for real."""
     from flink_precisely_demo_spark.operators.tiff import encode_tiff
 
     img = _grad_img(10, 12)
-    (tmp_path / "le.tif").write_bytes(encode_tiff(img, byte_order="<"))
-    (tmp_path / "wrong_suffix.dat").write_bytes(
-        encode_tiff(img, byte_order=">", packbits=True))
-    media = ingest_binary_dir(spark, str(tmp_path))
+    rows = [(1, _meta("image", "tiff"), encode_tiff(img, byte_order="<")),
+            (2, _meta("image", "tiff"),
+             encode_tiff(img, byte_order=">", packbits=True)),
+            (3, _meta("image", "ppm"), _encode_ppm(img))]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     feats = image_features(media).collect()
-    assert len(feats) == 2
+    assert len(feats) == 3
     for r in feats:
         assert r["error"] is None
         assert (r["width"], r["height"]) == (12, 10)
@@ -681,7 +588,7 @@ def _flac_frame_shell(n_sub_writer, streaminfo_rate=8000, channels=1,
     encoder never emits (LPC, mid/side, residual partitions)."""
     import struct
 
-    from flink_precisely_demo_spark.operators.flac import _BitW, _crc8
+    from flink_precisely_demo_spark.operators.flac import _crc8
 
     si = bytearray(34)
     si[0:2] = struct.pack(">H", block_size)
@@ -699,19 +606,17 @@ def _flac_frame_shell(n_sub_writer, streaminfo_rate=8000, channels=1,
     header += bytes([0])                       # frame number 0 (utf8)
     header += struct.pack(">H", block_size - 1)
     header.append(_crc8(bytes(header)))
-    w = _BitW()
+    w = MsbWriter()
     for b in bytes(header):
         w.write(b, 8)
     n_sub_writer(w)
-    w.align()
-    return bytes(out) + bytes(w.out) + b"\x00\x00"   # CRC16 unchecked
+    return bytes(out) + w.flush() + b"\x00\x00"   # CRC16 unchecked
 
 
 def test_flac_lpc_subframe_decodes():
     """Hand-built order-2 LPC subframe: decoder must invert the
     quantized predictor exactly."""
     from flink_precisely_demo_spark.operators.flac import (
-        _BitW,
         _rice_write,
         decode_flac,
     )
@@ -722,7 +627,7 @@ def test_flac_lpc_subframe_decodes():
         pred = (coefs[0] * samples[k - 1] + coefs[1] * samples[k - 2]) >> shift
         samples.append(pred + ((-1) ** k) * k)   # residual = +-k
 
-    def write_sub(w: _BitW):
+    def write_sub(w: MsbWriter):
         w.write(0, 1)
         w.write(32 + order - 1, 6)               # LPC, order 2
         w.write(0, 1)                            # no wasted bits
@@ -747,7 +652,6 @@ def test_flac_mid_side_and_partitioned_residual():
     """Mid/side channel decorrelation + a 4-partition residual with
     one raw-escape partition — the remaining decoder paths."""
     from flink_precisely_demo_spark.operators.flac import (
-        _BitW,
         _rice_write,
         decode_flac,
     )
@@ -756,14 +660,14 @@ def test_flac_mid_side_and_partitioned_residual():
     mid = [(l + r) >> 1 for l, r in zip(left, right)]
     side = [l - r for l, r in zip(left, right)]
 
-    def verbatim(w: _BitW, vals, bits):
+    def verbatim(w: MsbWriter, vals, bits):
         w.write(0, 1)
         w.write(1, 6)
         w.write(0, 1)
         for v in vals:
             w.write(v & ((1 << bits) - 1), bits)
 
-    def write_subs(w: _BitW):
+    def write_subs(w: MsbWriter):
         verbatim(w, mid, 16)       # mid at bps
         # side at bps+1, FIXED order 0 with 4 residual partitions,
         # partition 2 raw-escaped
@@ -824,38 +728,11 @@ def test_video_features_real_avi_and_error(spark):
     assert "UnsupportedCodecError" in out[2]["error"]
 
 
-def test_audio_resample_composes(spark):
-    """8 kHz WAV + FLAC resample to 16 kHz mono WAV; a sine survives
-    resampling (linear interp on an oversampled tone is near-exact),
-    and the output composes with audio_features."""
-    from flink_precisely_demo_spark.operators.flac import encode_flac
-    from flink_precisely_demo_spark.operators.multimodal import (
-        audio_resample,
-    )
-
-    t = np.arange(2000) / 8000.0
-    sine = 0.4 * np.sin(2 * np.pi * 100 * t)     # 100 Hz: 80 samples/cycle
-    rows = [(1, _meta("audio", "wav"), _encode_wav(sine, 8000)),
-            (2, _meta("audio", "flac"), encode_flac(sine, 8000)),
-            (3, _meta("audio", "mp3"), b"ID3 junk")]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = audio_resample(media, 16_000)
-    feats = {r["media_id"]: r for r in audio_features(out).collect()}
-    assert sorted(feats) == [1, 2]               # mp3 row dropped
-    for r in feats.values():
-        assert r["error"] is None
-        assert r["sample_rate"] == 16_000
-        assert r["n_samples"] == 4000 and r["duration_ms"] == 250
-        # RMS preserved through resampling: 0.4/sqrt(2)
-        assert abs(r["rms"] - 0.4 / np.sqrt(2)) < 2e-3
-
-
 def test_aiff_and_au_decode(spark):
     from flink_precisely_demo_spark.operators.multimodal import (
         audio_features,
         encode_aiff_pcm16 as _encode_aiff,
         encode_au as _encode_au,
-        probe_format,
     )
 
     t = np.arange(1600) / 8000.0
@@ -865,8 +742,6 @@ def test_aiff_and_au_decode(spark):
         11: ("au", _encode_au(sig, 11025)),
         12: ("au", _encode_au(sig, 8000, mulaw=True)),
     }
-    for mid, (fmt, p) in payloads.items():
-        assert probe_format(p) == (fmt, "audio")
     rows = [(mid, _meta("audio", fmt), p)
             for mid, (fmt, p) in payloads.items()]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
@@ -879,36 +754,14 @@ def test_aiff_and_au_decode(spark):
     assert abs(out[12]["rms"] - out[11]["rms"]) < 0.01
 
 
-def test_audio_resample_transcode_formats(spark):
-    """Transcode path: any decodable input -> resampled mono FLAC or
-    mu-law AU, re-decodable by the same operators (full round trip
-    through the codec layer)."""
-    from flink_precisely_demo_spark.operators.multimodal import (
-        audio_resample,
-        encode_aiff_pcm16,
-    )
-
-    t = np.arange(2000) / 8000.0
-    sig = 0.3 * np.sin(2 * np.pi * 220 * t)
-    rows = [(1, _meta("audio", "aiff"), encode_aiff_pcm16(sig, 8000))]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    for fmt in ("flac", "au", "wav"):
-        out = audio_resample(media, target_rate=16_000,
-                             out_format=fmt).collect()
-        assert len(out) == 1 and out[0]["meta"]["format"] == fmt
-        feats = audio_features(spark.createDataFrame(out, MEDIA_SCHEMA)) \
-            .collect()[0]
-        assert feats["error"] is None
-        assert feats["sample_rate"] == 16_000
-        assert feats["n_samples"] == 4000  # 2000 @8k -> 4000 @16k
-
-
 def test_tiff_lzw_and_predictor_roundtrip():
     """LZW (MSB-first, early code-width change, multi-Clear resets)
     and the horizontal-differencing predictor, both byte orders."""
+    from flink_precisely_demo_spark.operators.codec import (
+        lzw_decode,
+        lzw_encode,
+    )
     from flink_precisely_demo_spark.operators.tiff import (
-        _lzw_decode_tiff,
-        _lzw_encode_tiff,
         decode_tiff,
         encode_tiff,
     )
@@ -929,7 +782,8 @@ def test_tiff_lzw_and_predictor_roundtrip():
     assert np.array_equal(decode_tiff(packed), smooth)
     # raw kernel: enough random data to force multiple Clear resets
     blob = rng.integers(0, 256, 300_000, dtype=np.uint8).tobytes()
-    assert _lzw_decode_tiff(_lzw_encode_tiff(blob)) == blob
+    tiff_lzw = dict(msb=True, early=1)
+    assert lzw_decode(lzw_encode(blob, 8, **tiff_lzw), 8, **tiff_lzw) == blob
 
 
 def _java_gradient(w, h):
@@ -1022,9 +876,6 @@ def test_mp3_stream_info_external_fixture():
 
 
 def test_mp3_stream_info_synthetic_and_errors():
-    from flink_precisely_demo_spark.operators.jpeg import (
-        UnsupportedCodecError,
-    )
     from flink_precisely_demo_spark.operators.mp3 import (
         make_cbr_mp3,
         mp3_stream_info,
@@ -1113,9 +964,6 @@ def test_mp3_parser_fuzz_never_hangs_or_crashes():
     must either parse or raise the typed error — never hang, never
     leak an uncontrolled exception type. (Crawl payloads are
     adversarial by default.)"""
-    from flink_precisely_demo_spark.operators.jpeg import (
-        UnsupportedCodecError,
-    )
     from flink_precisely_demo_spark.operators.mp3 import (
         make_cbr_mp3,
         mp3_stream_info,

@@ -11,9 +11,7 @@ import zlib
 
 import pytest
 
-from flink_precisely_demo_spark.operators.jpeg import (
-    UnsupportedCodecError,
-)
+from flink_precisely_demo_spark.operators.codec import UnsupportedCodecError
 from flink_precisely_demo_spark.operators.pdf import (
     encode_pdf,
     pdf_text_pages,
@@ -131,10 +129,3 @@ def test_feature_operator_error_rows(spark):
     assert (1, 1, "fine page two", True) in out
     assert any(m == 2 and not ok for m, _, _, ok in out)
     assert any(m == 3 and not ok for m, _, _, ok in out)
-
-
-def test_probe_format_sniffs_pdf():
-    from flink_precisely_demo_spark.operators.multimodal import (
-        probe_format)
-
-    assert probe_format(encode_pdf(["x"])) == ("pdf", "document")

@@ -5,8 +5,6 @@ different axis than the DuckDB oracles (which use fixed datasets)."""
 
 from __future__ import annotations
 
-from struct import error as struct_error
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -288,7 +286,7 @@ def test_jpeg_garbage_never_hangs_or_segfaults(data, prefix):
     import pytest as _pytest
 
     from flink_precisely_demo_spark.operators.jpeg import decode_jpeg
-    with _pytest.raises((ValueError, IndexError, struct_error)):
+    with _pytest.raises(ValueError):
         decode_jpeg(prefix + data)
 
 
