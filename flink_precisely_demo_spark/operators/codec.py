@@ -254,28 +254,29 @@ def lzw_encode(data: bytes, min_code_size: int, msb: bool,
     w = MsbWriter() if msb else LsbWriter()
     write = w.write
     width = min_code_size + 1
-    table = {_SINGLES[i]: i for i in range(clear)}
+    table = {}          # (code of a string << 8) | next byte -> its code
     nxt = clear + 2
     write(clear, width)
-    cur = b""
-    for b in data:
-        cand = cur + _SINGLES[b]
-        if cand in table:
-            cur = cand
-            continue
-        write(table[cur], width)
-        table[cand] = nxt
-        nxt += 1
-        if nxt == (1 << width) + 1 - early and width < 12:
-            width += 1
-        elif nxt == 4096 - early:           # dictionary full: reset
-            write(clear, width)
-            table = {_SINGLES[i]: i for i in range(clear)}
-            nxt = clear + 2
-            width = min_code_size + 1
-        cur = _SINGLES[b]
-    if cur:
-        write(table[cur], width)
+    if data:
+        cur = data[0]   # code of the string matched so far
+        for b in data[1:]:
+            key = cur << 8 | b
+            code = table.get(key)
+            if code is not None:
+                cur = code
+                continue
+            write(cur, width)
+            table[key] = nxt
+            nxt += 1
+            if nxt == (1 << width) + 1 - early and width < 12:
+                width += 1
+            elif nxt == 4096 - early:       # dictionary full: reset
+                write(clear, width)
+                table = {}
+                nxt = clear + 2
+                width = min_code_size + 1
+            cur = b
+        write(cur, width)
         # an early-change decoder adds one more entry after this last
         # code and may widen before it reads END: write END at that
         # width (libtiff's post-encode step)
@@ -297,17 +298,32 @@ def lzw_decode(data: bytes, min_code_size: int, msb: bool, early: int,
         raise ValueError(f"lzw: minimum code size {min_code_size} > 8")
     clear = 1 << min_code_size
     end = clear + 1
-    read = (MsbReader(data) if msb else LsbReader(data)).read
     fresh = _SINGLES[:clear] + [b"", b""]
     table = list(fresh)
     width = min_code_size + 1
     out = bytearray()
     prev = None
+    # the bit reading is MsbReader/LsbReader.read inlined: this loop
+    # runs once per code and a method call per code costs ~15%
+    acc = nbits = pos = 0
+    n = len(data)
     while True:
-        try:
-            code = read(width)
-        except ValueError:                  # no END code: truncated
-            break
+        while nbits < width:
+            if pos >= n:
+                return bytes(out)           # no END code: truncated
+            if msb:
+                acc = (acc << 8) | data[pos]
+            else:
+                acc |= data[pos] << nbits
+            pos += 1
+            nbits += 8
+        nbits -= width
+        if msb:
+            code = acc >> nbits
+            acc &= (1 << nbits) - 1
+        else:
+            code = acc & ((1 << width) - 1)
+            acc >>= width
         if code == clear:
             table = list(fresh)
             width = min_code_size + 1
