@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from flink_precisely_demo_spark.operators.codec import (
     MsbWriter,
     UnsupportedCodecError,
+    lzw_decode,
     lzw_encode,
 )
 from flink_precisely_demo_spark.operators.jpeg import decode_jpeg, encode_jpeg
@@ -757,10 +758,6 @@ def test_aiff_and_au_decode(spark):
 def test_tiff_lzw_and_predictor_roundtrip():
     """LZW (MSB-first, early code-width change, multi-Clear resets)
     and the horizontal-differencing predictor, both byte orders."""
-    from flink_precisely_demo_spark.operators.codec import (
-        lzw_decode,
-        lzw_encode,
-    )
     from flink_precisely_demo_spark.operators.tiff import (
         decode_tiff,
         encode_tiff,
