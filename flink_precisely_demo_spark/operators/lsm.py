@@ -1,9 +1,11 @@
 """One LSM generation store: the on-disk protocol shared by the four
 maintained indexes (operators/{ann,text,dedup,substring}_index.py)
-and the one idempotent ``foreachBatch`` sink that feeds them
-(streaming/*_ingest.py, streaming/ann_upsert.py). Only this module
-knows the file names below; an index writes its own frames inside
-the staging context managers and never touches a marker itself.
+and the one idempotent ``foreachBatch`` sink that feeds them. Only
+this module knows the file names below; an index writes its own
+frames inside the staging context managers and never touches a
+marker itself. The streaming ingest wrappers (streaming/*_ingest.py,
+streaming/ann_upsert.py) drain their streams into the sink through
+``streaming/pipeline.drain``.
 
 Layout of an index at ``<index_path>``:
 
@@ -361,14 +363,3 @@ def index_sink(index_path: str,
 
     return apply_batch
 
-
-def drain(stream: DataFrame, sink, checkpoint: str):
-    """Drain ``stream`` through the ``foreachBatch`` function ``sink``
-    (availableNow). Returns the finished StreamingQuery."""
-    q = (stream.writeStream
-         .foreachBatch(sink)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q

@@ -18,11 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ann_index import build_ann_index, query_ann
+from ..scratch import scratch
 from ..sources.parquet import load_table
+from ..streaming.replay_stage import open_feed, stage_feed
 from .queries import fixture_path, query, staged_fixture
 from .similarity_queries import _N_QUERIES, _cos
 from .sketch_queries import _ITERS, _K, kmeans_ctes
-from ..scratch import scratch_dir
 
 _NPROBE = 2
 _TOPK = 3
@@ -301,30 +302,15 @@ def _stream_upsert_index_path(spark: SparkSession, sf_dir: str) -> str:
 
     from ..operators.lsm import applied_tags, delta_count, index_ok
     from ..streaming.ann_upsert import run_ann_upsert
-    from ..streaming.replay_stage import stage_trigger_files
 
     def build(stage: str) -> None:
         shutil.copytree(ann_index_path(spark, sf_dir), stage)
-        work = scratch_dir(prefix="ann_upsert_replay_")
-        try:
-            feed_dir = stage_trigger_files(
-                _mutation_feed(spark, sf_dir), work, F.col("b"),
-                "mutations")
-            # schema from the staged files, not a literal: the
-            # embeddings table's element type differs across
-            # generated scale dirs (float at the bench SFs,
-            # double at sf1/sf10), and a float schema over
-            # double-physical parquet fails the vectorized
-            # reader (caught by the r12 sf10 sweep)
-            schema = spark.read.parquet(feed_dir).schema
-            feed = (spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(feed_dir))
+        with scratch("ann_upsert_replay_") as work:
+            feed = open_feed(spark, stage_feed(
+                _mutation_feed(spark, sf_dir), work, "mutations", "b"))
             run_ann_upsert(feed, stage,
                            checkpoint=os.path.join(work, "ckpt"),
                            compact_every=2)
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     return staged_fixture(
         "ann_supsert", sf_dir,

@@ -13,14 +13,24 @@ differential check:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.datetime_fns import format_ts
 from ..operators.cdc_apply import apply_cdc_snapshot
+from ..scratch import scratch
 from ..sources.parquet import load_table
+from ..streaming.pipeline import replay_to_parquet
+from ..streaming.replay_stage import (
+    adaptive_key_groups,
+    open_feed,
+    shuffle_partitions,
+    stage_feed,
+    staged_feed_rows,
+)
 from .queries import query
-from ..scratch import scratch_dir
 
 
 def _envelope_rows(orders: DataFrame, manip: str, day_shift: int,
@@ -237,12 +247,6 @@ def _streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     minimum any SCD2 maintainer can hold (reference parity:
     EnrichmentJoin.java's ValueState footprint, here for
     version intervals)."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.pipeline import replay_to_parquet
-    from ..streaming.replay_stage import stage_trigger_files
     from ..streaming.scd2 import scd2_stream
 
     orders = load_table(spark, sf_dir, "orders")
@@ -275,43 +279,25 @@ def _streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("row_seq", F.lit(2)))
     changes = ins.unionByName(upd).unionByName(dele)
 
-    work = scratch_dir(prefix="stream_scd2_replay_")
-    # the try starts immediately after mkdtemp so a STAGING failure
-    # (disk full, bad sf_dir) also reclaims the tree (r11 advisory)
-    try:
-        cutoff = F.lit("1995-06-17").cast("timestamp")
-        feed_dir = stage_trigger_files(
-            changes, work,
-            F.when(F.col("ts") < cutoff, 0).otherwise(1), "changes")
-
-        schema = ("key long, ts timestamp, value double, m string, "
-                  "row_seq int, trans_id long")
-        feed = (spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1).parquet(feed_dir))
-
+    cutoff = F.lit("1995-06-17").cast("timestamp")
+    with scratch("stream_scd2_replay_") as work:
+        feed_dir = stage_feed(changes, work, "changes",
+                              F.when(F.col("ts") < cutoff, 0).otherwise(1))
         # key-group count sized to the staged feed (the operator
         # pays a Python call per state group per trigger), and state
         # partitions sized to the GROUP count — with the key-grouped
         # kernel the per-partition state-store open/commit is the
         # remaining per-trigger cost (measured at sf0.1: 8-16
         # partitions ~2.6 s vs 32 -> 3.7 s), so partitions follow
-        # groups, floored at the fixed-cost sweet spot of 8. Conf
-        # restored after; batch plans built later are unaffected.
-        from ..streaming.replay_stage import (adaptive_key_groups,
-                                              staged_feed_rows)
+        # groups, floored at the fixed-cost sweet spot of 8.
         n_groups = adaptive_key_groups(spark, staged_feed_rows(feed_dir))
         n_parts = max(8, min(spark.sparkContext.defaultParallelism,
                              n_groups // 16))
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        with shuffle_partitions(spark, n_parts):
             closed = replay_to_parquet(
-                scd2_stream(feed, key_groups=n_groups), spark,
-                "scd2_replay", checkpoint=os.path.join(work, "ckpt"))
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+                scd2_stream(open_feed(spark, feed_dir),
+                            key_groups=n_groups),
+                spark, "scd2_replay", checkpoint=os.path.join(work, "ckpt"))
     return closed.select(
         "key", "value",
         F.col("valid_from").cast("timestamp_ntz"),
@@ -393,13 +379,8 @@ def _streaming_flagship_replay(spark: SparkSession,
     state), and state is bounded by the watermark: closed windows
     leave the store at eviction, the L1 contract that makes the
     pipeline run forever on an unbounded topic."""
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.cdc_json import synthesize_orders_envelope
-    from ..streaming.pipeline import replay_to_parquet, streaming_flagship
-    from ..streaming.replay_stage import stage_trigger_text_files
+    from ..streaming.pipeline import streaming_flagship
 
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -427,26 +408,18 @@ def _streaming_flagship_replay(spark: SparkSession,
                           F.col("r_name").alias("CountryRegionCode"),
                           F.col("n_name").alias("Name")))
 
-    work = scratch_dir(prefix="stream_flagship_replay_")
-    try:
-        feed_dir = stage_trigger_text_files(env, work, F.col("b"),
-                                            "envelopes", n_batches=3)
+    with scratch("stream_flagship_replay_") as work:
+        feed_dir = stage_feed(env, work, "envelopes", "b", 3)
         out = streaming_flagship(spark, feed_dir, address_dim,
                                  states_dim, max_files_per_trigger=1)
         # replay micro-batches are small: size the state store to
         # them, not to core count (the scd2-replay house note —
         # per-trigger fixed cost is state-store open/commit PER
-        # PARTITION); conf restored after, batch plans unaffected
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+        # PARTITION)
+        with shuffle_partitions(spark, 8):
             res = replay_to_parquet(
                 out, spark, "flagship_replay",
                 checkpoint=os.path.join(work, "ckpt"))
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return res.select(
         F.col("OrderPeriod").cast("timestamp_ntz").alias("OrderPeriod"),
         "TotalDue", "Country", "State")

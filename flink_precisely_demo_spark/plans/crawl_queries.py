@@ -47,7 +47,8 @@ from .dedup_queries import minhash_bands_ctes as _bands_ctes_from
 from .dedup_queries import substr_contam_ids_ctes as _contam_ctes
 from .queries import query, staged_fixture
 from .text_queries import _lang_case_sql, _marker_count, _TOKS, canonical_sql
-from ..scratch import scratch_dir
+from ..scratch import scratch, scratch_dir
+from ..streaming.replay_stage import open_feed, stage_feed
 
 # The held-out benchmark split for the decontamination gates (batch
 # and streaming e2e pipelines): RAW document text, doc_id % 7 == 3 —
@@ -390,7 +391,6 @@ def _cleanup_roundtrip_dirs() -> None:
 def _roundtrip_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     import atexit
     import os
-    import tempfile
 
     from ..sources.jsonl import write_jsonl_corpus
 
@@ -610,7 +610,6 @@ _ORDERS_CSV_DDL = ("o_orderkey long, o_custkey long, "
 def _delimited_orders_dir(spark: SparkSession, sf_dir: str) -> str:
     import atexit
     import os
-    import tempfile
 
     from ..sources.delimited import write_delimited
 
@@ -745,7 +744,6 @@ def _corpus_pipeline_root(spark: SparkSession, sf_dir: str) -> str:
     construction a fully-drained pipeline, so completeness is just
     the markers."""
     import os
-    import shutil
 
     from ..operators.ann_index import build_ann_index
     from ..operators.dedup_index import build_band_index
@@ -754,7 +752,6 @@ def _corpus_pipeline_root(spark: SparkSession, sf_dir: str) -> str:
     from ..streaming.corpus_pipeline import (DEFAULT_QUALITY_GATE,
                                              run_corpus_ingest,
                                              synthesize_documents_envelope)
-    from ..streaming.replay_stage import stage_trigger_text_files
 
     def complete(path: str) -> bool:
         return (all(index_ok(os.path.join(path, leg)) for leg in
@@ -775,16 +772,13 @@ def _corpus_pipeline_root(spark: SparkSession, sf_dir: str) -> str:
         build_ann_index(hist.select("doc_id").join(emb, "doc_id"),
                         os.path.join(stage, "ann_index"), id_col="doc_id")
         build_text_index(hist, os.path.join(stage, "text_index"))
-        work = scratch_dir(prefix="corpus_pipe_replay_")
-        try:
-            feed_dir = stage_trigger_text_files(
-                synthesize_documents_envelope(
-                    docs.filter(F.col("doc_id") % 5 == 0),
-                    extra_cols=[F.when(F.col("doc_id") % 10 == 0, 0)
-                                .otherwise(1).alias("b")]),
-                work, F.col("b"), "cdc_docs")
-            raw = (spark.readStream.format("text")
-                   .option("maxFilesPerTrigger", 1).load(feed_dir))
+        envelopes = synthesize_documents_envelope(
+            docs.filter(F.col("doc_id") % 5 == 0),
+            extra_cols=[F.when(F.col("doc_id") % 10 == 0, 0)
+                        .otherwise(1).alias("b")])
+        with scratch("corpus_pipe_replay_") as work:
+            raw = open_feed(spark, stage_feed(envelopes, work, "cdc_docs",
+                                              "b"))
             run_corpus_ingest(
                 raw, os.path.join(stage, "band_index"),
                 os.path.join(stage, "ann_index"),
@@ -793,8 +787,6 @@ def _corpus_pipeline_root(spark: SparkSession, sf_dir: str) -> str:
                 benchmark=docs.filter(F.col("doc_id") % 7 == 3),
                 decontam_path=os.path.join(stage, "decontam"),
                 text_index_path=os.path.join(stage, "text_index"))
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     # pipe3: the late-r15 shape (decontamination + text-index legs) —
     # the bumped name can never resurrect an earlier published root
@@ -1034,7 +1026,6 @@ def _orc_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     import atexit
     import os
     import shutil
-    import tempfile
 
     from ..sources.orc import write_orc_corpus
 

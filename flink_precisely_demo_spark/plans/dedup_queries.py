@@ -19,9 +19,10 @@ from ..operators.dedup import (
     simhash_fingerprint,
     simhash_near_dup_pairs,
 )
+from ..scratch import scratch, scratch_dir
 from ..sources.parquet import load_table
+from ..streaming.replay_stage import open_feed, stage_feed
 from .queries import fixture_path, query, staged_fixture
-from ..scratch import scratch_dir
 
 # shared SQL fragments (must stay in lockstep with functions/text.py
 # tokens() and operators/dedup.py word_shingles / _hex_bucket)
@@ -469,7 +470,6 @@ def _streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise streaming-only (SURVEY.md §2.3; no reference
     counterpart — extension scope)."""
     import os
-    import tempfile
 
     from ..streaming.streaming_dedup import (
         dedup_survivors,
@@ -478,20 +478,9 @@ def _streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     work = scratch_dir(prefix="stream_dedup_replay_")
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    for k in range(_REPLAY_BATCHES):
-        part = os.path.join(work, f"part{k}")
-        (docs.filter(F.col("doc_id") % _REPLAY_BATCHES == k)
-             .coalesce(1).write.parquet(part))
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        dst = os.path.join(feed, f"b{k}.parquet")
-        os.rename(os.path.join(part, src), dst)
-        os.utime(dst, (1_000_000_000 + 10 * k,) * 2)
-
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1).parquet(feed))
-    run_near_dup_dedup(stream, os.path.join(work, "store"),
+    feed = stage_feed(docs, work, "feed", F.col("doc_id") % _REPLAY_BATCHES,
+                      _REPLAY_BATCHES)
+    run_near_dup_dedup(open_feed(spark, feed), os.path.join(work, "store"),
                        os.path.join(work, "out"),
                        os.path.join(work, "ckpt"))
     # the returned DataFrame lazily reads work/out, so only the
@@ -802,7 +791,6 @@ def _stream_ingest_paths(spark: SparkSession, sf_dir: str
     from ..operators.lsm import (applied_tags, delta_count, index_ok,
                                  publish)
     from ..streaming.dedup_ingest import run_dedup_ingest
-    from ..streaming.replay_stage import stage_trigger_files
 
     vpath = fixture_path("band_singest", sf_dir) + ".verdicts"
 
@@ -819,23 +807,16 @@ def _stream_ingest_paths(spark: SparkSession, sf_dir: str
     def build(stage: str) -> None:
         svpath = stage + ".verdicts"
         shutil.copytree(_band_index_path(spark, sf_dir), stage)
-        work = scratch_dir(prefix="dedup_ingest_replay_")
-        try:
-            batch = load_table(spark, sf_dir, "documents") \
-                .filter(F.col("doc_id") % 5 == 0) \
-                .select("doc_id", "text")
-            feed_dir = stage_trigger_files(
-                batch, work,
-                F.when(F.col("doc_id") % 10 == 0, 0).otherwise(1), "docs")
-            schema = spark.read.parquet(feed_dir).schema
-            feed = (spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(feed_dir))
-            run_dedup_ingest(feed, stage, svpath,
+        batch = load_table(spark, sf_dir, "documents") \
+            .filter(F.col("doc_id") % 5 == 0) \
+            .select("doc_id", "text")
+        with scratch("dedup_ingest_replay_") as work:
+            feed_dir = stage_feed(
+                batch, work, "docs",
+                F.when(F.col("doc_id") % 10 == 0, 0).otherwise(1))
+            run_dedup_ingest(open_feed(spark, feed_dir), stage, svpath,
                              checkpoint=os.path.join(work, "ckpt"),
                              compact_every=2)
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
         # the verdicts swap in by the same double rename as the index
         # (no bulk delete between the renames, so a completeness check
         # never sees them missing while the index looks complete)
@@ -1189,11 +1170,9 @@ def _stream_substring_index_path(spark: SparkSession, sf_dir: str) -> str:
     applied manifest recording both triggers — deterministic, so the
     dir is reusable across processes."""
     import os
-    import shutil
 
     from ..operators.lsm import applied_tags, delta_count, index_ok
     from ..operators.substring_index import build_substring_index
-    from ..streaming.replay_stage import stage_trigger_files
     from ..streaming.substring_ingest import run_substring_ingest
 
     def build(stage: str) -> None:
@@ -1204,21 +1183,12 @@ def _stream_substring_index_path(spark: SparkSession, sf_dir: str) -> str:
                    .withColumn("b", F.lit(0))
                    .unionByName(docs.filter(F.col("doc_id") % 10 == 5)
                                 .withColumn("b", F.lit(1))))
-        work = scratch_dir(prefix="substr_ingest_replay_")
-        try:
-            feed_dir = stage_trigger_files(feed_df, work, F.col("b"),
-                                           "docs")
-            feed = (spark.readStream
-                    .schema("doc_id long, text string, b int")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(feed_dir))
+        with scratch("substr_ingest_replay_") as work:
             run_substring_ingest(
-                feed.select("doc_id", "text"), stage,
-                checkpoint=os.path.join(work, "ckpt"),
+                open_feed(spark, stage_feed(feed_df, work, "docs", "b")),
+                stage, checkpoint=os.path.join(work, "ckpt"),
                 spans_out=os.path.join(work, "spans"),
                 compact_every=2)
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     return staged_fixture(
         "substring_sindex", sf_dir,

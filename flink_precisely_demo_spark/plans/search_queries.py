@@ -35,10 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import scratch
 from ..sources.parquet import load_table
+from ..streaming.replay_stage import open_feed, stage_feed
 from .queries import query, staged_fixture
 from .text_queries import _TOKS
-from ..scratch import scratch_dir
 
 # Fixed keyword set for the oracle-checked query (the operator works
 # for any term list); chosen from the corpus vocabulary so every term
@@ -442,11 +443,9 @@ def _stream_text_index_path(spark: SparkSession, sf_dir: str) -> str:
     applied-batch manifest records both triggers; that end state is
     deterministic, making the dir reusable across processes."""
     import os
-    import shutil
 
     from ..operators.lsm import applied_tags, delta_count, index_ok
     from ..operators.text_index import build_text_index
-    from ..streaming.replay_stage import stage_trigger_files
     from ..streaming.text_index_ingest import run_text_index_ingest
 
     def build(stage: str) -> None:
@@ -475,19 +474,11 @@ def _stream_text_index_path(spark: SparkSession, sf_dir: str) -> str:
                     .select("doc_id", F.lit(None).cast("string")
                             .alias("text"),
                             F.lit("D").alias("op"), F.lit(1).alias("b"))))
-        work = scratch_dir(prefix="text_index_replay_")
-        try:
-            feed_dir = stage_trigger_files(muts, work, F.col("b"),
-                                           "mutations")
-            feed = (spark.readStream
-                    .schema("doc_id long, text string, op string, b int")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(feed_dir))
+        with scratch("text_index_replay_") as work:
+            feed = open_feed(spark, stage_feed(muts, work, "mutations", "b"))
             run_text_index_ingest(feed, stage,
                                   checkpoint=os.path.join(work, "ckpt"),
                                   compact_every=2)
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     return staged_fixture(
         "text_sindex", sf_dir,

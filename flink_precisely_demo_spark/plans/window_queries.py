@@ -5,13 +5,24 @@ oracles built from explicit window arithmetic.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.windowed_agg import sum_exact
+from ..scratch import scratch
 from ..sources.parquet import load_table
+from ..streaming.pipeline import replay_to_parquet
+from ..streaming.replay_stage import (
+    adaptive_join_state_partitions,
+    open_feed,
+    shuffle_partitions,
+    stage_feed,
+    stage_feeds,
+    staged_feed_rows,
+)
 from .queries import query
-from ..scratch import scratch_dir
 
 
 @query(
@@ -382,39 +393,20 @@ def _streaming_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-of-order design converges to batch semantics on real data;
     the watermark is held below the feed's range so no event is
     dropped and every late-view window shift is exercised."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.pipeline import replay_to_parquet
-
     from ..streaming.funnel import funnel_stream
 
-    ev = load_table(spark, sf_dir, "events") \
-        .select("event_id", "user_id", "event_type", "ts")
-    work = scratch_dir(prefix="stream_funnel_replay_")
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    for k in range(3):
-        part = os.path.join(work, f"part{k}")
-        (ev.filter(F.col("event_id") % 3 == k)
-           .select("user_id", "event_type", "ts")
-           .coalesce(1).write.parquet(part))
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        dst = os.path.join(feed, f"b{k}.parquet")
-        os.rename(os.path.join(part, src), dst)
-        os.utime(dst, (1_000_000_000 + 10 * k,) * 2)
-
-    schema = "user_id long, event_type string, ts timestamp"
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(feed)
-              .withWatermark("ts", "36500 days"))
-    snap = replay_to_parquet(
-        funnel_stream(stream), spark, "funnel_replay",
-        checkpoint=os.path.join(work, "ckpt"),
-        output_mode="update", timeout=300)
-    shutil.rmtree(work, ignore_errors=True)  # the parquet drain holds
-    # the rows outside work; feed copy + checkpoint are dead weight
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.col("ts").cast("timestamp"),
+        (F.col("event_id") % 3).alias("b"))
+    # the parquet drain holds the rows outside work, so the feed copy
+    # and the checkpoint die with the block
+    with scratch("stream_funnel_replay_") as work:
+        stream = open_feed(spark, stage_feed(ev, work, "feed", "b", 3)) \
+            .withWatermark("ts", "36500 days")
+        snap = replay_to_parquet(
+            funnel_stream(stream), spark, "funnel_replay",
+            checkpoint=os.path.join(work, "ckpt"),
+            output_mode="update", timeout=300)
 
     from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
@@ -465,39 +457,18 @@ def _streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval-merge state design converges to batch semantics on any
     arrival order; the watermark is held below the feed's range so
     no session finalizes early."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.pipeline import replay_to_parquet
-
     from ..streaming.sessionize import sessionize_stream
 
-    ev = load_table(spark, sf_dir, "events") \
-        .select("event_id", "user_id", "ts")
-    work = scratch_dir(prefix="stream_session_replay_")
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    for k in range(3):
-        part = os.path.join(work, f"part{k}")
-        (ev.filter(F.col("event_id") % 3 == k)
-           .select("user_id", "ts")
-           .coalesce(1).write.parquet(part))
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        dst = os.path.join(feed, f"b{k}.parquet")
-        os.rename(os.path.join(part, src), dst)
-        os.utime(dst, (1_000_000_000 + 10 * k,) * 2)
-
-    schema = "user_id long, ts timestamp"
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(feed)
-              .withWatermark("ts", "36500 days"))
-    snap = replay_to_parquet(
-        sessionize_stream(stream), spark, "session_replay",
-        checkpoint=os.path.join(work, "ckpt"),
-        output_mode="update", timeout=300)
-    shutil.rmtree(work, ignore_errors=True)  # the parquet drain holds
-    # the rows outside work; feed copy + checkpoint are dead weight
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", F.col("ts").cast("timestamp"),
+        (F.col("event_id") % 3).alias("b"))
+    with scratch("stream_session_replay_") as work:
+        stream = open_feed(spark, stage_feed(ev, work, "feed", "b", 3)) \
+            .withWatermark("ts", "36500 days")
+        snap = replay_to_parquet(
+            sessionize_stream(stream), spark, "session_replay",
+            checkpoint=os.path.join(work, "ckpt"),
+            output_mode="update", timeout=300)
 
     from pyspark.sql import Window
     w = Window.partitionBy("user_id")
@@ -590,39 +561,18 @@ def _streaming_pattern_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival order. The watermark is held below the feed's range here;
     the finalize-and-fold path (buffer -> DFA consumption) is
     exercised by the unit tests with a real advancing watermark."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.pipeline import replay_to_parquet
-
     from ..streaming.pattern import pattern_stream
 
-    ev = load_table(spark, sf_dir, "events") \
-        .select("event_id", "user_id", "event_type", "ts")
-    work = scratch_dir(prefix="stream_pattern_replay_")
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    for k in range(3):
-        part = os.path.join(work, f"part{k}")
-        (ev.filter(F.col("event_id") % 3 == k)
-           .coalesce(1).write.parquet(part))
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        dst = os.path.join(feed, f"b{k}.parquet")
-        os.rename(os.path.join(part, src), dst)
-        os.utime(dst, (1_000_000_000 + 10 * k,) * 2)
-
-    schema = ("event_id long, user_id long, event_type string, "
-              "ts timestamp")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(feed)
-              .withWatermark("ts", "36500 days"))
-    snap = replay_to_parquet(
-        pattern_stream(stream), spark, "pattern_replay",
-        checkpoint=os.path.join(work, "ckpt"),
-        output_mode="update", timeout=300)
-    shutil.rmtree(work, ignore_errors=True)  # the parquet drain holds
-    # the rows outside work; feed copy + checkpoint are dead weight
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", F.col("ts").cast("timestamp"))
+    with scratch("stream_pattern_replay_") as work:
+        feed = stage_feed(ev, work, "feed", F.col("event_id") % 3, 3)
+        snap = replay_to_parquet(
+            pattern_stream(open_feed(spark, feed)
+                           .withWatermark("ts", "36500 days")),
+            spark, "pattern_replay",
+            checkpoint=os.path.join(work, "ckpt"),
+            output_mode="update", timeout=300)
 
     from pyspark.sql import Window
     w = Window.partitionBy("user_id")
@@ -681,91 +631,36 @@ def _streaming_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     validation that the churn/abandonment shape is safe to build on:
     state is engine-bounded by the two watermarks, no custom state
     code."""
-    import os
-    import shutil
-    import tempfile
+    from ..streaming.pipeline import stream_interval_join_outer
 
-    from ..streaming.pipeline import (
-        replay_to_parquet,
-        stream_interval_join_outer,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    work = scratch_dir(prefix="stream_attr_replay_")
-
-    # ONE pass builds all four feed files (2 sources x 2 trigger
-    # batches) via a partitioned write — four separate filtered
-    # scans cost more than the stream itself did
-    staged = os.path.join(work, "staged")
-    (ev.filter(F.col("event_type").isin("click", "purchase"))
-       .select("event_type", (F.col("event_id") % 2).alias("half"),
-               "user_id", "ts")
-       .repartition("event_type", "half")
-       .write.partitionBy("event_type", "half").parquet(staged))
-
-    def feed(name: str, etype: str) -> str:
-        d = os.path.join(work, name)
-        os.makedirs(d)
-        for k in range(2):
-            part = os.path.join(staged, f"event_type={etype}",
-                                f"half={k}")
-            srcs = ([f for f in os.listdir(part)
-                     if f.endswith(".parquet")]
-                    if os.path.isdir(part) else [])
-            dst = os.path.join(d, f"b{k}.parquet")
-            if srcs:
-                assert len(srcs) == 1, (
-                    f"feed split precondition: expected one parquet "
-                    f"part per (event_type, half), got {srcs} in "
-                    f"{part}")
-                os.rename(os.path.join(part, srcs[0]), dst)
-            else:
-                # a scale point where one half has no rows of this
-                # event type writes no partition dir at all: feed an
-                # EMPTY batch file so the trigger cadence (and the
-                # other stream's watermark advancement) is preserved
-                (spark.createDataFrame([], "user_id long, ts timestamp")
-                 .coalesce(1).write.mode("overwrite")
-                 .parquet(dst + ".tmp"))
-                src = next(f for f in os.listdir(dst + ".tmp")
-                           if f.endswith(".parquet"))
-                os.rename(os.path.join(dst + ".tmp", src), dst)
-            os.utime(dst, (1_000_000_000 + 10 * k,) * 2)
-        return d
-
-    cdir, pdir = feed("clicks", "click"), feed("purchases", "purchase")
-    schema = "user_id long, ts timestamp"
-    clicks = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(cdir)
-              .withWatermark("ts", "1 minutes"))
-    purchases = (spark.readStream.schema(schema)
-                 .option("maxFilesPerTrigger", 1).parquet(pdir)
-                 .withWatermark("ts", "1 minutes"))
-    # stream-stream join state is partitioned by shuffle.partitions,
-    # and the per-batch machinery cost here is state-store
-    # open/commit PER PARTITION x FOUR stores (the symmetric join
-    # keeps KeyToNumValues + KeyWithIndexToValues per side), not
-    # rows. Measured at sf0.1 (~206k rows, 3 triggers): 4 partitions
-    # 4.1 s, 8 -> 4.9 s, 16 -> 7.9 s — so partitions follow the
-    # sqrt cost model in adaptive_join_state_partitions, reaching
-    # the core count only when per-row work amortizes the stores.
-    # Conf restored afterward — streaming queries pin their
-    # partitioning at start, batch plans built later are unaffected.
-    from ..streaming.replay_stage import (adaptive_join_state_partitions,
-                                          staged_feed_rows)
-    n_parts = adaptive_join_state_partitions(
-        spark, staged_feed_rows(cdir) + staged_feed_rows(pdir))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        joined = replay_to_parquet(
-            stream_interval_join_outer(clicks, purchases,
-                                       window="1 hour"),
-            spark, "attr_replay",
-            checkpoint=os.path.join(work, "ckpt"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_type", "user_id", F.col("ts").cast("timestamp"),
+        (F.col("event_id") % 2).alias("b"))
+    with scratch("stream_attr_replay_") as work:
+        # ONE partitioned write stages both feeds (2 sources x 2
+        # trigger batches) — separate filtered scans per source cost
+        # more than the stream itself did
+        feeds = stage_feeds(ev, work, "event_type", ["click", "purchase"],
+                            "b")
+        clicks, purchases = (
+            open_feed(spark, feeds[t]).withWatermark("ts", "1 minutes")
+            for t in ("click", "purchase"))
+        # stream-stream join state is partitioned by shuffle.partitions,
+        # and the per-batch machinery cost here is state-store
+        # open/commit PER PARTITION x FOUR stores (the symmetric join
+        # keeps KeyToNumValues + KeyWithIndexToValues per side), not
+        # rows. Measured at sf0.1 (~206k rows, 3 triggers): 4 partitions
+        # 4.1 s, 8 -> 4.9 s, 16 -> 7.9 s — so partitions follow the
+        # sqrt cost model in adaptive_join_state_partitions, reaching
+        # the core count only when per-row work amortizes the stores.
+        n_parts = adaptive_join_state_partitions(
+            spark, sum(staged_feed_rows(d) for d in feeds.values()))
+        with shuffle_partitions(spark, n_parts):
+            joined = replay_to_parquet(
+                stream_interval_join_outer(clicks, purchases,
+                                           window="1 hour"),
+                spark, "attr_replay",
+                checkpoint=os.path.join(work, "ckpt"))
     return (joined
             .select("user_id",
                     F.col("click_ts").cast("timestamp_ntz"),
@@ -844,53 +739,32 @@ def _streaming_enrichment_replay(spark: SparkSession,
     key into the state store; per key the state holds one dim row
     plus a buffer that drains on first match, exactly the reference's
     ValueState + ListState footprint."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.pipeline import replay_to_parquet
-    from ..streaming.replay_stage import stage_trigger_files
     from ..streaming.stateful_join import enrich_stream
-
-    work = scratch_dir(prefix="stream_enrich_replay_")
-
-    def stage(df: DataFrame, batch_col, name: str) -> str:
-        return stage_trigger_files(df, work, batch_col, name)
 
     dims_b = load_table(spark, sf_dir, "customer") \
         .filter(F.col("c_custkey") % 4 < 2) \
         .select((F.col("c_custkey") % 997).alias("k"),
-                "c_custkey", "c_nationkey",
+                "c_custkey", F.col("c_nationkey").cast("long"),
                 F.col("c_acctbal").cast("double").alias("acctbal"))
     facts_b = load_table(spark, sf_dir, "orders").select(
         (F.col("o_custkey") % 997).alias("k"),
         "o_orderkey",
         F.col("o_totalprice").cast("double").alias("price"))
-    ddir = stage(dims_b, F.col("c_custkey") % 2, "dims")
-    fdir = stage(facts_b, F.col("o_orderkey") % 2, "facts")
-
-    dim_schema = "k long, c_custkey long, c_nationkey long, acctbal double"
-    fact_schema = "k long, o_orderkey long, price double"
-    dim_s = (spark.readStream.schema(dim_schema)
-             .option("maxFilesPerTrigger", 1).parquet(ddir))
-    fact_s = (spark.readStream.schema(fact_schema)
-              .option("maxFilesPerTrigger", 1).parquet(fdir))
-
-    # state partitions sized to the replay's micro-batch volume, not
-    # core count (the attribution-replay house note: per-batch cost is
-    # state-store open/commit PER PARTITION); conf restored after
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        enriched = replay_to_parquet(
-            enrich_stream(fact_s, dim_s, key="k",
-                          order_col="o_orderkey",
-                          dim_order_col="c_custkey"),
-            spark, "enrich_replay",
-            checkpoint=os.path.join(work, "ckpt"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
+    with scratch("stream_enrich_replay_") as work:
+        dim_s = open_feed(spark, stage_feed(
+            dims_b, work, "dims", F.col("c_custkey") % 2))
+        fact_s = open_feed(spark, stage_feed(
+            facts_b, work, "facts", F.col("o_orderkey") % 2))
+        # state partitions sized to the replay's micro-batch volume,
+        # not core count (the attribution-replay house note: per-batch
+        # cost is state-store open/commit PER PARTITION)
+        with shuffle_partitions(spark, 8):
+            enriched = replay_to_parquet(
+                enrich_stream(fact_s, dim_s, key="k",
+                              order_col="o_orderkey",
+                              dim_order_col="c_custkey"),
+                spark, "enrich_replay",
+                checkpoint=os.path.join(work, "ckpt"))
     return enriched.select(
         "k", "o_orderkey", "price", "c_custkey", "c_nationkey", "acctbal")
 
@@ -931,21 +805,12 @@ def _streaming_late_sideoutput_replay(spark: SparkSession,
 
     Scale: the split is a narrow per-batch filter + one observed
     aggregate (no extra probe jobs); driver state is one timestamp."""
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.late_data import run_with_late_capture
-    from ..streaming.replay_stage import stage_trigger_files
 
-    work = scratch_dir(prefix="late_sideout_replay_")
-    try:
-        ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-        feed = stage_trigger_files(ev, work, F.pmod(F.col("event_id"), 3),
-                                   "late_feed", n_batches=3)
-        stream = (spark.readStream
-                  .schema("event_id long, ts timestamp_ntz")
-                  .option("maxFilesPerTrigger", 1).parquet(feed))
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
+    with scratch("late_sideout_replay_") as work:
+        stream = open_feed(spark, stage_feed(
+            ev, work, "late_feed", F.pmod(F.col("event_id"), 3), 3))
         main_dir = os.path.join(work, "main")
         late_dir = os.path.join(work, "late")
         run_with_late_capture(stream, "ts", "15 days", main_dir,
@@ -971,5 +836,3 @@ def _streaming_late_sideoutput_replay(spark: SparkSession,
         # collect is exactly the §5 anti-pattern (and was ~0.5 s of
         # pure Arrow-transpose overhead at sf0.1)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

@@ -32,7 +32,9 @@ explicitly rather than it patching tempfile globally.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+from contextlib import contextmanager
 
 _SHM = "/dev/shm"
 
@@ -58,3 +60,14 @@ def scratch_dir(prefix: str) -> str:
         except OSError:
             pass
     return tempfile.mkdtemp(prefix=prefix)
+
+
+@contextmanager
+def scratch(prefix: str):
+    """A :func:`scratch_dir` for the duration of the block, removed
+    when the block exits — also when it raises."""
+    d = scratch_dir(prefix)
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

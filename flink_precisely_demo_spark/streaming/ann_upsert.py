@@ -17,7 +17,8 @@ from functools import partial
 from pyspark.sql import DataFrame
 
 from ..operators.ann_index import compact_ann_index, upsert_ann_index
-from ..operators.lsm import drain, index_sink, split_mutations
+from ..operators.lsm import index_sink, split_mutations
+from .pipeline import drain
 
 
 def ann_upsert_sink(index_path: str, id_col: str = "vec_id",
@@ -47,4 +48,4 @@ def run_ann_upsert(mutations: DataFrame, index_path: str,
     """Drain a streaming mutation DataFrame into the index
     (availableNow). Returns the finished StreamingQuery."""
     return drain(mutations, ann_upsert_sink(index_path, **kwargs),
-                 checkpoint)
+                 checkpoint, "ANN upsert")

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc_apply import flatten_envelope, latest_per_key
+from .pipeline import drain
 
 _STATE_RE = re.compile(r"^state_v(\d+)$")
 
@@ -91,13 +92,8 @@ def run_cdc_upsert(envelopes: DataFrame, target_path: str, pk: str,
                    checkpoint: str, **kwargs):
     """Wire a streaming envelope DataFrame into the upsert sink and
     drain it (availableNow). Returns the StreamingQuery."""
-    q = (envelopes.writeStream
-         .foreachBatch(cdc_upsert_sink(target_path, pk, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(envelopes, cdc_upsert_sink(target_path, pk, **kwargs),
+                 checkpoint, "CDC upsert")
 
 
 def vacuum_store(target_path: str, keep: int = 2) -> list[int]:

@@ -58,10 +58,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import language_id, quality_score
-from ..operators.lsm import drain
 from ..sources.cdc_json import decode_envelope, flatten_after_image
 from .ann_upsert import ann_upsert_sink
 from .dedup_ingest import dedup_ingest_sink
+from .pipeline import drain
 from .text_index_ingest import text_index_sink
 
 #: after_image payload for a document-capture CDC feed: the envelope
@@ -192,4 +192,4 @@ def run_corpus_ingest(raw: DataFrame, band_index_path: str,
     return drain(raw, corpus_ingest_sink(band_index_path,
                                          ann_index_path, verdicts_path,
                                          embeddings, **kwargs),
-                 checkpoint)
+                 checkpoint, "corpus ingest")

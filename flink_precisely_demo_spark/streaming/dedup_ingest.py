@@ -36,7 +36,8 @@ from ..operators.dedup_index import (
     ingest_cluster_edges,
     verdicts_from_edges,
 )
-from ..operators.lsm import drain, index_sink
+from ..operators.lsm import index_sink
+from .pipeline import drain
 
 
 def dedup_ingest_sink(index_path: str, verdicts_path: str,
@@ -106,4 +107,5 @@ def run_dedup_ingest(docs: DataFrame, index_path: str,
     """Drain a streaming document DataFrame through the ingest sink
     (availableNow). Returns the finished StreamingQuery."""
     return drain(docs, dedup_ingest_sink(index_path, verdicts_path,
-                                         **kwargs), checkpoint)
+                                         **kwargs), checkpoint,
+                 "dedup ingest")

@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .pipeline import drain
+
 
 def _read_hwm(path: str) -> str | None:
     try:
@@ -113,12 +115,7 @@ def run_with_late_capture(events: DataFrame, ts_col: str, delay: str,
             df.write.mode("append").parquet(path)
         return write
 
-    q = (events.writeStream
-         .foreachBatch(late_data_splitter(ts_col, delay,
-                                          _sink(main_dir), _sink(late_dir),
-                                          state_dir))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(events,
+                 late_data_splitter(ts_col, delay, _sink(main_dir),
+                                    _sink(late_dir), state_dir),
+                 checkpoint, "late-data capture")

@@ -147,7 +147,6 @@ def replay_to_parquet(df: DataFrame, spark: SparkSession, label: str,
     """
     import atexit
     import shutil
-    import tempfile
 
     old = _REPLAY_DRAIN_DIRS.pop(label, None)
     if old:
@@ -157,13 +156,23 @@ def replay_to_parquet(df: DataFrame, spark: SparkSession, label: str,
     out = scratch_dir(prefix=f"replay_drain_{label}_")
     _REPLAY_DRAIN_DIRS[label] = out
 
-    q = (df.writeStream.outputMode(output_mode)
-         .foreachBatch(
-             lambda batch, _id: batch.write.mode("append").parquet(out))
+    drain(df, lambda batch, _id: batch.write.mode("append").parquet(out),
+          checkpoint, label, timeout, output_mode)
+    return spark.read.schema(df.schema).parquet(out)
+
+
+def drain(stream: DataFrame, sink, checkpoint: str, label: str,
+          timeout: float = 600, output_mode: str = "append"):
+    """Drive ``stream`` to completion (availableNow) through the
+    ``foreachBatch`` function ``sink``; a drain still running after
+    ``timeout`` seconds is stopped and raises (:func:`drain_query`).
+    Returns the finished StreamingQuery."""
+    q = (stream.writeStream.outputMode(output_mode)
+         .foreachBatch(sink)
          .option("checkpointLocation", checkpoint)
          .trigger(availableNow=True).start())
     drain_query(q, timeout, label)
-    return spark.read.schema(df.schema).parquet(out)
+    return q
 
 
 def drain_query(q, timeout: int, label: str = "streaming query") -> None:

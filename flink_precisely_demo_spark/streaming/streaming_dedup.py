@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _minhash_banded
+from .pipeline import drain
 
 _BUCKET_RE = re.compile(r"^buckets_v(\d+)$")
 _OUT_RE = re.compile(r"^batch_v(\d+)$")
@@ -158,13 +159,8 @@ def run_near_dup_dedup(docs: DataFrame, store_path: str, out_path: str,
                        checkpoint: str, **kwargs):
     """Drain a streaming document DataFrame through the near-dup
     dedup sink (availableNow). Returns the StreamingQuery."""
-    q = (docs.writeStream
-         .foreachBatch(near_dup_dedup_sink(store_path, out_path, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(docs, near_dup_dedup_sink(store_path, out_path, **kwargs),
+                 checkpoint, "near-dup dedup")
 
 
 def dedup_survivors(spark: SparkSession, out_path: str) -> DataFrame:

@@ -28,13 +28,14 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.dedup import sliding_window_hashes
-from ..operators.lsm import drain, index_sink
+from ..operators.lsm import index_sink
 from ..operators.substring_index import (
     _manifest,
     append_windows,
     compact_substring_index,
     ingest_substring_spans,
 )
+from .pipeline import drain
 
 
 def substring_index_sink(index_path: str, text_col: str = "text",
@@ -75,4 +76,4 @@ def run_substring_ingest(docs: DataFrame, index_path: str,
     """Drain a streaming document DataFrame into the index
     (availableNow). Returns the finished StreamingQuery."""
     return drain(docs, substring_index_sink(index_path, **kwargs),
-                 checkpoint)
+                 checkpoint, "substring index ingest")

@@ -14,8 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..operators.lsm import drain, index_sink, split_mutations
+from ..operators.lsm import index_sink, split_mutations
 from ..operators.text_index import compact_text_index, upsert_text_index
+from .pipeline import drain
 
 
 def text_index_sink(index_path: str, text_col: str = "text",
@@ -43,4 +44,4 @@ def run_text_index_ingest(mutations: DataFrame, index_path: str,
     """Drain a streaming mutation DataFrame into the index
     (availableNow). Returns the finished StreamingQuery."""
     return drain(mutations, text_index_sink(index_path, **kwargs),
-                 checkpoint)
+                 checkpoint, "text index ingest")

@@ -55,38 +55,35 @@ def _flatness(series: list, label: str, violations: list) -> dict:
             f"{label}_p50_second_half": second}
 
 
-def _file_feed_run(spark, make_df, stream_fn, schema: str,
-                   n_triggers: int, watermark: str = "10 minutes"):
-    """Write n_triggers single-file batches (make_df(k) -> DataFrame
-    matching ``schema``), drain through stream_fn (noop sink), return
-    per-trigger progress rows."""
+def _file_feed_run(spark, make_df, stream_fn, n_triggers: int,
+                   watermark: str = "10 minutes"):
+    """Stage n_triggers single-file batches (make_df(k) -> DataFrame),
+    drain through stream_fn (noop sink), return per-trigger progress
+    rows."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from flink_precisely_demo_spark.scratch import scratch
     from flink_precisely_demo_spark.streaming.pipeline import drain_query
+    from flink_precisely_demo_spark.streaming.replay_stage import (
+        open_feed,
+        stage_feed,
+    )
 
-    work = tempfile.mkdtemp(prefix="longevity_")
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    for k in range(n_triggers):
-        df = make_df(k)
-        part = os.path.join(work, f"part{k}")
-        df.coalesce(1).write.parquet(part)
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        os.rename(os.path.join(part, src),
-                  os.path.join(feed, f"b{k:04d}.parquet"))
-        os.utime(os.path.join(feed, f"b{k:04d}.parquet"),
-                 (1_000_000_000 + 10 * k,) * 2)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(feed)
-              .withWatermark("ts", watermark))
-    q = (stream_fn(stream).writeStream.outputMode("update")
-         .format("noop")
-         .option("checkpointLocation", os.path.join(work, "ckpt"))
-         .trigger(availableNow=True).start())
-    try:
+    frames = [make_df(k).withColumn("b", F.lit(k))
+              for k in range(n_triggers)]
+    with scratch("longevity_") as work:
+        feed = stage_feed(reduce(DataFrame.unionByName, frames), work,
+                          "feed", "b", n_triggers)
+        stream = open_feed(spark, feed).withWatermark("ts", watermark)
+        q = (stream_fn(stream).writeStream.outputMode("update")
+             .format("noop")
+             .option("checkpointLocation", os.path.join(work, "ckpt"))
+             .trigger(availableNow=True).start())
         drain_query(q, 1200, "longevity replay")
         prog = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     rows = []
     for p in prog:
         if not p.get("stateOperators"):
@@ -120,9 +117,7 @@ def check_sessionize(spark, n_triggers: int = 50,
                 .select("user_id",
                         F.col("epoch").cast("timestamp").alias("ts")))
 
-    rows = _file_feed_run(
-        spark, make_df, sessionize_stream,
-        "user_id long, ts timestamp", n_triggers)
+    rows = _file_feed_run(spark, make_df, sessionize_stream, n_triggers)
     violations: list = []
     stats = {"check": "sessionize", "n_triggers": len(rows),
              "n_users": n_users,
@@ -160,10 +155,7 @@ def check_pattern(spark, n_triggers: int = 50,
                 .select("event_id", "user_id", "event_type",
                         F.col("epoch").cast("timestamp").alias("ts")))
 
-    rows = _file_feed_run(
-        spark, make_df, pattern_stream,
-        "event_id long, user_id long, event_type string, ts timestamp",
-        n_triggers)
+    rows = _file_feed_run(spark, make_df, pattern_stream, n_triggers)
     violations: list = []
     stats = {"check": "pattern", "n_triggers": len(rows),
              "n_users": n_users,
@@ -363,49 +355,44 @@ def check_flagship_window(spark, n_triggers: int = 50,
     runs-forever claim from this measurement, not from the docs."""
     import datetime as dt
 
+    from flink_precisely_demo_spark.scratch import scratch
     from flink_precisely_demo_spark.streaming.pipeline import (
         drain_query,
         streaming_flagship,
     )
+    from flink_precisely_demo_spark.streaming.replay_stage import stage_feed
 
-    work = tempfile.mkdtemp(prefix="longevity_flagship_")
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
     base = dt.datetime(2023, 11, 14, 22, 13, 20)
+    lines = []
     for k in range(n_triggers):
-        lines = []
         for a in range(n_addr):
             for j in range(3):           # 3 distinct 10-min windows
                 ts = base + dt.timedelta(hours=2 * k, minutes=10 * j)
                 s = ts.strftime("%Y%m%d%H%M%S") + "000000"
-                lines.append(json.dumps({
+                lines.append((json.dumps({
                     "sv_manip_type": "I",
                     "sv_trans_id": k * n_addr + a,
                     "sv_trans_row_seq": 1,
                     "sv_op_timestamp": s,
                     "after_image": {"SalesOrderId": k * n_addr + a,
                                     "ShipToAddressId": a,
-                                    "TotalDue": 100.0}}))
-        p = os.path.join(feed, f"b{k:04d}.jsonl")
-        with open(p, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        os.utime(p, (1_000_000_000 + 10 * k,) * 2)
+                                    "TotalDue": 100.0}}), k))
     addr = spark.createDataFrame(
         [(a, a % 5) for a in range(n_addr)],
         "AddressID int, StateProvinceID int")
     states = spark.createDataFrame(
         [(i, "R1", f"S{i}") for i in range(5)],
         "StateProvinceID int, CountryRegionCode string, Name string")
-    out = streaming_flagship(spark, feed, addr, states,
-                             max_files_per_trigger=1)
-    q = (out.writeStream.outputMode("append").format("noop")
-         .option("checkpointLocation", os.path.join(work, "ckpt"))
-         .trigger(availableNow=True).start())
-    try:
+    with scratch("longevity_flagship_") as work:
+        feed = stage_feed(spark.createDataFrame(lines, "value string, b int"),
+                          work, "feed", "b", n_triggers)
+        out = streaming_flagship(spark, feed, addr, states,
+                                 max_files_per_trigger=1)
+        q = (out.writeStream.outputMode("append").format("noop")
+             .option("checkpointLocation", os.path.join(work, "ckpt"))
+             .trigger(availableNow=True).start())
         drain_query(q, 1200, "flagship longevity replay")
         prog = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     rows = [{"trigger_ms": p["durationMs"].get("triggerExecution"),
              "n_state_keys": p["stateOperators"][0].get("numRowsTotal"),
              "state_bytes": p["stateOperators"][0].get("memoryUsedBytes")}
