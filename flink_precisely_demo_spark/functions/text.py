@@ -121,14 +121,6 @@ def doc_fingerprint(col: Column | str) -> Column:
     return F.substring(F.md5(normalized), 1, 16)
 
 
-def doc_fingerprint64(col: Column | str) -> Column:
-    """Spark-only bigint form of :func:`doc_fingerprint` (for numeric
-    bucketing / sortability)."""
-    return F.conv(F.substring(F.md5(
-        F.regexp_replace(F.trim(F.lower(F.col(col) if isinstance(col, str) else col)),
-                         r"\s+", " ")), 1, 15), 16, 10).cast("long")
-
-
 def repetition_stats(col: Column | str) -> Column:
     """Gopher-style repetition signals as one struct column:
     ``n_tokens``, ``distinct_ratio`` (distinct/total tokens),

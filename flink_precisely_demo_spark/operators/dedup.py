@@ -332,71 +332,26 @@ def word_shingles(text_col: str = "text", n: int = 3) -> Column:
 _KM_MOD = 1 << 48  # 48-bit hash space for double hashing
 
 
-def minhash_signature(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", num_hashes: int = 16,
-                      shingle_n: int = 3) -> DataFrame:
-    """(id, seed, minhash) — one row per document per hash seed.
-
-    One md5 per shingle; the per-seed hash family is Kirsch-
-    Mitzenmacher double hashing h_i = (h1 + i*h2) mod 2^48 with h1/h2
-    the two 48-bit halves of the digest — 16 seeds cost two hex->int
-    conversions instead of 16 md5s (was the bench hotspot: ~10x).
-    explode(shingles) -> min per seed in ONE groupBy(id) pass with
-    num_hashes MIN aggregates; map-side partial agg makes the shuffle
-    num_hashes longs per doc.
-    """
-    ex = (_fan_out(df, id_col)
-            .select(F.col(id_col),
-                    F.explode(word_shingles(text_col, shingle_n)).alias("sh"))
-            .withColumn("__d", F.md5("sh"))
-            .withColumn("__h1", F.conv(F.substring("__d", 1, 12), 16, 10).cast("long"))
-            .withColumn("__h2", F.conv(F.substring("__d", 13, 12), 16, 10).cast("long")))
-    aggs = [F.min((F.col("__h1") + F.lit(s) * F.col("__h2")) % F.lit(_KM_MOD)).alias(f"mh_{s}")
-            for s in range(num_hashes)]
-    sig = ex.groupBy(id_col).agg(*aggs)
-    # unpivot to long form (id, seed, minhash)
-    pairs = F.array(*[
-        F.struct(F.lit(s).alias("seed"), F.col(f"mh_{s}").alias("minhash"))
-        for s in range(num_hashes)])
-    return (sig.select(id_col, F.explode(pairs).alias("p"))
-               .select(id_col, "p.seed", "p.minhash"))
-
-
 def minhash_wide_signature(df: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_hashes: int = 16,
-                           shingle_n: int = 3, impl: str = "pandas") -> DataFrame:
+                           shingle_n: int = 3) -> DataFrame:
     """(id, mh_0..mh_{n-1}) — the signature in wide form.
 
-    Two implementations with IDENTICAL results (including NULL text:
-    both drop the document — the SQL path by null propagation through
-    the shingle expression, the pandas path explicitly):
-
-    - impl='pandas' (default): Arrow-batched ``mapInPandas``. Each
-      document is one row, so signatures are computed entirely
-      map-side — zero shuffle — with numpy vectorizing the
-      (h1 + s*h2) mod 2^48 family per document. Chosen because
-      Spark's higher-order lambdas (transform/filter/slice) are
-      CodegenFallback: the pure-expression pipeline runs interpreted
-      and is ~10x slower per row (measured; see git history).
-      Shingle digests are memoized per worker (boilerplate-heavy
-      corpora repeat the same shingles across documents, so each
-      distinct shingle pays its md5 once; the memo is cleared at 1M
-      entries to bound memory on huge partitions).
-    - impl='sql': pure column expressions (explode shingles -> one
-      groupBy(id) with num_hashes MINs). Kept as the semantic spec
-      that mirrors the DuckDB oracle SQL line-for-line.
+    Arrow-batched ``mapInPandas``: each document is one row, so
+    signatures are computed entirely map-side — zero shuffle — with
+    numpy vectorizing the Kirsch-Mitzenmacher double-hashing family
+    h_s = (h1 + s*h2) mod 2^48 per document (h1/h2 the two 48-bit
+    halves of each shingle's md5). Chosen over a pure-expression
+    pipeline because Spark's higher-order lambdas
+    (transform/filter/slice) are CodegenFallback: that pipeline runs
+    interpreted and is ~10x slower per row (measured; see git
+    history). Shingle digests are memoized per worker
+    (boilerplate-heavy corpora repeat the same shingles across
+    documents, so each distinct shingle pays its md5 once; the memo is
+    cleared at 1M entries to bound memory on huge partitions). NULL
+    text drops the document, as null propagation does in the DuckDB
+    oracle's SQL, which is the spec.
     """
-    if impl == "sql":
-        ex = (_fan_out(df, id_col)
-                .select(F.col(id_col),
-                        F.explode(word_shingles(text_col, shingle_n)).alias("sh"))
-                .withColumn("__d", F.md5("sh"))
-                .withColumn("__h1", F.conv(F.substring("__d", 1, 12), 16, 10).cast("long"))
-                .withColumn("__h2", F.conv(F.substring("__d", 13, 12), 16, 10).cast("long")))
-        aggs = [F.min((F.col("__h1") + F.lit(s) * F.col("__h2")) % F.lit(_KM_MOD)).alias(f"mh_{s}")
-                for s in range(num_hashes)]
-        return ex.groupBy(id_col).agg(*aggs)
-
     import hashlib
     import re as _re
 
@@ -417,7 +372,7 @@ def minhash_wide_signature(df: DataFrame, text_col: str = "text",
             ids, sigs = [], []
             for id_val, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
-                    continue   # match the SQL path's null propagation
+                    continue   # the oracle's null propagation
                 toks = [t for t in _re.split(r"\s+", text.lower()) if t]
                 if len(toks) >= n:
                     grams = {" ".join(toks[i:i + n])

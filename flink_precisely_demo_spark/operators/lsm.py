@@ -1,11 +1,14 @@
 """One LSM generation store: the on-disk protocol shared by the four
 maintained indexes (operators/{ann,text,dedup,substring}_index.py)
-and the one idempotent ``foreachBatch`` sink that feeds them. Only
-this module knows the file names below; an index writes its own
-frames inside the staging context managers and never touches a
-marker itself. The streaming ingest wrappers (streaming/*_ingest.py,
-streaming/ann_upsert.py) drain their streams into the sink through
-``streaming/pipeline.drain``.
+and the two streaming stores, and the one idempotent
+``foreachBatch`` sink that feeds them all. Only this module knows the
+file names below; a client writes its own frames inside the staging
+context managers and never touches a marker itself. The six sinks
+are ``streaming/ann_upsert.py``, ``text_index_ingest.py``,
+``substring_ingest.py``, ``dedup_ingest.py`` (the four indexes),
+``cdc_upsert.py`` (the CDC upsert store) and ``streaming_dedup.py``
+(the near-dup bucket store); ``corpus_pipeline.py`` composes three
+of them. Each drains its stream through ``streaming/pipeline.drain``.
 
 Layout of an index at ``<index_path>``:
 
@@ -45,12 +48,24 @@ Protocol:
 
 Idempotence (:func:`index_sink`): micro-batch ``n`` publishes its
 delta tagged ``b<n>``. The applied set is manifest ∪ live delta
-tags, so a ``foreachBatch`` retry of an applied batch no-ops, also
-after a scheduled or out-of-band compaction. A batch id below an
-applied one means the checkpoint belongs to another store: the sink
-fails fast instead of re-mutating. With ``compact_every=k`` the sink
-compacts once k generations have accumulated, which keeps the
-tombstone set broadcast-sized on an unbounded stream.
+tags, and one retry rule holds for every sink:
+
+- an applied ``b<m>`` with ``m > n`` means the checkpoint belongs to
+  another store (deleted or replaced, so batch ids restarted): the
+  sink fails fast, whether or not ``b<n>`` itself is applied;
+- ``b<n>`` is the newest applied tag: a ``foreachBatch`` retry,
+  which no-ops, also after a scheduled or out-of-band compaction;
+- otherwise the batch applies.
+
+Only the newest batch can be a legitimate retry. With
+``compact_every=k`` the sink compacts once k generations have
+accumulated, which keeps read width (and the tombstone set)
+bounded on an unbounded stream.
+
+A store that starts from nothing (the CDC and near-dup stores)
+publishes an empty base typed like its deltas on its first trigger
+(:func:`ensure_base`); :func:`compact_generations` is the generic
+fold of such a store.
 
 One writer per index; concurrent writers need outside coordination.
 On an object store the production analogue is a versioned prefix
@@ -245,21 +260,46 @@ def new_base(index_path: str, compact: bool = False
         os.replace(_manifest_path(stage), _manifest_path(index_path))
 
 
-def delta_frames(spark: SparkSession, index_path: str,
-                 sub: str) -> list[DataFrame]:
-    """``sub`` of every published delta that has one, oldest first."""
-    return [spark.read.parquet(os.path.join(d, sub))
+def delta_frames(spark: SparkSession, index_path: str, sub: str,
+                 schema: str | None = None) -> list[DataFrame]:
+    """``sub`` of every published delta that has one, oldest first.
+    A ``schema`` spares each read its schema-inference job."""
+    read = spark.read if schema is None else spark.read.schema(schema)
+    return [read.parquet(os.path.join(d, sub))
             for _, d in _delta_dirs(index_path)
             if os.path.isdir(os.path.join(d, sub))]
 
 
-def all_generations(spark: SparkSession, index_path: str,
-                    sub: str) -> DataFrame:
-    """Base ``sub`` unioned with every published delta's (for indexes
+def all_generations(spark: SparkSession, index_path: str, sub: str,
+                    schema: str | None = None) -> DataFrame:
+    """Base ``sub`` unioned with every published delta's (for stores
     whose generations only add rows)."""
+    read = spark.read if schema is None else spark.read.schema(schema)
     return reduce(DataFrame.unionByName,
-                  [spark.read.parquet(f"{index_path}/{sub}"),
-                   *delta_frames(spark, index_path, sub)])
+                  [read.parquet(f"{index_path}/{sub}"),
+                   *delta_frames(spark, index_path, sub, schema)])
+
+
+def ensure_base(index_path: str, sub: str, like: DataFrame) -> None:
+    """Publish an empty base whose ``sub`` is typed like ``like``
+    unless a base is published: a store that starts from nothing
+    calls this before its first read or :func:`new_delta`."""
+    if not index_ok(index_path):
+        with new_base(index_path) as stage:
+            like.limit(0).write.parquet(f"{stage}/{sub}")
+
+
+def compact_generations(spark: SparkSession, index_path: str, sub: str,
+                        fold: Callable[[DataFrame], DataFrame]) -> int:
+    """Fold base + deltas of ``sub`` through ``fold`` into a new base;
+    returns the number of generations folded."""
+    folded = delta_count(index_path)
+    with new_base(index_path, compact=True) as stage:
+        if stage is None:
+            return 0
+        fold(all_generations(spark, index_path, sub)) \
+            .write.parquet(f"{stage}/{sub}")
+    return folded
 
 
 def write_tombstones(spark: SparkSession, stage: str, id_col: str,
@@ -342,22 +382,19 @@ def index_sink(index_path: str,
     delta tagged ``tag``; ``compact(spark, index_path)`` folds."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        tag = f"b{batch_id}"
-        applied = applied_tags(index_path)
-        if tag in applied:
-            return                       # foreachBatch retry: no-op
-        later = [int(t[1:]) for t in applied
-                 if t.startswith("b") and t[1:].isdigit()
-                 and int(t[1:]) > batch_id]
-        if later:
+        newest = max((int(t[1:]) for t in applied_tags(index_path)
+                      if t.startswith("b") and t[1:].isdigit()),
+                     default=-1)
+        if newest > batch_id:
             raise RuntimeError(
-                f"index {index_path!r} already absorbed batch "
-                f"{max(later)} but this query is writing batch "
-                f"{batch_id} — the checkpoint does not belong to this "
-                "store (deleted/replaced checkpoint?). Restore the "
-                "matching checkpoint or point the sink at a fresh "
-                "index.")
-        apply(batch_df, batch_id, tag)
+                f"store {index_path!r} already absorbed batch {newest} "
+                f"but this query is writing batch {batch_id} — the "
+                "checkpoint does not belong to this store "
+                "(deleted/replaced checkpoint?). Restore the matching "
+                "checkpoint or point the sink at a fresh store.")
+        if newest == batch_id:
+            return                       # foreachBatch retry: no-op
+        apply(batch_df, batch_id, f"b{batch_id}")
         if compact_every and delta_count(index_path) >= compact_every:
             compact(batch_df.sparkSession, index_path)
 

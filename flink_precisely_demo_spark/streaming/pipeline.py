@@ -186,18 +186,6 @@ def drain_query(q, timeout: int, label: str = "streaming query") -> None:
             "results would be silently wrong, aborting instead")
 
 
-def write_json_sink(df: DataFrame, path: str, checkpoint: str):
-    """S3 equivalent for local runs: append-mode JSON files (the
-    reference writes JSON rows to a Kafka topic; same payload shape).
-    Returns the StreamingQuery."""
-    return (df.selectExpr("to_json(struct(*)) AS value")
-              .writeStream.outputMode("append")
-              .format("text")
-              .option("path", path)
-              .option("checkpointLocation", checkpoint)
-              .start())
-
-
 def stream_interval_join(clicks: DataFrame, purchases: DataFrame,
                          key: str = "user_id",
                          window: str = "1 hour") -> DataFrame:

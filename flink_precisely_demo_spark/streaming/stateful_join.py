@@ -64,8 +64,7 @@ def _join_output_schema(fact: DataFrame, dim: DataFrame, key: str) -> T.StructTy
 
 def enrich_stream(fact: DataFrame, dim: DataFrame, key: str,
                   order_col: str, dim_order_col: str | None = None,
-                  state_ttl_ms: int | None = None,
-                  ttl_mode: str = "lazy") -> DataFrame:
+                  state_ttl_ms: int | None = None) -> DataFrame:
     """Streaming enrichment join of two streaming DataFrames.
 
     ``fact`` and ``dim`` must share the join key column name ``key``
@@ -80,25 +79,15 @@ def enrich_stream(fact: DataFrame, dim: DataFrame, key: str,
     state after that many ms without any activity (processing-time,
     per key); a later fact for an expired key buffers again until the
     dim re-arrives, which is the reference's own cold-start path.
-
-    ``ttl_mode`` picks how expiry is realized:
-
-    - ``"lazy"`` (default): the last-touch wall clock is stored in
-      state and checked on the key's next access — expired state is
-      discarded before use. Deterministic join semantics, works
-      under EVERY trigger including availableNow; an idle key's row
-      lingers physically until next touched (or the store's own
-      maintenance), but is semantically dead.
-    - ``"evict"``: additionally arms a per-key
-      ProcessingTimeTimeout so idle keys are physically removed.
-      For CONTINUOUS deployments only: Spark never terminates an
-      availableNow/once run while processing-time timeouts are
-      pending (each no-data batch re-enters the timeout loop — we
-      measured an unbounded 0-input batch spin), so run-to-
-      completion tools must use "lazy".
+    Expiry is lazy: the last-touch wall clock is stored in state and
+    checked on the key's next access — expired state is discarded
+    before use. Deterministic join semantics under EVERY trigger,
+    including availableNow; an idle key's row lingers physically
+    until next touched (or the store's own maintenance), but is
+    semantically dead. (A ProcessingTimeTimeout would remove idle
+    keys physically, but Spark never terminates an availableNow run
+    while processing-time timeouts are pending.)
     """
-    if ttl_mode not in ("lazy", "evict"):
-        raise ValueError(f"ttl_mode must be 'lazy' or 'evict', got {ttl_mode!r}")
     out_schema = _join_output_schema(fact, dim, key)
     fact_cols = [f.name for f in fact.schema.fields]
     dim_cols = [f.name for f in dim.schema.fields]
@@ -121,9 +110,6 @@ def enrich_stream(fact: DataFrame, dim: DataFrame, key: str,
 
     def process(key_tuple: Any, pdfs: Iterator[pd.DataFrame],
                 state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
         now_ms = int(time.time() * 1000)
         if state.exists:
             dim_json, buffer_json, last_touch_ms = state.get
@@ -164,8 +150,6 @@ def enrich_stream(fact: DataFrame, dim: DataFrame, key: str,
 
         state.update((json.dumps(dim_row) if dim_row else None,
                       json.dumps(buffer), now_ms))
-        if ttl is not None and ttl_mode == "evict":
-            state.setTimeoutDuration(ttl)
         if out_rows:
             out = pd.DataFrame(out_rows, columns=out_cols)
             # JSON round-trips timestamps as ISO strings; restore them
@@ -175,9 +159,7 @@ def enrich_stream(fact: DataFrame, dim: DataFrame, key: str,
             yield out
 
     grouped = unioned.groupBy("__key")
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout
-               if state_ttl_ms is not None and ttl_mode == "evict"
-               else GroupStateTimeout.NoTimeout)
     result = grouped.applyInPandasWithState(
-        process, out_schema, _STATE_SCHEMA, "append", timeout)
+        process, out_schema, _STATE_SCHEMA, "append",
+        GroupStateTimeout.NoTimeout)
     return result

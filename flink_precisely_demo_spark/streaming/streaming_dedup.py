@@ -17,60 +17,45 @@ store:
   (near-dup of an earlier-batch survivor) or a smaller-id doc in the
   same batch (the batch operators' keep=min rule, applied per
   bucket);
-- survivors' rows append to the output store and their band digests
-  to the bucket store, both as batch-versioned directories rewritten
-  idempotently on replay — the exactly-once foreachBatch recipe
-  shared with cdc_upsert.py.
+- survivors' rows land in ``<out_path>/batch=<id>/`` (overwrite, so a
+  retry rewrites the same rows) and their band digests are published
+  as one tagged delta of the bucket store, an LSM generation store
+  (operators/lsm.py owns publish, retry, binding and compaction).
 
 Scale: the per-batch work is the batch kernel's (map-side signatures,
 band-key equi-joins — no pairwise comparison anywhere); the bucket
-store grows with the number of SURVIVORS × bands, is equi-joined on
-(band_id, band_key) each batch, and on a real deployment is a table
-partitioned by band_id with old versions vacuumed (vacuum_buckets
-below). Bounding state by TIME instead (forget buckets older than a
-watermark, trading global dedup for windowed dedup) is the same
-vacuum call driven by a retention policy.
+store grows with the number of SURVIVORS × bands and is equi-joined
+on (band_id, band_key) each batch. Every ``compact_every``
+generations the deltas fold into one distinct base, so the per-batch
+read is the base plus at most ``compact_every`` deltas no matter how
+long the stream has run.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _minhash_banded
+from ..operators.lsm import (
+    all_generations,
+    compact_generations,
+    ensure_base,
+    index_sink,
+    new_delta,
+)
 from .pipeline import drain
-
-_BUCKET_RE = re.compile(r"^buckets_v(\d+)$")
-_OUT_RE = re.compile(r"^batch_v(\d+)$")
-
-
-def _versions(path: str, pat: re.Pattern) -> list[int]:
-    try:
-        names = os.listdir(path)
-    except FileNotFoundError:
-        return []
-    return sorted(int(m.group(1)) for n in names if (m := pat.match(n)))
-
 
 BUCKET_SCHEMA = "band_id int, band_key string"
 
 
-def _snapshot_marker(store_path: str, v: int) -> str:
-    return os.path.join(store_path, f"buckets_v{v}", "_SNAPSHOT")
-
-
-def _known_paths(store_path: str, batch_id: int) -> list[str]:
-    """Bucket-version paths carrying all state before ``batch_id``:
-    the newest snapshot below it plus the deltas after that snapshot
-    — bounded read width regardless of stream age."""
-    prior = [v for v in _versions(store_path, _BUCKET_RE) if v < batch_id]
-    snaps = [v for v in prior if os.path.exists(_snapshot_marker(store_path, v))]
-    base = max(snaps) if snaps else None
-    take = [v for v in prior if base is None or v >= base]
-    return [os.path.join(store_path, f"buckets_v{v}") for v in take]
+def compact_buckets(spark: SparkSession, store_path: str) -> int:
+    """Fold every generation into one distinct base; returns the
+    number of generations folded."""
+    return compact_generations(spark, store_path, "buckets",
+                               DataFrame.distinct)
 
 
 def near_dup_dedup_sink(store_path: str, out_path: str,
@@ -78,43 +63,22 @@ def near_dup_dedup_sink(store_path: str, out_path: str,
                         num_hashes: int = 16, bands: int = 4,
                         shingle_n: int = 3, compact_every: int = 16):
     """Returns the ``foreachBatch`` function. ``store_path`` holds the
-    versioned LSH bucket state, ``out_path`` the surviving rows.
+    LSH bucket store, ``out_path`` the surviving rows; the store
+    folds every ``compact_every`` generations."""
 
-    Every ``compact_every`` batches the bucket write is a SNAPSHOT
-    (all known digests folded into one version, marked with a
-    ``_SNAPSHOT`` file) instead of a delta, so the per-batch read is
-    one snapshot + at most ``compact_every`` deltas no matter how
-    long the stream has run. Old pre-snapshot versions stay on disk
-    for replay until ``vacuum_buckets`` removes them — the same
-    write-versioned/compact/vacuum lifecycle a lakehouse table uses."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # same checkpoint/store-mismatch guard as cdc_upsert_sink:
-        # a fresh checkpoint restarting batch ids at 0 against a
-        # populated store would silently ignore all existing state
-        newer = [v for v in _versions(store_path, _BUCKET_RE) if v > batch_id]
-        if newer:
-            raise RuntimeError(
-                f"near_dup_dedup_sink: store {store_path!r} already holds "
-                f"buckets_v{max(newer)} but this query is writing batch "
-                f"{batch_id} — checkpoint does not belong to this store.")
-
+    def apply(batch_df: DataFrame, batch_id: int, tag: str) -> None:
         banded = _minhash_banded(batch_df.select(id_col, text_col),
                                  text_col, id_col, num_hashes, bands,
                                  shingle_n).persist()
+        surv_buckets = None
         try:
-            known_dirs = _known_paths(store_path, batch_id)
-            known = None
-            if known_dirs:
-                known = spark.read.schema(BUCKET_SCHEMA).parquet(*known_dirs)
-            if known is not None:
-                cross_dup = (banded
-                             .join(known, ["band_id", "band_key"],
-                                   "leftsemi")
-                             .select(id_col).distinct())
-            else:
-                cross_dup = None
+            ensure_base(store_path, "buckets",
+                        banded.select("band_id", "band_key"))
+            known = all_generations(batch_df.sparkSession, store_path,
+                                    "buckets", BUCKET_SCHEMA)
+            cross_dup = (banded.join(known, ["band_id", "band_key"],
+                                     "leftsemi")
+                         .select(id_col))
 
             # in-batch rule: suppressed if a smaller id shares a
             # bucket. Mins are computed over the FULL batch — including
@@ -126,10 +90,12 @@ def near_dup_dedup_sink(store_path: str, out_path: str,
                          .agg(F.min(id_col).alias("__keep"))
             in_dup = (banded.join(mins, ["band_id", "band_key"])
                             .filter(F.col(id_col) > F.col("__keep"))
-                            .select(id_col).distinct())
-            suppressed = (in_dup if cross_dup is None
-                          else in_dup.unionByName(cross_dup).distinct())
-            surv_buckets = banded.join(suppressed, id_col, "left_anti")
+                            .select(id_col))
+            suppressed = in_dup.unionByName(cross_dup).distinct()
+            # persisted: the survivors write computes it, the delta
+            # publish reuses it instead of re-running the suppression
+            surv_buckets = banded.join(suppressed, id_col,
+                                       "left_anti").persist()
 
             # null-text rows have no signature (the kernels drop them
             # by null propagation): they can't be near-dups of
@@ -139,20 +105,16 @@ def near_dup_dedup_sink(store_path: str, out_path: str,
                 id_col, "leftsemi").unionByName(
                 batch_df.filter(F.col(text_col).isNull()))
             survivors.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch_v{batch_id}"))
-            new_buckets = surv_buckets.select("band_id", "band_key")
-            snapshot = (compact_every and batch_id > 0
-                        and batch_id % compact_every == 0)
-            if snapshot and known is not None:
-                new_buckets = known.unionByName(new_buckets)
-            bucket_dir = os.path.join(store_path, f"buckets_v{batch_id}")
-            new_buckets.write.mode("overwrite").parquet(bucket_dir)
-            if snapshot:
-                with open(os.path.join(bucket_dir, "_SNAPSHOT"), "w") as f:
-                    f.write("compacted through all prior versions\n")
+                os.path.join(out_path, f"batch={batch_id}"))
+            with new_delta(store_path, tag) as (stage, _):
+                surv_buckets.select("band_id", "band_key") \
+                    .write.parquet(f"{stage}/buckets")
         finally:
             banded.unpersist()
-    return apply_batch
+            if surv_buckets is not None:
+                surv_buckets.unpersist()
+
+    return index_sink(store_path, apply, compact_buckets, compact_every)
 
 
 def run_near_dup_dedup(docs: DataFrame, store_path: str, out_path: str,
@@ -164,29 +126,6 @@ def run_near_dup_dedup(docs: DataFrame, store_path: str, out_path: str,
 
 
 def dedup_survivors(spark: SparkSession, out_path: str) -> DataFrame:
-    """All surviving rows across batches."""
-    versions = _versions(out_path, _OUT_RE)
-    if not versions:
-        raise FileNotFoundError(f"no dedup output under {out_path}")
-    return spark.read.parquet(*[
-        os.path.join(out_path, f"batch_v{v}") for v in versions])
-
-
-def vacuum_buckets(store_path: str, before_version: int) -> list[int]:
-    """Drop bucket versions < ``before_version``. Two uses:
-
-    - post-compaction cleanup: pass a SNAPSHOT version (once the
-      checkpoint has committed past it) — reads lose nothing, the
-      snapshot carries all prior state;
-    - retention/TTL policy: pass any version — dropped deltas turn
-      global near-dup dedup into windowed near-dup dedup (state
-      bounded, older documents can re-enter), the same trade
-      dropDuplicatesWithinWatermark makes for exact dedup."""
-    import shutil
-
-    doomed = [v for v in _versions(store_path, _BUCKET_RE)
-              if v < before_version]
-    for v in doomed:
-        shutil.rmtree(os.path.join(store_path, f"buckets_v{v}"),
-                      ignore_errors=True)
-    return doomed
+    """All surviving rows across batches (plus the ``batch``
+    partition column)."""
+    return spark.read.parquet(out_path)

@@ -1,7 +1,7 @@
 """Mechanical longevity gate for every custom stateful streaming
 operator: N-trigger replays asserting BOUNDED state and FLAT
 per-trigger cost, so a regression in watermark eviction / buffer
-shedding / snapshot compaction fails a check instead of hiding until
+shedding / store compaction fails a check instead of hiding until
 someone re-runs ad-hoc evidence (r8 judge ask).
 
 Checks (each returns a stats dict + violation list):
@@ -14,7 +14,7 @@ Checks (each returns a stats dict + violation list):
   state keys stay == n_users, state BYTES stay flat (the buffer is
   the only growing part), and trigger cost is flat.
 - ``dedup``: re-keyed document batches through the near-dup sink —
-  snapshot compaction must bound the bucket-store read width, so
+  scheduled compaction must bound the bucket-store read width, so
   per-batch cost flattens rather than growing with stream age.
 
 Flatness gate: p50 of the second half <= FLAT_FACTOR x p50 of the

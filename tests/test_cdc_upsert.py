@@ -1,18 +1,26 @@
 """Streaming CDC upsert sink: incremental foreachBatch materialization
 must converge to exactly the batch snapshot, survive out-of-order
-history across batches (tombstones), and replay idempotently."""
+history across batches (tombstones, also through compaction), and
+ignore a dead writer's unpublished stage. The retry and checkpoint
+binding rules are the shared sink contract
+(tests/test_lsm.py::test_index_sink_contract)."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from flink_precisely_demo_spark.operators.cdc_apply import apply_cdc_snapshot
+from flink_precisely_demo_spark.operators.cdc_apply import (
+    apply_cdc_snapshot,
+    flatten_envelope,
+)
+from flink_precisely_demo_spark.operators.lsm import delta_count, index_ok
 from flink_precisely_demo_spark.plans.cdc_queries import _envelope_rows
 from flink_precisely_demo_spark.sources.cdc_json import decode_envelope
 from flink_precisely_demo_spark.sources.parquet import load_table
 from flink_precisely_demo_spark.streaming.cdc_upsert import (
-    _versions,
     cdc_current_state,
     cdc_upsert_sink,
     run_cdc_upsert,
@@ -55,8 +63,8 @@ def test_streaming_upsert_converges_to_batch_snapshot(spark, tmp_path):
             spark.readStream.format("text").load(env_dir), PAYLOAD)
         run_cdc_upsert(stream, store, "SalesOrderId", checkpoint=ckpt)
 
-    # each drain ran at least one micro-batch -> multiple store versions
-    assert len(_versions(store)) >= 2
+    # each drain ran at least one micro-batch -> multiple generations
+    assert delta_count(store) >= 2
 
     all_changes = waves[0]
     for w in waves[1:]:
@@ -79,48 +87,52 @@ def test_upsert_replay_is_idempotent(spark, tmp_path):
     sink(waves[0], 0)
     sink(waves[1], 1)
     before = _state_rows(spark, store)
-    # crash-replay of batch 1: same input, same batch id -> same state
-    sink(waves[1], 1)
-    assert _state_rows(spark, store) == before
-    # and a duplicate DELIVERY of old data in a NEW batch is also a
-    # no-op on the state (latest-wins merge absorbs it)
+    # a duplicate DELIVERY of old data in a NEW batch is a no-op on
+    # the state (latest-wins merge absorbs it)
     sink(waves[0], 2)
     assert _state_rows(spark, store) == before
 
 
-def test_vacuum_keeps_replay_safe(spark, tmp_path):
-    from flink_precisely_demo_spark.streaming.cdc_upsert import vacuum_store
-
+def test_compaction_keeps_tombstones_and_replay_safe(spark, tmp_path):
+    """Compaction folds the generations into one latest-per-key base
+    that keeps the delete tombstones: the late old image of a deleted
+    key, arriving after the fold, still cannot resurrect it, and a
+    retry of the newest batch still no-ops."""
     waves = _change_waves(spark)
     store = str(tmp_path / "store")
-    sink = cdc_upsert_sink(store, "SalesOrderId")
-    for i, w in enumerate(waves):
-        sink(w, i)
-    assert _versions(store) == [0, 1, 2, 3]
+    sink = cdc_upsert_sink(store, "SalesOrderId", compact_every=3)
+    sink(waves[0], 0)
+    sink(waves[1], 1)
+    assert delta_count(store) == 2
+    sink(waves[2], 2)                    # third generation: folds
+    assert delta_count(store) == 0
+    base = spark.read.parquet(f"{store}/state")
+    assert base.filter(F.col("__manip") == "D").count() == waves[2].count()
+    assert base.count() == base.select("__pk").distinct().count()
+    sink(waves[3], 3)                    # late images of deleted keys
     state = _state_rows(spark, store)
-
-    removed = vacuum_store(store, keep=2)
-    assert removed == [0, 1]
-    assert _versions(store) == [2, 3]
-    # current state unchanged, and replaying the newest batch still works
-    assert _state_rows(spark, store) == state
-    sink(waves[3], 3)
+    assert state and all(k % 10 != 0 for (k, _, _) in state)
+    sink(waves[3], 3)                    # retry of the newest batch
+    assert delta_count(store) == 1
     assert _state_rows(spark, store) == state
 
 
-def test_fresh_checkpoint_against_live_store_fails_fast(spark, tmp_path):
-    """A deleted/replaced checkpoint restarts batch ids at 0; merging
-    those into a store with newer live versions would silently ignore
-    all prior state while readers keep serving the stale max version.
-    The sink must refuse instead of diverging."""
-    import pytest
-
+def test_dead_writer_stage_is_invisible(spark, tmp_path):
+    """A writer killed mid-publish leaves an unmarked
+    ``.stage-<dead pid>-…`` dir holding real part files; readers see
+    only published generations, and the next trigger reaps it."""
     waves = _change_waves(spark)
     store = str(tmp_path / "store")
     sink = cdc_upsert_sink(store, "SalesOrderId")
     sink(waves[0], 0)
-    sink(waves[1], 5)
-    with pytest.raises(RuntimeError, match="checkpoint"):
-        sink(waves[2], 1)  # restarted ids: 1 < live version 5
-    # same-version retry is still allowed (idempotent overwrite)
-    sink(waves[1], 5)
+    sink(waves[1], 1)
+    state = _state_rows(spark, store)
+    dead = f"{store}/deltas/.stage-999999999-deadbeef"
+    # the killed writer had staged batch 2's deletes
+    flatten_envelope(waves[2], "SalesOrderId").write.parquet(
+        f"{dead}/state")
+    assert any(n.startswith("part-") for n in os.listdir(f"{dead}/state"))
+    assert index_ok(store) and delta_count(store) == 2
+    assert _state_rows(spark, store) == state
+    sink(waves[2], 2)
+    assert not os.path.exists(dead)

@@ -1,10 +1,14 @@
 """The LSM generation store (operators/lsm.py): the shared
-foreachBatch sink contract, checked once over all four maintained
-indexes, and the staging context managers' failure behaviour."""
+foreachBatch sink contract, checked once over all six sinks (the four
+maintained indexes, the CDC upsert store and the near-dup bucket
+store), the staging context managers' failure behaviour, and a
+source guard that keeps the protocol inside lsm.py."""
 
 from __future__ import annotations
 
 import os
+import re
+from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
@@ -138,16 +142,75 @@ def _dedup_case(spark, tmp_path):
         final=final)
 
 
+def _cdc_case(spark, tmp_path):
+    from flink_precisely_demo_spark.operators.cdc_apply import (
+        apply_cdc_snapshot)
+    from flink_precisely_demo_spark.plans.cdc_queries import (
+        _envelope_rows)
+    from flink_precisely_demo_spark.streaming.cdc_upsert import (
+        cdc_current_state, cdc_upsert_sink, compact_store)
+
+    orders = load_table(spark, SF, "orders").filter(
+        F.col("o_orderkey") < 40)
+    path = str(tmp_path / "store")
+    first = _envelope_rows(orders, "I", 0, 0.0)
+    second = _envelope_rows(orders.filter(F.col("o_orderkey") % 2 == 0),
+                            "D", 1, 0.0)
+
+    def state():
+        return sorted(map(tuple, cdc_current_state(spark, path).collect()))
+
+    def final():
+        want = apply_cdc_snapshot(first.unionByName(second),
+                                  "SalesOrderId")
+        assert state() == sorted(map(tuple, want.collect()))
+        assert all(k % 2 for k, _, _ in state())
+
+    return SimpleNamespace(
+        path=path, compact=compact_store,
+        sink=lambda **kw: cdc_upsert_sink(path, "SalesOrderId", **kw),
+        first=first, second=second, observe=state, final=final)
+
+
+def _near_dup_case(spark, tmp_path):
+    from flink_precisely_demo_spark.streaming.streaming_dedup import (
+        compact_buckets, dedup_survivors, near_dup_dedup_sink)
+
+    path, out = str(tmp_path / "buckets"), str(tmp_path / "out")
+    t = "retry wave payload about copper kites " * 4
+    first = spark.createDataFrame([(1, t), (2, t + "again")],
+                                  "doc_id long, text string")
+
+    def final():
+        # doc 3, a near-dup of batch 1's survivor, was suppressed
+        got = {(r["doc_id"], r["batch"])
+               for r in dedup_survivors(spark, out).collect()}
+        assert got == {(1, 1)}
+
+    return SimpleNamespace(
+        path=path, compact=compact_buckets,
+        sink=lambda **kw: near_dup_dedup_sink(path, out, **kw),
+        first=first,
+        second=spark.createDataFrame([(3, t + "kites")],
+                                     "doc_id long, text string"),
+        observe=lambda: sorted(map(tuple, spark.read.parquet(
+            os.path.join(out, "batch=1")).collect())),
+        final=final)
+
+
 @pytest.mark.parametrize("make_case", [_ann_case, _text_case,
-                                       _substring_case, _dedup_case],
-                         ids=["ann", "text", "substring", "dedup"])
+                                       _substring_case, _dedup_case,
+                                       _cdc_case, _near_dup_case],
+                         ids=["ann", "text", "substring", "dedup", "cdc",
+                              "near_dup"])
 def test_index_sink_contract(spark, tmp_path, make_case):
-    """One foreachBatch contract for every maintained index: an
-    applied batch publishes one tagged delta and its retry no-ops;
-    a checkpoint restarting behind the absorbed batches fails fast;
-    an out-of-band compaction keeps the applied record, so a late
-    retry still no-ops; a scheduled compaction folds the streamed
-    generations and their tags."""
+    """One foreachBatch contract for every sink: an applied batch
+    publishes one tagged delta and its retry no-ops; a checkpoint
+    restarting behind the absorbed batches fails fast; an out-of-band
+    compaction keeps the applied record, so a late retry still
+    no-ops; a scheduled compaction folds the streamed generations and
+    their tags; once a later batch is absorbed, an already-applied
+    batch id is a replaced checkpoint too, not a retry."""
     case = make_case(spark, tmp_path)
     path = case.path
     sink = case.sink()
@@ -169,6 +232,8 @@ def test_index_sink_contract(spark, tmp_path, make_case):
     case.sink(compact_every=1)(case.second, 2)
     assert _delta_dirs(path) == []       # compact_every fired
     assert applied_tags(path) >= {"b1", "b2"}
+    with pytest.raises(RuntimeError, match="checkpoint does not belong"):
+        sink(case.first, 1)              # stale id of a replaced checkpoint
     case.final()
 
 
@@ -203,3 +268,22 @@ def test_compaction_without_deltas_is_a_no_op(tmp_path):
         assert stage is None
     assert index_ok(path)
     assert [n for n in os.listdir(tmp_path) if n != "idx"] == []
+
+
+def test_protocol_stays_in_lsm():
+    """Only operators/lsm.py names the markers, the tag manifest and
+    the binding error, and no sink module scans a store directory
+    itself."""
+    pkg = Path(__file__).resolve().parents[1] / "flink_precisely_demo_spark"
+    words = ("_INDEX_OK", "_DELTA_OK", '"_TAG"', ".applied.json",
+             "checkpoint does not belong")
+    sinks = {"cdc_upsert.py", "streaming_dedup.py", "ann_upsert.py",
+             "corpus_pipeline.py"}
+    for f in sorted(pkg.rglob("*.py")):
+        rel = f.relative_to(pkg).as_posix()
+        src = f.read_text()
+        if rel != "operators/lsm.py":
+            assert not [w for w in words if w in src], rel
+        if rel.startswith("streaming/") and (
+                f.name in sinks or f.name.endswith("_ingest.py")):
+            assert not re.search(r"\blistdir\b", src), rel

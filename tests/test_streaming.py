@@ -457,7 +457,6 @@ def test_streaming_near_dup_dedup(spark, tmp_path):
     from flink_precisely_demo_spark.streaming.streaming_dedup import (
         dedup_survivors,
         run_near_dup_dedup,
-        vacuum_buckets,
     )
 
     base = ("the quick brown fox jumps over the lazy dog while seventeen "
@@ -498,7 +497,7 @@ def test_streaming_near_dup_dedup(spark, tmp_path):
                  dedup_survivors(spark, out).collect())
     assert got == [1, 3, 5, 6]
 
-    # replaying the last batch rewrites the same versions (idempotent)
+    # replaying the last batch is a no-op (idempotent)
     from flink_precisely_demo_spark.streaming.streaming_dedup import (
         near_dup_dedup_sink,
     )
@@ -509,21 +508,16 @@ def test_streaming_near_dup_dedup(spark, tmp_path):
                  dedup_survivors(spark, out).collect())
     assert got == [1, 3, 5, 6]
 
-    # vacuum: dropping old bucket versions lets an old doc re-enter
-    assert vacuum_buckets(store, before_version=1) == [0]
-
 
 def test_streaming_near_dup_snapshot_compaction(spark, tmp_path):
-    """Every compact_every batches the bucket write folds all known
-    digests into a marked snapshot; the per-batch read is then one
-    snapshot + recent deltas, and pre-snapshot versions can vacuum
-    with no loss of dedup state."""
-    import os
-
+    """Every compact_every generations the bucket store folds into one
+    distinct base (a snapshot of all known digests); the per-batch
+    read is then the base plus recent deltas, and a near-dup of a
+    survivor folded before the compaction is still suppressed."""
+    from flink_precisely_demo_spark.operators.lsm import delta_count
     from flink_precisely_demo_spark.streaming.streaming_dedup import (
-        _known_paths,
+        dedup_survivors,
         near_dup_dedup_sink,
-        vacuum_buckets,
     )
 
     texts = {
@@ -541,22 +535,17 @@ def test_streaming_near_dup_snapshot_compaction(spark, tmp_path):
         sink(spark.createDataFrame(rows, "doc_id long, text string"), bid)
 
     batch(0, [(1, texts[1])])
-    batch(1, [(2, texts[2])])
-    batch(2, [(3, texts[3])])          # snapshot batch (2 % 2 == 0)
-    assert os.path.exists(os.path.join(store, "buckets_v2", "_SNAPSHOT"))
-    # read width for the next batch: just the snapshot
-    assert _known_paths(store, 3) == [os.path.join(store, "buckets_v2")]
-
-    # pre-snapshot versions vacuum losslessly: a near-dup of doc 1
-    # (seen before the snapshot) is still suppressed afterwards
-    assert sorted(vacuum_buckets(store, before_version=2)) == [0, 1]
+    assert delta_count(store) == 1
+    batch(1, [(2, texts[2])])          # second generation: folds
+    # read width for the next batch: just the base, two survivors'
+    # four digests each
+    assert delta_count(store) == 0
+    assert spark.read.parquet(f"{store}/buckets").count() == 2 * 4
+    batch(2, [(3, texts[3])])
     batch(3, [(4, texts[1].replace("kappa", "sigma")),   # near-dup of 1
               (5, "totally novel words about submarine cables and "
                   "fiber optic repeaters across the abyssal plain "
                   "with signal regeneration every eighty kilometers")])
-    from flink_precisely_demo_spark.streaming.streaming_dedup import (
-        dedup_survivors,
-    )
     got = sorted(r["doc_id"] for r in dedup_survivors(spark, out).collect())
     assert got == [1, 2, 3, 5]
 
@@ -564,20 +553,19 @@ def test_streaming_near_dup_snapshot_compaction(spark, tmp_path):
 @pytest.mark.longevity
 def test_streaming_near_dup_longevity(spark, tmp_path):
     """Bucket-store invariants over a LONG run (50 micro-batches):
-    state size tracks survivors x bands exactly, snapshot compaction
+    state size tracks survivors x bands exactly, scheduled compaction
     keeps the per-batch read width bounded by compact_every + 1
-    regardless of stream age, post-snapshot vacuum preserves
-    within-retention dedup, and a full TTL vacuum demonstrates the
-    windowed-dedup trade (old docs re-enter). Batch i carries one
-    novel doc and one copy of the batch-0 doc, so the expected
-    survivor set and store size are exact at every step."""
-    import os
-
+    regardless of stream age, and a near-dup of a survivor folded
+    long ago is still suppressed. Batch i carries one novel doc and
+    one copy of the batch-0 doc, so the expected survivor set and
+    store size are exact at every step."""
+    from flink_precisely_demo_spark.operators.lsm import (
+        all_generations,
+        delta_count,
+    )
     from flink_precisely_demo_spark.streaming.streaming_dedup import (
-        _known_paths,
         dedup_survivors,
         near_dup_dedup_sink,
-        vacuum_buckets,
     )
 
     base = ("shared boilerplate paragraph that reappears forever across "
@@ -588,9 +576,9 @@ def test_streaming_near_dup_longevity(spark, tmp_path):
     def novel(i):
         return " ".join(f"u{i}w{j}" for j in range(8))
 
-    def store_rows(next_batch):
-        paths = _known_paths(store, next_batch)
-        return spark.read.parquet(*paths).count(), len(paths)
+    def store_rows():
+        return (all_generations(spark, store, "buckets").count(),
+                1 + delta_count(store))
 
     BANDS = 4
     sink(spark.createDataFrame([(0, base)], "doc_id long, text string"), 0)
@@ -600,27 +588,17 @@ def test_streaming_near_dup_longevity(spark, tmp_path):
             "doc_id long, text string"), i)
         if i in (10, 30, 49):
             # exactly one survivor per batch so far, 4 digests each
-            n, width = store_rows(i + 1)
+            n, width = store_rows()
             assert n == (i + 1) * BANDS, f"batch {i}: store holds {n}"
             assert width <= 16 + 1, f"read width {width} unbounded"
     assert dedup_survivors(spark, out).count() == 50
 
-    # snapshots landed at 16/32/48; pre-snapshot vacuum loses nothing
-    assert os.path.exists(os.path.join(store, "buckets_v48", "_SNAPSHOT"))
-    doomed = vacuum_buckets(store, before_version=48)
-    assert sorted(doomed) == list(range(48))
-    n, width = store_rows(50)
-    assert n == 50 * BANDS and width == 2     # snapshot 48 + delta 49
+    # folds ran after batches 15/31/47: base + deltas 48, 49
+    n, width = store_rows()
+    assert n == 50 * BANDS and width == 3
     sink(spark.createDataFrame([(900, base)], "doc_id long, text string"),
          50)
     assert dedup_survivors(spark, out).count() == 50   # still suppressed
-
-    # TTL vacuum of ALL state: dedup becomes windowed, base re-enters
-    vacuum_buckets(store, before_version=51)
-    sink(spark.createDataFrame([(901, base)], "doc_id long, text string"),
-         51)
-    got = {r["doc_id"] for r in dedup_survivors(spark, out).collect()}
-    assert 901 in got and 900 not in got
 
 
 def test_streaming_near_dup_chained_suppression(spark, tmp_path):
