@@ -225,8 +225,7 @@ def _cdc_history_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def _streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL SCD2 maintainer (streaming/scd2.py, the
-    applyInPandasWithState operator that holds one open version per
-    key) driven end to end through Structured Streaming and
+    keyed-state operator that holds one open version per key) driven end to end through Structured Streaming and
     ORACLE-CHECKED — the replay-oracle pattern proved on
     streaming_enrichment_replay, applied to the last stateful
     streaming operator whose semantics rested on pytest alone. The
@@ -253,13 +252,7 @@ def _streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the state key folds to a bounded modulus so several orders'
     # version chains INTERLEAVE on one key (richer transitions than
     # one-chain-per-key: a key's open version is overwritten and
-    # closed by changes carrying different trans_ids) and so the
-    # replay's per-key pandas-group count stays bounded at every SF —
-    # applyInPandasWithState pays a Python call per key per trigger,
-    # an honest cost of the Python-state port that a replay harness
-    # bounds by key design (production sizes state partitions and
-    # key domains to its own volume; the operator itself is
-    # cardinality-agnostic)
+    # closed by changes carrying different trans_ids)
     base = orders.select(
         (F.col("o_orderkey") % 9973).alias("key"),
         F.col("o_orderkey").alias("trans_id"),

@@ -381,8 +381,8 @@ def _skew_hotcold_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("streaming_funnel_replay", oracle=_FUNNEL_ORACLE)
 def _streaming_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STREAMING funnel (streaming/funnel.py,
-    applyInPandasWithState) driven end-to-end through Structured
+    """The STREAMING funnel (streaming/funnel.py, a
+    keyed-state step) driven end-to-end through Structured
     Streaming and batch-compared: the events table becomes a finite
     3-file feed split by event_id (mtime-ordered, one file per
     trigger — each user's events arrive scattered across triggers in
@@ -446,7 +446,7 @@ _SESSION_REPLAY_ORACLE = """
 @query("streaming_session_replay", oracle=_SESSION_REPLAY_ORACLE)
 def _streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING sessionizer (streaming/sessionize.py,
-    applyInPandasWithState) driven end-to-end through Structured
+    a keyed-state step) driven end-to-end through Structured
     Streaming and batch-compared: the events table becomes a finite
     3-file feed split by event_id (one file per trigger, so each
     user's events arrive scattered across triggers in arbitrary
@@ -723,7 +723,7 @@ def _streaming_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame
 def _streaming_enrichment_replay(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """The STATEFUL streaming enrichment join (streaming/
-    stateful_join.py — the applyInPandasWithState port of
+    stateful_join.py — the keyed-state port of
     EnrichmentJoin.java's KeyedCoProcessFunction) driven end to end
     through Structured Streaming and ORACLE-CHECKED, not just
     pytest-replayed: orders play the fact stream, a filtered slice of

@@ -24,31 +24,17 @@ Bounded state, watermark-driven:
   FINAL: state collapses to a tombstone so a straggler can never
   reopen the user with a bogus later-view chain.
 
-Scale shape: one keyed shuffle into the state store per trigger
-(RocksDB-backed on a cluster), state per user = 2 scalars + two
-window-bounded lists + the tombstone bit.
+State per user (on the keyed-state kernel, streaming/keyed_state.py)
+is 2 scalars + two window-bounded lists + the tombstone bit.
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_STATE_SCHEMA = T.StructType([
-    # all instants are MICROSECONDS since epoch — the native
-    # granularity of the events feed, so the snapshot timestamps are
-    # bit-equal to the batch query's
-    T.StructField("min_view_ms", T.LongType()),
-    T.StructField("clicks_json", T.StringType()),
-    T.StructField("purchases_json", T.StringType()),
-    T.StructField("n_seen", T.LongType()),
-    T.StructField("done", T.BooleanType()),
-])
+from .keyed_state import keyed_state_stream
 
 FUNNEL_OUTPUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
@@ -71,80 +57,67 @@ def funnel_stream(events: DataFrame,
     snapshot stream (update mode; the row with the highest
     ``n_seen`` per user is the latest). Attach a watermark on ``ts``
     upstream to activate state eviction and finalization."""
+    window_us = window_ms * 1000
+    return keyed_state_stream(
+        events, "user_id", ["ts", "event_type"],
+        lambda uid, rows, st, wm_ms: funnel_step(uid, rows, st, wm_ms,
+                                                 window_us),
+        FUNNEL_OUTPUT_SCHEMA, "update", event_time=True)
 
-    def fn(key, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if state.exists:
-            min_view_ms, clicks_json, purchases_json, n_seen, done = \
-                state.get
-            clicks = json.loads(clicks_json)
-            purchases = json.loads(purchases_json)
-        else:
-            min_view_ms, clicks, purchases, n_seen, done = \
-                None, [], [], 0, False
-        if done:
-            # finalized tombstone: stragglers cannot reopen the user
-            yield pd.DataFrame([], columns=[f.name for f in
-                                            FUNNEL_OUTPUT_SCHEMA])
-            return
 
-        us = (rows["ts"].astype("int64") // 1_000)
-        for t, ev in zip(us, rows["event_type"]):
-            t = int(t)
-            if ev == "view":
-                if min_view_ms is None or t < min_view_ms:
-                    min_view_ms = t
-            elif ev == "click":
-                clicks.append(t)
-            elif ev == "purchase":
-                purchases.append(t)
-        n_seen += len(rows)
+def funnel_step(uid: int, rows: list[tuple], key_state: list | None,
+                wm_ms: int, window_us: int) -> tuple[list, list, None]:
+    """One user's keyed-state step: ``key_state`` is ``[min_view_us,
+    clicks_us, purchases_us, n_seen, done]``, all instants MICROSECONDS
+    since epoch (the events feed's native granularity, so the snapshot
+    timestamps are bit-equal to the batch query's). Never times out."""
+    min_view, clicks, purchases, n_seen, done = \
+        key_state or (None, [], [], 0, False)
+    if done:
+        # finalized tombstone: stragglers cannot reopen the user
+        return key_state, [], None
 
-        # recompute the chain from the buffered timestamps (micros)
-        window_us = window_ms * 1000
-        t1 = min_view_ms
-        t2 = t3 = None
-        if t1 is not None:
-            end = t1 + window_us
-            in_win = [c for c in clicks if t1 <= c <= end]
-            t2 = min(in_win) if in_win else None
-            if t2 is not None:
-                in_win = [p for p in purchases if t2 <= p <= end]
-                t3 = min(in_win) if in_win else None
+    clicks, purchases = list(clicks), list(purchases)
+    for ts, ev in rows:
+        t = ts.value // 1_000
+        if ev == "view":
+            if min_view is None or t < min_view:
+                min_view = t
+        elif ev == "click":
+            clicks.append(t)
+        elif ev == "purchase":
+            purchases.append(t)
+    n_seen += len(rows)
 
-        wm = state.getCurrentWatermarkMs() * 1000   # ms -> us
-        if t1 is not None:
-            end = t1 + window_us
-            # above the window endpoint: can never qualify (the
-            # endpoint only moves down as earlier views arrive)
-            clicks = [c for c in clicks if c <= end]
-            purchases = [p for p in purchases if p <= end]
-            if wm >= t1:
-                # t1 is final: nothing below it can matter any more
-                clicks = [c for c in clicks if c >= t1]
-                purchases = [p for p in purchases if p >= t1]
-            final_at = t3 if t3 is not None else end
-            if wm >= final_at:
-                done = True
+    # recompute the chain from the buffered timestamps (micros)
+    t1 = min_view
+    t2 = t3 = None
+    if t1 is not None:
+        end = t1 + window_us
+        in_win = [c for c in clicks if t1 <= c <= end]
+        t2 = min(in_win) if in_win else None
+        if t2 is not None:
+            in_win = [p for p in purchases if t2 <= p <= end]
+            t3 = min(in_win) if in_win else None
 
-        if done:
-            state.update((min_view_ms, "[]", "[]", n_seen, True))
-        else:
-            state.update((min_view_ms, json.dumps(sorted(clicks)),
-                          json.dumps(sorted(purchases)), n_seen, False))
-        stage = 3 if t3 is not None else 2 if t2 is not None \
-            else 1 if t1 is not None else 0
-        yield pd.DataFrame([{
-            "user_id": int(key[0]),
-            "first_view": _ts(t1),
-            "first_click": _ts(t2),
-            "first_purchase": _ts(t3),
-            "funnel_stage": stage,
-            "n_seen": n_seen,
-        }])
+    wm = wm_ms * 1000
+    if t1 is not None:
+        end = t1 + window_us
+        # above the window endpoint: can never qualify (the
+        # endpoint only moves down as earlier views arrive)
+        clicks = [c for c in clicks if c <= end]
+        purchases = [p for p in purchases if p <= end]
+        if wm >= t1:
+            # t1 is final: nothing below it can matter any more
+            clicks = [c for c in clicks if c >= t1]
+            purchases = [p for p in purchases if p >= t1]
+        final_at = t3 if t3 is not None else end
+        done = wm >= final_at
 
-    return (events.groupBy("user_id")
-            .applyInPandasWithState(
-                fn, FUNNEL_OUTPUT_SCHEMA, _STATE_SCHEMA,
-                "update", GroupStateTimeout.NoTimeout))
+    key_state = ([min_view, [], [], n_seen, True] if done else
+                 [min_view, sorted(clicks), sorted(purchases), n_seen,
+                  False])
+    stage = 3 if t3 is not None else 2 if t2 is not None \
+        else 1 if t1 is not None else 0
+    return key_state, [(uid, _ts(t1), _ts(t2), _ts(t3), stage,
+                        n_seen)], None

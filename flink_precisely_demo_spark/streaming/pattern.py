@@ -28,31 +28,18 @@ regex-over-encoded-history query on any replay order (the
 `streaming_pattern_replay` oracle). Scale shape: one keyed shuffle
 per trigger; state per user = 3 ints + 1 char + the horizon buffer.
 
-Idle keys fold too: whenever a buffer is non-empty, an event-time
-timeout is armed at its earliest entry, so a user who stops sending
-events still has the finalized prefix folded and shed from state
-when the watermark passes — buffer retention never depends on the
-key receiving another row.
+Idle keys fold too: whenever a buffer is non-empty the step returns
+its earliest entry as an event-time timeout, so a user who stops
+sending events still has the finalized prefix folded and shed from
+state when the watermark passes.
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_STATE_SCHEMA = T.StructType([
-    T.StructField("funnel_stage", T.IntegerType()),   # 0..3 DFA
-    T.StructField("prev_char", T.StringType()),       # '' at start
-    T.StructField("error_burst", T.BooleanType()),
-    T.StructField("n_events", T.LongType()),
-    T.StructField("n_purchases", T.LongType()),
-    T.StructField("buffer_json", T.StringType()),     # [[us, id, c]..]
-])
+from .keyed_state import keyed_state_stream
 
 PATTERN_OUTPUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
@@ -79,79 +66,59 @@ def _advance(stage: int, prev: str, burst: bool,
 
 def pattern_stream(events: DataFrame) -> DataFrame:
     """``events``: streaming DataFrame with (user_id long,
-    event_type string, ts timestamp). Returns the per-user pattern
-    snapshot stream (update mode; highest ``n_seen`` per user is the
-    latest). Attach a watermark upstream: it both bounds the buffer
-    and drives the finalized-prefix fold."""
+    event_type string, ts timestamp) and optionally event_id. Returns
+    the per-user pattern snapshot stream (update mode; highest
+    ``n_seen`` per user is the latest). Attach a watermark upstream:
+    it both bounds the buffer and drives the finalized-prefix fold."""
+    cols = ["ts", "event_type"] + (["event_id"] if "event_id" in
+                                   events.columns else [])
+    return keyed_state_stream(events, "user_id", cols, pattern_step,
+                              PATTERN_OUTPUT_SCHEMA, "update",
+                              event_time=True)
 
-    return (events.groupBy("user_id")
-            .applyInPandasWithState(
-                pattern_step, PATTERN_OUTPUT_SCHEMA, _STATE_SCHEMA,
-                "update", GroupStateTimeout.EventTimeTimeout))
 
+def pattern_step(uid: int, rows: list[tuple] | None,
+                 key_state: list | None,
+                 wm_ms: int) -> tuple[list, list[tuple], int | None]:
+    """One user's keyed-state step: ``key_state`` is ``[funnel_stage
+    (0..3 DFA), prev_char ('' at start), error_burst, n_events,
+    n_purchases, buffer]`` with buffer entries ``[us, event_id, c]``;
+    ``rows`` are ``(ts, event_type[, event_id])``, None on a timeout."""
+    stage, prev, burst, n_events, n_purch, buf = \
+        key_state or (0, "", False, 0, 0, [])
+    buf = [tuple(b) for b in buf]
+    for ts, et, *eid in rows or ():
+        c = et[0]
+        # event_id may be absent in minimal feeds; the running count
+        # is a stable per-arrival id, so sort ties break
+        # deterministically for identical timestamps
+        buf.append((ts.value // 1_000, eid[0] if eid else n_events, c))
+        n_events += 1
+        if c == "p":
+            n_purch += 1
 
-def pattern_step(key, pdfs: Iterator[pd.DataFrame],
-                 state: GroupState) -> Iterator[pd.DataFrame]:
-    """One keyed state transition (module-level so the timeout path
-    is unit-testable against a faked GroupState handle)."""
-    if state.exists:
-        stage, prev, burst, n_events, n_purch, buffer_json = state.get
-        buf = [tuple(x) for x in json.loads(buffer_json)]
-    else:
-        stage, prev, burst, n_events, n_purch, buf = 0, "", False, 0, 0, []
-
-    if not state.hasTimedOut:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        us = rows["ts"].astype("int64") // 1_000
-        # event_id may be absent in minimal feeds; synthesize
-        # stable per-arrival ids from the running count so sort
-        # ties break deterministically for identical timestamps
-        ids = (rows["event_id"].astype("int64")
-               if "event_id" in rows else
-               pd.RangeIndex(n_events, n_events + len(rows)))
-        for t, eid, et in zip(us, ids, rows["event_type"]):
-            c = et[0]
-            buf.append((int(t), int(eid), c))
-            n_events += 1
-            if c == "p":
-                n_purch += 1
-
-    wm_ms = state.getCurrentWatermarkMs()
     wm_us = wm_ms * 1000
     buf.sort()
     final = [b for b in buf if b[0] < wm_us]
     buf = [b for b in buf if b[0] >= wm_us]
     stage, prev, burst = _advance(stage, prev, burst,
                                   (c for _, _, c in final))
-    state.update((stage, prev, burst, n_events, n_purch,
-                  json.dumps(buf)))
-    if buf:
-        # wake this key when the watermark passes its earliest
-        # buffered event, so an idle user's finalized prefix is
-        # folded and shed WITHOUT waiting for another row (r8
-        # advisory); once the buffer is empty committed state is
-        # the O(1) automaton and no timeout is needed
-        state.setTimeoutTimestamp(max(buf[0][0] // 1000 + 1,
-                                      wm_ms + 1))
-
-    if state.hasTimedOut:
+    key_state = [stage, prev, burst, n_events, n_purch, buf]
+    # wake this key when the watermark passes its earliest buffered
+    # event, so an idle user's finalized prefix is folded and shed
+    # WITHOUT waiting for another row (r8 advisory); once the buffer
+    # is empty the state is the O(1) automaton and needs no timeout
+    expiry_ms = buf[0][0] // 1000 + 1 if buf else None
+    if rows is None:
         # the fold changed only internal representation, not the
-        # reported verdicts (the report already simulates over
-        # the buffered suffix) — emit nothing so snapshot rows
-        # stay unique per n_seen
-        return
+        # reported verdicts (the report already simulates over the
+        # buffered suffix) — emit nothing so snapshot rows stay
+        # unique per n_seen
+        return key_state, [], expiry_ms
 
-    # report = committed automata advanced (non-destructively)
-    # over the still-buffered suffix
+    # report = committed automata advanced (non-destructively) over
+    # the still-buffered suffix
     r_stage, _, r_burst = _advance(stage, prev, burst,
                                    (c for _, _, c in buf))
-    n_seen = n_events
-    yield pd.DataFrame([{
-        "user_id": int(key[0]),
-        "n_events": n_events,
-        "has_funnel_path": r_stage == 3,
-        "has_error_burst": r_burst,
-        "n_purchases": n_purch,
-        "n_seen": n_seen,
-    }])
-
+    return key_state, [(uid, n_events, r_stage == 3, r_burst, n_purch,
+                        n_events)], expiry_ms

@@ -56,13 +56,14 @@ def staged_feed_rows(feed_dir: str) -> int:
 def adaptive_key_groups(spark, rows: int,
                         rows_per_group: int = 2000,
                         cap: int = 65536) -> int:
-    """State-GROUP count for a key-grouped applyInPandasWithState
-    operator (streaming/scd2.py). The operator pays a Python call +
-    Arrow round-trip per state group per trigger, so groups must be
-    few when volume is small; per-group batch memory is rows/groups,
-    so groups must grow with volume. Floor of 4x parallelism keeps
-    every state partition busy with several groups; ~2k rows/group
-    bounds a group's in-flight Python list at any scale."""
+    """Key-group count for the keyed-state kernel
+    (streaming/keyed_state.py). A keyed-state operator pays a Python
+    call + Arrow round-trip per key group per trigger, so groups must
+    be few when volume is small; per-group batch memory is
+    rows/groups, so groups must grow with volume. Floor of 4x
+    parallelism keeps every state partition busy with several groups
+    (``rows=0`` gives the floor, every operator's default); ~2k
+    rows/group bounds a group's in-flight Python list at any scale."""
     floor = 4 * spark.sparkContext.defaultParallelism
     return max(floor, min(cap, rows // max(1, rows_per_group)))
 

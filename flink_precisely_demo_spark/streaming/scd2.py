@@ -8,9 +8,9 @@ version (if any) is closed at the new change's timestamp and emitted
 safe — while the new open version replaces it in keyed state
 (I/U open a version; D closes without opening). Spark has no
 built-in operator for this (``dropDuplicates``/window aggs cannot
-hold "one open interval per key" across triggers), so it is an
-``applyInPandasWithState`` stateful op, the same shape as the
-enrichment join port (streaming/stateful_join.py).
+hold "one open interval per key" across triggers), so it is a
+keyed-state step, the same shape as the enrichment join port
+(streaming/stateful_join.py).
 
 Semantics vs the batch operator: replaying a finite feed and then
 flushing the still-open state yields EXACTLY the batch operator's
@@ -25,40 +25,20 @@ per-partition order). Within one micro-batch, rows are sorted by
 (ts, trans_id, row_seq) before applying, so intra-batch arrival
 order never matters.
 
-Scale notes: state is one open version per key — the minimum any
-SCD2 maintainer can hold — held per KEY GROUP (``key % key_groups``,
-the Flink key-group idea): ``applyInPandasWithState`` pays a Python
-call and an Arrow round-trip PER STATE GROUP per trigger, so state
-groups must not be as numerous as logical keys (measured: the sf0.1
-replay spent more in ~10k per-key calls than in the state logic;
-grouping to 128 state keys removed it). Each trigger shuffles only
-that batch's changes, once, on the key group. Within a micro-batch,
-changes are applied per logical key in (ts, trans_id, row_seq)
-order — the reference envelope's own total-order rule — so
-cross-batch and single-batch replays agree.
+State is one open version per key — the minimum any SCD2 maintainer
+can hold — on the keyed-state kernel (streaming/keyed_state.py),
+which sorts each key group's rows by (ts, trans_id, row_seq), the
+reference envelope's own total-order rule, so cross-batch and
+single-batch replays agree.
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-#: per-key-group state: the open versions of the group's keys,
-#: JSON {str(key): {"ts": iso, "value": float}, ...}
-_STATE_SCHEMA = T.StructType([T.StructField("open_json", T.StringType())])
-
-#: Default state-group count. Bounds the per-trigger Python-call
-#: count (the dominant per-trigger cost of this operator — guide
-#: §4.2) while keeping enough groups to spread across the state
-#: partitions; replay/production call sites size it to their own
-#: per-trigger volume via replay_stage.adaptive_key_groups.
-DEFAULT_KEY_GROUPS = 128
+from .keyed_state import keyed_state_stream
 
 SCD2_OUTPUT_SCHEMA = T.StructType([
     T.StructField("key", T.LongType()),
@@ -69,7 +49,7 @@ SCD2_OUTPUT_SCHEMA = T.StructType([
 
 
 def scd2_stream(changes: DataFrame,
-                key_groups: int = DEFAULT_KEY_GROUPS) -> DataFrame:
+                key_groups: int | None = None) -> DataFrame:
     """``changes``: streaming DataFrame with columns
     (key long, m string in I/U/D, ts timestamp, value double,
     trans_id long, row_seq int). Returns the stream of CLOSED
@@ -78,67 +58,24 @@ def scd2_stream(changes: DataFrame,
     :func:`open_versions_snapshot` semantics in tests, or run the
     batch operator for a point-in-time full table).
 
-    ``key_groups``: number of state groups (``key % key_groups``).
-    Output is identical for any value — the kernel applies each
-    LOGICAL key's changes in (ts, trans_id, row_seq) order exactly
-    as the per-key form did; only the state layout (and the
-    per-trigger Python-call count, which is what made the per-key
-    form slow) changes. A logical key always lands in the same
-    group, so per-key cross-trigger state carry is preserved.
+    ``key_groups``: number of state groups; output is identical for
+    any value, only the per-trigger Python-call count changes.
     """
+    return keyed_state_stream(
+        changes, "key", ["ts", "trans_id", "row_seq", "m", "value"],
+        scd2_step, SCD2_OUTPUT_SCHEMA, "append", event_time=False,
+        sort_by=["ts", "trans_id", "row_seq"], key_groups=key_groups)
 
-    def fn(key, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        # One call PER KEY GROUP per trigger. Per-call pandas
-        # machinery (the serializer's concat, sort_values,
-        # itertuples) once dominated this operator when the state
-        # key was the logical key (~10k calls per sf0.1 trigger —
-        # guide §4.2); grouped, the call count is key_groups and the
-        # kernel works on plain Python lists per logical key.
-        groups: dict[int, list[tuple]] = {}
-        for c in pdfs:
-            for rec in zip(c["key"].tolist(), c["ts"].tolist(),
-                           c["trans_id"].tolist(), c["row_seq"].tolist(),
-                           c["m"].tolist(), c["value"].tolist()):
-                groups.setdefault(int(rec[0]), []).append(rec[1:])
-        if state.exists:
-            (open_json,) = state.get
-            open_map: dict = json.loads(open_json) if open_json else {}
-        else:
-            open_map = {}
-        out_key: list[int] = []
-        out_val: list[float] = []
-        out_from: list[pd.Timestamp] = []
-        out_to: list[pd.Timestamp] = []
-        for k, recs in groups.items():
-            recs.sort(key=lambda r: (r[0], r[1], r[2]))
-            cur = open_map.get(str(k))
-            for ts, _tid, _seq, m, value in recs:
-                if cur is not None:
-                    out_key.append(k)
-                    out_val.append(cur["value"])
-                    out_from.append(pd.Timestamp(cur["ts"]))
-                    out_to.append(ts)
-                if m == "D":
-                    cur = None
-                else:
-                    cur = {"ts": ts.isoformat(), "value": float(value)}
-            if cur is None:
-                open_map.pop(str(k), None)
-            else:
-                open_map[str(k)] = cur
-        if open_map:
-            state.update((json.dumps(open_map),))
-        elif state.exists:
-            state.remove()
-        if out_key:
-            yield pd.DataFrame({"key": out_key, "value": out_val,
-                                "valid_from": out_from,
-                                "valid_to": out_to})
 
-    return (changes
-            .withColumn("__key_group", F.col("key") % key_groups)
-            .groupBy("__key_group")
-            .applyInPandasWithState(
-                fn, SCD2_OUTPUT_SCHEMA, _STATE_SCHEMA,
-                "append", GroupStateTimeout.NoTimeout))
+def scd2_step(key: int, rows: list[tuple], key_state: list | None,
+              _wm_ms: None) -> tuple[list | None, list[tuple], None]:
+    """One key's keyed-state step over its changes in log order:
+    ``key_state`` is the open version ``[ts_iso, value]``; every
+    change closes it, and D leaves none open (state removed)."""
+    cur = key_state
+    out = []
+    for ts, _tid, _seq, m, value in rows:
+        if cur is not None:
+            out.append((key, cur[1], pd.Timestamp(cur[0]), ts))
+        cur = None if m == "D" else [ts.isoformat(), float(value)]
+    return cur, out, None

@@ -19,35 +19,24 @@ Bounded state, watermark-driven:
   emitted one last time and evicted from state;
 - live state per user is therefore bounded by the sessions inside
   one watermark horizon, not by history;
-- IDLE keys finalize too: every state update arms an event-time
-  timeout at the earliest open session's expiry, so a user who
-  stops sending events still gets the final=true emission and the
-  eviction when the watermark passes — finalization never depends
-  on the key receiving another row.
+- IDLE keys finalize too: the step returns the earliest open
+  session's expiry as its event-time timeout, so a user who stops
+  sending events still gets the final=true emission and the eviction
+  when the watermark passes.
 
-Scale shape: one keyed shuffle into the state store per trigger
-(RocksDB-backed on a cluster); state per user = a short JSON list of
-(start_us, last_us, n) triples. No reference counterpart — extension
-scope (SURVEY.md §2.3); the batch twin is the oracle surface.
+State per user is a short list of (start_us, last_us, n) triples on
+the keyed-state kernel (streaming/keyed_state.py). No reference
+counterpart — extension scope (SURVEY.md §2.3); the batch twin is the
+oracle surface.
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_STATE_SCHEMA = T.StructType([
-    # open sessions as JSON [[start_us, last_us, n], ...] sorted by
-    # start; micros since epoch = the feed's native granularity, so
-    # snapshot timestamps are bit-equal to the batch query's
-    T.StructField("sessions_json", T.StringType()),
-    T.StructField("n_seen", T.LongType()),
-])
+from .keyed_state import keyed_state_stream
 
 SESSION_OUTPUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
@@ -90,32 +79,25 @@ def sessionize_stream(events: DataFrame,
     so no two emissions of a user ever share it. Attach a watermark
     on ``ts`` upstream to activate eviction."""
     gap_us = gap_ms * 1000
-
-    def fn(key, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        return session_step(key, pdfs, state, gap_us)
-
-    return (events.groupBy("user_id")
-            .applyInPandasWithState(
-                fn, SESSION_OUTPUT_SCHEMA, _STATE_SCHEMA,
-                "update", GroupStateTimeout.EventTimeTimeout))
+    return keyed_state_stream(
+        events, "user_id", ["ts"],
+        lambda uid, rows, st, wm_ms: session_step(uid, rows, st, wm_ms,
+                                                  gap_us),
+        SESSION_OUTPUT_SCHEMA, "update", event_time=True)
 
 
-def session_step(key, pdfs: Iterator[pd.DataFrame],
-                 state: GroupState,
-                 gap_us: int) -> Iterator[pd.DataFrame]:
-    """One keyed state transition (module-level so the timeout path
-    is unit-testable against a faked GroupState handle)."""
-    if state.exists:
-        sessions_json, n_seen = state.get
-        sessions = json.loads(sessions_json)
-    else:
-        sessions, n_seen = [], 0
-
-    if not state.hasTimedOut:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        for t in (rows["ts"].astype("int64") // 1_000):
-            _absorb(sessions, int(t), gap_us)
+def session_step(uid: int, rows: list[tuple] | None,
+                 key_state: list | None, wm_ms: int,
+                 gap_us: int) -> tuple[list, list[tuple], int | None]:
+    """One user's keyed-state step: ``key_state`` is ``[sessions,
+    n_seen]`` with sessions as ``[start_us, last_us, n]`` (micros, the
+    feed's native granularity, so snapshot timestamps are bit-equal
+    to the batch query's); ``rows`` is None on a timeout."""
+    sessions, n_seen = key_state or ([], 0)
+    sessions = list(sessions)
+    if rows is not None:
+        for (ts,) in rows:
+            _absorb(sessions, ts.value // 1_000, gap_us)
         n_seen += len(rows)
     else:
         # on timeout the key received no rows, but this emission is
@@ -126,32 +108,18 @@ def session_step(key, pdfs: Iterator[pd.DataFrame],
         # same (user, n_seen) key)
         n_seen += 1
 
-    wm_ms = state.getCurrentWatermarkMs()
     wm_us = wm_ms * 1000
     live = [s for s in sessions if s[1] + gap_us >= wm_us]
-    if live:
-        state.update((json.dumps(live), n_seen))
-        # wake this key when its earliest open session can finalize
-        # even if the user goes quiet forever — without this, an idle
-        # key would hold state and never see its documented
-        # final=true emission (r8 advisory)
-        expiry_ms = min(s[1] + gap_us for s in live) // 1000 + 1
-        state.setTimeoutTimestamp(max(expiry_ms, wm_ms + 1))
-    else:
-        # tombstone, NOT remove(): n_seen must survive full eviction
-        # or a returning user restarts at 0 and the max-n_seen dedup
-        # resurrects stale pre-eviction snapshots (r9 advisory). The
-        # tombstone is ~2 fields and arms no timeout, so state stays
-        # bounded by n_users — the same bound the longevity gate
-        # already enforces — instead of growing with history.
-        state.update((json.dumps([]), n_seen))
-
-    uid = int(key[0])
-    yield pd.DataFrame([{
-        "user_id": uid,
-        "session_start": pd.Timestamp(s[0], unit="us"),
-        "session_end": pd.Timestamp(s[1] + gap_us, unit="us"),
-        "n_events": s[2],
-        "final": s[1] + gap_us < wm_us,
-        "n_seen": n_seen,
-    } for s in sessions])
+    # wake this key when its earliest open session can finalize even
+    # if the user goes quiet forever (r8 advisory). With no live
+    # session the state is a tombstone, NOT a removal: n_seen must
+    # survive full eviction or a returning user restarts at 0 and the
+    # max-n_seen dedup resurrects stale pre-eviction snapshots (r9
+    # advisory). The tombstone arms no timeout, so state stays bounded
+    # by n_users — the bound the longevity gate enforces.
+    expiry_ms = (min(s[1] + gap_us for s in live) // 1000 + 1
+                 if live else None)
+    out = [(uid, pd.Timestamp(s[0], unit="us"),
+            pd.Timestamp(s[1] + gap_us, unit="us"), s[2],
+            s[1] + gap_us < wm_us, n_seen) for s in sessions]
+    return [live, n_seen], out, expiry_ms

@@ -12,42 +12,28 @@ per join key,
 
 Spark re-expression: Structured Streaming has no two-input keyed
 co-process, so the two streams are unioned with a side tag and fed
-to ``applyInPandasWithState`` grouped by the join key. Per key the
-state tuple holds (latest dim row, buffered fact rows), both as JSON
-strings — schema-agnostic, and the buffer is bounded by the
-first-match flush exactly like the reference's ListState.
+to the keyed-state kernel (streaming/keyed_state.py) keyed by the
+join key. Per key the state holds the latest dim row and the
+buffered fact rows (rows as JSON dicts, schema-agnostic); the buffer
+is bounded by the first-match flush exactly like the reference's
+ListState.
 
 Within one micro-batch the union carries no arrival order across the
 two sources, so rows are applied in event-time order (``order_col``),
 which is the only order a distributed replay can promise; the
 reference's wall-clock arrival order is not reproducible anyway.
-
-Scale notes: state is keyed and partitioned by the join key across
-the state store (RocksDB-backed on a cluster); each key holds one
-dim row + a buffer that drains on first match. The union is
-shuffle-partitioned once on the key — the same single shuffle the
-reference's keyBy pair performs.
 """
 
 from __future__ import annotations
 
 import json
 import time
-from collections.abc import Iterator
-from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_STATE_SCHEMA = T.StructType([
-    T.StructField("dim_json", T.StringType()),
-    T.StructField("buffer_json", T.StringType()),
-    # wall-clock of the key's last activity, for the lazy TTL check
-    T.StructField("last_touch_ms", T.LongType()),
-])
+from .keyed_state import keyed_state_stream
 
 
 def _join_output_schema(fact: DataFrame, dim: DataFrame, key: str) -> T.StructType:
@@ -90,9 +76,7 @@ def enrich_stream(fact: DataFrame, dim: DataFrame, key: str,
     """
     out_schema = _join_output_schema(fact, dim, key)
     fact_cols = [f.name for f in fact.schema.fields]
-    dim_cols = [f.name for f in dim.schema.fields]
-    out_cols = [f.name for f in out_schema.fields]
-    dim_carry = [c for c in dim_cols if c != key and c not in fact_cols]
+    dim_carry = [c for c in dim.columns if c != key and c not in fact_cols]
 
     # tagged union: side 0 = dim, side 1 = fact, payload as JSON
     def pack(df: DataFrame, side: int, ord_name: str) -> DataFrame:
@@ -106,60 +90,43 @@ def enrich_stream(fact: DataFrame, dim: DataFrame, key: str,
     unioned = pack(dim, 0, dim_order_col or order_col) \
         .unionByName(pack(fact, 1, order_col))
 
-    ttl = state_ttl_ms
+    return keyed_state_stream(
+        unioned, "__key", ["__ord", "__side", "__payload"],
+        lambda k, rows, st, wm_ms: join_step(k, rows, st, wm_ms, dim_carry,
+                                             state_ttl_ms),
+        out_schema, "append", event_time=False,
+        sort_by=["__ord", "__side"])
 
-    def process(key_tuple: Any, pdfs: Iterator[pd.DataFrame],
-                state: GroupState) -> Iterator[pd.DataFrame]:
-        now_ms = int(time.time() * 1000)
-        if state.exists:
-            dim_json, buffer_json, last_touch_ms = state.get
-            if (ttl is not None and last_touch_ms is not None
-                    and now_ms - last_touch_ms > ttl):
-                # lazy expiry: the key sat idle past the TTL, so its
-                # state is semantically dead — discard before use
-                dim_json, buffer_json = None, "[]"
-        else:
-            dim_json, buffer_json = None, "[]"
-        dim_row = json.loads(dim_json) if dim_json else None
-        buffer: list[dict] = json.loads(buffer_json)
-        out_rows: list[dict] = []
 
-        def emit(fact_row: dict, dim_row: dict) -> None:
-            row = dict(fact_row)
-            row.update({c: dim_row.get(c) for c in dim_carry})
-            out_rows.append(row)
+def join_step(_key, rows: list[tuple], key_state: list | None,
+              _wm_ms: None, dim_carry: list[str],
+              state_ttl_ms: int | None) -> tuple[list, list[dict], None]:
+    """One join key's keyed-state step. ``key_state`` is ``[latest dim
+    row, buffered fact rows, wall-clock ms of the key's last activity
+    (for the lazy TTL)]``; ``rows`` are ``(__ord, __side, __payload)``
+    in event-time order, dim before fact at the same instant."""
+    now_ms = int(time.time() * 1000)
+    dim_row, buffer, last_touch_ms = key_state or (None, [], None)
+    if (state_ttl_ms is not None and last_touch_ms is not None
+            and now_ms - last_touch_ms > state_ttl_ms):
+        # lazy expiry: the key sat idle past the TTL, so its state is
+        # semantically dead — discard before use
+        dim_row, buffer = None, []
+    buffer = list(buffer)
+    out: list[dict] = []
 
-        rows: list[tuple[float, int, str]] = []
-        for pdf in pdfs:
-            rows.extend(zip(pdf["__ord"], pdf["__side"], pdf["__payload"]))
-        # event-time order; dim updates before facts at the same instant
-        rows.sort(key=lambda r: (r[0], r[1]))
+    def emit(fact_row: dict) -> None:
+        out.append({**fact_row, **{c: dim_row.get(c) for c in dim_carry}})
 
-        for _ord, side, payload in rows:
-            rec = json.loads(payload)
-            if side == 0:                     # dim: overwrite latest,
-                dim_row = rec                 # flush & clear buffer
-                for b in buffer:              # (EnrichmentJoin.java:64-70)
-                    emit(b, dim_row)
-                buffer = []
-            else:                             # fact
-                if dim_row is not None:       # (:54-57)
-                    emit(rec, dim_row)
-                else:                         # (:58-60)
-                    buffer.append(rec)
-
-        state.update((json.dumps(dim_row) if dim_row else None,
-                      json.dumps(buffer), now_ms))
-        if out_rows:
-            out = pd.DataFrame(out_rows, columns=out_cols)
-            # JSON round-trips timestamps as ISO strings; restore them
-            for f in out_schema.fields:
-                if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
-                    out[f.name] = pd.to_datetime(out[f.name])
-            yield out
-
-    grouped = unioned.groupBy("__key")
-    result = grouped.applyInPandasWithState(
-        process, out_schema, _STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout)
-    return result
+    for _ord, side, payload in rows:
+        rec = json.loads(payload)
+        if side == 0:                     # dim: overwrite latest,
+            dim_row = rec                 # flush & clear buffer
+            for b in buffer:              # (EnrichmentJoin.java:64-70)
+                emit(b)
+            buffer = []
+        elif dim_row is not None:         # fact (:54-57)
+            emit(rec)
+        else:                             # (:58-60)
+            buffer.append(rec)
+    return [dim_row, buffer, now_ms], out, None

@@ -58,14 +58,19 @@ def _flatness(series: list, label: str, violations: list) -> dict:
 def _file_feed_run(spark, make_df, stream_fn, n_triggers: int,
                    watermark: str = "10 minutes"):
     """Stage n_triggers single-file batches (make_df(k) -> DataFrame),
-    drain through stream_fn (noop sink), return per-trigger progress
-    rows."""
+    drain through the keyed-state operator stream_fn (noop sink),
+    return per-trigger progress rows. State keys are the logical keys
+    in state after each trigger; the store's own row count counts key
+    groups."""
     from functools import reduce
 
     from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from flink_precisely_demo_spark.scratch import scratch
+    from flink_precisely_demo_spark.streaming.keyed_state import (
+        count_members,
+    )
     from flink_precisely_demo_spark.streaming.pipeline import drain_query
     from flink_precisely_demo_spark.streaming.replay_stage import (
         open_feed,
@@ -78,23 +83,17 @@ def _file_feed_run(spark, make_df, stream_fn, n_triggers: int,
         feed = stage_feed(reduce(DataFrame.unionByName, frames), work,
                           "feed", "b", n_triggers)
         stream = open_feed(spark, feed).withWatermark("ts", watermark)
+        ckpt = os.path.join(work, "ckpt")
         q = (stream_fn(stream).writeStream.outputMode("update")
-             .format("noop")
-             .option("checkpointLocation", os.path.join(work, "ckpt"))
+             .format("noop").option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         drain_query(q, 1200, "longevity replay")
-        prog = [json.loads(p.json) for p in q.recentProgress]
-    rows = []
-    for p in prog:
-        if not p.get("stateOperators"):
-            continue
-        so = p["stateOperators"][0]
-        rows.append({
-            "trigger_ms": p["durationMs"].get("triggerExecution"),
-            "n_state_keys": so.get("numRowsTotal"),
-            "state_bytes": so.get("memoryUsedBytes"),
-        })
-    return rows
+        return [{"trigger_ms": p["durationMs"].get("triggerExecution"),
+                 "n_state_keys": count_members(spark, ckpt, p["batchId"]),
+                 "state_bytes": p["stateOperators"][0].get(
+                     "memoryUsedBytes")}
+                for p in map(json.loads, (p.json for p in q.recentProgress))
+                if p.get("stateOperators")]
 
 
 _BASE_US = 1_700_000_000_000_000

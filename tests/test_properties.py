@@ -414,37 +414,29 @@ def _python_scd2(rows):
 @settings(max_examples=8, deadline=None)
 @given(change_logs)
 def test_streaming_scd2_matches_python_fold(spark, tmp_path_factory, log):
-    import json
+    from pyspark.sql import functions as F
 
+    from flink_precisely_demo_spark.streaming.replay_stage import (
+        open_feed,
+        stage_feed,
+    )
     from flink_precisely_demo_spark.streaming.scd2 import scd2_stream
 
     tmp = tmp_path_factory.mktemp("scd2_prop")
-    src = tmp / "changes"
-    src.mkdir()
     # one change per second keeps (ts, trans_id) strictly increasing;
-    # split the log across two files with pinned mtimes (per-key log
-    # order across triggers is the operator's documented contract)
+    # split the log across two triggers (per-key log order across
+    # triggers is the operator's documented contract)
     def ts(i):
         return f"2021-01-01T00:{i // 60:02d}:{i % 60:02d}"
 
-    rows = [{"key": k, "m": m, "ts": ts(i), "value": round(v, 6),
-             "trans_id": i, "row_seq": 1}
+    half = max(1, len(log) // 2)
+    rows = [(k, m, ts(i), round(v, 6), i, 1, int(i >= half))
             for i, (k, m, v) in enumerate(log)]
-    half = max(1, len(rows) // 2)
-    import os as _os
-    import time as _time
-    base = _time.time() - 100
-    for j, part in enumerate([rows[:half], rows[half:]]):
-        if not part:
-            continue
-        f = src / f"b{j}.json"
-        f.write_text("\n".join(map(json.dumps, part)))
-        _os.utime(f, (base + j * 10, base + j * 10))
-
-    schema = ("key long, m string, ts timestamp, value double, "
-              "trans_id long, row_seq int")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).json(str(src)))
+    changes = spark.createDataFrame(
+        rows, "key long, m string, ts string, value double, "
+              "trans_id long, row_seq int, b int") \
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = open_feed(spark, stage_feed(changes, str(tmp), "changes", "b"))
     name = f"scd2_prop_{abs(hash(tuple(map(tuple, log)))) % 10**9}"
     q = (scd2_stream(stream).writeStream.format("memory")
          .queryName(name).trigger(availableNow=True).start())

@@ -27,6 +27,31 @@ def _write_jsonl(path, rows):
             f.write(json.dumps(r) + "\n")
 
 
+def _staged(spark, tmp_path, batches, ddl):
+    """Open ``batches`` (one list of row dicts per trigger) as a
+    one-file-per-trigger stream through the replay harness. A ``ts``
+    column given as ISO strings or epoch seconds becomes a timestamp."""
+    from flink_precisely_demo_spark.streaming.replay_stage import (
+        open_feed,
+        stage_feed,
+    )
+
+    df = spark.createDataFrame(
+        [{**r, "b": k} for k, rows in enumerate(batches) for r in rows],
+        ddl + ", b int")
+    if "ts" in df.columns:
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return open_feed(spark, stage_feed(df, str(tmp_path / "work"), "feed",
+                                       "b", len(batches)))
+
+
+def _minutes(user_id, times_min):
+    """Row dicts for one user's events ``times_min`` minutes after a
+    fixed base instant, ``ts`` in epoch seconds."""
+    return [{"user_id": user_id, "ts": 1_700_000_000 + 60 * t}
+            for t in times_min]
+
+
 def _envelope(order_id, address_id, total, ts_str):
     return {
         "sv_manip_type": "I", "sv_trans_id": order_id,
@@ -707,10 +732,8 @@ def test_streaming_scd2_matches_batch(spark, tmp_path):
     the batch operator's answer: closed versions emitted by the
     stream == lead()-window rows with valid_to set; the open state
     is observable by closing it with sentinel deletes and equals the
-    is_current rows. maxFilesPerTrigger=1 forces three micro-batches
-    so state genuinely crosses trigger boundaries."""
-    import json as _json
-
+    is_current rows. A three-trigger staged feed makes state
+    genuinely cross trigger boundaries."""
     from flink_precisely_demo_spark.streaming.scd2 import scd2_stream
 
     # change log: key 1 I->U->U (2 closed + 1 open), key 2 I->D
@@ -740,23 +763,9 @@ def test_streaming_scd2_matches_batch(spark, tmp_path):
              "value": 0.0, "trans_id": 9, "row_seq": 1},
         ],
     ]
-    src = tmp_path / "changes"
-    src.mkdir()
-    import os as _os
-    import time as _time
-    base = _time.time() - 100
-    for i, b in enumerate(batches):
-        f = src / f"b{i}.json"
-        f.write_text("\n".join(map(_json.dumps, b)))
-        # the file source orders triggers by modification time; pin
-        # it so the three micro-batches replay in log order (equal
-        # mtimes within one clock tick made the order nondeterministic)
-        _os.utime(f, (base + i * 10, base + i * 10))
-
-    schema = ("key long, m string, ts timestamp, value double, "
-              "trans_id long, row_seq int")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).json(str(src)))
+    stream = _staged(spark, tmp_path, batches,
+                     "key long, m string, ts string, value double, "
+                     "trans_id long, row_seq int")
     q = (scd2_stream(stream).writeStream.format("memory")
          .queryName("scd2_all")
          .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -785,9 +794,7 @@ def test_streaming_scd2_matches_batch(spark, tmp_path):
     # maximum-interleaving case — must yield the identical closed
     # set, because the kernel still applies each logical key's
     # changes in its own (ts, trans_id, row_seq) order.
-    stream2 = (spark.readStream.schema(schema)
-               .option("maxFilesPerTrigger", 1).json(str(src)))
-    q2 = (scd2_stream(stream2, key_groups=1)
+    q2 = (scd2_stream(stream, key_groups=1)
           .writeStream.format("memory").queryName("scd2_kg1")
           .option("checkpointLocation", str(tmp_path / "ckpt_kg1"))
           .trigger(availableNow=True).start())
@@ -807,8 +814,6 @@ def test_streaming_funnel_matches_batch_on_shuffled_replay(spark, tmp_path):
     converting users arriving LAST — the non-monotone case where a
     late view shifts the window backward and admits a click that was
     previously outside it."""
-    import os
-
     from flink_precisely_demo_spark.streaming.funnel import funnel_stream
 
     base = "2020-01-01T{:02d}:{:02d}:00"
@@ -846,16 +851,9 @@ def test_streaming_funnel_matches_batch_on_shuffled_replay(spark, tmp_path):
             f2 += [ev(u, 22, "view"), ev(u, 45, "purchase")]
             expected[u] = (22, None, None, 1)
 
-    d = tmp_path / "funnel_src"
-    d.mkdir()
-    for i, rows in enumerate([f1, f2, f3]):
-        _write_jsonl(d / f"b{i}.json", rows)
-        os.utime(d / f"b{i}.json", (1000000000 + i,) * 2)
-
-    src = (spark.readStream.schema("user_id long, event_type string, "
-                                   "ts timestamp")
-           .option("maxFilesPerTrigger", 1).json(str(d))
-           .withWatermark("ts", "2 hours"))   # nothing late in-test
+    src = _staged(spark, tmp_path, [f1, f2, f3],
+                  "user_id long, event_type string, ts string") \
+        .withWatermark("ts", "2 hours")   # nothing late in-test
     q = (funnel_stream(src).writeStream.outputMode("update")
          .format("memory").queryName("funnel_replay")
          .trigger(availableNow=True).start())
@@ -884,33 +882,19 @@ def test_streaming_funnel_finalization_tombstone(spark, tmp_path):
     funnel is FINAL: a straggler view later must not reopen the user
     with a bogus new chain (the batch semantics would still anchor
     on the original first view)."""
-    import os
-
     from flink_precisely_demo_spark.streaming.funnel import funnel_stream
 
-    d = tmp_path / "funnel_fin"
-    d.mkdir()
-    _write_jsonl(d / "b0.json", [
-        {"user_id": 1, "event_type": "view", "ts": "2020-01-01T00:00:00"},
-        {"user_id": 2, "event_type": "view", "ts": "2020-01-01T02:00:00"},
-    ])
-    # watermark is now 01:59 > user 1's window end (01:00): the next
-    # event for user 1 finalizes it...
-    _write_jsonl(d / "b1.json", [
-        {"user_id": 1, "event_type": "view", "ts": "2020-01-01T02:30:00"},
-    ])
-    # ...and this straggler hits the tombstone (no effect)
-    _write_jsonl(d / "b2.json", [
-        {"user_id": 1, "event_type": "view", "ts": "2020-01-01T03:00:00"},
-        {"user_id": 1, "event_type": "click", "ts": "2020-01-01T03:10:00"},
-    ])
-    for i in range(3):
-        os.utime(d / f"b{i}.json", (1000000000 + i,) * 2)
-
-    src = (spark.readStream.schema("user_id long, event_type string, "
-                                   "ts timestamp")
-           .option("maxFilesPerTrigger", 1).json(str(d))
-           .withWatermark("ts", "1 minute"))
+    src = _staged(spark, tmp_path, [
+        [{"user_id": 1, "event_type": "view", "ts": "2020-01-01T00:00:00"},
+         {"user_id": 2, "event_type": "view", "ts": "2020-01-01T02:00:00"}],
+        # watermark is now 01:59 > user 1's window end (01:00): the
+        # next event for user 1 finalizes it...
+        [{"user_id": 1, "event_type": "view", "ts": "2020-01-01T02:30:00"}],
+        # ...and this straggler hits the tombstone (no effect)
+        [{"user_id": 1, "event_type": "view", "ts": "2020-01-01T03:00:00"},
+         {"user_id": 1, "event_type": "click", "ts": "2020-01-01T03:10:00"}],
+    ], "user_id long, event_type string, ts string") \
+        .withWatermark("ts", "1 minute")
     q = (funnel_stream(src).writeStream.outputMode("update")
          .format("memory").queryName("funnel_fin")
          .trigger(availableNow=True).start())
@@ -930,35 +914,14 @@ def test_streaming_sessionize_bridge_merge_out_of_order(spark, tmp_path):
     """A late middle event must BRIDGE two previously-separate
     sessions: batches deliver t=0min and t=50min first (two sessions,
     gap 30min), then t=25min arrives and welds them into one."""
-    import os
-
     from flink_precisely_demo_spark.streaming.sessionize import (
         sessionize_stream,
     )
 
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    base = 1_700_000_000_000_000  # us
-    mins = 60_000_000
-
-    def write_batch(k, times_min):
-        rows = [(1, t) for t in times_min]
-        df = spark.createDataFrame(
-            [(u, (base + t * mins) // 1_000_000) for u, t in rows],
-            "user_id long, epoch long") \
-            .select("user_id", F.col("epoch").cast("timestamp").alias("ts"))
-        part = tmp_path / f"part{k}"
-        df.coalesce(1).write.parquet(str(part))
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        os.rename(part / src, feed / f"b{k}.parquet")
-        os.utime(feed / f"b{k}.parquet", (1_000_000_000 + 10 * k,) * 2)
-
-    write_batch(0, [0, 50])
-    write_batch(1, [25])
-
-    stream = (spark.readStream.schema("user_id long, ts timestamp")
-              .option("maxFilesPerTrigger", 1).parquet(str(feed))
-              .withWatermark("ts", "36500 days"))
+    stream = _staged(spark, tmp_path, [_minutes(1, [0, 50]),
+                                       _minutes(1, [25])],
+                     "user_id long, ts long") \
+        .withWatermark("ts", "36500 days")
     snap = run_to_memory(sessionize_stream(stream), "sess_bridge",
                          spark, output_mode="update")
     rows = sorted(snap.collect(), key=lambda r: r["n_seen"])
@@ -978,36 +941,15 @@ def test_streaming_sessionize_watermark_finalizes_and_evicts(spark, tmp_path):
     """Once the watermark passes session_end + gap the session is
     emitted final=true and leaves state; a much-later event then
     opens a FRESH session rather than extending the dead one."""
-    import json as _json
-    import os
-
     from flink_precisely_demo_spark.streaming.sessionize import (
         sessionize_stream,
     )
 
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    base = 1_700_000_000_000_000
-    mins = 60_000_000
-
-    def write_batch(k, times_min):
-        df = spark.createDataFrame(
-            [(1, (base + t * mins) // 1_000_000) for t in times_min],
-            "user_id long, epoch long") \
-            .select("user_id", F.col("epoch").cast("timestamp").alias("ts"))
-        part = tmp_path / f"part{k}"
-        df.coalesce(1).write.parquet(str(part))
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        os.rename(part / src, feed / f"b{k}.parquet")
-        os.utime(feed / f"b{k}.parquet", (1_000_000_000 + 10 * k,) * 2)
-
-    write_batch(0, [0])
-    write_batch(1, [600])  # 10h later: advances the watermark
-    write_batch(2, [610])  # trigger 3 sees wm=599min: session@0 dead
-
-    stream = (spark.readStream.schema("user_id long, ts timestamp")
-              .option("maxFilesPerTrigger", 1).parquet(str(feed))
-              .withWatermark("ts", "1 minutes"))
+    stream = _staged(spark, tmp_path, [
+        _minutes(1, [0]),
+        _minutes(1, [600]),  # 10h later: advances the watermark
+        _minutes(1, [610]),  # trigger 3 sees wm=599min: session@0 dead
+    ], "user_id long, ts long").withWatermark("ts", "1 minutes")
     snap = run_to_memory(sessionize_stream(stream), "sess_final",
                          spark, output_mode="update")
     rows = snap.collect()
@@ -1027,40 +969,21 @@ def test_streaming_pattern_watermark_folds_finalized_prefix(spark, tmp_path):
     DFA must see v,c (arriving c AFTER e, with an earlier timestamp)
     in timestamp order, and the adjacent-ee burst must be detected
     across the finalize boundary."""
-    import os
-
     from flink_precisely_demo_spark.streaming.pattern import pattern_stream
 
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    base = 1_700_000_000_000_000
-    mins = 60_000_000
+    def events(rows):  # rows: (event_id, user_id, type, t_min)
+        return [{"event_id": eid, "event_type": et, **_minutes(u, [t])[0]}
+                for eid, u, et, t in rows]
 
-    def write_batch(k, rows):  # rows: (event_id, user_id, type, t_min)
-        df = spark.createDataFrame(
-            [(eid, u, et, (base + t * mins) // 1_000_000)
-             for eid, u, et, t in rows],
-            "event_id long, user_id long, event_type string, epoch long"
-        ).select("event_id", "user_id", "event_type",
-                 F.col("epoch").cast("timestamp").alias("ts"))
-        part = tmp_path / f"part{k}"
-        df.coalesce(1).write.parquet(str(part))
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        os.rename(part / src, feed / f"b{k}.parquet")
-        os.utime(feed / f"b{k}.parquet", (1_000_000_000 + 10 * k,) * 2)
-
-    write_batch(0, [(1, 1, "view", 0), (2, 1, "error", 5)])
-    # c arrives AFTER the errors but with an EARLIER timestamp; the
-    # user-2 event at t=600 advances the global watermark
-    write_batch(1, [(3, 1, "error", 6), (4, 1, "click", 3),
-                    (5, 2, "view", 600)])
-    write_batch(2, [(6, 1, "purchase", 1200)])
-
-    schema = ("event_id long, user_id long, event_type string, "
-              "ts timestamp")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(feed))
-              .withWatermark("ts", "1 minutes"))
+    stream = _staged(spark, tmp_path, [
+        events([(1, 1, "view", 0), (2, 1, "error", 5)]),
+        # c arrives AFTER the errors but with an EARLIER timestamp;
+        # the user-2 event at t=600 advances the global watermark
+        events([(3, 1, "error", 6), (4, 1, "click", 3),
+                (5, 2, "view", 600)]),
+        events([(6, 1, "purchase", 1200)]),
+    ], "event_id long, event_type string, user_id long, ts long") \
+        .withWatermark("ts", "1 minutes")
     snap = run_to_memory(pattern_stream(stream), "pat_fold",
                          spark, output_mode="update")
     rows = [r for r in snap.collect() if r["user_id"] == 1]
@@ -1173,66 +1096,29 @@ def test_stream_stream_left_outer_interval_join_timeout_nulls(
     assert miss["click_ts"] is not None
 
 
-class _FakeGroupState:
-    """Minimal GroupState stand-in for driving session_step /
-    pattern_step through the timeout branch deterministically."""
-
-    def __init__(self, value=None, wm_ms=0, timed_out=False):
-        self._value = value
-        self._wm = wm_ms
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_set_ms = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        assert self._value is not None
-        return self._value
-
-    def update(self, v):
-        self._value = v
-
-    def remove(self):
-        self._value = None
-        self.removed = True
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_set_ms = ms
-
-
 def test_session_step_timeout_finalizes_and_evicts_idle_key():
-    """EventTimeTimeout branch: a key that receives NO rows still
-    emits final=true and sheds its session state once the watermark
-    passes session_end + gap (r8 advisory — NoTimeout kept idle keys
+    """Timeout step: a key that receives NO rows still emits
+    final=true and sheds its session state once the watermark passes
+    session_end + gap (r8 advisory — NoTimeout kept idle keys
     forever). The r9 advisory refinement: the timeout emission must
     carry a HIGHER n_seen than the data-trigger snapshot it
     supersedes, and eviction leaves a tombstone carrying n_seen (not
-    remove()) so a returning user cannot restart the sequence."""
-    import json as _json
-
+    a removal) so a returning user cannot restart the sequence."""
     from flink_precisely_demo_spark.streaming.sessionize import (
+        SESSION_OUTPUT_SCHEMA,
         session_step,
     )
 
     gap_us = 1_800_000_000  # 30 min
     base_us = 1_700_000_000_000_000
-    state = _FakeGroupState(
-        value=(_json.dumps([[base_us, base_us, 1]]), 1),
-        wm_ms=(base_us + gap_us) // 1000 + 60_000,  # past expiry
-        timed_out=True)
-    out = list(session_step((1,), iter([]), state, gap_us))
-    assert not state.removed, "tombstone must persist n_seen"
-    assert state.get == (_json.dumps([]), 2), \
+    wm_ms = (base_us + gap_us) // 1000 + 60_000  # past expiry
+    key_state, out, expiry = session_step(
+        1, None, [[[base_us, base_us, 1]], 1], wm_ms, gap_us)
+    assert key_state is not None, "tombstone must persist n_seen"
+    assert key_state == [[], 2], \
         "tombstone = empty session list + bumped n_seen"
-    assert state.timeout_set_ms is None, "no live session, no re-arm"
-    rows = out[0].to_dict("records")
+    assert expiry is None, "no live session, no re-arm"
+    rows = [dict(zip(SESSION_OUTPUT_SCHEMA.names, r)) for r in out]
     assert len(rows) == 1
     assert rows[0]["final"] is True and rows[0]["n_events"] == 1
     assert rows[0]["n_seen"] == 2, \
@@ -1244,23 +1130,19 @@ def test_session_step_returning_user_continues_n_seen():
     sends a new event must continue the monotonic n_seen sequence —
     a restart at 0 would make the max-n_seen dedup select stale
     pre-eviction snapshots (r9 advisory)."""
-    import json as _json
-
     import pandas as _pd
 
     from flink_precisely_demo_spark.streaming.sessionize import (
+        SESSION_OUTPUT_SCHEMA,
         session_step,
     )
 
     gap_us = 1_800_000_000
     base_us = 1_700_000_000_000_000
-    state = _FakeGroupState(
-        value=(_json.dumps([]), 5),  # tombstone after eviction
-        wm_ms=base_us // 1000, timed_out=False)
-    rows = _pd.DataFrame({"ts": _pd.to_datetime(
-        [base_us + 200 * gap_us], unit="us")})
-    out = list(session_step((1,), iter([rows]), state, gap_us))
-    recs = out[0].to_dict("records")
+    rows = [(_pd.Timestamp(base_us + 200 * gap_us, unit="us"),)]
+    _, out, _ = session_step(1, rows, [[], 5],  # tombstone after eviction
+                             base_us // 1000, gap_us)
+    recs = [dict(zip(SESSION_OUTPUT_SCHEMA.names, r)) for r in out]
     assert len(recs) == 1
     assert recs[0]["n_seen"] == 6, "sequence continues past eviction"
     assert not recs[0]["final"]
@@ -1270,9 +1152,8 @@ def test_session_step_timeout_rearms_for_surviving_sessions():
     """Timeout with one dead and one live session: the dead one is
     emitted final and dropped, the live one stays in state with a
     fresh timeout at ITS expiry."""
-    import json as _json
-
     from flink_precisely_demo_spark.streaming.sessionize import (
+        SESSION_OUTPUT_SCHEMA,
         session_step,
     )
 
@@ -1280,25 +1161,22 @@ def test_session_step_timeout_rearms_for_surviving_sessions():
     base_us = 1_700_000_000_000_000
     late_us = base_us + 100 * gap_us
     wm_ms = (base_us + gap_us) // 1000 + 60_000  # past s1, before s2
-    state = _FakeGroupState(
-        value=(_json.dumps([[base_us, base_us, 1],
-                            [late_us, late_us, 2]]), 3),
-        wm_ms=wm_ms, timed_out=True)
-    out = list(session_step((1,), iter([]), state, gap_us))
-    kept = _json.loads(state.get[0])
-    assert kept == [[late_us, late_us, 2]]
-    assert state.timeout_set_ms == (late_us + gap_us) // 1000 + 1
-    finals = [r for r in out[0].to_dict("records") if r["final"]]
-    assert len(finals) == 1 and finals[0]["n_events"] == 1
+    key_state, out, expiry = session_step(
+        1, None, [[[base_us, base_us, 1], [late_us, late_us, 2]], 3],
+        wm_ms, gap_us)
+    assert key_state[0] == [[late_us, late_us, 2]]
+    assert expiry == (late_us + gap_us) // 1000 + 1
+    finals = [r for r in out
+              if dict(zip(SESSION_OUTPUT_SCHEMA.names, r))["final"]]
+    assert len(finals) == 1
+    assert dict(zip(SESSION_OUTPUT_SCHEMA.names, finals[0]))["n_events"] == 1
 
 
 def test_pattern_step_timeout_folds_buffer_silently():
-    """EventTimeTimeout branch for the CEP runner: an idle key's
-    finalized buffer prefix folds into the O(1) automaton and leaves
-    state, with NO emission (verdicts are unchanged by the fold, and
-    a duplicate row would break per-n_seen snapshot uniqueness)."""
-    import json as _json
-
+    """Timeout step for the CEP runner: an idle key's finalized
+    buffer prefix folds into the O(1) automaton and leaves state,
+    with NO emission (verdicts are unchanged by the fold, and a
+    duplicate row would break per-n_seen snapshot uniqueness)."""
     from flink_precisely_demo_spark.streaming.pattern import (
         pattern_step,
     )
@@ -1306,58 +1184,42 @@ def test_pattern_step_timeout_folds_buffer_silently():
     base_us = 1_700_000_000_000_000
     buf = [[base_us, 1, "v"], [base_us + 1_000_000, 2, "c"],
            [base_us + 2_000_000, 3, "p"]]
-    state = _FakeGroupState(
-        value=(0, "", False, 3, 1, _json.dumps(buf)),
-        wm_ms=base_us // 1000 + 600_000,  # past every buffered event
-        timed_out=True)
-    out = list(pattern_step((1,), iter([]), state))
+    key_state, out, expiry = pattern_step(
+        1, None, [0, "", False, 3, 1, buf],
+        base_us // 1000 + 600_000)  # past every buffered event
     assert out == [], "timeout fold must not emit"
-    stage, prev, burst, n_events, n_purch, buffer_json = state.get
-    assert stage == 3 and _json.loads(buffer_json) == []
+    stage, prev, burst, n_events, n_purch, buffer = key_state
+    assert stage == 3 and buffer == []
     assert n_events == 3 and n_purch == 1
-    assert state.timeout_set_ms is None, "empty buffer, no re-arm"
+    assert expiry is None, "empty buffer, no re-arm"
 
 
 def test_streaming_sessionize_idle_key_finalized_without_new_rows(
         spark, tmp_path):
     """End to end: user 1 sends ONE event then goes silent; user 2's
     later events advance the watermark. The event-time timeout must
-    still deliver user 1's final=true emission and evict the state
-    row (total state rows drop to user 2 only)."""
-    import os
+    still deliver user 1's final=true emission and shed its sessions
+    to a tombstone."""
     import uuid
 
+    from flink_precisely_demo_spark.streaming.keyed_state import (
+        count_members,
+    )
     from flink_precisely_demo_spark.streaming.sessionize import (
         sessionize_stream,
     )
 
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    base = 1_700_000_000_000_000
-    mins = 60_000_000
-
-    def write_batch(k, rows):  # rows: (user_id, t_min)
-        df = spark.createDataFrame(
-            [(u, (base + t * mins) // 1_000_000) for u, t in rows],
-            "user_id long, epoch long") \
-            .select("user_id", F.col("epoch").cast("timestamp").alias("ts"))
-        part = tmp_path / f"part{k}"
-        df.coalesce(1).write.parquet(str(part))
-        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-        os.rename(part / src, feed / f"b{k}.parquet")
-        os.utime(feed / f"b{k}.parquet", (1_000_000_000 + 10 * k,) * 2)
-
-    write_batch(0, [(1, 0)])       # user 1: one event, then silence
-    write_batch(1, [(2, 600)])     # user 2 advances the watermark
-    write_batch(2, [(2, 610)])     # trigger 3: wm=599min fires the
-    # user-1 timeout (session expiry 30min) with no user-1 rows
-
-    stream = (spark.readStream.schema("user_id long, ts timestamp")
-              .option("maxFilesPerTrigger", 1).parquet(str(feed))
-              .withWatermark("ts", "1 minutes"))
+    stream = _staged(spark, tmp_path, [
+        _minutes(1, [0]),      # user 1: one event, then silence
+        _minutes(2, [600]),    # user 2 advances the watermark
+        _minutes(2, [610]),    # trigger 3: wm=599min fires the user-1
+        # timeout (session expiry 30min) with no user-1 rows
+    ], "user_id long, ts long").withWatermark("ts", "1 minutes")
     name = f"sess_idle_{uuid.uuid4().hex[:8]}"
+    checkpoint = str(tmp_path / "ckpt")
     q = (sessionize_stream(stream).writeStream.outputMode("update")
          .format("memory").queryName(name)
+         .option("checkpointLocation", checkpoint)
          .trigger(availableNow=True).start())
     assert q.awaitTermination(120)
     rows = spark.sql(f"SELECT * FROM {name}").collect()
@@ -1372,12 +1234,9 @@ def test_streaming_sessionize_idle_key_finalized_without_new_rows(
     # state sheds the idle key's SESSIONS but keeps a 2-field
     # tombstone carrying n_seen (r9 advisory: remove() let returning
     # users restart the sequence): user-1 tombstone + user-2 live
-    # session = 2 state rows, bounded by n_users as the longevity
-    # gate enforces
-    progresses = [p for p in q.recentProgress
-                  if p.get("stateOperators")]
-    assert progresses, "no state metrics recorded"
-    assert progresses[-1]["stateOperators"][0]["numRowsTotal"] == 2
+    # session = 2 keys in state, bounded by n_users as the longevity
+    # gate enforces (the store's numRowsTotal counts key groups)
+    assert count_members(spark, checkpoint) == 2
 
 
 def test_replay_to_parquet_empty_drain_and_label_reclaim(spark, tmp_path):
