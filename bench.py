@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default:
+the cores this process may run on, ``session.DEFAULT_CPUS``).
 
 The LAST stdout line is ONE compact JSON record (kept under 1500
 characters so a tail-capture of stdout always holds it whole — the
@@ -182,10 +183,10 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from flink_precisely_demo_spark.session import get_spark
+    from flink_precisely_demo_spark.session import DEFAULT_CPUS, get_spark
+    cpus = DEFAULT_CPUS
     import __spark_entry__ as entry_mod
 
     load_before = loadavg_1min()

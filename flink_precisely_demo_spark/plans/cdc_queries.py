@@ -24,11 +24,11 @@ from ..scratch import scratch
 from ..sources.parquet import load_table
 from ..streaming.pipeline import replay_to_parquet
 from ..streaming.replay_stage import (
-    adaptive_key_groups,
+    feed_rows,
     open_feed,
     shuffle_partitions,
     stage_feed,
-    staged_feed_rows,
+    state_layout,
 )
 from .queries import query
 
@@ -274,22 +274,11 @@ def _streaming_scd2_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cutoff = F.lit("1995-06-17").cast("timestamp")
     with scratch("stream_scd2_replay_") as work:
-        feed_dir = stage_feed(changes, work, "changes",
-                              F.when(F.col("ts") < cutoff, 0).otherwise(1))
-        # key-group count sized to the staged feed (the operator
-        # pays a Python call per state group per trigger), and state
-        # partitions sized to the GROUP count — with the key-grouped
-        # kernel the per-partition state-store open/commit is the
-        # remaining per-trigger cost (measured at sf0.1: 8-16
-        # partitions ~2.6 s vs 32 -> 3.7 s), so partitions follow
-        # groups, floored at the fixed-cost sweet spot of 8.
-        n_groups = adaptive_key_groups(spark, staged_feed_rows(feed_dir))
-        n_parts = max(8, min(spark.sparkContext.defaultParallelism,
-                             n_groups // 16))
-        with shuffle_partitions(spark, n_parts):
+        feed = stage_feed(changes, work, "changes",
+                          F.when(F.col("ts") < cutoff, 0).otherwise(1))
+        with shuffle_partitions(spark, *state_layout(spark, feed_rows(feed))):
             closed = replay_to_parquet(
-                scd2_stream(open_feed(spark, feed_dir),
-                            key_groups=n_groups),
+                scd2_stream(open_feed(spark, feed)),
                 spark, "scd2_replay", checkpoint=os.path.join(work, "ckpt"))
     return closed.select(
         "key", "value",
@@ -402,14 +391,10 @@ def _streaming_flagship_replay(spark: SparkSession,
                           F.col("n_name").alias("Name")))
 
     with scratch("stream_flagship_replay_") as work:
-        feed_dir = stage_feed(env, work, "envelopes", "b", 3)
-        out = streaming_flagship(spark, feed_dir, address_dim,
+        feed = stage_feed(env, work, "envelopes", "b", 3)
+        out = streaming_flagship(spark, feed, address_dim,
                                  states_dim, max_files_per_trigger=1)
-        # replay micro-batches are small: size the state store to
-        # them, not to core count (the scd2-replay house note —
-        # per-trigger fixed cost is state-store open/commit PER
-        # PARTITION)
-        with shuffle_partitions(spark, 8):
+        with shuffle_partitions(spark, *state_layout(spark, feed_rows(feed))):
             res = replay_to_parquet(
                 out, spark, "flagship_replay",
                 checkpoint=os.path.join(work, "ckpt"))

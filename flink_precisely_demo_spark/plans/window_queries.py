@@ -15,12 +15,12 @@ from ..scratch import scratch
 from ..sources.parquet import load_table
 from ..streaming.pipeline import replay_to_parquet
 from ..streaming.replay_stage import (
-    adaptive_join_state_partitions,
+    feed_rows,
     open_feed,
     shuffle_partitions,
     stage_feed,
     stage_feeds,
-    staged_feed_rows,
+    state_layout,
 )
 from .queries import query
 
@@ -379,6 +379,23 @@ def _skew_hotcold_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_ord").cast("long").alias("sum_n_ord")))
 
 
+def _snapshot_replay(spark: SparkSession, ev: DataFrame, batch,
+                     name: str, operator) -> DataFrame:
+    """Stage ``ev`` as a 3-trigger feed split by ``batch`` and drain
+    ``operator`` over it into update-mode snapshots, with the
+    watermark held below the feed's range (no event is late) and the
+    state sized by ``state_layout``. The parquet drain holds the rows
+    outside the scratch dir, so the feed and checkpoint die here."""
+    with scratch(f"stream_{name}_") as work:
+        feed = stage_feed(ev, work, "feed", batch, 3)
+        with shuffle_partitions(spark, *state_layout(spark, feed_rows(feed))):
+            return replay_to_parquet(
+                operator(open_feed(spark, feed)
+                         .withWatermark("ts", "36500 days")),
+                spark, name, checkpoint=os.path.join(work, "ckpt"),
+                output_mode="update", timeout=300)
+
+
 @query("streaming_funnel_replay", oracle=_FUNNEL_ORACLE)
 def _streaming_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING funnel (streaming/funnel.py, a
@@ -398,15 +415,7 @@ def _streaming_funnel_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.col("ts").cast("timestamp"),
         (F.col("event_id") % 3).alias("b"))
-    # the parquet drain holds the rows outside work, so the feed copy
-    # and the checkpoint die with the block
-    with scratch("stream_funnel_replay_") as work:
-        stream = open_feed(spark, stage_feed(ev, work, "feed", "b", 3)) \
-            .withWatermark("ts", "36500 days")
-        snap = replay_to_parquet(
-            funnel_stream(stream), spark, "funnel_replay",
-            checkpoint=os.path.join(work, "ckpt"),
-            output_mode="update", timeout=300)
+    snap = _snapshot_replay(spark, ev, "b", "funnel_replay", funnel_stream)
 
     from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
@@ -462,13 +471,8 @@ def _streaming_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp"),
         (F.col("event_id") % 3).alias("b"))
-    with scratch("stream_session_replay_") as work:
-        stream = open_feed(spark, stage_feed(ev, work, "feed", "b", 3)) \
-            .withWatermark("ts", "36500 days")
-        snap = replay_to_parquet(
-            sessionize_stream(stream), spark, "session_replay",
-            checkpoint=os.path.join(work, "ckpt"),
-            output_mode="update", timeout=300)
+    snap = _snapshot_replay(spark, ev, "b", "session_replay",
+                            sessionize_stream)
 
     from pyspark.sql import Window
     w = Window.partitionBy("user_id")
@@ -565,14 +569,8 @@ def _streaming_pattern_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.col("ts").cast("timestamp"))
-    with scratch("stream_pattern_replay_") as work:
-        feed = stage_feed(ev, work, "feed", F.col("event_id") % 3, 3)
-        snap = replay_to_parquet(
-            pattern_stream(open_feed(spark, feed)
-                           .withWatermark("ts", "36500 days")),
-            spark, "pattern_replay",
-            checkpoint=os.path.join(work, "ckpt"),
-            output_mode="update", timeout=300)
+    snap = _snapshot_replay(spark, ev, F.col("event_id") % 3,
+                            "pattern_replay", pattern_stream)
 
     from pyspark.sql import Window
     w = Window.partitionBy("user_id")
@@ -645,17 +643,8 @@ def _streaming_attribution_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         clicks, purchases = (
             open_feed(spark, feeds[t]).withWatermark("ts", "1 minutes")
             for t in ("click", "purchase"))
-        # stream-stream join state is partitioned by shuffle.partitions,
-        # and the per-batch machinery cost here is state-store
-        # open/commit PER PARTITION x FOUR stores (the symmetric join
-        # keeps KeyToNumValues + KeyWithIndexToValues per side), not
-        # rows. Measured at sf0.1 (~206k rows, 3 triggers): 4 partitions
-        # 4.1 s, 8 -> 4.9 s, 16 -> 7.9 s — so partitions follow the
-        # sqrt cost model in adaptive_join_state_partitions, reaching
-        # the core count only when per-row work amortizes the stores.
-        n_parts = adaptive_join_state_partitions(
-            spark, sum(staged_feed_rows(d) for d in feeds.values()))
-        with shuffle_partitions(spark, n_parts):
+        with shuffle_partitions(spark, *state_layout(
+                spark, feed_rows(*feeds.values()), stores=4)):
             joined = replay_to_parquet(
                 stream_interval_join_outer(clicks, purchases,
                                            window="1 hour"),
@@ -751,16 +740,14 @@ def _streaming_enrichment_replay(spark: SparkSession,
         "o_orderkey",
         F.col("o_totalprice").cast("double").alias("price"))
     with scratch("stream_enrich_replay_") as work:
-        dim_s = open_feed(spark, stage_feed(
-            dims_b, work, "dims", F.col("c_custkey") % 2))
-        fact_s = open_feed(spark, stage_feed(
-            facts_b, work, "facts", F.col("o_orderkey") % 2))
-        # state partitions sized to the replay's micro-batch volume,
-        # not core count (the attribution-replay house note: per-batch
-        # cost is state-store open/commit PER PARTITION)
-        with shuffle_partitions(spark, 8):
+        dim_dir = stage_feed(dims_b, work, "dims", F.col("c_custkey") % 2)
+        fact_dir = stage_feed(facts_b, work, "facts",
+                              F.col("o_orderkey") % 2)
+        with shuffle_partitions(spark, *state_layout(
+                spark, feed_rows(dim_dir, fact_dir))):
             enriched = replay_to_parquet(
-                enrich_stream(fact_s, dim_s, key="k",
+                enrich_stream(open_feed(spark, fact_dir),
+                              open_feed(spark, dim_dir), key="k",
                               order_col="o_orderkey",
                               dim_order_col="c_custkey"),
                 spark, "enrich_replay",

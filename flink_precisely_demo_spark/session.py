@@ -15,6 +15,9 @@ Scale notes (100 TB design):
 - shuffle partitions default to the local core count; on a real
   cluster this is overridden by the submitter (or left to AQE's
   coalescing with a high initial partition count).
+- the local core count is ``SPARK_GRAFT_CPUS``, else the cores this
+  process may run on; the driver heap is ``SPARK_DRIVER_MEMORY``,
+  else half the host's memory, capped at 48g.
 """
 
 from __future__ import annotations
@@ -23,7 +26,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+                   or len(os.sched_getaffinity(0)))
+
+
+def _default_driver_memory() -> str:
+    """Half of ``MemTotal``, capped at 48g (48g where there is no
+    ``/proc/meminfo``): a heap larger than the host lets one session
+    grow until the kernel kills it instead of collecting garbage."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{max(1, min(48 << 10, kib // 2 >> 10))}m"
 
 
 def get_spark(app_name: str = "flink_precisely_demo_spark",
@@ -46,7 +63,8 @@ def get_spark(app_name: str = "flink_precisely_demo_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY")
+                or _default_driver_memory())
         # streaming replays drain through a parquet FILE sink
         # (streaming/pipeline.replay_to_parquet) — output size never
         # touches the driver, so the default 1g maxResultSize stands

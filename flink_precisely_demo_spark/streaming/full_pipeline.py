@@ -33,15 +33,21 @@ from pyspark.sql import functions as F
 
 from ..operators.windowed_agg import sum_exact
 from .pipeline import drain_query
+from .replay_stage import feed_rows, shuffle_partitions, state_layout
 from .stateful_join import enrich_stream
 
 
-def _run_stage(df: DataFrame, path: str, checkpoint: str, timeout: int) -> None:
-    q = (df.writeStream.outputMode("append")
-         .format("json").option("path", path)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    drain_query(q, timeout, f"replay stage {os.path.basename(path)}")
+def _run_stage(spark: SparkSession, inputs: list[str], path: str,
+               timeout: int, *join, **join_kw) -> None:
+    """Run ``enrich_stream(*join, **join_kw)`` as its own query into the
+    JSON stage ``path`` (checkpoint ``path + "_ck"``), its state sized
+    from the rows of its ``inputs``."""
+    with shuffle_partitions(spark, *state_layout(spark, feed_rows(*inputs))):
+        q = (enrich_stream(*join, **join_kw).writeStream.outputMode("append")
+             .format("json").option("path", path)
+             .option("checkpointLocation", path + "_ck")
+             .trigger(availableNow=True).start())
+        drain_query(q, timeout, f"replay stage {os.path.basename(path)}")
 
 
 def streaming_flagship_full(spark: SparkSession, orders_dir: str,
@@ -54,7 +60,10 @@ def streaming_flagship_full(spark: SparkSession, orders_dir: str,
 
     Inputs are JSON-lines directories of already-projected rows (the
     sql/{orders,address,states}.sql shapes); production would point
-    q1/q2 at Kafka topics and leave all three queries running.
+    q1/q2 at Kafka topics and leave all three queries running. Each
+    query sizes its state partitions and key groups from its own
+    input (``replay_stage.state_layout``): q2 reads the orders plus
+    stage1, q3 reads stage2.
     """
     stage1 = os.path.join(work_dir, "stage1")
     stage2 = os.path.join(work_dir, "stage2")
@@ -67,9 +76,9 @@ def streaming_flagship_full(spark: SparkSession, orders_dir: str,
         "AddressAsOf double").json(address_dir)
 
     # hop 1 (reference :112): address enriched with states
-    addr_states = enrich_stream(address, states, "StateProvinceID",
-                                "AddressAsOf", dim_order_col="StatesAsOf")
-    _run_stage(addr_states, stage1, os.path.join(work_dir, "ck1"), timeout)
+    _run_stage(spark, [address_dir, states_dir], stage1, timeout, address,
+               states, "StateProvinceID", "AddressAsOf",
+               dim_order_col="StatesAsOf")
 
     orders = spark.readStream.schema(
         "SalesOrderId int, AddressId int, TotalDue double, "
@@ -81,9 +90,8 @@ def streaming_flagship_full(spark: SparkSession, orders_dir: str,
     # hop 2 (reference :113): orders ⋈ enriched address; the quirk-1
     # case mismatch (AddressId vs AddressID) is resolved by renaming
     dim = stage1_stream.withColumnRenamed("AddressID", "AddressId")
-    orders_full = enrich_stream(orders, dim, "AddressId", "OrderAsOf",
-                                dim_order_col="AddressAsOf")
-    _run_stage(orders_full, stage2, os.path.join(work_dir, "ck2"), timeout)
+    _run_stage(spark, [orders_dir, stage1], stage2, timeout, orders, dim,
+               "AddressId", "OrderAsOf", dim_order_col="AddressAsOf")
 
     # final window agg (sql/output.sql) over the staged stream
     stage2_stream = spark.readStream.schema(
@@ -100,9 +108,10 @@ def streaming_flagship_full(spark: SparkSession, orders_dir: str,
                    "TotalDue",
                    F.col("CountryRegionCode").alias("Country"),
                    F.col("StateName").alias("State")))
-    q = (agg.writeStream.outputMode("complete")
-         .format("memory").queryName("flagship_full")
-         .option("checkpointLocation", os.path.join(work_dir, "ck3"))
-         .trigger(availableNow=True).start())
-    drain_query(q, timeout, "flagship_full window aggregation")
+    with shuffle_partitions(spark, *state_layout(spark, feed_rows(stage2))):
+        q = (agg.writeStream.outputMode("complete")
+             .format("memory").queryName("flagship_full")
+             .option("checkpointLocation", os.path.join(work_dir, "ck3"))
+             .trigger(availableNow=True).start())
+        drain_query(q, timeout, "flagship_full window aggregation")
     return spark.sql("SELECT * FROM flagship_full")

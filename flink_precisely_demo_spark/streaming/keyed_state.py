@@ -8,7 +8,12 @@ module does the same for every Python stateful operator
 (``sessionize``, ``pattern``, ``funnel``, ``scd2``, ``stateful_join``):
 
 - rows are grouped by ``pmod(hash(key), G)``, so a trigger pays one
-  Python call and one Arrow round trip per GROUP, not per key;
+  Python call and one Arrow round trip per GROUP, not per key. ``G``
+  is fixed when the operator is built: a bounded replay sizes it with
+  its state partitions from its input
+  (``replay_stage.shuffle_partitions(spark,
+  *replay_stage.state_layout(spark, rows))``); outside such a block
+  it is four per default partition. Output is the same for any ``G``;
 - a group's state is one JSON map, member key -> ``[key_state,
   expiry_ms]``;
 - an operator is a pure per-key step,
@@ -39,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .replay_stage import adaptive_key_groups
+from .replay_stage import scoped_key_groups
 
 _GROUP = "__key_group"
 _STATE_SCHEMA = T.StructType([T.StructField("members_json", T.StringType())])
@@ -99,15 +104,14 @@ def fold_group(members: dict, rows: Sequence[tuple], step: Step,
 def keyed_state_stream(df: DataFrame, key: str, cols: Sequence[str],
                        step: Step, out_schema: T.StructType,
                        output_mode: str, *, event_time: bool,
-                       sort_by: Sequence[str] = (),
-                       key_groups: int | None = None) -> DataFrame:
+                       sort_by: Sequence[str] = ()) -> DataFrame:
     """Run ``step`` per logical key of ``df[key]`` over key groups.
 
     ``cols`` are the columns a step sees per row. ``event_time``: the
     stream carries a watermark; steps see it and their expiries arm
     event-time timeouts. Without it a step sees ``wm_ms`` None.
-    ``key_groups`` defaults to ``adaptive_key_groups(spark, 0)``."""
-    n_groups = key_groups or adaptive_key_groups(df.sparkSession, 0)
+    The group count is ``replay_stage.scoped_key_groups``."""
+    n_groups = scoped_key_groups(df.sparkSession)
     names = [f.name for f in out_schema.fields]
     ts_cols = [f.name for f in out_schema.fields
                if isinstance(f.dataType, (T.TimestampType,

@@ -15,10 +15,13 @@ model exactly. The protocol:
 - :func:`open_feed` opens a staged directory as that stream, typed by
   the staged files' own schema (never a literal that can drift from
   the data).
-- :func:`staged_feed_rows`, :func:`adaptive_key_groups`,
-  :func:`adaptive_join_state_partitions` size state from the staged
-  volume, and :func:`shuffle_partitions` applies the state partition
-  count for the duration of one replay.
+- :func:`state_layout` is the one sizing rule for a bounded stateful
+  replay: state partitions and key groups from the input's row count
+  (:func:`feed_rows`, read from parquet footers or estimated from a
+  text prefix, no Spark job), and :func:`shuffle_partitions` applies
+  both for the duration of one replay. An unbounded stream (the
+  ``streaming_flagship`` tail) has no volume to size from and keeps
+  the session's partitions.
 
 Draining is ``streaming/pipeline.drain`` / ``replay_to_parquet``.
 """
@@ -26,9 +29,11 @@ Draining is ``streaming/pipeline.drain`` / ``replay_to_parquet``.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,56 +43,64 @@ _FEED, _BATCH = "__feed", "__batch"
 _MTIME0 = 1_000_000_000
 # footer key under which Spark records the schema of a parquet file it wrote
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# bytes of a text file read to estimate a feed's mean line length
+_PREFIX_BYTES = 1 << 16
+# key groups of the enclosing shuffle_partitions block, None outside one
+_GROUPS: ContextVar[int | None] = ContextVar("key_groups", default=None)
 
 
-def staged_feed_rows(feed_dir: str) -> int:
-    """Total row count of a staged feed directory, read from the
-    parquet footers (metadata only — no Spark job, microseconds)."""
+def feed_rows(*dirs: str) -> int:
+    """Rows in the feed directories ``dirs``, with no Spark job:
+    parquet files count from their footers; JSON-lines and text files
+    as their bytes over the mean line length of the first non-empty
+    one's bounded prefix. ``_``/``.`` entries (a file sink's
+    ``_spark_metadata``, checksum files) are skipped."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for name in os.listdir(feed_dir):
-        if name.endswith(".parquet"):
-            total += pq.ParquetFile(
-                os.path.join(feed_dir, name)).metadata.num_rows
-    return total
+    files = [os.path.join(d, n) for d in dirs for n in sorted(os.listdir(d))
+             if not n.startswith(("_", "."))]
+    rows = sum(pq.ParquetFile(f).metadata.num_rows
+               for f in files if f.endswith(".parquet"))
+    text = {f: os.path.getsize(f) for f in files
+            if not f.endswith(".parquet") and os.path.isfile(f)}
+    sample = next((f for f, size in text.items() if size), None)
+    if sample:
+        with open(sample, "rb") as f:
+            head = f.read(_PREFIX_BYTES)
+        rows += sum(text.values()) * max(1, head.count(b"\n")) // len(head)
+    return rows
 
 
-def adaptive_key_groups(spark, rows: int,
-                        rows_per_group: int = 2000,
-                        cap: int = 65536) -> int:
-    """Key-group count for the keyed-state kernel
-    (streaming/keyed_state.py). A keyed-state operator pays a Python
-    call + Arrow round-trip per key group per trigger, so groups must
-    be few when volume is small; per-group batch memory is
-    rows/groups, so groups must grow with volume. Floor of 4x
-    parallelism keeps every state partition busy with several groups
-    (``rows=0`` gives the floor, every operator's default); ~2k
-    rows/group bounds a group's in-flight Python list at any scale."""
-    floor = 4 * spark.sparkContext.defaultParallelism
-    return max(floor, min(cap, rows // max(1, rows_per_group)))
+def state_layout(spark: SparkSession, rows: int,
+                 stores: int = 1) -> tuple[int, int]:
+    """``(partitions, key_groups)`` for a bounded stateful replay of
+    ``rows`` input rows whose stateful operator keeps ``stores`` state
+    stores per partition (4 for the native stream-stream join:
+    KeyToNumValues and KeyWithIndexToValues per side).
 
+    Partitions. Each trigger pays a fixed cost per state-store
+    instance (open, commit, and for the keyed-state kernel a Python
+    worker), while per-row work splits across partitions. Modelling
+    wall as ``triggers * parts * stores * c + rows * w / parts`` puts
+    the optimum at ``parts ~ sqrt(rows / (stores * q))``. ``q = 3000``
+    rows fits the optima measured at sf0.1 on 4 cores (best of 3): the
+    attribution join (40k rows, 4 stores) ran 3.0 s on 1 partition,
+    3.2 s on 2 and 3.9 s on 4; scd2 (195k rows) 4.7 s on 4 and 6.0 s
+    on 8; the enrichment join (158k rows) 3.6 s on 4 and 4.6 s on 8.
+    The fully-streaming flagship's queries (2k-8k rows each) on 4
+    partitions kept 4 Python workers and paid about 4x the state-store
+    update and commit time of 1 partition, for no wall-time gain. The
+    count is clamped to ``[1, defaultParallelism]``, so it reaches the
+    core count only when per-row work amortizes the stores.
 
-def adaptive_join_state_partitions(spark, rows: int,
-                                   rows_quantum: int = 12000,
-                                   floor: int = 4) -> int:
-    """Partition count for the NATIVE stream-stream join replays.
-
-    The symmetric hash join keeps FOUR state stores per partition
-    (KeyToNumValues / KeyWithIndexToValues x two sides), so its
-    per-partition per-trigger machinery cost is several times the
-    single-store operators' — measured at sf0.1 (~200k rows,
-    3 triggers): 4 partitions 4.1 s, 8 -> 4.9 s, 16 -> 7.9 s.
-    Modelling wall as triggers*parts*c_store + work/parts gives the
-    optimum at parts ~ sqrt(rows/quantum), which is what this
-    returns: sqrt scaling reaches the core count only when per-row
-    work genuinely amortizes the stores (sf10 here), instead of the
-    linear ramp that over-partitions mid-scale replays."""
-    import math
-
-    cap = max(floor, spark.sparkContext.defaultParallelism)
-    return max(floor, min(cap, math.isqrt(max(rows, 0)
-                                          // max(1, rows_quantum))))
+    Key groups (streaming/keyed_state.py). A keyed-state operator pays
+    one Python call per group per trigger, and a call holds
+    ``rows / groups`` rows in a Python list: ``max(4 * partitions,
+    rows // 2000)`` keeps every partition busy with several groups
+    and bounds a call's list at any scale."""
+    cores = spark.sparkContext.defaultParallelism
+    parts = max(1, min(cores, math.isqrt(max(rows, 0) // (stores * 3000))))
+    return parts, max(4 * parts, rows // 2000)
 
 
 def stage_feeds(df: DataFrame, work: str, feed: str, names: list[str],
@@ -167,15 +180,26 @@ def open_feed(spark: SparkSession, feed_dir: str) -> DataFrame:
 
 
 @contextmanager
-def shuffle_partitions(spark: SparkSession, n: int):
-    """Run the block with ``spark.sql.shuffle.partitions = n``. A
+def shuffle_partitions(spark: SparkSession, n: int, groups: int):
+    """Run the block with ``spark.sql.shuffle.partitions = n`` and with
+    ``groups`` key groups for every keyed-state operator built in it:
+    ``shuffle_partitions(spark, *state_layout(spark, rows))``. A
     streaming query pins its state partitioning when it starts, so a
-    replay sizes its state stores here; batch plans built after the
-    block see the previous value again."""
+    replay sizes its state here; batch plans built after the block see
+    the previous values again."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     spark.conf.set(key, str(n))
+    token = _GROUPS.set(groups)
     try:
         yield
     finally:
         spark.conf.set(key, prev)
+        _GROUPS.reset(token)
+
+
+def scoped_key_groups(spark: SparkSession) -> int:
+    """Key-group count for a keyed-state operator built now: the
+    enclosing :func:`shuffle_partitions` block's, else four per
+    default partition."""
+    return _GROUPS.get() or 4 * spark.sparkContext.defaultParallelism

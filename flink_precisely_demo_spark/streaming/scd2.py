@@ -48,8 +48,7 @@ SCD2_OUTPUT_SCHEMA = T.StructType([
 ])
 
 
-def scd2_stream(changes: DataFrame,
-                key_groups: int | None = None) -> DataFrame:
+def scd2_stream(changes: DataFrame) -> DataFrame:
     """``changes``: streaming DataFrame with columns
     (key long, m string in I/U/D, ts timestamp, value double,
     trans_id long, row_seq int). Returns the stream of CLOSED
@@ -57,14 +56,11 @@ def scd2_stream(changes: DataFrame,
     later change closes them (read them back with
     :func:`open_versions_snapshot` semantics in tests, or run the
     batch operator for a point-in-time full table).
-
-    ``key_groups``: number of state groups; output is identical for
-    any value, only the per-trigger Python-call count changes.
     """
     return keyed_state_stream(
         changes, "key", ["ts", "trans_id", "row_seq", "m", "value"],
         scd2_step, SCD2_OUTPUT_SCHEMA, "append", event_time=False,
-        sort_by=["ts", "trans_id", "row_seq"], key_groups=key_groups)
+        sort_by=["ts", "trans_id", "row_seq"])
 
 
 def scd2_step(key: int, rows: list[tuple], key_state: list | None,

@@ -92,8 +92,7 @@ def main() -> None:
     out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
     if len(sys.argv) > 2:
         FACTOR = int(sys.argv[2])
-    spark = get_spark("make_sf1", cpus=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("make_sf1")
     plans = {
         "region": (["r_regionkey"][:0], None),     # unchanged
         "nation": ([], None),

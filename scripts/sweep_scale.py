@@ -98,8 +98,7 @@ def main() -> None:
 
     from flink_precisely_demo_spark.session import get_spark
 
-    spark = get_spark("sweep_scale", cpus=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("sweep_scale")
     con = duckdb_con(sf_dir)
     qs, oracles = m.queries(), m.oracle_sql()
 

@@ -307,6 +307,82 @@ def test_fully_streaming_three_source_pipeline(spark, tmp_path):
     assert res.columns == ["OrderPeriod", "TotalDue", "Country", "State"]
 
 
+def test_fully_streaming_pipeline_is_state_partition_invariant(
+        spark, tmp_path, monkeypatch):
+    """The staged topology gives the same rows on 1 and on 4 state
+    partitions per query, on a feed with versioned dims (every state
+    and address row has two versions) and facts that arrive before
+    their dim: an address older than its state's first version, and
+    orders older than their address's first version. The default
+    layout sizes every query of this small feed to one partition."""
+    import datetime as dt
+    import os
+    import random
+
+    from flink_precisely_demo_spark.streaming import full_pipeline
+    from flink_precisely_demo_spark.streaming.replay_stage import (
+        state_layout,
+    )
+
+    rnd = random.Random(7)
+    t0 = dt.datetime(2020, 4, 2, 10, 0)
+
+    def epoch(minutes):
+        return (t0 + dt.timedelta(minutes=minutes)).replace(
+            tzinfo=dt.timezone.utc).timestamp()
+
+    states = [{"StateProvinceID": s, "CountryRegionCode": f"C{s % 2}",
+               "StateName": f"S{s}v{v}", "StatesAsOf": epoch(5 + 30 * v)}
+              for s in range(4) for v in range(2)]
+    # address 0's first version predates its state's first version
+    address = [{"AddressID": a, "City": f"city{a}",
+                "StateProvinceID": (a + v) % 4,
+                "AddressAsOf": epoch(-5 if a == 0 and v == 0
+                                     else 10 + 20 * v + a)}
+               for a in range(12) for v in range(2)]
+    orders = [{"SalesOrderId": i, "AddressId": i % 12,
+               "TotalDue": float(rnd.randint(1, 500)),
+               # from 10:00, before most addresses' first version
+               "OrderAsOf": (t0 + dt.timedelta(
+                   seconds=rnd.randint(0, 3600))).isoformat()}
+              for i in range(120)]
+    dirs = {}
+    for name, rows in (("states", states), ("addr", address),
+                       ("orders", orders)):
+        d = dirs[name] = tmp_path / name
+        d.mkdir()
+        half = len(rows) // 2
+        _write_jsonl(d / "a.json", rows[:half])
+        _write_jsonl(d / "b.json", rows[half:])
+
+    def run(tag, layout):
+        if layout is None:
+            monkeypatch.setattr(full_pipeline, "state_layout", state_layout)
+        else:
+            monkeypatch.setattr(full_pipeline, "state_layout",
+                                lambda spark, rows, stores=1: layout)
+        work = tmp_path / tag
+        res = full_pipeline.streaming_flagship_full(
+            spark, str(dirs["orders"]), str(dirs["addr"]),
+            str(dirs["states"]), str(work))
+        rows = sorted(tuple(r) for r in res.collect())
+        # state/0 holds one numbered directory per state partition
+        parts = [sum(n.isdigit() for n in os.listdir(work / ck / "state/0"))
+                 for ck in ("stage1_ck", "stage2_ck", "ck3")]
+        return rows, parts
+
+    one, one_parts = run("default", None)
+    four, four_parts = run("four", (4, 16))
+    assert one_parts == [1, 1, 1]
+    assert four_parts == [4, 4, 4]
+    assert one == four
+    # every order eventually meets an address and a state version, so
+    # the windows hold every order's amount once
+    assert sum(r[1] for r in one) == sum(o["TotalDue"] for o in orders)
+    assert len({r[0] for r in one}) == 6      # 10:00 .. 10:50
+    assert len({r[3] for r in one}) > 4       # versions of states seen
+
+
 def test_fully_streaming_pipeline_times_out_loudly(spark, tmp_path):
     """A replay stage still running at its timeout must raise, never
     hand back the partial output written so far."""
@@ -794,10 +870,14 @@ def test_streaming_scd2_matches_batch(spark, tmp_path):
     # maximum-interleaving case — must yield the identical closed
     # set, because the kernel still applies each logical key's
     # changes in its own (ts, trans_id, row_seq) order.
-    q2 = (scd2_stream(stream, key_groups=1)
-          .writeStream.format("memory").queryName("scd2_kg1")
-          .option("checkpointLocation", str(tmp_path / "ckpt_kg1"))
-          .trigger(availableNow=True).start())
+    from flink_precisely_demo_spark.streaming.replay_stage import (
+        shuffle_partitions,
+    )
+    with shuffle_partitions(spark, 1, 1):
+        q2 = (scd2_stream(stream)
+              .writeStream.format("memory").queryName("scd2_kg1")
+              .option("checkpointLocation", str(tmp_path / "ckpt_kg1"))
+              .trigger(availableNow=True).start())
     assert q2.awaitTermination(180)
     closed_kg1 = {(r["key"], r["valid_from"].isoformat()):
                   (r["value"], r["valid_to"].isoformat())
