@@ -9,18 +9,53 @@ headline total to the full record's size):
   {"metric": "...", "value": N, "unit": "sec", "queries": {...20
    headline times...}, "sf": ..., "streaming_orders_per_sec": ...}
 The full record — secondary query times, error details, metric
-provenance — is written to BENCH_DETAIL.json next to this file and
-echoed to stderr.
+provenance and the layer ledger — is written to BENCH_DETAIL.json next
+to this file and echoed to stderr.
 
 Each query is forced to full materialization with the noop sink
 (count() could let Catalyst prune work; noop executes the complete
 plan and discards rows, which is what a sink would cost minus IO).
+
+Layer ledger: this module is the one place that times a registered
+query (``measure_steal_proof``; ``scripts/check_and_time.py`` uses the
+same :class:`Ledger`). The session always writes Spark's event log
+(uncompressed, to a scratch directory removed afterwards), every timed
+run is a ``perfbench/tracing.py`` span, and once the session stops the
+log is parsed once. Every headline, secondary and
+``streaming_fixed_cost`` entry gets ``layers[name]`` in
+BENCH_DETAIL.json, taken from the span of its fastest run — the run
+whose time is reported:
+  spark.jobs / stages / tasks     jobs submitted in the span, their
+                                  stages and tasks
+  spark.executor_run_s / executor_cpu_s / gc_s
+                                  summed over those tasks
+  spark.task_skew                 median over stages of the slowest
+                                  task's time over the median task's
+  spark.driver_self_s             span wall minus the union of its job
+                                  spans: plan construction, eager
+                                  driver work, per-job coordination
+  shuffle.read_bytes / write_bytes / spill_bytes
+  python.worker_start_s / bytes_to_worker / bytes_from_worker
+                                  (worker_start_s adds Spark's "time to
+                                  initialize Python workers", which on
+                                  a reused worker reads more than the
+                                  task's run time: an upper bound)
+  cpu_run_ratio                   executor_cpu_s / executor_run_s
+Host vs engine, between two records of one entry: wall time up with
+executor CPU flat (cpu_run_ratio down) means the host — steal, or an
+I/O or scheduling stall the steal counter cannot see; executor CPU up
+means the engine did more work; driver_self_s up means the driver.
+Executor CPU counts the JVM task threads only: a task waiting on its
+Python worker accrues run time without CPU, so an Arrow/pandas-heavy
+entry has a low ratio on a quiet host. Compare ratios within one
+entry, never across entries.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -180,12 +215,152 @@ HEADLINE = [
     "reference_pipeline_verbatim",
 ]
 
+# secondary group: the round-6/7/8 pipeline operators. Tracked per
+# round but kept OUT of the headline total, which stays the stable
+# comparator against BASELINE's round-1 measurement.
+SECONDARY = ["text_pii_scrub", "text_html_extract",
+             "text_chunk_windows", "url_canonicalize",
+             "text_tfidf_top_terms", "cdc_history_scd2",
+             "web_link_pagerank",
+             "multimodal_format_audit", "audio_stream_triage",
+             "dedup_semantic", "curation_mixture_sample",
+             "corpus_snapshot_diff", "warc_ingest_extract",
+             "warc_to_corpus", "text_bm25_term_scores",
+             "table_profile_orders", "robots_txt_gate",
+             "event_funnel_steps", "skew_salted_agg",
+             "zorder_layout_stats",
+             "dedup_passage_exact", "text_winnow_fingerprints",
+             "sketch_heavy_hitters", "jsonl_corpus_roundtrip",
+             "bloom_semijoin_prune",
+             "embedding_pq_codebook",
+             "ann_ivf_pq_topk",
+             "crawl_to_training_shards",
+             "embedding_hard_negatives", "deletion_propagation_audit",
+             "corpus_datasheet",
+             # r9 additions: TPC-H completion + LM typicality +
+             # the left-outer interval-join replay
+             "q2_min_cost_supplier", "q9_product_type_profit",
+             "q11_important_stock", "q12_shipping_priority_class",
+             "text_bigram_typicality",
+             "streaming_attribution_replay",
+             "web_triangle_count", "attribution_multi_touch",
+             "bpe_vocab_merges", "bpe_encode_corpus",
+             "ann_recall_eval",
+             # r11 addition: the streaming SCD2 replay
+             "streaming_scd2_replay",
+             # r12 additions: delimited ingest + ANN maintenance
+             # + bucketed co-location
+             "csv_ingest_policy", "ann_index_upsert_topk",
+             "ann_index_health", "streaming_ann_upsert_replay",
+             "bucketed_colocated_join",
+             # r13 additions: streaming flagship replay, salted
+             # skew join, maintained-index recall gate, skew
+             # hot/cold split, dedup-at-ingest (batch + stream)
+             "streaming_flagship_replay", "skew_salted_join",
+             "ann_recall_maintained", "skew_hotcold_join",
+             "dedup_ingest_novelty",
+             "streaming_dedup_ingest_replay",
+             "dedup_index_health",
+             # r14 additions: maintained near-dup clusters, the
+             # e2e streaming corpus pipeline, exact-substring
+             # spans
+             "dedup_ingest_clusters",
+             "streaming_corpus_ingest_replay",
+             "dedup_substring_exact",
+             "streaming_dedup_cluster_replay",
+             "curation_substring_contamination",
+             # r15 additions: incremental substring index, PDF
+             # extraction, late-data side output
+             "dedup_ingest_substring",
+             "multimodal_pdf_extract",
+             "streaming_late_sideoutput_replay",
+             # r15 additions (second batch): the maintained
+             # inverted text index — batch serving + health +
+             # streaming ingest twin — and PDF as corpus source
+             "search_index_topk", "search_index_health",
+             "streaming_search_index_replay",
+             "search_index_doc_topk", "search_index_phrase",
+             "orc_corpus_roundtrip",
+             "streaming_substring_ingest_replay",
+             "search_index_snippets",
+             "pdf_to_corpus"]
+
+def noop_write(df) -> None:
+    """Execute ``df``'s complete plan and discard the rows."""
+    df.write.mode("overwrite").format("noop").save()
+
+
+class Ledger:
+    """The timing session: a Spark session that always writes its
+    event log, and one ``tracing.Spans`` span per timed run.
+    ``measure_steal_proof(ledger.traced(name, run_once))`` times an
+    entry; :meth:`close` stops the session and returns its
+    :func:`layer_records`."""
+
+    def __init__(self, app: str, cpus: int | None = None):
+        from flink_precisely_demo_spark.scratch import scratch_dir
+        from flink_precisely_demo_spark.session import get_spark
+        from perfbench.tracing import Spans
+
+        self.log_dir = scratch_dir(prefix="bench_eventlog_")
+        self.spark = get_spark(app, cpus=cpus, extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": self.log_dir,
+            "spark.eventLog.compress": "false"})
+        self.spans = Spans()
+        self.runs: dict[str, list[int]] = {}
+
+    def traced(self, name: str, run_once):
+        """``run_once`` with every call recorded as a run of ``name``."""
+        def run():
+            with self.spans.span(name, "operation") as sid:
+                self.runs.setdefault(name, []).append(sid)
+                run_once()
+        return run
+
+    def close(self) -> dict[str, dict]:
+        """Stop the session (which flushes its event log), parse the
+        log once, remove it and return entry -> layers record."""
+        from perfbench.tracing import parse_event_log, read_event_log
+
+        self.spark.stop()
+        try:
+            log = parse_event_log(read_event_log(self.log_dir))
+        finally:
+            shutil.rmtree(self.log_dir, ignore_errors=True)
+        return layer_records(self.spans, log, self.runs)
+
+
+def layer_records(spans, log: dict, runs: dict[str, list[int]]
+                  ) -> dict[str, dict]:
+    """One ledger record per entry (see the module docstring), from the
+    shortest of its run spans: ``measure_steal_proof`` reports the
+    fastest run, so that is the run the record describes."""
+    from perfbench.tracing import layer_metrics
+
+    out = {}
+    for name, ids in runs.items():
+        sid = min(ids, key=lambda i: spans.spans[i]["end"]
+                  - spans.spans[i]["start"])
+        span = spans.spans[sid]
+        m = layer_metrics(spans, log, [], (span["start"], span["end"]),
+                          [sid])
+        # no listener here, so the streaming.* and state.* fields
+        # would all read 0
+        rec = {k: round(v, 3) for k, v in m.items()
+               if k.startswith(("spark.", "shuffle.", "python."))}
+        run_s = m["spark.executor_run_s"]
+        rec["cpu_run_ratio"] = (round(m["spark.executor_cpu_s"] / run_s, 3)
+                                if run_s else None)
+        out[name] = rec
+    return out
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from flink_precisely_demo_spark.session import DEFAULT_CPUS, get_spark
+    from flink_precisely_demo_spark.session import DEFAULT_CPUS
     cpus = DEFAULT_CPUS
     import __spark_entry__ as entry_mod
 
@@ -204,17 +379,20 @@ def main() -> None:
     steal_by_window: dict[str, float] = {}
     steal_retries: dict[str, int] = {}
 
-    def _measure(name: str, run_once) -> float:
-        best, best_steal, attempts = measure_steal_proof(run_once)
+    ledger = Ledger("bench", cpus=cpus)
+    spark = ledger.spark
+
+    def _measure(name: str, query, query_sf_dir: str) -> float:
+        best, best_steal, attempts = measure_steal_proof(ledger.traced(
+            name, lambda: noop_write(query(spark, query_sf_dir))))
         load_samples.append(loadavg_1min())
         steal_pcts.append(best_steal)
         if best_steal is not None:
             steal_by_window[name] = round(best_steal, 2)
         if attempts > 1:
             steal_retries[name] = attempts - 1
-        return best
+        return round(best, 3)
 
-    spark = get_spark("bench", cpus=cpus)
     qs = entry_mod.queries()
 
     # Every phase below is individually fault-isolated: one broken
@@ -241,8 +419,7 @@ def main() -> None:
     for warm_name in ["flagship_cdc_window_sum", "dedup_minhash_lsh",
                       "reference_pipeline_verbatim"]:
         try:
-            qs[warm_name](spark, warm_dir).write.mode("overwrite") \
-                .format("noop").save()
+            noop_write(qs[warm_name](spark, warm_dir))
         except Exception as exc:
             print(f"# warmup {warm_name}: ERROR {exc}", file=sys.stderr)
     # build the served ANN index once, untimed: a served system
@@ -265,96 +442,15 @@ def main() -> None:
     # back to back); min-of-2 is the standard noise-robust estimator
     # and also absorbs stray one-off costs (worker forks, JIT).
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        try:
-            fn = qs[name]
-            best = _measure(name, lambda: fn(spark, sf_dir).write
-                            .mode("overwrite").format("noop").save())
-            timings[name] = round(best, 3)
-            print(f"# {name}: {timings[name]}s", file=sys.stderr)
-        except Exception as exc:
-            _err(name, exc)
-
-    # secondary group: the round-6/7/8 pipeline operators. Tracked
-    # per round but kept OUT of the headline total, which stays the
-    # stable comparator against BASELINE's round-1 measurement.
-    SECONDARY = ["text_pii_scrub", "text_html_extract",
-                 "text_chunk_windows", "url_canonicalize",
-                 "text_tfidf_top_terms", "cdc_history_scd2",
-                 "web_link_pagerank",
-                 "multimodal_format_audit", "audio_stream_triage",
-                 "dedup_semantic", "curation_mixture_sample",
-                 "corpus_snapshot_diff", "warc_ingest_extract",
-                 "warc_to_corpus", "text_bm25_term_scores",
-                 "table_profile_orders", "robots_txt_gate",
-                 "event_funnel_steps", "skew_salted_agg",
-                 "zorder_layout_stats",
-                 "dedup_passage_exact", "text_winnow_fingerprints",
-                 "sketch_heavy_hitters", "jsonl_corpus_roundtrip",
-                 "bloom_semijoin_prune",
-                 "embedding_pq_codebook",
-                 "ann_ivf_pq_topk",
-                 "crawl_to_training_shards",
-                 "embedding_hard_negatives", "deletion_propagation_audit",
-                 "corpus_datasheet",
-                 # r9 additions: TPC-H completion + LM typicality +
-                 # the left-outer interval-join replay
-                 "q2_min_cost_supplier", "q9_product_type_profit",
-                 "q11_important_stock", "q12_shipping_priority_class",
-                 "text_bigram_typicality",
-                 "streaming_attribution_replay",
-                 "web_triangle_count", "attribution_multi_touch",
-                 "bpe_vocab_merges", "bpe_encode_corpus",
-                 "ann_recall_eval",
-                 # r11 addition: the streaming SCD2 replay
-                 "streaming_scd2_replay",
-                 # r12 additions: delimited ingest + ANN maintenance
-                 # + bucketed co-location
-                 "csv_ingest_policy", "ann_index_upsert_topk",
-                 "ann_index_health", "streaming_ann_upsert_replay",
-                 "bucketed_colocated_join",
-                 # r13 additions: streaming flagship replay, salted
-                 # skew join, maintained-index recall gate, skew
-                 # hot/cold split, dedup-at-ingest (batch + stream)
-                 "streaming_flagship_replay", "skew_salted_join",
-                 "ann_recall_maintained", "skew_hotcold_join",
-                 "dedup_ingest_novelty",
-                 "streaming_dedup_ingest_replay",
-                 "dedup_index_health",
-                 # r14 additions: maintained near-dup clusters, the
-                 # e2e streaming corpus pipeline, exact-substring
-                 # spans
-                 "dedup_ingest_clusters",
-                 "streaming_corpus_ingest_replay",
-                 "dedup_substring_exact",
-                 "streaming_dedup_cluster_replay",
-                 "curation_substring_contamination",
-                 # r15 additions: incremental substring index, PDF
-                 # extraction, late-data side output
-                 "dedup_ingest_substring",
-                 "multimodal_pdf_extract",
-                 "streaming_late_sideoutput_replay",
-                 # r15 additions (second batch): the maintained
-                 # inverted text index — batch serving + health +
-                 # streaming ingest twin — and PDF as corpus source
-                 "search_index_topk", "search_index_health",
-                 "streaming_search_index_replay",
-                 "search_index_doc_topk", "search_index_phrase",
-                 "orc_corpus_roundtrip",
-                 "streaming_substring_ingest_replay",
-                 "search_index_snippets",
-                 "pdf_to_corpus"]
     secondary: dict[str, float] = {}
-    for name in SECONDARY:
-        try:
-            fn = qs[name]
-            best = _measure(name, lambda: fn(spark, sf_dir).write
-                            .mode("overwrite").format("noop").save())
-            secondary[name] = round(best, 3)
-            print(f"# {name}: {secondary[name]}s (secondary)",
-                  file=sys.stderr)
-        except Exception as exc:
-            _err(name, exc)
+    for names, times, tag in ((HEADLINE, timings, ""),
+                              (SECONDARY, secondary, " (secondary)")):
+        for name in names:
+            try:
+                times[name] = _measure(name, qs[name], sf_dir)
+                print(f"# {name}: {times[name]}s{tag}", file=sys.stderr)
+            except Exception as exc:
+                _err(name, exc)
 
     # Machinery-vs-plan decomposition for the replay secondaries
     # (r11 verdict item 4): the flagship replay entry re-run at
@@ -368,11 +464,8 @@ def main() -> None:
     # per-row, so it stays ~flat across SF while plan cost scales.
     streaming_fixed_cost = None
     try:
-        best = _measure(
-            "streaming_fixed_cost",
-            lambda: qs["streaming_scd2_replay"](spark, warm_dir)
-            .write.mode("overwrite").format("noop").save())
-        streaming_fixed_cost = round(best, 3)
+        streaming_fixed_cost = _measure(
+            "streaming_fixed_cost", qs["streaming_scd2_replay"], warm_dir)
         print(f"# streaming_fixed_cost: {streaming_fixed_cost}s "
               "(scd2 replay @ sf0.001)", file=sys.stderr)
     except Exception as exc:
@@ -443,6 +536,15 @@ def main() -> None:
         # number
         result["errors"] = errors
         result["value_is_partial"] = True
+    # the timings stand without their ledger: a failed parse costs the
+    # layers field, never the artifact
+    try:
+        layers = ledger.close()
+        result["layers"] = {n: layers[n] for n in [
+            *timings, *secondary, "streaming_fixed_cost"] if n in layers}
+    except Exception as exc:
+        print(f"# layers: ERROR {type(exc).__name__}: {exc}",
+              file=sys.stderr)
 
     # full record: file + stderr (never the tail-captured stdout)
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -452,7 +554,6 @@ def main() -> None:
     print(json.dumps(result), file=sys.stderr)
 
     print(compact_line(result))
-    spark.stop()
 
 
 def compact_line(result: dict) -> str:
@@ -493,18 +594,14 @@ def _run_stream_once(spark, env_dir, address, states, name):
     """Run the streaming flagship to completion (availableNow) and
     return the finished StreamingQuery (for its progress metrics)."""
     from flink_precisely_demo_spark.streaming.pipeline import (
+        drain_query,
         streaming_flagship,
     )
     out = streaming_flagship(spark, env_dir, address, states)
     q = (out.writeStream.outputMode("complete")
          .format("memory").queryName(name)
          .trigger(availableNow=True).start())
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            f"streaming bench query {name!r} did not finish in 300 s — "
-            "refusing to report a rate from a partial run")
+    drain_query(q, 300, name)
     return q
 
 
@@ -513,8 +610,6 @@ def _streaming_throughput(spark, sf_dir: str) -> float:
     schema-driven decode -> parse_ts -> broadcast enrichment ->
     watermark -> tumbling SUM, measured as orders/sec through the
     whole pipeline (micro-batch mode, availableNow)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from flink_precisely_demo_spark.scratch import scratch_dir

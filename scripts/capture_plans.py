@@ -23,19 +23,10 @@ SF = os.environ.get("PLAN_SF_DIR", "/root/testdata/sf0.001")
 OUT = os.path.join(os.path.dirname(__file__), "..", "plans",
                    os.environ.get("PLAN_ROUND", "r16"))
 
-HEADLINE = [
-    "flagship_cdc_window_sum", "q1_pricing_summary",
-    "tumbling_window_events", "enrichment_latest_join",
-    "top_k_per_group", "sessionization", "asof_join_prior_click",
-    "range_join_events", "window_analytics", "cdc_apply_snapshot",
-    "dedup_exact", "dedup_minhash_lsh", "similarity_bruteforce_topk",
-    "similarity_ivf_topk", "ann_index_topk", "text_filter_pipeline",
-    "curation_pipeline_e2e", "q5_local_supplier_volume",
-    "q18_large_volume_customer", "reference_pipeline_verbatim",
-]
-
 
 def main() -> None:
+    from bench import HEADLINE
+
     tag = sys.argv[1]
     names = sys.argv[2:]
     if names == ["--all-headline"]:

@@ -1,17 +1,23 @@
-"""Oracle-verify (sf0.01, driver-style comparison) then time
-(min-of-2 noop at $PLAN_SF_DIR, default sf0.1, tuned session like
-bench.py) the named queries.
+"""Oracle-verify (sf0.01, driver-style comparison) then time the named
+queries at $PLAN_SF_DIR (default sf0.1) the way bench.py does: a tuned
+session with the event log on, ``bench.measure_steal_proof`` (min-of-2,
+re-measured while the window's CPU steal is above 10%), and one
+``bench.Ledger`` layers record per query.
 
 Usage:
     python scripts/check_and_time.py name1 name2 ...
     SKIP_ORACLE=1 python scripts/check_and_time.py ...   # time only
+
+Prints ``time <name>: <best>s  attempts <n>, steal <pct>%`` as each
+query finishes, then one ``layers <name>:`` line per query with its
+jobs, stages, tasks, executor CPU seconds, cpu_run_ratio and
+driver_self_s (see bench.py's docstring for how to read them).
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tests"))
@@ -23,10 +29,11 @@ ORACLE_SF = "/root/testdata/sf0.01"
 def main() -> None:
     names = sys.argv[1:]
 
-    from flink_precisely_demo_spark.session import get_spark
     import __spark_entry__ as entry_mod
+    from bench import Ledger, measure_steal_proof, noop_write
 
-    spark = get_spark("check_and_time")
+    ledger = Ledger("check_and_time")
+    spark = ledger.spark
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
 
     if not os.environ.get("SKIP_ORACLE"):
@@ -40,7 +47,7 @@ def main() -> None:
             ok = ok and not probs
         if not ok:
             print("ORACLE FAILURES — not timing", flush=True)
-            spark.stop()
+            ledger.close()
             sys.exit(1)
 
     # warm like bench
@@ -51,25 +58,23 @@ def main() -> None:
         except Exception as exc:
             print(f"# warm {w}: {exc}", file=sys.stderr)
 
-    from bench import cpu_steal_sample, steal_window_pct
-
-    for name in names:
-        runs = []
-        s0 = cpu_steal_sample()
-        for _ in range(2):
-            t0 = time.perf_counter()
-            qs[name](spark, SF).write.mode("overwrite").format("noop").save()
-            runs.append(time.perf_counter() - t0)
-        if max(runs) > 2 * min(runs):
-            t0 = time.perf_counter()
-            qs[name](spark, SF).write.mode("overwrite").format("noop").save()
-            runs.append(time.perf_counter() - t0)
-        steal = steal_window_pct(s0, cpu_steal_sample())
-        print(f"time {name}: {min(runs):.3f}s  (runs: "
-              + ", ".join(f"{r:.3f}" for r in runs)
-              + (f"; steal {steal:.1f}%" if steal is not None else "")
-              + ")", flush=True)
-    spark.stop()
+    # the event log lives in memory-backed scratch: close (stop, parse,
+    # remove) also when a query fails
+    try:
+        for name in names:
+            best, steal, attempts = measure_steal_proof(ledger.traced(
+                name, lambda: noop_write(qs[name](spark, SF))))
+            print(f"time {name}: {best:.3f}s  attempts {attempts}"
+                  + (f", steal {steal:.1f}%" if steal is not None else ""),
+                  flush=True)
+    finally:
+        layers = ledger.close()
+    for name, rec in layers.items():
+        print(f"layers {name}: jobs {rec['spark.jobs']} stages "
+              f"{rec['spark.stages']} tasks {rec['spark.tasks']} "
+              f"executor_cpu_s {rec['spark.executor_cpu_s']} "
+              f"cpu_run_ratio {rec['cpu_run_ratio']} "
+              f"driver_self_s {rec['spark.driver_self_s']}", flush=True)
 
 
 if __name__ == "__main__":

@@ -20,17 +20,11 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from bench import HEADLINE  # noqa: E402
+
 SF = os.environ.get("PLAN_SF_DIR", "/root/testdata/sf0.001")
 
-QUERIES = [
-    "flagship_cdc_window_sum", "q1_pricing_summary",
-    "tumbling_window_events", "enrichment_latest_join",
-    "top_k_per_group", "sessionization", "asof_join_prior_click",
-    "range_join_events", "window_analytics", "cdc_apply_snapshot",
-    "dedup_exact", "dedup_minhash_lsh", "similarity_bruteforce_topk",
-    "similarity_ivf_topk", "ann_index_topk", "text_filter_pipeline",
-    "curation_pipeline_e2e", "q5_local_supplier_volume",
-    "q18_large_volume_customer", "reference_pipeline_verbatim",
+QUERIES = HEADLINE + [
     "multimodal_format_audit", "audio_stream_triage", "dedup_semantic",
     "curation_mixture_sample", "web_link_pagerank",
     "corpus_snapshot_diff",

@@ -12,12 +12,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from bench import measure_steal_proof, noop_write
 from flink_precisely_demo_spark.operators.dedup import (
     minhash_near_dup_pairs,
     near_dup_clusters,
@@ -41,13 +41,10 @@ def x10(df, key):
     return out
 
 
-def timed(label, fn, runs=2):
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn().write.mode("overwrite").format("noop").save()
-        best = min(best, time.perf_counter() - t0)
-    print(f"{label}: {best:.2f}s")
+def timed(label, fn):
+    best, steal, _ = measure_steal_proof(lambda: noop_write(fn()))
+    print(f"{label}: {best:.2f}s"
+          + (f" (steal {steal:.1f}%)" if steal is not None else ""))
     return best
 
 

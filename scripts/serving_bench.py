@@ -3,8 +3,9 @@ item 5): each maintained index (MinHash band, its cluster state, the
 ANN index, and the exact-substring anchor index) is built over the
 sf1 corpus, aged through 50 longevity ingest batches (compact_every=8
 — the cadence the longevity gates certify), and then the QUERY PATH a
-serving deployment actually runs is measured min-of-3 against that
-aged state:
+serving deployment actually runs is measured against that aged state
+with ``bench.measure_steal_proof`` (min-of-2, re-measured while the
+window's CPU steal is above 10%):
 
 - ``band_ingest``      — label a fresh 200-doc batch against the aged
                          band index (dedup-at-ingest verdicts)
@@ -33,14 +34,11 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from bench import measure_steal_proof  # noqa: E402
 
-def _min3(fn) -> float:
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.monotonic()
-        fn()
-        best = min(best, time.monotonic() - t0)
-    return round(best, 3)
+
+def _best(fn) -> float:
+    return round(measure_steal_proof(fn)[0], 3)
 
 
 def main() -> None:
@@ -105,9 +103,9 @@ def main() -> None:
                 compact_band_index(spark, band)
         out["band_age_sec"] = round(time.monotonic() - t0, 1)
         out["band_deltas_at_measure"] = delta_count(band)
-        out["band_ingest_sec"] = _min3(
+        out["band_ingest_sec"] = _best(
             lambda: ingest_batch(spark, band, probe).count())
-        out["cluster_read_sec"] = _min3(
+        out["cluster_read_sec"] = _best(
             lambda: cluster_labels(spark, band).count())
 
         # ---- ANN index ----------------------------------------------
@@ -128,7 +126,7 @@ def main() -> None:
         out["ann_age_sec"] = round(time.monotonic() - t0, 1)
         out["ann_deltas_at_measure"] = delta_count(ann)
         queries = emb.orderBy("vec_id").limit(32)
-        out["ann_topk_sec"] = _min3(
+        out["ann_topk_sec"] = _best(
             lambda: query_ann(spark, ann, queries, k=10,
                               nprobe=2).count())
 
@@ -144,7 +142,7 @@ def main() -> None:
                 compact_substring_index(spark, sub)
         out["substring_age_sec"] = round(time.monotonic() - t0, 1)
         out["substring_deltas_at_measure"] = delta_count(sub)
-        out["substring_ingest_sec"] = _min3(
+        out["substring_ingest_sec"] = _best(
             lambda: ingest_substring_spans(spark, sub, probe).count())
 
         # ---- inverted text index -------------------------------------
@@ -174,7 +172,7 @@ def main() -> None:
                 compact_text_index(spark, tix)
         out["text_age_sec"] = round(time.monotonic() - t0, 1)
         out["text_deltas_at_measure"] = delta_count(tix)
-        out["text_search_sec"] = _min3(
+        out["text_search_sec"] = _best(
             lambda: search_text_index(spark, tix, QUERY_TERMS,
                                       k=5).count())
     finally:
