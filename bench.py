@@ -17,11 +17,12 @@ Each query is forced to full materialization with the noop sink
 plan and discards rows, which is what a sink would cost minus IO).
 
 Layer ledger: this module is the one place that times a registered
-query (``measure_steal_proof``; ``scripts/check_and_time.py`` uses the
-same :class:`Ledger`). The session always writes Spark's event log
-(uncompressed, to a scratch directory removed afterwards), every timed
-run is a ``perfbench/tracing.py`` span, and once the session stops the
-log is parsed once. Every headline, secondary and
+query (``Ledger.measure``, over ``measure_steal_proof``;
+``scripts/check_and_time.py`` uses the same :class:`Ledger`). The
+session always writes Spark's event log (uncompressed, to a scratch
+directory removed on every exit), every timed run is a
+``perfbench/tracing.py`` span, and once the session stops the log is
+parsed once. Every headline, secondary and
 ``streaming_fixed_cost`` entry gets ``layers[name]`` in
 BENCH_DETAIL.json, taken from the span of its fastest run — the run
 whose time is reported:
@@ -35,11 +36,12 @@ whose time is reported:
                                   spans: plan construction, eager
                                   driver work, per-job coordination
   shuffle.read_bytes / write_bytes / spill_bytes
-  python.worker_start_s / bytes_to_worker / bytes_from_worker
-                                  (worker_start_s adds Spark's "time to
-                                  initialize Python workers", which on
-                                  a reused worker reads more than the
-                                  task's run time: an upper bound)
+  python.bytes_to_worker / bytes_from_worker
+                                  (perfbench's python.worker_start_s is
+                                  left out: Spark's "time to initialize
+                                  Python workers" is not reset on a
+                                  reused worker, so it can exceed the
+                                  entry's wall time many times over)
   cpu_run_ratio                   executor_cpu_s / executor_run_s
 Host vs engine, between two records of one entry: wall time up with
 executor CPU flat (cpu_run_ratio down) means the host — steal, or an
@@ -121,43 +123,34 @@ def steal_window_pct(prev: tuple[int, int] | None,
     return 100.0 * steal_d / total_d
 
 
-def timed_attempt(run_once, steal_sampler=cpu_steal_sample,
-                  clock=time.perf_counter) -> tuple[float, float | None]:
-    """One min-of-2 timing attempt (a third run when the two disagree
-    wildly — a contention blip hit one of them), with its own
-    self-contained steal window. Returns (seconds, window_steal_pct)."""
-    prev = steal_sampler()
-    runs = []
-    for _ in range(2):
-        t0 = clock()
-        run_once()
-        runs.append(clock() - t0)
-    if max(runs) > 2 * min(runs):
-        t0 = clock()
-        run_once()
-        runs.append(clock() - t0)
-    return min(runs), steal_window_pct(prev, steal_sampler())
-
-
 def measure_steal_proof(run_once, steal_sampler=cpu_steal_sample,
                         clock=time.perf_counter,
                         max_attempts: int = RETRY_MAX_ATTEMPTS,
                         ) -> tuple[float, float | None, int]:
-    """Steal-proof measurement (r16, verdict item 1): re-attempt the
-    min-of-2 while its steal window is dirty, up to ``max_attempts``
+    """Steal-proof measurement (r16, verdict item 1). One attempt is a
+    min-of-2 (a third run when the two disagree wildly — a contention
+    blip hit one of them) with its own self-contained steal window; it
+    is re-attempted while that window is dirty, up to ``max_attempts``
     total attempts. Returns (best_seconds, cleanest_window_steal_pct,
     n_attempts). Keeps the MIN time across attempts (steal only adds
     time, so every attempt is an upper bound on the true time) and
     the CLEANEST attempt's window steal — the estimate is <= that
     attempt's time, which saw <= that much steal, so the returned
     steal pct bounds the residual inflation of the returned time."""
+    def timed() -> float:
+        t0 = clock()
+        run_once()
+        return clock() - t0
+
     best: float | None = None
     best_steal: float | None = None
-    attempts = 0
-    while attempts < max_attempts:
-        secs, pct = timed_attempt(run_once, steal_sampler, clock)
-        attempts += 1
-        best = secs if best is None else min(best, secs)
+    for attempts in range(1, max_attempts + 1):
+        prev = steal_sampler()
+        runs = [timed(), timed()]
+        if max(runs) > 2 * min(runs):
+            runs.append(timed())
+        pct = steal_window_pct(prev, steal_sampler())
+        best = min(runs) if best is None else min(best, *runs)
         if pct is not None:
             best_steal = pct if best_steal is None else min(best_steal, pct)
         if pct is None or pct <= STEAL_WINDOW_PCT:
@@ -291,32 +284,40 @@ def noop_write(df) -> None:
 
 
 class Ledger:
-    """The timing session: a Spark session that always writes its
-    event log, and one ``tracing.Spans`` span per timed run.
-    ``measure_steal_proof(ledger.traced(name, run_once))`` times an
+    """The timing session, used as ``with Ledger(app) as ledger:``: a
+    Spark session that always writes its event log, and one
+    ``tracing.Spans`` span per timed run. :meth:`measure` times an
     entry; :meth:`close` stops the session and returns its
-    :func:`layer_records`."""
+    :func:`layer_records`. The log sits in memory-backed scratch, so
+    leaving the block also stops the session and removes the log when
+    :meth:`close` was never reached."""
 
-    def __init__(self, app: str, cpus: int | None = None):
+    def __init__(self, app: str):
         from flink_precisely_demo_spark.scratch import scratch_dir
         from flink_precisely_demo_spark.session import get_spark
         from perfbench.tracing import Spans
 
         self.log_dir = scratch_dir(prefix="bench_eventlog_")
-        self.spark = get_spark(app, cpus=cpus, extra_conf={
+        self.spark = get_spark(app, extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": self.log_dir,
             "spark.eventLog.compress": "false"})
         self.spans = Spans()
-        self.runs: dict[str, list[int]] = {}
 
-    def traced(self, name: str, run_once):
-        """``run_once`` with every call recorded as a run of ``name``."""
+    def __enter__(self) -> Ledger:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._discard()
+
+    def measure(self, name: str, query, sf_dir: str
+                ) -> tuple[float, float | None, int]:
+        """:func:`measure_steal_proof` of ``query`` at ``sf_dir`` run
+        into the noop sink, every run a span named ``name``."""
         def run():
-            with self.spans.span(name, "operation") as sid:
-                self.runs.setdefault(name, []).append(sid)
-                run_once()
-        return run
+            with self.spans.span(name, "operation"):
+                noop_write(query(self.spark, sf_dir))
+        return measure_steal_proof(run)
 
     def close(self) -> dict[str, dict]:
         """Stop the session (which flushes its event log), parse the
@@ -327,28 +328,36 @@ class Ledger:
         try:
             log = parse_event_log(read_event_log(self.log_dir))
         finally:
-            shutil.rmtree(self.log_dir, ignore_errors=True)
-        return layer_records(self.spans, log, self.runs)
+            self._discard()
+        return layer_records(self.spans, log)
+
+    def _discard(self) -> None:
+        """Stop the session (a no-op once stopped; the JVM's own exit
+        would write to the removed log) and remove its log."""
+        self.spark.stop()
+        shutil.rmtree(self.log_dir, ignore_errors=True)
 
 
-def layer_records(spans, log: dict, runs: dict[str, list[int]]
-                  ) -> dict[str, dict]:
-    """One ledger record per entry (see the module docstring), from the
-    shortest of its run spans: ``measure_steal_proof`` reports the
-    fastest run, so that is the run the record describes."""
+def layer_records(spans, log: dict) -> dict[str, dict]:
+    """One ledger record per span name (see the module docstring), from
+    the shortest of that name's spans: ``measure_steal_proof`` reports
+    the fastest run, so that is the run the record describes."""
     from perfbench.tracing import layer_metrics
 
+    # longest first, so each name keeps its shortest span
+    fastest = {s["name"]: s for s in sorted(
+        spans.spans, key=lambda s: s["start"] - s["end"])}
     out = {}
-    for name, ids in runs.items():
-        sid = min(ids, key=lambda i: spans.spans[i]["end"]
-                  - spans.spans[i]["start"])
-        span = spans.spans[sid]
+    for name, span in fastest.items():
         m = layer_metrics(spans, log, [], (span["start"], span["end"]),
-                          [sid])
+                          [span["id"]])
         # no listener here, so the streaming.* and state.* fields
-        # would all read 0
+        # would all read 0; python.worker_start_s sums an accumulator
+        # that a reused Python worker does not reset per task, so it
+        # can exceed the entry's wall time many times over
         rec = {k: round(v, 3) for k, v in m.items()
-               if k.startswith(("spark.", "shuffle.", "python."))}
+               if k.startswith(("spark.", "shuffle.", "python."))
+               and k != "python.worker_start_s"}
         run_s = m["spark.executor_run_s"]
         rec["cpu_run_ratio"] = (round(m["spark.executor_cpu_s"] / run_s, 3)
                                 if run_s else None)
@@ -379,113 +388,123 @@ def main() -> None:
     steal_by_window: dict[str, float] = {}
     steal_retries: dict[str, int] = {}
 
-    ledger = Ledger("bench", cpus=cpus)
-    spark = ledger.spark
-
-    def _measure(name: str, query, query_sf_dir: str) -> float:
-        best, best_steal, attempts = measure_steal_proof(ledger.traced(
-            name, lambda: noop_write(query(spark, query_sf_dir))))
-        load_samples.append(loadavg_1min())
-        steal_pcts.append(best_steal)
-        if best_steal is not None:
-            steal_by_window[name] = round(best_steal, 2)
-        if attempts > 1:
-            steal_retries[name] = attempts - 1
-        return round(best, 3)
-
-    qs = entry_mod.queries()
-
-    # Every phase below is individually fault-isolated: one broken
-    # query must cost ONE entry in the artifact, never the artifact
-    # itself (r4 lesson: an unguarded warm-up crash zeroed the whole
-    # bench file).
-    errors: dict[str, str] = {}
-
-    def _err(name: str, exc: BaseException) -> None:
-        msg = f"{type(exc).__name__}: {exc}".splitlines()[0][:500]
-        errors[name] = msg
-        print(f"# {name}: ERROR {msg}", file=sys.stderr)
-
-    # untimed warmup: JVM JIT + codegen + Python worker pool startup
-    # (fixed per-process costs, not per-query engine work; a cluster
-    # pays them once at executor launch, not per query). The verbatim
-    # replay is warmed too — it exercises codegen paths nothing else
-    # does (to_json/from_json of three envelope schemas, the
-    # SQL-scalar parseTs, catalog DDL). A failed warm-up only means
-    # that query runs cold; it is NOT fatal here — the timed loop
-    # reports its real failure per-query.
     warm_dir = "/root/testdata/sf0.001"
-    _setup_prev = cpu_steal_sample()
-    for warm_name in ["flagship_cdc_window_sum", "dedup_minhash_lsh",
-                      "reference_pipeline_verbatim"]:
-        try:
-            noop_write(qs[warm_name](spark, warm_dir))
-        except Exception as exc:
-            print(f"# warmup {warm_name}: ERROR {exc}", file=sys.stderr)
-    # build the served ANN index once, untimed: a served system
-    # amortizes the build across its query traffic; the timed entry
-    # measures the query path (partition-pruned nprobe scan)
-    try:
-        from flink_precisely_demo_spark.plans.ann_queries import ann_index_path
-        ann_index_path(spark, sf_dir)
-    except Exception as exc:
-        print(f"# warmup ann_index: ERROR {exc}", file=sys.stderr)
-    # the startup/warm-up window's steal is recorded for evidence but
-    # EXCLUDED from the contention max — nothing in it is timed (r15
-    # advisory: it used to be attributed to the first headline query)
-    _setup_pct = steal_window_pct(_setup_prev, cpu_steal_sample())
-    if _setup_pct is not None:
-        steal_by_window["setup"] = round(_setup_pct, 2)
+    with Ledger("bench") as ledger:
+        spark = ledger.spark
 
-    # two timed runs per query, keep the min: the host shows heavy
-    # run-to-run CPU contention (same plan measured 0.9s and 23.9s
-    # back to back); min-of-2 is the standard noise-robust estimator
-    # and also absorbs stray one-off costs (worker forks, JIT).
-    timings: dict[str, float] = {}
-    secondary: dict[str, float] = {}
-    for names, times, tag in ((HEADLINE, timings, ""),
-                              (SECONDARY, secondary, " (secondary)")):
-        for name in names:
+        def _measure(name: str, query, query_sf_dir: str) -> float:
+            best, best_steal, attempts = ledger.measure(name, query,
+                                                        query_sf_dir)
+            load_samples.append(loadavg_1min())
+            steal_pcts.append(best_steal)
+            if best_steal is not None:
+                steal_by_window[name] = round(best_steal, 2)
+            if attempts > 1:
+                steal_retries[name] = attempts - 1
+            return round(best, 3)
+
+        qs = entry_mod.queries()
+
+        # Every phase below is individually fault-isolated: one broken
+        # query must cost ONE entry in the artifact, never the artifact
+        # itself (r4 lesson: an unguarded warm-up crash zeroed the whole
+        # bench file).
+        errors: dict[str, str] = {}
+
+        def _err(name: str, exc: BaseException) -> None:
+            msg = f"{type(exc).__name__}: {exc}".splitlines()[0][:500]
+            errors[name] = msg
+            print(f"# {name}: ERROR {msg}", file=sys.stderr)
+
+        # untimed warmup: JVM JIT + codegen + Python worker pool startup
+        # (fixed per-process costs, not per-query engine work; a cluster
+        # pays them once at executor launch, not per query). The verbatim
+        # replay is warmed too — it exercises codegen paths nothing else
+        # does (to_json/from_json of three envelope schemas, the
+        # SQL-scalar parseTs, catalog DDL). A failed warm-up only means
+        # that query runs cold; it is NOT fatal here — the timed loop
+        # reports its real failure per-query.
+        _setup_prev = cpu_steal_sample()
+        for warm_name in ["flagship_cdc_window_sum", "dedup_minhash_lsh",
+                          "reference_pipeline_verbatim"]:
             try:
-                times[name] = _measure(name, qs[name], sf_dir)
-                print(f"# {name}: {times[name]}s{tag}", file=sys.stderr)
+                noop_write(qs[warm_name](spark, warm_dir))
             except Exception as exc:
-                _err(name, exc)
+                print(f"# warmup {warm_name}: ERROR {exc}", file=sys.stderr)
+        # build the served ANN index once, untimed: a served system
+        # amortizes the build across its query traffic; the timed entry
+        # measures the query path (partition-pruned nprobe scan)
+        try:
+            from flink_precisely_demo_spark.plans.ann_queries import (
+                ann_index_path,
+            )
+            ann_index_path(spark, sf_dir)
+        except Exception as exc:
+            print(f"# warmup ann_index: ERROR {exc}", file=sys.stderr)
+        # the startup/warm-up window's steal is recorded for evidence but
+        # EXCLUDED from the contention max — nothing in it is timed (r15
+        # advisory: it used to be attributed to the first headline query)
+        _setup_pct = steal_window_pct(_setup_prev, cpu_steal_sample())
+        if _setup_pct is not None:
+            steal_by_window["setup"] = round(_setup_pct, 2)
 
-    # Machinery-vs-plan decomposition for the replay secondaries
-    # (r11 verdict item 4): the flagship replay entry re-run at
-    # NEGLIGIBLE volume (sf0.001, ~1.5k change rows) measures the
-    # per-entry FIXED cost every streaming replay pays — streaming-
-    # query startup, staging, 2 triggers of state-store open/commit
-    # at 8 partitions, the parquet-drain round trip — because the
-    # batch-shaped work inside is milliseconds at that volume. A
-    # replay secondary's plan cost is approximately its recorded
-    # time minus this number; the machinery price is per-entry, not
-    # per-row, so it stays ~flat across SF while plan cost scales.
-    streaming_fixed_cost = None
-    try:
-        streaming_fixed_cost = _measure(
-            "streaming_fixed_cost", qs["streaming_scd2_replay"], warm_dir)
-        print(f"# streaming_fixed_cost: {streaming_fixed_cost}s "
-              "(scd2 replay @ sf0.001)", file=sys.stderr)
-    except Exception as exc:
-        _err("streaming_fixed_cost", exc)
+        # two timed runs per query, keep the min: the host shows heavy
+        # run-to-run CPU contention (same plan measured 0.9s and 23.9s
+        # back to back); min-of-2 is the standard noise-robust estimator
+        # and also absorbs stray one-off costs (worker forks, JIT).
+        timings: dict[str, float] = {}
+        secondary: dict[str, float] = {}
+        for names, times, tag in ((HEADLINE, timings, ""),
+                                  (SECONDARY, secondary, " (secondary)")):
+            for name in names:
+                try:
+                    times[name] = _measure(name, qs[name], sf_dir)
+                    print(f"# {name}: {times[name]}s{tag}", file=sys.stderr)
+                except Exception as exc:
+                    _err(name, exc)
 
-    _tp_prev = cpu_steal_sample()
-    try:
-        streaming_eps = _streaming_throughput(spark, sf_dir)
-    except Exception as exc:
-        streaming_eps = None
-        _err("streaming_flagship", exc)
+        # Machinery-vs-plan decomposition for the replay secondaries
+        # (r11 verdict item 4): the flagship replay entry re-run at
+        # NEGLIGIBLE volume (sf0.001, ~1.5k change rows) measures the
+        # per-entry FIXED cost every streaming replay pays — streaming-
+        # query startup, staging, 2 triggers of state-store open/commit
+        # at 8 partitions, the parquet-drain round trip — because the
+        # batch-shaped work inside is milliseconds at that volume. A
+        # replay secondary's plan cost is approximately its recorded
+        # time minus this number; the machinery price is per-entry, not
+        # per-row, so it stays ~flat across SF while plan cost scales.
+        streaming_fixed_cost = None
+        try:
+            streaming_fixed_cost = _measure(
+                "streaming_fixed_cost", qs["streaming_scd2_replay"], warm_dir)
+            print(f"# streaming_fixed_cost: {streaming_fixed_cost}s "
+                  "(scd2 replay @ sf0.001)", file=sys.stderr)
+        except Exception as exc:
+            _err("streaming_fixed_cost", exc)
+
+        _tp_prev = cpu_steal_sample()
+        try:
+            streaming_eps = _streaming_throughput(spark, sf_dir)
+        except Exception as exc:
+            streaming_eps = None
+            _err("streaming_flagship", exc)
+        # throughput window: steal recorded for evidence, excluded from
+        # the contention max — the rate metric is engine-accounted per
+        # batch and its estimator (max-of-3) already rejects blips
+        _tp_pct = steal_window_pct(_tp_prev, cpu_steal_sample())
+        if _tp_pct is not None:
+            steal_by_window["streaming_throughput"] = round(_tp_pct, 2)
+        load_samples.append(loadavg_1min())
+        # the timings stand without their ledger: a failed parse costs
+        # the layers field, never the artifact
+        layers = None
+        try:
+            layers = ledger.close()
+        except Exception as exc:
+            print(f"# layers: ERROR {type(exc).__name__}: {exc}",
+                  file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
-    # throughput window: steal recorded for evidence, excluded from
-    # the contention max — the rate metric is engine-accounted per
-    # batch and its estimator (max-of-3) already rejects blips
-    _tp_pct = steal_window_pct(_tp_prev, cpu_steal_sample())
-    if _tp_pct is not None:
-        steal_by_window["streaming_throughput"] = round(_tp_pct, 2)
-    load_samples.append(loadavg_1min())
     load_after = load_samples[-1]
     seen = [x for x in load_samples if x is not None]
     load_max = max(seen) if seen else None
@@ -536,15 +555,9 @@ def main() -> None:
         # number
         result["errors"] = errors
         result["value_is_partial"] = True
-    # the timings stand without their ledger: a failed parse costs the
-    # layers field, never the artifact
-    try:
-        layers = ledger.close()
+    if layers is not None:
         result["layers"] = {n: layers[n] for n in [
             *timings, *secondary, "streaming_fixed_cost"] if n in layers}
-    except Exception as exc:
-        print(f"# layers: ERROR {type(exc).__name__}: {exc}",
-              file=sys.stderr)
 
     # full record: file + stderr (never the tail-captured stdout)
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -1,8 +1,9 @@
 """Oracle-verify (sf0.01, driver-style comparison) then time the named
-queries at $PLAN_SF_DIR (default sf0.1) the way bench.py does: a tuned
-session with the event log on, ``bench.measure_steal_proof`` (min-of-2,
-re-measured while the window's CPU steal is above 10%), and one
-``bench.Ledger`` layers record per query.
+queries at $PLAN_SF_DIR (default sf0.1) the way bench.py does, through
+``bench.Ledger``: a tuned session with the event log on,
+``Ledger.measure`` (bench's ``measure_steal_proof``: min-of-2,
+re-measured while the window's CPU steal is above 10%), and one layers
+record per query.
 
 Usage:
     python scripts/check_and_time.py name1 name2 ...
@@ -27,12 +28,16 @@ ORACLE_SF = "/root/testdata/sf0.01"
 
 
 def main() -> None:
-    names = sys.argv[1:]
+    from bench import Ledger
 
+    with Ledger("check_and_time") as ledger:
+        check_and_time(ledger, sys.argv[1:])
+
+
+def check_and_time(ledger, names: list[str]) -> None:
+    """Oracle-check, warm, then time ``names`` in ``ledger``'s session."""
     import __spark_entry__ as entry_mod
-    from bench import Ledger, measure_steal_proof, noop_write
 
-    ledger = Ledger("check_and_time")
     spark = ledger.spark
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
 
@@ -47,7 +52,6 @@ def main() -> None:
             ok = ok and not probs
         if not ok:
             print("ORACLE FAILURES — not timing", flush=True)
-            ledger.close()
             sys.exit(1)
 
     # warm like bench
@@ -58,18 +62,12 @@ def main() -> None:
         except Exception as exc:
             print(f"# warm {w}: {exc}", file=sys.stderr)
 
-    # the event log lives in memory-backed scratch: close (stop, parse,
-    # remove) also when a query fails
-    try:
-        for name in names:
-            best, steal, attempts = measure_steal_proof(ledger.traced(
-                name, lambda: noop_write(qs[name](spark, SF))))
-            print(f"time {name}: {best:.3f}s  attempts {attempts}"
-                  + (f", steal {steal:.1f}%" if steal is not None else ""),
-                  flush=True)
-    finally:
-        layers = ledger.close()
-    for name, rec in layers.items():
+    for name in names:
+        best, steal, attempts = ledger.measure(name, qs[name], SF)
+        print(f"time {name}: {best:.3f}s  attempts {attempts}"
+              + (f", steal {steal:.1f}%" if steal is not None else ""),
+              flush=True)
+    for name, rec in ledger.close().items():
         print(f"layers {name}: jobs {rec['spark.jobs']} stages "
               f"{rec['spark.stages']} tasks {rec['spark.tasks']} "
               f"executor_cpu_s {rec['spark.executor_cpu_s']} "

@@ -103,7 +103,7 @@ def test_contention_flag_thresholds():
 
 
 def _fake_host(steal_by_window_pcts, secs_per_run=1.0):
-    """A deterministic host: each timed_attempt window consumes one
+    """A deterministic host: each attempt's steal window consumes one
     entry of ``steal_by_window_pcts`` (as its steal percentage); runs
     take ``secs_per_run`` fake seconds on a fake clock."""
     state = {"t": 0.0, "ticks": 0, "steal": 0, "win": 0}
@@ -219,7 +219,7 @@ def test_layer_record_from_event_log_fragment():
     spans = Spans()
     sid = spans.add("q", "operation", job["submit"] - 0.1, job["end"] + 0.2,
                     None)
-    rec = layer_records(spans, log, {"q": [sid]})["q"]
+    rec = layer_records(spans, log)["q"]
     assert (rec["spark.jobs"], rec["spark.stages"], rec["spark.tasks"]) \
         == (1, 1, 2)
     assert rec["spark.driver_self_s"] == pytest.approx(
@@ -230,36 +230,38 @@ def test_layer_record_from_event_log_fragment():
                                                  abs=1e-3)
     assert rec["shuffle.spill_bytes"] == 0
     assert set(rec) >= {"spark.gc_s", "shuffle.read_bytes",
-                        "shuffle.write_bytes", "python.worker_start_s",
-                        "python.bytes_to_worker",
+                        "shuffle.write_bytes", "python.bytes_to_worker",
                         "python.bytes_from_worker"}
+    # no listener (streaming.*, state.*), and the worker-start
+    # accumulator is not a per-task duration on a reused worker
     assert not any(k.startswith(("streaming.", "state.")) for k in rec)
+    assert "python.worker_start_s" not in rec
 
 
 def test_layer_record_comes_from_the_fastest_run():
     """An entry with several runs is described by its shortest span:
     the slow run around both jobs loses to the fast one around job 7,
-    whichever order they ran in."""
+    whichever order they ran in, and each span name is its own entry."""
     from perfbench.tracing import Spans
 
     from bench import layer_records
 
     log = _fragment_log()
     j0, j7 = log["jobs"][0], log["jobs"][7]
-    for order in (0, 1):
+    slow = ("q", "operation", j0["submit"] - 0.1, j7["end"] + 0.1, None)
+    fast = ("q", "operation", j7["submit"] - 0.1, j7["end"] + 0.1, None)
+    for runs in ((slow, fast), (fast, slow)):
         spans = Spans()
-        slow = spans.add("q", "operation", j0["submit"] - 0.1,
-                         j7["end"] + 0.1, None)
-        fast = spans.add("q", "operation", j7["submit"] - 0.1,
-                         j7["end"] + 0.1, None)
-        runs = [slow, fast] if order == 0 else [fast, slow]
-        rec = layer_records(spans, log, {"q": runs})["q"]
-        assert rec["spark.jobs"] == 1
-        assert rec["spark.tasks"] == 2
+        for run in runs:
+            spans.add(*run)
+        spans.add("other", "operation", *slow[2:])
+        recs = layer_records(spans, log)
+        assert (recs["q"]["spark.jobs"], recs["q"]["spark.tasks"]) == (1, 2)
+        assert recs["other"]["spark.jobs"] > 1
     # a run with no job at all records zero executor time, no ratio
     spans = Spans()
-    idle = spans.add("q", "operation", j7["end"] + 1, j7["end"] + 2, None)
-    rec = layer_records(spans, log, {"q": [idle]})["q"]
+    spans.add("q", "operation", j7["end"] + 1, j7["end"] + 2, None)
+    rec = layer_records(spans, log)["q"]
     assert rec["spark.jobs"] == 0 and rec["cpu_run_ratio"] is None
     assert rec["spark.driver_self_s"] == pytest.approx(1.0)
 
@@ -276,7 +278,8 @@ def _python_sources():
 def test_one_profiler_source_guard():
     """bench.py owns the query list and the timing loop: HEADLINE is
     assigned nowhere else, the retired profiling scripts stay gone, and
-    every script that times a query imports ``measure_steal_proof``."""
+    every script that times a query imports ``measure_steal_proof`` or
+    the ``Ledger`` whose ``measure`` wraps it."""
     owners = []
     for path in _python_sources():
         with open(path) as f:
@@ -299,5 +302,6 @@ def test_one_profiler_source_guard():
         with open(os.path.join(scripts, name)) as f:
             tree = ast.parse(f.read())
         assert any(isinstance(n, ast.ImportFrom) and n.module == "bench"
-                   and any(a.name == "measure_steal_proof" for a in n.names)
+                   and any(a.name in ("measure_steal_proof", "Ledger")
+                           for a in n.names)
                    for n in ast.walk(tree)), name
