@@ -19,8 +19,8 @@ plan and discards rows, which is what a sink would cost minus IO).
 Layer ledger: this module is the one place that times a registered
 query (``Ledger.measure``, over ``measure_steal_proof``;
 ``scripts/check_and_time.py`` uses the same :class:`Ledger`). The
-session always writes Spark's event log (uncompressed, to a scratch
-directory removed on every exit), every timed run is a
+session always writes Spark's event log (uncompressed, to a
+disk-backed temp directory removed on every exit), every timed run is a
 ``perfbench/tracing.py`` span, and once the session stops the log is
 parsed once. Every headline, secondary and
 ``streaming_fixed_cost`` entry gets ``layers[name]`` in
@@ -59,6 +59,7 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 
@@ -288,16 +289,16 @@ class Ledger:
     Spark session that always writes its event log, and one
     ``tracing.Spans`` span per timed run. :meth:`measure` times an
     entry; :meth:`close` stops the session and returns its
-    :func:`layer_records`. The log sits in memory-backed scratch, so
+    :func:`layer_records`. The log (about 100-160 MB for a full run)
+    sits in a disk-backed temp dir, never in memory-backed scratch;
     leaving the block also stops the session and removes the log when
     :meth:`close` was never reached."""
 
     def __init__(self, app: str):
-        from flink_precisely_demo_spark.scratch import scratch_dir
         from flink_precisely_demo_spark.session import get_spark
         from perfbench.tracing import Spans
 
-        self.log_dir = scratch_dir(prefix="bench_eventlog_")
+        self.log_dir = tempfile.mkdtemp(prefix="bench_eventlog_")
         self.spark = get_spark(app, extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": self.log_dir,

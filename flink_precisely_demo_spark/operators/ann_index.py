@@ -53,6 +53,7 @@ from .lsm import (
     new_base,
     new_delta,
     reconcile,
+    write_generation,
     write_tombstones,
 )
 from .similarity import (
@@ -100,10 +101,9 @@ def build_ann_index(corpus: DataFrame, index_path: str, k_cells: int = 8,
         centroids = kmeans_fit(train_df if train_df is not None else corpus,
                                k_cells, max_iter, id_col, vec_col)
         cell_ids, cent_mat = _centroid_arrays(centroids)
-        assigned = _assign_to_cells(corpus, cent_mat, cell_ids,
-                                    id_col, vec_col)
-        assigned.write.mode("overwrite").partitionBy("cell_id") \
-            .parquet(f"{stage}/vectors")
+        write_generation(_assign_to_cells(corpus, cent_mat, cell_ids,
+                                          id_col, vec_col),
+                         f"{stage}/vectors", "cell_id")
         spark.createDataFrame(
             [(int(c), [float(x) for x in v]) for c, v in centroids],
             "cell_id long, c array<double>"
@@ -143,18 +143,10 @@ def upsert_ann_index(spark: SparkSession, index_path: str,
         touched = None
         if updates is not None:
             touched = updates.select(id_col)
-            # an EMPTY updates frame must not write vectors/: a
-            # partitioned write with zero rows leaves a file-less dir
-            # that spark.read.parquet cannot infer a schema from,
-            # poisoning every later read of the index
-            if updates.isEmpty():
-                updates = None
-        if updates is not None:
             cell_ids, cent_mat = load_centroids(spark, index_path)
-            assigned = _assign_to_cells(updates, cent_mat, cell_ids,
-                                        id_col, vec_col)
-            assigned.write.mode("overwrite").partitionBy("cell_id") \
-                .parquet(f"{stage}/vectors")
+            write_generation(_assign_to_cells(updates, cent_mat, cell_ids,
+                                              id_col, vec_col),
+                             f"{stage}/vectors", "cell_id")
         write_tombstones(spark, stage, id_col, touched, delete_ids,
                          f"{index_path}/vectors")
     return seq
@@ -234,17 +226,8 @@ def compact_ann_index(spark: SparkSession, index_path: str,
     with new_base(index_path, compact=True) as stage:
         if stage is None:
             return 0
-        live = _live_vectors(spark, index_path, id_col, vec_col)
-        if live.isEmpty():
-            # fully-deleted corpus: a partitioned write of zero rows
-            # leaves a file-less dir that later reads cannot infer a
-            # schema from; an unpartitioned empty write keeps one
-            # schema-bearing file (nothing to prune in an empty index)
-            live.coalesce(1).write.mode("overwrite") \
-                .parquet(f"{stage}/vectors")
-        else:
-            live.write.mode("overwrite").partitionBy("cell_id") \
-                .parquet(f"{stage}/vectors")
+        write_generation(_live_vectors(spark, index_path, id_col, vec_col),
+                         f"{stage}/vectors", "cell_id")
         spark.read.parquet(f"{index_path}/centroids").coalesce(1) \
             .write.mode("overwrite").parquet(f"{stage}/centroids")
     return folded

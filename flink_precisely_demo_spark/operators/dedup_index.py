@@ -67,23 +67,10 @@ from .lsm import (
     index_ok,
     new_base,
     new_delta,
+    write_generation,
 )
 
 _DEFAULTS = dict(num_hashes=16, bands=4, shingle_n=3)
-
-
-def _write_bands(banded: DataFrame, dest: str) -> None:
-    """Band-partitioned write with the empty-set guard: a partitioned
-    write of ZERO rows (every document NULL/too-short to shingle)
-    leaves a file-less dir no later read can infer a schema from —
-    the same hazard compact_ann_index documents; an unpartitioned
-    empty write keeps one schema-bearing file (nothing to prune in
-    an empty band set)."""
-    if banded.isEmpty():
-        banded.coalesce(1).write.mode("overwrite").parquet(dest)
-    else:
-        banded.write.mode("overwrite").partitionBy("band_id") \
-            .parquet(dest)
 
 
 def _star_edges(banded: DataFrame, id_col: str,
@@ -125,7 +112,7 @@ def build_band_index(corpus: DataFrame, index_path: str,
         if clusters:
             banded = banded.persist()   # bands write + edge pass share it
         try:
-            _write_bands(banded, f"{stage}/bands")
+            write_generation(banded, f"{stage}/bands", "band_id")
             if clusters:
                 comp = connected_components(
                     _star_edges(banded, id_col, max_bucket_size), "a", "b")
@@ -289,7 +276,7 @@ def append_bands(spark: SparkSession, index_path: str, batch: DataFrame,
         if banded is None:
             banded = _minhash_banded(batch, text_col, id_col,
                                      num_hashes, bands, shingle_n)
-        _write_bands(banded, f"{stage}/bands")
+        write_generation(banded, f"{stage}/bands", "band_id")
         if cluster_edges is not None:
             cluster_edges.write.mode("overwrite") \
                 .parquet(f"{stage}/cluster_edges")
@@ -374,8 +361,8 @@ def compact_band_index(spark: SparkSession, index_path: str,
     with new_base(index_path, compact=True) as stage:
         if stage is None:
             return 0
-        _write_bands(_index_bands(spark, index_path, id_col),
-                     f"{stage}/bands")
+        write_generation(_index_bands(spark, index_path, id_col),
+                         f"{stage}/bands", "band_id")
         if os.path.isdir(os.path.join(index_path, "clusters")):
             # fold BEFORE the publish swaps the old base out: the write
             # materializes the propagation while base+deltas still exist

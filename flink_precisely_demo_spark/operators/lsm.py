@@ -8,7 +8,8 @@ are ``streaming/ann_upsert.py``, ``text_index_ingest.py``,
 ``substring_ingest.py``, ``dedup_ingest.py`` (the four indexes),
 ``cdc_upsert.py`` (the CDC upsert store) and ``streaming_dedup.py``
 (the near-dup bucket store); ``corpus_pipeline.py`` composes three
-of them. Each drains its stream through ``streaming/pipeline.drain``.
+of them. A caller drains a stream into a sink with
+``streaming/pipeline.drain``.
 
 Layout of an index at ``<index_path>``:
 
@@ -67,6 +68,18 @@ publishes an empty base typed like its deltas on its first trigger
 (:func:`ensure_base`); :func:`compact_generations` is the generic
 fold of such a store.
 
+Empty generations: a partitioned parquet write of zero rows leaves a
+dir with no data file, from which no later read can infer a schema.
+:func:`write_generation` is the one writer of a generation's
+partitioned frame; when its write left no data file it writes the
+frame's empty schema unpartitioned into the same dir, so every dir it
+wrote is readable. The check is a listing of that dir, so a non-empty
+write pays no extra job, and no client probes a frame for rows
+before writing it. An empty micro-batch therefore publishes one empty
+tagged delta, except in the ANN and text sinks given an op column:
+their op count (:func:`split_mutations`) already says the batch is
+empty, and they publish nothing.
+
 One writer per index; concurrent writers need outside coordination.
 On an object store the production analogue is a versioned prefix
 plus a pointer flip: same invariants, different rename.
@@ -83,7 +96,7 @@ from contextlib import contextmanager
 from functools import reduce
 from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -289,6 +302,20 @@ def ensure_base(index_path: str, sub: str, like: DataFrame) -> None:
             like.limit(0).write.parquet(f"{stage}/{sub}")
 
 
+def write_generation(df: DataFrame, dest: str,
+                     partition_by: str | None = None) -> None:
+    """Write ``df`` to ``dest`` (overwrite), partitioned by
+    ``partition_by`` when given. A write that left no data file gets
+    ``df``'s empty schema written unpartitioned in its place, so
+    ``dest`` stays readable (see the module docstring)."""
+    w = df.write.mode("overwrite")
+    (w if partition_by is None else w.partitionBy(partition_by)) \
+        .parquet(dest)
+    if not any(f.endswith(".parquet")
+               for _, _, files in os.walk(dest) for f in files):
+        df.limit(0).write.mode("overwrite").parquet(dest)
+
+
 def compact_generations(spark: SparkSession, index_path: str, sub: str,
                         fold: Callable[[DataFrame], DataFrame]) -> int:
     """Fold base + deltas of ``sub`` through ``fold`` into a new base;
@@ -358,19 +385,25 @@ def split_mutations(batch_df: DataFrame, op_col: str | None, id_col: str,
                     value_col: str
                     ) -> tuple[DataFrame | None, DataFrame | None]:
     """(updates, deletes) of a mutation batch: ``op_col == 'D'`` rows
-    delete their ids, all others upsert ``(id_col, value_col)``. An
-    empty side is ``None``; both ``None`` is an empty trigger."""
-    if op_col is not None:
-        updates = batch_df.filter(F.col(op_col) != "D") \
-                          .select(id_col, value_col)
-        deletes = batch_df.filter(F.col(op_col) == "D").select(id_col)
-        if deletes.isEmpty():
-            deletes = None
-    else:
-        updates, deletes = batch_df.select(id_col, value_col), None
-    if updates.isEmpty():
-        updates = None
-    return updates, deletes
+    delete their ids, all others upsert ``(id_col, value_col)``. One
+    job counts both sides; an absent side is ``None``, both ``None``
+    an empty trigger. With ``op_col=None`` every row upserts and no
+    job runs."""
+    if op_col is None:
+        return batch_df.select(id_col, value_col), None
+    is_delete = F.col(op_col) == "D"
+    # observed counts over the noop sink: one job with no shuffle, where
+    # a grouped count would run a map-stage job and a result job
+    seen = Observation()
+    batch_df.select(op_col).observe(
+        seen, F.count_if(~is_delete).alias("updates"),
+        F.count_if(is_delete).alias("deletes")) \
+        .write.format("noop").mode("overwrite").save()
+    n = seen.get
+    return (batch_df.filter(~is_delete).select(id_col, value_col)
+            if n["updates"] else None,
+            batch_df.filter(is_delete).select(id_col)
+            if n["deletes"] else None)
 
 
 def index_sink(index_path: str,

@@ -61,6 +61,7 @@ from .lsm import (
     new_base,
     new_delta,
     reconcile,
+    write_generation,
     write_tombstones,
 )
 from ..functions.text import tokens
@@ -131,10 +132,9 @@ def _postings(corpus: DataFrame, text_col: str, id_col: str,
 
 
 def _write_gen(posts: DataFrame, docs: DataFrame, dest: str) -> None:
-    (posts.repartition("bucket")
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(f"{dest}/postings"))
-    docs.write.mode("overwrite").parquet(f"{dest}/docs")
+    write_generation(posts.repartition("bucket"), f"{dest}/postings",
+                     "bucket")
+    write_generation(docs, f"{dest}/docs")
 
 
 def build_text_index(corpus: DataFrame, index_path: str,
@@ -175,11 +175,6 @@ def upsert_text_index(spark: SparkSession, index_path: str,
         touched = None
         if updates is not None:
             touched = updates.select(F.col(man["id_col"]).alias("doc_id"))
-            # the ann_index empty-frame lesson: a partitioned write with
-            # zero rows leaves a file-less dir that poisons later reads
-            if updates.isEmpty():
-                updates = None
-        if updates is not None:
             posts, docs = _postings(updates, man["text_col"],
                                     man["id_col"], man["n_buckets"],
                                     man.get("positions", False),

@@ -21,30 +21,23 @@ from ..operators.ann_index import build_ann_index, query_ann
 from ..scratch import scratch
 from ..sources.parquet import load_table
 from ..streaming.replay_stage import open_feed, stage_feed
-from .queries import fixture_path, query, staged_fixture
+from .queries import query, staged_fixture
 from .similarity_queries import _N_QUERIES, _cos
 from .sketch_queries import _ITERS, _K, kmeans_ctes
 
 _NPROBE = 2
 _TOPK = 3
 
-_INDEX_CACHE: dict[str, str] = {}
-
 
 def ann_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process+dataset) and return the index path."""
+    """The served index over ``sf_dir``'s embeddings, built once."""
     from ..operators.lsm import index_ok
 
-    cached = _INDEX_CACHE.get(sf_dir)
-    if cached is None or not index_ok(cached):
-        path = fixture_path("ann_index", sf_dir)
-        if not index_ok(path):
-            # absent OR half-written by a crashed process: rebuild
-            # (the atomic build replaces any poisoned remains)
-            emb = load_table(spark, sf_dir, "embeddings")
-            build_ann_index(emb, path, k_cells=_K, max_iter=_ITERS)
-        _INDEX_CACHE[sf_dir] = path
-    return _INDEX_CACHE[sf_dir]
+    return staged_fixture(
+        "ann_index", sf_dir, index_ok,
+        lambda stage: build_ann_index(
+            load_table(spark, sf_dir, "embeddings"), stage,
+            k_cells=_K, max_iter=_ITERS))
 
 
 # the IVF probe/scan CTEs, shared by the top-k oracle, the
@@ -301,16 +294,16 @@ def _stream_upsert_index_path(spark: SparkSession, sf_dir: str) -> str:
     import shutil
 
     from ..operators.lsm import applied_tags, delta_count, index_ok
-    from ..streaming.ann_upsert import run_ann_upsert
+    from ..streaming.ann_upsert import ann_upsert_sink
+    from ..streaming.pipeline import drain
 
     def build(stage: str) -> None:
         shutil.copytree(ann_index_path(spark, sf_dir), stage)
         with scratch("ann_upsert_replay_") as work:
             feed = open_feed(spark, stage_feed(
                 _mutation_feed(spark, sf_dir), work, "mutations", "b"))
-            run_ann_upsert(feed, stage,
-                           checkpoint=os.path.join(work, "ckpt"),
-                           compact_every=2)
+            drain(feed, ann_upsert_sink(stage, compact_every=2),
+                  os.path.join(work, "ckpt"), "ANN upsert")
 
     return staged_fixture(
         "ann_supsert", sf_dir,

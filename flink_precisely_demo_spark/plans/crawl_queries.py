@@ -24,7 +24,7 @@ No counterpart in the reference (extension scope, SURVEY.md §2.3).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -362,54 +362,63 @@ def _robots_txt_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("score") % 2 == 1).alias("allowed"))
 
 
-# one JSONL corpus copy per (process, sf_dir), not per invocation:
-# the r8 temp-leak fix collected the rollup and deleted the copy each
-# call, which charged every invocation a full corpus write (r9 perf
-# advisory — 0.5 s at sf0.1, twice per bench). The copy is immutable
-# test input, so it is written once, reused by every later call, and
-# reclaimed at interpreter exit (the WHOLE mkdtemp tree, not just the
-# corpus subdirectory — r10 advisory). The cache keys on the
-# realpath of sf_dir alone, deliberately: the corpus derives only
+# One copy of a derived test input per (process, sf_dir, kind), not
+# per invocation: the r8 temp-leak fix collected the rollup and
+# deleted the copy each call, which charged every invocation a full
+# corpus write (r9 perf advisory — 0.5 s at sf0.1, twice per bench).
+# A copy is immutable input, so it is written once, reused by every
+# later call, and reclaimed at interpreter exit (the WHOLE mkdtemp
+# tree, not just the copy's subdirectory — r10 advisory). The cache
+# keys on the realpath of sf_dir, deliberately: a copy derives only
 # from the parquet at that path, so it survives Spark-session
 # restarts in long-lived processes; the one unsupported pattern is
 # REWRITING the parquet at an already-cached path within one
 # process, which no runner here does (the sweep runner uses fresh
 # paths per scale point).
-_ROUNDTRIP_DIRS: dict[str, str] = {}
+_COPIES: dict[tuple[str, str], str] = {}
 
 
-def _cleanup_roundtrip_dirs() -> None:
+def _remove_copies() -> None:
     import os
     import shutil
 
-    for d in _ROUNDTRIP_DIRS.values():
-        # values are `corpus` subdirs — reclaim their mkdtemp parents
+    for d in _COPIES.values():
         shutil.rmtree(os.path.dirname(d), ignore_errors=True)
-    _ROUNDTRIP_DIRS.clear()
+    _COPIES.clear()
+
+
+def _process_copy(sf_dir: str, prefix: str, sub: str,
+                  build: Callable[[str], None]) -> str:
+    """``<scratch_dir(prefix)>/<sub>``, filled by ``build(out)`` once
+    per process and ``sf_dir``."""
+    import atexit
+    import os
+
+    key = (os.path.realpath(sf_dir), prefix)
+    cached = _COPIES.get(key)
+    if cached and os.path.isdir(cached):
+        return cached
+    if not _COPIES:
+        atexit.register(_remove_copies)
+    out = os.path.join(scratch_dir(prefix=prefix), sub)
+    build(out)
+    _COPIES[key] = out
+    return out
 
 
 def _roundtrip_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
     import os
 
     from ..sources.jsonl import write_jsonl_corpus
 
-    key = os.path.realpath(sf_dir)
-    cached = _ROUNDTRIP_DIRS.get(key)
-    if cached and os.path.isdir(cached):
-        return cached
-    work = scratch_dir(prefix="jsonl_roundtrip_")
-    if not _ROUNDTRIP_DIRS:
-        atexit.register(_cleanup_roundtrip_dirs)
-    out = os.path.join(work, "corpus")
-    docs = load_table(spark, sf_dir, "documents")
-    write_jsonl_corpus(
-        docs, out, ["doc_id", "text", "lang", "source", "n_chars"])
-    with open(os.path.join(out, "zz_corrupt.txt"), "w") as f:
-        f.write('{"doc_id": 1, "lang": "en", truncated\n')
-        f.write("not json at all\n")
-    _ROUNDTRIP_DIRS[key] = out
-    return out
+    def build(out: str) -> None:
+        write_jsonl_corpus(load_table(spark, sf_dir, "documents"), out,
+                           ["doc_id", "text", "lang", "source", "n_chars"])
+        with open(os.path.join(out, "zz_corrupt.txt"), "w") as f:
+            f.write('{"doc_id": 1, "lang": "en", truncated\n')
+            f.write("not json at all\n")
+
+    return _process_copy(sf_dir, "jsonl_roundtrip_", "corpus", build)
 
 
 @query(
@@ -586,57 +595,35 @@ def _crawl_to_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("n_decontaminated")))
 
 
-# Staged delimited export of the orders table, one per (process,
-# sf_dir) — same immutable-input caching rationale as
-# `_roundtrip_corpus_dir` above (the export derives only from the
-# parquet at sf_dir; reclaimed at interpreter exit).
-_DELIMITED_DIRS: dict[str, str] = {}
-
-
-def _cleanup_delimited_dirs() -> None:
-    import os
-    import shutil
-
-    for d in _DELIMITED_DIRS.values():
-        shutil.rmtree(os.path.dirname(d), ignore_errors=True)
-    _DELIMITED_DIRS.clear()
-
-
 _ORDERS_CSV_DDL = ("o_orderkey long, o_custkey long, "
                    "o_orderstatus string, o_totalprice double, "
                    "o_orderdate timestamp, o_orderpriority string")
 
 
 def _delimited_orders_dir(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
+    """Pipe-delimited copy of the orders table plus three corrupt rows
+    (`_process_copy`)."""
     import os
 
     from ..sources.delimited import write_delimited
 
-    key = os.path.realpath(sf_dir)
-    cached = _DELIMITED_DIRS.get(key)
-    if cached and os.path.isdir(cached):
-        return cached
-    work = scratch_dir(prefix="csv_ingest_")
-    if not _DELIMITED_DIRS:
-        atexit.register(_cleanup_delimited_dirs)
-    out = os.path.join(work, "orders_feed")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-    # pipe-separated, the classic TPC-H tbl feed shape; no free-text
-    # columns, so no quoting fires and the bytes are deterministic
-    write_delimited(orders, out, sep="|")
-    with open(os.path.join(out, "zz_corrupt.csv"), "w") as f:
-        # wrong field count (2 of 6)
-        f.write("bad|row\n")
-        # unparseable double in o_totalprice
-        f.write("9000000001|1|O|not-a-number|"
-                "1995-01-01T00:00:00.000Z|1-URGENT\n")
-        # unparseable timestamp AND too many fields
-        f.write("9000000002|2|F|123.45|not-a-time|2-HIGH|x|y\n")
-    _DELIMITED_DIRS[key] = out
-    return out
+    def build(out: str) -> None:
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+            "o_orderdate", "o_orderpriority")
+        # pipe-separated, the classic TPC-H tbl feed shape; no free-text
+        # columns, so no quoting fires and the bytes are deterministic
+        write_delimited(orders, out, sep="|")
+        with open(os.path.join(out, "zz_corrupt.csv"), "w") as f:
+            # wrong field count (2 of 6)
+            f.write("bad|row\n")
+            # unparseable double in o_totalprice
+            f.write("9000000001|1|O|not-a-number|"
+                    "1995-01-01T00:00:00.000Z|1-URGENT\n")
+            # unparseable timestamp AND too many fields
+            f.write("9000000002|2|F|123.45|not-a-time|2-HIGH|x|y\n")
+
+    return _process_copy(sf_dir, "csv_ingest_", "orders_feed", build)
 
 
 @query(
@@ -1017,32 +1004,15 @@ def _pdf_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("admitted"))
 
 
-_ORC_DIRS: dict[str, str] = {}
-
-
 def _orc_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Session-cached ORC copy of the documents table (the
-    `_roundtrip_corpus_dir` pattern for the columnar format)."""
-    import atexit
-    import os
-    import shutil
-
+    """ORC copy of the documents table (`_process_copy`)."""
     from ..sources.orc import write_orc_corpus
 
-    key = os.path.realpath(sf_dir)
-    cached = _ORC_DIRS.get(key)
-    if cached and os.path.isdir(cached):
-        return cached
-    work = scratch_dir(prefix="orc_roundtrip_")
-    if not _ORC_DIRS:
-        atexit.register(lambda: [shutil.rmtree(
-            os.path.dirname(d), ignore_errors=True)
-            for d in _ORC_DIRS.values()])
-    out = os.path.join(work, "corpus")
-    write_orc_corpus(load_table(spark, sf_dir, "documents"), out,
-                     ["doc_id", "text", "lang", "source", "n_chars"])
-    _ORC_DIRS[key] = out
-    return out
+    return _process_copy(
+        sf_dir, "orc_roundtrip_", "corpus",
+        lambda out: write_orc_corpus(
+            load_table(spark, sf_dir, "documents"), out,
+            ["doc_id", "text", "lang", "source", "n_chars"]))
 
 
 @query(

@@ -462,7 +462,7 @@ def _streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     table becomes a finite feed of ``_REPLAY_BATCHES`` files
     (batch k = doc_id %% N = k, mtime-ordered so the file source
     replays them in order), drains through
-    ``streaming/streaming_dedup.run_near_dup_dedup`` (availableNow,
+    ``streaming/streaming_dedup.near_dup_dedup_sink`` (availableNow,
     one file per trigger, fresh bucket store/checkpoint per run), and
     the surviving doc_ids must hash-match the oracle's sequential
     unroll of the same suppress-then-append rule. This is the
@@ -471,18 +471,20 @@ def _streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart — extension scope)."""
     import os
 
+    from ..streaming.pipeline import drain
     from ..streaming.streaming_dedup import (
         dedup_survivors,
-        run_near_dup_dedup,
+        near_dup_dedup_sink,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     work = scratch_dir(prefix="stream_dedup_replay_")
     feed = stage_feed(docs, work, "feed", F.col("doc_id") % _REPLAY_BATCHES,
                       _REPLAY_BATCHES)
-    run_near_dup_dedup(open_feed(spark, feed), os.path.join(work, "store"),
-                       os.path.join(work, "out"),
-                       os.path.join(work, "ckpt"))
+    drain(open_feed(spark, feed),
+          near_dup_dedup_sink(os.path.join(work, "store"),
+                              os.path.join(work, "out")),
+          os.path.join(work, "ckpt"), "near-dup dedup")
     # the returned DataFrame lazily reads work/out, so only the
     # now-dead inputs are reclaimed: the feed (a full table copy),
     # the bucket store and the checkpoint (r8 advisory — repeated
@@ -552,32 +554,23 @@ def _dedup_passage_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.col("n_passages"), 6).alias("dup_ratio"))
 
 
-_BAND_INDEX_CACHE: dict[str, str] = {}
-
-
 def _band_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process+dataset) the persisted LSH band index
-    over the HISTORICAL corpus slice (doc_id % 5 != 0)."""
+    """The persisted LSH band index (with cluster state) over the
+    HISTORICAL corpus slice (doc_id % 5 != 0), built once."""
     import os
 
     from ..operators.dedup_index import build_band_index
     from ..operators.lsm import index_ok
 
-    def _ok(p: str) -> bool:
+    return staged_fixture(
+        "band_index", sf_dir,
         # clusters/ required since r14: the streaming ingest fixture
         # clones this index and its sink maintains cluster state, so
         # pre-r14 cached dirs (bands only) must rebuild once
-        return index_ok(p) and os.path.isdir(os.path.join(p, "clusters"))
-
-    cached = _BAND_INDEX_CACHE.get(sf_dir)
-    if cached is None or not _ok(cached):
-        path = fixture_path("band_index", sf_dir)
-        if not _ok(path):
-            hist = load_table(spark, sf_dir, "documents") \
-                .filter(F.col("doc_id") % 5 != 0)
-            build_band_index(hist, path, clusters=True)
-        _BAND_INDEX_CACHE[sf_dir] = path
-    return _BAND_INDEX_CACHE[sf_dir]
+        lambda p: index_ok(p) and os.path.isdir(os.path.join(p, "clusters")),
+        lambda stage: build_band_index(
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 5 != 0), stage, clusters=True))
 
 
 @query(
@@ -790,7 +783,8 @@ def _stream_ingest_paths(spark: SparkSession, sf_dir: str
 
     from ..operators.lsm import (applied_tags, delta_count, index_ok,
                                  publish)
-    from ..streaming.dedup_ingest import run_dedup_ingest
+    from ..streaming.dedup_ingest import dedup_ingest_sink
+    from ..streaming.pipeline import drain
 
     vpath = fixture_path("band_singest", sf_dir) + ".verdicts"
 
@@ -814,9 +808,9 @@ def _stream_ingest_paths(spark: SparkSession, sf_dir: str
             feed_dir = stage_feed(
                 batch, work, "docs",
                 F.when(F.col("doc_id") % 10 == 0, 0).otherwise(1))
-            run_dedup_ingest(open_feed(spark, feed_dir), stage, svpath,
-                             checkpoint=os.path.join(work, "ckpt"),
-                             compact_every=2)
+            drain(open_feed(spark, feed_dir),
+                  dedup_ingest_sink(stage, svpath, compact_every=2),
+                  os.path.join(work, "ckpt"), "dedup ingest")
         # the verdicts swap in by the same double rename as the index
         # (no bulk delete between the renames, so a completeness check
         # never sees them missing while the index looks complete)
@@ -1173,7 +1167,8 @@ def _stream_substring_index_path(spark: SparkSession, sf_dir: str) -> str:
 
     from ..operators.lsm import applied_tags, delta_count, index_ok
     from ..operators.substring_index import build_substring_index
-    from ..streaming.substring_ingest import run_substring_ingest
+    from ..streaming.pipeline import drain
+    from ..streaming.substring_ingest import substring_index_sink
 
     def build(stage: str) -> None:
         docs = load_table(spark, sf_dir, "documents") \
@@ -1184,11 +1179,11 @@ def _stream_substring_index_path(spark: SparkSession, sf_dir: str) -> str:
                    .unionByName(docs.filter(F.col("doc_id") % 10 == 5)
                                 .withColumn("b", F.lit(1))))
         with scratch("substr_ingest_replay_") as work:
-            run_substring_ingest(
-                open_feed(spark, stage_feed(feed_df, work, "docs", "b")),
-                stage, checkpoint=os.path.join(work, "ckpt"),
-                spans_out=os.path.join(work, "spans"),
-                compact_every=2)
+            drain(open_feed(spark, stage_feed(feed_df, work, "docs", "b")),
+                  substring_index_sink(
+                      stage, spans_out=os.path.join(work, "spans"),
+                      compact_every=2),
+                  os.path.join(work, "ckpt"), "substring index ingest")
 
     return staged_fixture(
         "substring_sindex", sf_dir,

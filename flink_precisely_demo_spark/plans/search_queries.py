@@ -446,7 +446,8 @@ def _stream_text_index_path(spark: SparkSession, sf_dir: str) -> str:
 
     from ..operators.lsm import applied_tags, delta_count, index_ok
     from ..operators.text_index import build_text_index
-    from ..streaming.text_index_ingest import run_text_index_ingest
+    from ..streaming.pipeline import drain
+    from ..streaming.text_index_ingest import text_index_sink
 
     def build(stage: str) -> None:
         docs = (load_table(spark, sf_dir, "documents")
@@ -476,9 +477,8 @@ def _stream_text_index_path(spark: SparkSession, sf_dir: str) -> str:
                             F.lit("D").alias("op"), F.lit(1).alias("b"))))
         with scratch("text_index_replay_") as work:
             feed = open_feed(spark, stage_feed(muts, work, "mutations", "b"))
-            run_text_index_ingest(feed, stage,
-                                  checkpoint=os.path.join(work, "ckpt"),
-                                  compact_every=2)
+            drain(feed, text_index_sink(stage, compact_every=2),
+                  os.path.join(work, "ckpt"), "text index ingest")
 
     return staged_fixture(
         "text_sindex", sf_dir,

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame
 
 from ..operators.ann_index import compact_ann_index, upsert_ann_index
 from ..operators.lsm import index_sink, split_mutations
-from .pipeline import drain
 
 
 def ann_upsert_sink(index_path: str, id_col: str = "vec_id",
@@ -41,11 +40,3 @@ def ann_upsert_sink(index_path: str, id_col: str = "vec_id",
     return index_sink(index_path, apply,
                       partial(compact_ann_index, id_col=id_col,
                               vec_col=vec_col), compact_every)
-
-
-def run_ann_upsert(mutations: DataFrame, index_path: str,
-                   checkpoint: str, **kwargs):
-    """Drain a streaming mutation DataFrame into the index
-    (availableNow). Returns the finished StreamingQuery."""
-    return drain(mutations, ann_upsert_sink(index_path, **kwargs),
-                 checkpoint, "ANN upsert")

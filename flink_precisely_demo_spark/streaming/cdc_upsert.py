@@ -38,7 +38,6 @@ from ..operators.lsm import (
     index_sink,
     new_delta,
 )
-from .pipeline import drain
 
 
 def _latest(store: DataFrame) -> DataFrame:
@@ -70,14 +69,6 @@ def cdc_upsert_sink(target_path: str, pk: str,
             flat.write.parquet(f"{stage}/state")
 
     return index_sink(target_path, apply, compact_store, compact_every)
-
-
-def run_cdc_upsert(envelopes: DataFrame, target_path: str, pk: str,
-                   checkpoint: str, **kwargs):
-    """Wire a streaming envelope DataFrame into the upsert sink and
-    drain it (availableNow). Returns the StreamingQuery."""
-    return drain(envelopes, cdc_upsert_sink(target_path, pk, **kwargs),
-                 checkpoint, "CDC upsert")
 
 
 def cdc_current_state(spark: SparkSession, target_path: str) -> DataFrame:

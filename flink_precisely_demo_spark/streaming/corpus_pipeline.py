@@ -163,13 +163,13 @@ def corpus_ingest_sink(band_index_path: str, ann_index_path: str,
             # rationale as the ANN leg below)
             gated = gated.join(spark.read.parquet(ddir),
                                id_col, "left_anti")
+        if gated.isEmpty():
+            return                       # fully-gated-out trigger
         dedup(gated, batch_id)
         # ANN leg inputs come from the PERSISTED verdicts, not the
         # in-memory frame: a retry that died between the dedup append
         # and the ANN upsert replays from identical on-disk state
         vdir = os.path.join(verdicts_path, f"batch={batch_id}")
-        if not os.path.isdir(vdir):
-            return                       # fully-gated-out trigger
         novel = (spark.read.parquet(vdir)
                  .filter(F.col("is_novel")).select(id_col))
         ann(novel.join(emb, id_col), batch_id)

@@ -37,7 +37,6 @@ from ..operators.dedup_index import (
     verdicts_from_edges,
 )
 from ..operators.lsm import index_sink
-from .pipeline import drain
 
 
 def dedup_ingest_sink(index_path: str, verdicts_path: str,
@@ -50,8 +49,6 @@ def dedup_ingest_sink(index_path: str, verdicts_path: str,
     delta, compact every ``compact_every`` published generations."""
 
     def apply(batch_df: DataFrame, batch_id: int, tag: str) -> None:
-        if batch_df.isEmpty():
-            return                       # empty trigger: nothing to apply
         spark = batch_df.sparkSession
         # band the batch ONCE: both the verdict computation and the
         # delta append consume the persisted band rows, so the
@@ -100,12 +97,3 @@ def dedup_ingest_sink(index_path: str, verdicts_path: str,
     return index_sink(index_path, apply,
                       partial(compact_band_index, id_col=id_col),
                       compact_every)
-
-
-def run_dedup_ingest(docs: DataFrame, index_path: str,
-                     verdicts_path: str, checkpoint: str, **kwargs):
-    """Drain a streaming document DataFrame through the ingest sink
-    (availableNow). Returns the finished StreamingQuery."""
-    return drain(docs, dedup_ingest_sink(index_path, verdicts_path,
-                                         **kwargs), checkpoint,
-                 "dedup ingest")

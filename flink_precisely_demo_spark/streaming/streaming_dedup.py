@@ -46,7 +46,6 @@ from ..operators.lsm import (
     index_sink,
     new_delta,
 )
-from .pipeline import drain
 
 BUCKET_SCHEMA = "band_id int, band_key string"
 
@@ -115,14 +114,6 @@ def near_dup_dedup_sink(store_path: str, out_path: str,
                 surv_buckets.unpersist()
 
     return index_sink(store_path, apply, compact_buckets, compact_every)
-
-
-def run_near_dup_dedup(docs: DataFrame, store_path: str, out_path: str,
-                       checkpoint: str, **kwargs):
-    """Drain a streaming document DataFrame through the near-dup
-    dedup sink (availableNow). Returns the StreamingQuery."""
-    return drain(docs, near_dup_dedup_sink(store_path, out_path, **kwargs),
-                 checkpoint, "near-dup dedup")
 
 
 def dedup_survivors(spark: SparkSession, out_path: str) -> DataFrame:

@@ -35,7 +35,6 @@ from ..operators.substring_index import (
     compact_substring_index,
     ingest_substring_spans,
 )
-from .pipeline import drain
 
 
 def substring_index_sink(index_path: str, text_col: str = "text",
@@ -48,8 +47,6 @@ def substring_index_sink(index_path: str, text_col: str = "text",
     ``spans_out/batch=<id>/`` (overwrite per batch — retry-safe)."""
 
     def apply(batch_df: DataFrame, batch_id: int, tag: str) -> None:
-        if batch_df.isEmpty():
-            return                       # empty trigger: nothing to apply
         spark = batch_df.sparkSession
         k = _manifest(index_path)["k"]
         w = sliding_window_hashes(batch_df, text_col, id_col,
@@ -69,11 +66,3 @@ def substring_index_sink(index_path: str, text_col: str = "text",
 
     return index_sink(index_path, apply, compact_substring_index,
                       compact_every)
-
-
-def run_substring_ingest(docs: DataFrame, index_path: str,
-                         checkpoint: str, **kwargs):
-    """Drain a streaming document DataFrame into the index
-    (availableNow). Returns the finished StreamingQuery."""
-    return drain(docs, substring_index_sink(index_path, **kwargs),
-                 checkpoint, "substring index ingest")

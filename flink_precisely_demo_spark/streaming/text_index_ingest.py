@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame
 
 from ..operators.lsm import index_sink, split_mutations
 from ..operators.text_index import compact_text_index, upsert_text_index
-from .pipeline import drain
 
 
 def text_index_sink(index_path: str, text_col: str = "text",
@@ -37,11 +36,3 @@ def text_index_sink(index_path: str, text_col: str = "text",
 
     return index_sink(index_path, apply, compact_text_index,
                       compact_every)
-
-
-def run_text_index_ingest(mutations: DataFrame, index_path: str,
-                          checkpoint: str, **kwargs):
-    """Drain a streaming mutation DataFrame into the index
-    (availableNow). Returns the finished StreamingQuery."""
-    return drain(mutations, text_index_sink(index_path, **kwargs),
-                 checkpoint, "text index ingest")

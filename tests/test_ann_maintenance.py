@@ -236,7 +236,8 @@ def test_streaming_sink_applies_batches(spark, tmp_path):
     """Draining the mutation stream through the foreachBatch sink
     yields the same query results as the direct batch-API upserts."""
     from flink_precisely_demo_spark.streaming.ann_upsert import (
-        run_ann_upsert)
+        ann_upsert_sink)
+    from flink_precisely_demo_spark.streaming.pipeline import drain
 
     emb = load_table(spark, SF, "embeddings")
     direct = _fresh_index(spark, tmp_path, "direct")
@@ -257,7 +258,8 @@ def test_streaming_sink_applies_batches(spark, tmp_path):
     feed = (spark.readStream
             .schema("vec_id long, embedding array<float>, op string")
             .parquet(feed_dir))
-    run_ann_upsert(feed, streamed, checkpoint=str(tmp_path / "ckpt"))
+    drain(feed, ann_upsert_sink(streamed), str(tmp_path / "ckpt"),
+          "ANN upsert")
 
     queries = emb.filter(F.col("vec_id") < 8)
     assert (_result_map(query_ann(spark, streamed, queries, k=3,

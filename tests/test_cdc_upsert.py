@@ -23,8 +23,8 @@ from flink_precisely_demo_spark.sources.parquet import load_table
 from flink_precisely_demo_spark.streaming.cdc_upsert import (
     cdc_current_state,
     cdc_upsert_sink,
-    run_cdc_upsert,
 )
+from flink_precisely_demo_spark.streaming.pipeline import drain
 
 SF = "/root/testdata/sf0.001"
 
@@ -61,7 +61,8 @@ def test_streaming_upsert_converges_to_batch_snapshot(spark, tmp_path):
             .coalesce(1).write.mode("append").text(env_dir)
         stream = decode_envelope(
             spark.readStream.format("text").load(env_dir), PAYLOAD)
-        run_cdc_upsert(stream, store, "SalesOrderId", checkpoint=ckpt)
+        drain(stream, cdc_upsert_sink(store, "SalesOrderId"), ckpt,
+              "CDC upsert")
 
     # each drain ran at least one micro-batch -> multiple generations
     assert delta_count(store) >= 2

@@ -305,16 +305,16 @@ def test_jsonl_roundtrip_corpus_copy_is_session_cached(spark):
 
     fn = QUERIES["jsonl_corpus_roundtrip"]
     r1 = {tuple(r) for r in fn(spark, "/root/testdata/sf0.001").collect()}
-    d1 = dict(cq._ROUNDTRIP_DIRS)
+    d1 = dict(cq._COPIES)
     r2 = {tuple(r) for r in fn(spark, "/root/testdata/sf0.001").collect()}
-    d2 = dict(cq._ROUNDTRIP_DIRS)
+    d2 = dict(cq._COPIES)
     assert r1 == r2
-    key = os.path.realpath("/root/testdata/sf0.001")
+    key = (os.path.realpath(SF), "jsonl_roundtrip_")
     assert d1[key] == d2[key], "second call must reuse the cached copy"
     assert os.path.isdir(d1[key])
     # distinct sf_dirs get distinct copies
     fn(spark, "/root/testdata/sf0.01")
-    assert len(cq._ROUNDTRIP_DIRS) >= 2
+    assert len({k for k in cq._COPIES if k[1] == key[1]}) >= 2
 
 
 def test_jsonl_roundtrip_cleanup_reclaims_whole_temp_tree(tmp_path):
@@ -329,16 +329,16 @@ def test_jsonl_roundtrip_cleanup_reclaims_whole_temp_tree(tmp_path):
     corpus = parent / "corpus"
     corpus.mkdir(parents=True)
     (corpus / "part-0.jsonl").write_text("{}\n")
-    saved = dict(cq._ROUNDTRIP_DIRS)
+    saved = dict(cq._COPIES)
     try:
-        cq._ROUNDTRIP_DIRS.clear()
-        cq._ROUNDTRIP_DIRS["fake"] = str(corpus)
-        cq._cleanup_roundtrip_dirs()
+        cq._COPIES.clear()
+        cq._COPIES[("fake", "jsonl_roundtrip_")] = str(corpus)
+        cq._remove_copies()
         assert not parent.exists(), "mkdtemp parent must be reclaimed"
-        assert not cq._ROUNDTRIP_DIRS
+        assert not cq._COPIES
     finally:
-        cq._ROUNDTRIP_DIRS.clear()
-        cq._ROUNDTRIP_DIRS.update(saved)
+        cq._COPIES.clear()
+        cq._COPIES.update(saved)
 
 
 def test_orc_roundtrip_losslessness_and_pushdown(spark, tmp_path):

@@ -52,7 +52,7 @@ def _ann_case(spark, tmp_path):
             "vec_id", "embedding", F.lit("D").alias("op")),
         observe=lambda: _live_vectors(spark, path, "vec_id",
                                       "embedding").count(),
-        final=final)
+        final=final, empty_delta=False)
 
 
 def _text_case(spark, tmp_path):
@@ -79,7 +79,7 @@ def _text_case(spark, tmp_path):
         first=spark.createDataFrame([(3, "gamma alpha", "U")], schema),
         second=spark.createDataFrame([(2, None, "D")], schema),
         observe=lambda: text_index_stats(spark, path).head()["n_deltas"],
-        final=final)
+        final=final, empty_delta=False)
 
 
 def _substring_case(spark, tmp_path):
@@ -113,7 +113,7 @@ def _substring_case(spark, tmp_path):
         first=docs.filter(F.col("doc_id") % 10 == 0),
         second=docs.filter(F.col("doc_id") % 10 == 5),
         observe=lambda: os.path.isdir(os.path.join(spans_out, "batch=1")),
-        final=final)
+        final=final, empty_delta=True)
 
 
 def _dedup_case(spark, tmp_path):
@@ -139,7 +139,7 @@ def _dedup_case(spark, tmp_path):
         second=first.select((F.col("doc_id") + 1).alias("doc_id"), "text"),
         observe=lambda: sorted(map(tuple, spark.read.parquet(
             os.path.join(vpath, "batch=1")).collect())),
-        final=final)
+        final=final, empty_delta=True)
 
 
 def _cdc_case(spark, tmp_path):
@@ -169,7 +169,8 @@ def _cdc_case(spark, tmp_path):
     return SimpleNamespace(
         path=path, compact=compact_store,
         sink=lambda **kw: cdc_upsert_sink(path, "SalesOrderId", **kw),
-        first=first, second=second, observe=state, final=final)
+        first=first, second=second, observe=state, final=final,
+        empty_delta=True)
 
 
 def _near_dup_case(spark, tmp_path):
@@ -195,7 +196,7 @@ def _near_dup_case(spark, tmp_path):
                                      "doc_id long, text string"),
         observe=lambda: sorted(map(tuple, spark.read.parquet(
             os.path.join(out, "batch=1")).collect())),
-        final=final)
+        final=final, empty_delta=True)
 
 
 @pytest.mark.parametrize("make_case", [_ann_case, _text_case,
@@ -210,7 +211,9 @@ def test_index_sink_contract(spark, tmp_path, make_case):
     compaction keeps the applied record, so a late retry still
     no-ops; a scheduled compaction folds the streamed generations and
     their tags; once a later batch is absorbed, an already-applied
-    batch id is a replaced checkpoint too, not a retry."""
+    batch id is a replaced checkpoint too, not a retry. An empty batch
+    leaves the store readable: it publishes one empty tagged delta,
+    or nothing in a sink whose op count already says it is empty."""
     case = make_case(spark, tmp_path)
     path = case.path
     sink = case.sink()
@@ -234,6 +237,11 @@ def test_index_sink_contract(spark, tmp_path, make_case):
     assert applied_tags(path) >= {"b1", "b2"}
     with pytest.raises(RuntimeError, match="checkpoint does not belong"):
         sink(case.first, 1)              # stale id of a replaced checkpoint
+    sink(spark.createDataFrame([], case.first.schema), 3)
+    assert delta_tags(path) == ({"b3"} if case.empty_delta else set())
+    case.observe()
+    case.compact(spark, path)
+    assert _delta_dirs(path) == []
     case.final()
 
 
@@ -273,12 +281,21 @@ def test_compaction_without_deltas_is_a_no_op(tmp_path):
 def test_protocol_stays_in_lsm():
     """Only operators/lsm.py names the markers, the tag manifest and
     the binding error, and no sink module scans a store directory
-    itself."""
+    itself. Only lsm.write_generation writes a partitioned generation,
+    so no index or sink module probes a frame for rows."""
     pkg = Path(__file__).resolve().parents[1] / "flink_precisely_demo_spark"
     words = ("_INDEX_OK", "_DELTA_OK", '"_TAG"', ".applied.json",
              "checkpoint does not belong")
     sinks = {"cdc_upsert.py", "streaming_dedup.py", "ann_upsert.py",
              "corpus_pipeline.py"}
+    indexes = {f"operators/{m}_index.py"
+               for m in ("ann", "text", "dedup", "substring")}
+    # the corpus pipeline keeps its own probe: a fully gated-out
+    # trigger touches none of its stores
+    no_probe = indexes | {"operators/lsm.py"} | {
+        f"streaming/{m}.py" for m in (
+            "ann_upsert", "text_index_ingest", "substring_ingest",
+            "dedup_ingest", "cdc_upsert", "streaming_dedup")}
     for f in sorted(pkg.rglob("*.py")):
         rel = f.relative_to(pkg).as_posix()
         src = f.read_text()
@@ -287,3 +304,7 @@ def test_protocol_stays_in_lsm():
         if rel.startswith("streaming/") and (
                 f.name in sinks or f.name.endswith("_ingest.py")):
             assert not re.search(r"\blistdir\b", src), rel
+        if rel in no_probe:
+            assert "isEmpty(" not in src, rel
+        if rel in indexes:
+            assert not re.search(r"(?<!Window)\.partitionBy\(", src), rel

@@ -555,9 +555,10 @@ def test_streaming_near_dup_dedup(spark, tmp_path):
     variant the built-in operator cannot express."""
     import os
 
+    from flink_precisely_demo_spark.streaming.pipeline import drain
     from flink_precisely_demo_spark.streaming.streaming_dedup import (
         dedup_survivors,
-        run_near_dup_dedup,
+        near_dup_dedup_sink,
     )
 
     base = ("the quick brown fox jumps over the lazy dog while seventeen "
@@ -592,7 +593,8 @@ def test_streaming_near_dup_dedup(spark, tmp_path):
     src = (spark.readStream.schema("doc_id long, text string")
            .option("maxFilesPerTrigger", 1).json(str(d)))
     store, out = str(tmp_path / "buckets"), str(tmp_path / "out")
-    run_near_dup_dedup(src, store, out, str(tmp_path / "ckpt"))
+    drain(src, near_dup_dedup_sink(store, out), str(tmp_path / "ckpt"),
+          "near-dup dedup")
 
     got = sorted(r["doc_id"] for r in
                  dedup_survivors(spark, out).collect())

@@ -188,6 +188,22 @@ def test_pure_delete_delta_and_empty_updates(spark, tmp_path):
             .collect()} == {1, 3}
 
 
+def test_compact_of_fully_deleted_corpus(spark, tmp_path):
+    """Deleting every document then compacting must leave a readable
+    (empty) index that still serves searches and takes upserts."""
+    path = os.path.join(str(tmp_path), "tiny")
+    build_text_index(spark.createDataFrame(
+        [(1, "alpha beta"), (2, "alpha")], "doc_id long, text string"),
+        path, n_buckets=4)
+    upsert_text_index(spark, path, delete_ids=[1, 2])
+    assert compact_text_index(spark, path) == 1
+    assert search_text_index(spark, path, ("alpha",)).count() == 0
+    upsert_text_index(spark, path, updates=spark.createDataFrame(
+        [(3, "alpha")], "doc_id long, text string"))
+    assert {r["doc_id"] for r in search_text_index(
+        spark, path, ("alpha",)).collect()} == {3}
+
+
 def test_zero_token_docs_carry_corpus_weight(spark, tmp_path):
     """A doc whose text tokenizes to nothing has no postings but
     still counts in N — BM25 idf must see it, exactly as the batch
