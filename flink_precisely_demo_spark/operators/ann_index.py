@@ -60,32 +60,9 @@ from .similarity import (
     _cosine_matrix,
     _global_topk,
     _local_topk,
-    _nearest_cell,
+    assign_cells,
     collect_vectors,
 )
-
-
-def _assign_to_cells(df: DataFrame, cent_mat: np.ndarray,
-                     cell_ids: np.ndarray, id_col: str,
-                     vec_col: str) -> DataFrame:
-    """Map-side nearest-centroid assignment — the shared kernel of
-    the initial build and every later append (one rule, no drift
-    between build-time and upsert-time assignment)."""
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            batch = np.stack(pdf[vec_col].map(
-                lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell_id"] = _nearest_cell(batch, cent_mat, cell_ids)
-            yield out
-
-    return df.select(id_col, vec_col).mapInPandas(
-        kernel,
-        schema=f"{id_col} {id_type}, {vec_col} array<float>, cell_id long")
 
 
 def build_ann_index(corpus: DataFrame, index_path: str, k_cells: int = 8,
@@ -101,8 +78,8 @@ def build_ann_index(corpus: DataFrame, index_path: str, k_cells: int = 8,
         centroids = kmeans_fit(train_df if train_df is not None else corpus,
                                k_cells, max_iter, id_col, vec_col)
         cell_ids, cent_mat = _centroid_arrays(centroids)
-        write_generation(_assign_to_cells(corpus, cent_mat, cell_ids,
-                                          id_col, vec_col),
+        write_generation(assign_cells(corpus, cell_ids, cent_mat,
+                                      id_col, vec_col),
                          f"{stage}/vectors", "cell_id")
         spark.createDataFrame(
             [(int(c), [float(x) for x in v]) for c, v in centroids],
@@ -120,7 +97,7 @@ def upsert_ann_index(spark: SparkSession, index_path: str,
     DataFrame) remove theirs. Returns the generation number.
 
     The update vectors are assigned to cells under the index's
-    EXISTING centroids (``_assign_to_cells`` — the same kernel the
+    EXISTING centroids (``similarity.assign_cells`` — the kernel the
     build used, so there is exactly one assignment rule) and written
     cell-partitioned, so probe-time pruning applies to deltas exactly
     as to the base. Every touched id gets a tombstone stamped with
@@ -144,8 +121,8 @@ def upsert_ann_index(spark: SparkSession, index_path: str,
         if updates is not None:
             touched = updates.select(id_col)
             cell_ids, cent_mat = load_centroids(spark, index_path)
-            write_generation(_assign_to_cells(updates, cent_mat, cell_ids,
-                                              id_col, vec_col),
+            write_generation(assign_cells(updates, cell_ids, cent_mat,
+                                          id_col, vec_col),
                              f"{stage}/vectors", "cell_id")
         write_tombstones(spark, stage, id_col, touched, delete_ids,
                          f"{index_path}/vectors")

@@ -19,16 +19,12 @@ and a fresh session must be able to re-attach the metadata to the
 EXISTING files without rewriting a single byte. That re-attachment is
 ``CREATE TABLE … USING parquet CLUSTERED BY … LOCATION`` over the
 written dir — Spark maps each file back to its bucket from the
-file-name bucket suffix, so the registration is metadata-only (the
-r12 verdict item: on 100 TB, a per-session rewrite would void the
-whole amortize-once argument). A ``_BUCKET_SPEC.json`` sidecar inside
-the dir (underscore-prefixed — invisible to the parquet reader, like
-``_SUCCESS``) records the layout contract: it is written only after a
-complete layout write, so its presence is the marker that the files
-are whole AND carries the (n_buckets, key, sort, schema, fingerprint)
-needed to validate any later fast path — a stale catalog entry over
-reclaimed files, or a caller reusing the name for different data,
-re-lays instead of silently serving wrong bytes (r12 advisory).
+file-name bucket suffix, so the registration is metadata-only (on
+100 TB, a per-session rewrite would void the whole amortize-once
+argument). Where the files live, whether they are complete and which
+source they came from is the caller's fixture's business
+(plans/queries.staged_fixture); this module only writes and
+registers.
 
 The writer repartitions into one task per bucket first so each bucket
 lands in exactly ONE file — with >1 file per bucket Spark must
@@ -42,103 +38,36 @@ the mechanism is Spark's own bucketed-table contract
 
 from __future__ import annotations
 
-import glob
-import json
-import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_SPEC_FILE = "_BUCKET_SPEC.json"
+
+def write_bucketed(df: DataFrame, path: str, n_buckets: int,
+                   key: str) -> None:
+    """Write ``df`` at ``path`` hash-bucketed into ``n_buckets`` on
+    ``key``, one file per bucket sorted by ``key``. Costs one key
+    shuffle (the same one a single un-bucketed join would pay, here
+    paid once) and leaves no catalog entry: ``bucketBy`` writes only
+    through ``saveAsTable``, so a throwaway external entry is dropped
+    again, which keeps the files."""
+    name = f"bkt_write_{uuid.uuid4().hex}"
+    (df.repartition(n_buckets, F.col(key))
+       .write.format("parquet").bucketBy(n_buckets, key).sortBy(key)
+       .option("path", path).saveAsTable(name))
+    df.sparkSession.sql(f"DROP TABLE `{name}`")
 
 
-def _spec_path(path: str) -> str:
-    return os.path.join(path, _SPEC_FILE)
-
-
-def _read_spec(path: str) -> dict | None:
-    try:
-        with open(_spec_path(path)) as f:
-            return json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return None
-
-
-def _layout_valid(path: str, n_buckets: int, key: str, sort: bool,
-                  fingerprint: str | None) -> dict | None:
-    """The written layout at ``path``, if it is complete AND matches
-    the requested contract; None demands a (re)write. Completeness =
-    the sidecar exists (written last) and at least one bucket file is
-    still on disk (a reclaimed tempdir leaves the catalog pointing at
-    nothing)."""
-    spec = _read_spec(path)
-    if spec is None:
-        return None
-    if (spec.get("n_buckets") != n_buckets or spec.get("key") != key
-            or spec.get("sort") != sort
-            or spec.get("fingerprint") != fingerprint):
-        return None
-    if not glob.glob(os.path.join(path, "part-*.parquet")):
-        return None
-    return spec
-
-
-def _register_over_existing(spark: SparkSession, name: str, path: str,
-                            spec: dict) -> None:
-    """Metadata-only re-registration: attach a fresh catalog's entry
-    to the EXISTING bucketed files. Zero data movement — Spark
-    recovers each file's bucket id from the writer's file-name
-    suffix, and the SORTED BY clause re-asserts the per-bucket order
-    the one-file-per-bucket write made trustworthy."""
-    sorted_by = f"SORTED BY (`{spec['key']}`) " if spec["sort"] else ""
+def register_bucketed(spark: SparkSession, name: str, path: str,
+                      schema_ddl: str, n_buckets: int, key: str) -> None:
+    """Metadata-only (re-)registration of the bucketed files at
+    ``path`` as table ``name``, replacing any entry under that name.
+    Zero data movement: Spark recovers each file's bucket id from the
+    writer's file-name suffix, and SORTED BY re-asserts the per-bucket
+    order the one-file-per-bucket write made trustworthy."""
+    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
     spark.sql(
-        f"CREATE TABLE `{name}` ({spec['schema']}) USING parquet "
-        f"CLUSTERED BY (`{spec['key']}`) {sorted_by}"
-        f"INTO {spec['n_buckets']} BUCKETS "
-        f"LOCATION '{path}'")
-
-
-def ensure_bucketed_table(df: DataFrame, name: str, path: str,
-                          n_buckets: int, key: str, sort: bool = True,
-                          fingerprint: str | None = None) -> str:
-    """Materialize ``df`` as an external bucketed (and per-bucket
-    sorted) parquet table at ``path`` — or, when a prior write
-    already laid the matching layout down, re-use it WITHOUT
-    rewriting: same-session calls hit the validated catalog entry,
-    and a fresh session re-registers metadata over the existing
-    files. Returns the table name to ``spark.table()``.
-
-    ``fingerprint`` scopes the layout's identity beyond the physical
-    spec (pass the source dataset id): a caller reusing ``name`` /
-    ``path`` for different data re-lays instead of being served the
-    old bytes. The write costs one key shuffle
-    (``repartition(n_buckets, key)`` — the same shuffle a single
-    un-bucketed join would pay, here paid once)."""
-    spark = df.sparkSession
-    spec = _layout_valid(path, n_buckets, key, sort, fingerprint)
-    if spark.catalog.tableExists(name):
-        if spec is not None:
-            return name
-        # stale entry: files gone, or the contract changed under the
-        # name — never silently serve it
-        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-    elif spec is not None:
-        _register_over_existing(spark, name, path, spec)
-        return name
-    writer = (df.repartition(n_buckets, F.col(key))
-              .write.mode("overwrite").format("parquet")
-              .bucketBy(n_buckets, key))
-    if sort:
-        writer = writer.sortBy(key)
-    writer.option("path", path).saveAsTable(name)
-    with open(_spec_path(path), "w") as f:   # last: marks completeness
-        json.dump({"n_buckets": n_buckets, "key": key, "sort": sort,
-                   "fingerprint": fingerprint,
-                   "schema": df.schema.toDDL()}, f)
-    return name
-
-
-def drop_bucketed_table(spark: SparkSession, name: str) -> None:
-    """Drop the catalog entry (files at ``path`` are external and
-    reclaimed by the caller that owns them)."""
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
+        f"CREATE TABLE `{name}` ({schema_ddl}) USING parquet "
+        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
+        f"INTO {n_buckets} BUCKETS LOCATION '{path}'")

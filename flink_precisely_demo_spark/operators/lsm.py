@@ -15,6 +15,8 @@ Layout of an index at ``<index_path>``:
 
 - the **base**: whatever the index writes plus the ``_INDEX_OK``
   marker. Readers accept only marker-bearing dirs (:func:`index_ok`).
+  A base may carry ``manifest.json``, the index's build parameters
+  (:func:`write_manifest`; the text and substring indexes).
 - ``deltas/delta-NNNNNN-<pid>-<hex>/``: **delta generations**,
   ascending by NNNNNN. Each carries ``_DELTA_OK`` and, for a tagged
   writer, ``_TAG`` (one line). Only marked dirs are generations.
@@ -101,6 +103,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _DELTA_RE = r"delta-(\d{6})-"
+_MANIFEST = "manifest.json"
 
 
 def _nonce() -> str:
@@ -167,6 +170,18 @@ def publish(stage: str, final: str) -> None:
 def index_ok(index_path: str) -> bool:
     """True only for a completely built index (marker present)."""
     return os.path.isfile(os.path.join(index_path, "_INDEX_OK"))
+
+
+def read_manifest(index_path: str) -> dict:
+    """The build parameters an index wrote with :func:`write_manifest`
+    (and every compaction carries forward)."""
+    with open(os.path.join(index_path, _MANIFEST)) as f:
+        return json.load(f)
+
+
+def write_manifest(stage: str, man: dict) -> None:
+    with open(os.path.join(stage, _MANIFEST), "w") as f:
+        json.dump(man, f)
 
 
 def _delta_dirs(index_path: str) -> list[tuple[int, str]]:

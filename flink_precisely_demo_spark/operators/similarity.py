@@ -117,15 +117,17 @@ def _nearest_cell(batch: np.ndarray, cent_mat: np.ndarray,
     return cell_ids[np.argmax(sims, axis=1)]
 
 
-def assign_cells(vectors: DataFrame, centroids: DataFrame,
-                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def assign_cells(vectors: DataFrame, cell_ids: np.ndarray,
+                 cent_mat: np.ndarray, id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
     """IVF cell assignment: nearest centroid by cosine (argmax sim,
-    lowest cell id as tiebreak). The centroid matrix rides inside the
-    kernel closure; assignment is a narrow single-pass map over the
-    corpus — no row inflation, no shuffle (the round-1 form cross
-    joined corpus x centroids and resolved the argmax with a
-    row_number window, shuffling the x-k-inflated corpus)."""
-    cell_ids, cent_mat = collect_vectors(centroids, id_col, vec_col)
+    lowest cell id as tiebreak) against the driver-side centroid
+    arrays (``collect_vectors``). The matrix rides inside the kernel
+    closure; assignment is a narrow single-pass map over the corpus —
+    no row inflation, no shuffle (the round-1 form cross joined
+    corpus x centroids and resolved the argmax with a row_number
+    window, shuffling the x-k-inflated corpus). The ANN index build
+    and every upsert assign with this same kernel."""
     id_type = vectors.schema[id_col].dataType.simpleString()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -56,9 +56,6 @@ No reference counterpart (extension scope, SURVEY.md §2.3).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,20 +66,9 @@ from .lsm import (
     index_ok,
     new_base,
     new_delta,
+    read_manifest,
+    write_manifest,
 )
-
-_MANIFEST = "substring_manifest.json"
-
-
-def _manifest(index_path: str) -> dict:
-    with open(os.path.join(index_path, _MANIFEST)) as f:
-        return json.load(f)
-
-
-def _write_manifest(dest: str, man: dict) -> None:
-    with open(os.path.join(dest, _MANIFEST), "w") as f:
-        json.dump(man, f)
-
 
 def _hash_stats(w: DataFrame, id_col: str) -> DataFrame:
     """Per-hash (df, tot) partials for one generation's window rows."""
@@ -122,7 +108,7 @@ def build_substring_index(corpus: DataFrame, index_path: str,
     with new_base(index_path) as stage:
         _write_gen(sliding_window_hashes(corpus, text_col, id_col, k),
                    id_col, stage)
-        _write_manifest(stage, {"k": k, "id_col": id_col,
+        write_manifest(stage, {"k": k, "id_col": id_col,
                                 "max_df": max_df, "max_occ": max_occ})
 
 
@@ -151,7 +137,7 @@ def append_windows(spark: SparkSession, index_path: str,
     with new_delta(index_path, tag) as (stage, seq):
         if windows is None:
             windows = sliding_window_hashes(batch, text_col, id_col,
-                                            _manifest(index_path)["k"])
+                                            read_manifest(index_path)["k"])
         _write_gen(windows, id_col, stage)
     return seq
 
@@ -178,7 +164,7 @@ def ingest_substring_spans(spark: SparkSession, index_path: str,
 
     if not index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
+    man = read_manifest(index_path)
     k, max_df, max_occ = man["k"], man["max_df"], man["max_occ"]
     if windows is None:
         windows = sliding_window_hashes(batch, text_col, id_col, k)
@@ -225,7 +211,7 @@ def substring_spans_from_index(spark: SparkSession, index_path: str,
     monotonicity argument requires."""
     if not index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
+    man = read_manifest(index_path)
     return spans_from_windows(
         _index_windows(spark, index_path), man["id_col"], man["k"],
         min_len, man["max_df"], man["max_occ"],
@@ -238,7 +224,7 @@ def substring_index_stats(spark: SparkSession,
     n_over_occ, n_deltas) — the numbers a serving deployment alerts
     on (over-cap growth says the corpus needs a longer k or an
     exact-dedup pre-pass on the hot cohorts)."""
-    man = _manifest(index_path)
+    man = read_manifest(index_path)
     st = _index_stats(spark, index_path)
     n_deltas = delta_count(index_path)
     return st.agg(
@@ -264,7 +250,7 @@ def compact_substring_index(spark: SparkSession,
     with new_base(index_path, compact=True) as stage:
         if stage is None:
             return 0
-        man = _manifest(index_path)
+        man = read_manifest(index_path)
         stats = _index_stats(spark, index_path).persist()
         try:
             keep = (stats.filter((F.col("df") <= man["max_df"])
@@ -276,5 +262,5 @@ def compact_substring_index(spark: SparkSession,
             stats.write.mode("overwrite").parquet(f"{stage}/stats")
         finally:
             stats.unpersist()
-        _write_manifest(stage, man)
+        write_manifest(stage, man)
     return folded

@@ -47,8 +47,6 @@ contract re-expressed over plain partitioned parquet.
 
 from __future__ import annotations
 
-import json
-import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,23 +58,13 @@ from .lsm import (
     index_ok,
     new_base,
     new_delta,
+    read_manifest,
     reconcile,
     write_generation,
+    write_manifest,
     write_tombstones,
 )
 from ..functions.text import tokens
-
-_MANIFEST = "text_manifest.json"
-
-
-def _manifest(index_path: str) -> dict:
-    with open(os.path.join(index_path, _MANIFEST)) as f:
-        return json.load(f)
-
-
-def _write_manifest(dest: str, man: dict) -> None:
-    with open(os.path.join(dest, _MANIFEST), "w") as f:
-        json.dump(man, f)
 
 
 def _bucket(term_col, n_buckets: int):
@@ -151,7 +139,7 @@ def build_text_index(corpus: DataFrame, index_path: str,
         posts, docs = _postings(corpus, text_col, id_col, n_buckets,
                                 positions, store_text)
         _write_gen(posts, docs, stage)
-        _write_manifest(stage, {"id_col": id_col, "text_col": text_col,
+        write_manifest(stage, {"id_col": id_col, "text_col": text_col,
                                 "n_buckets": n_buckets,
                                 "positions": positions,
                                 "store_text": store_text})
@@ -171,7 +159,7 @@ def upsert_text_index(spark: SparkSession, index_path: str,
         raise ValueError("upsert_text_index: nothing to apply "
                          "(updates and delete_ids both None)")
     with new_delta(index_path, tag) as (stage, seq):
-        man = _manifest(index_path)
+        man = read_manifest(index_path)
         touched = None
         if updates is not None:
             touched = updates.select(F.col(man["id_col"]).alias("doc_id"))
@@ -221,7 +209,7 @@ def _scored_hits(spark: SparkSession, index_path: str,
     both broadcast into the score."""
     if not index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
+    man = read_manifest(index_path)
     terms = list(terms)
     bks = _term_buckets(spark, terms, man["n_buckets"])
     hits = (_reconcile(spark, index_path, "postings", buckets=bks)
@@ -360,7 +348,7 @@ def _phrase_matches(spark: SparkSession, index_path: str,
     (what snippet generation anchors on)."""
     if not index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
+    man = read_manifest(index_path)
     if not man.get("positions", False):
         raise ValueError(
             "phrase queries need a positional index: rebuild with "
@@ -414,7 +402,7 @@ def search_text_index_snippets(spark: SparkSession, index_path: str,
     position intersects) plus ONE doc-keyed join of the match set
     against stored docs rows and a pure-JVM tokenize/slice/join —
     match-set-sized, not corpus-sized."""
-    man = _manifest(index_path)
+    man = read_manifest(index_path)
     if not man.get("store_text", False):
         raise ValueError(
             "snippets need stored text: rebuild with "
@@ -484,5 +472,5 @@ def compact_text_index(spark: SparkSession, index_path: str) -> int:
             return 0
         _write_gen(_reconcile(spark, index_path, "postings"),
                    _reconcile(spark, index_path, "docs"), stage)
-        _write_manifest(stage, _manifest(index_path))
+        write_manifest(stage, read_manifest(index_path))
     return folded

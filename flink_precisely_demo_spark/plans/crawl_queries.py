@@ -24,7 +24,7 @@ No counterpart in the reference (extension scope, SURVEY.md §2.3).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -47,7 +47,7 @@ from .dedup_queries import minhash_bands_ctes as _bands_ctes_from
 from .dedup_queries import substr_contam_ids_ctes as _contam_ctes
 from .queries import query, staged_fixture
 from .text_queries import _lang_case_sql, _marker_count, _TOKS, canonical_sql
-from ..scratch import scratch, scratch_dir
+from ..scratch import scratch
 from ..streaming.replay_stage import open_feed, stage_feed
 
 # The held-out benchmark split for the decontamination gates (batch
@@ -362,53 +362,12 @@ def _robots_txt_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("score") % 2 == 1).alias("allowed"))
 
 
-# One copy of a derived test input per (process, sf_dir, kind), not
-# per invocation: the r8 temp-leak fix collected the rollup and
-# deleted the copy each call, which charged every invocation a full
-# corpus write (r9 perf advisory — 0.5 s at sf0.1, twice per bench).
-# A copy is immutable input, so it is written once, reused by every
-# later call, and reclaimed at interpreter exit (the WHOLE mkdtemp
-# tree, not just the copy's subdirectory — r10 advisory). The cache
-# keys on the realpath of sf_dir, deliberately: a copy derives only
-# from the parquet at that path, so it survives Spark-session
-# restarts in long-lived processes; the one unsupported pattern is
-# REWRITING the parquet at an already-cached path within one
-# process, which no runner here does (the sweep runner uses fresh
-# paths per scale point).
-_COPIES: dict[tuple[str, str], str] = {}
-
-
-def _remove_copies() -> None:
-    import os
-    import shutil
-
-    for d in _COPIES.values():
-        shutil.rmtree(os.path.dirname(d), ignore_errors=True)
-    _COPIES.clear()
-
-
-def _process_copy(sf_dir: str, prefix: str, sub: str,
-                  build: Callable[[str], None]) -> str:
-    """``<scratch_dir(prefix)>/<sub>``, filled by ``build(out)`` once
-    per process and ``sf_dir``."""
-    import atexit
-    import os
-
-    key = (os.path.realpath(sf_dir), prefix)
-    cached = _COPIES.get(key)
-    if cached and os.path.isdir(cached):
-        return cached
-    if not _COPIES:
-        atexit.register(_remove_copies)
-    out = os.path.join(scratch_dir(prefix=prefix), sub)
-    build(out)
-    _COPIES[key] = out
-    return out
-
-
 def _roundtrip_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
+    """JSONL copy of the documents table plus two corrupt lines (a
+    staged fixture)."""
     import os
 
+    from ..operators.lsm import index_ok
     from ..sources.jsonl import write_jsonl_corpus
 
     def build(out: str) -> None:
@@ -418,7 +377,7 @@ def _roundtrip_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
             f.write('{"doc_id": 1, "lang": "en", truncated\n')
             f.write("not json at all\n")
 
-    return _process_copy(sf_dir, "jsonl_roundtrip_", "corpus", build)
+    return staged_fixture("jsonl_corpus", sf_dir, index_ok, build)
 
 
 @query(
@@ -445,7 +404,7 @@ def _jsonl_corpus_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarantine row with their raw text captured, not as a job abort
     — the per-row poison contract a 1000-executor ingest needs.
     Scan-stage only until one groupBy(lang) shuffle; the corpus copy
-    is a session-cached input (see `_roundtrip_corpus_dir`), so the
+    is a build-once input (see `_roundtrip_corpus_dir`), so the
     rollup folds straight into the read-back scan with no extra
     materialization or per-call write."""
     from ..sources.jsonl import CORRUPT_COL, read_jsonl_corpus
@@ -602,9 +561,10 @@ _ORDERS_CSV_DDL = ("o_orderkey long, o_custkey long, "
 
 def _delimited_orders_dir(spark: SparkSession, sf_dir: str) -> str:
     """Pipe-delimited copy of the orders table plus three corrupt rows
-    (`_process_copy`)."""
+    (a staged fixture)."""
     import os
 
+    from ..operators.lsm import index_ok
     from ..sources.delimited import write_delimited
 
     def build(out: str) -> None:
@@ -623,7 +583,7 @@ def _delimited_orders_dir(spark: SparkSession, sf_dir: str) -> str:
             # unparseable timestamp AND too many fields
             f.write("9000000002|2|F|123.45|not-a-time|2-HIGH|x|y\n")
 
-    return _process_copy(sf_dir, "csv_ingest_", "orders_feed", build)
+    return staged_fixture("csv_orders", sf_dir, index_ok, build)
 
 
 @query(
@@ -1005,11 +965,12 @@ def _pdf_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _orc_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
-    """ORC copy of the documents table (`_process_copy`)."""
+    """ORC copy of the documents table (a staged fixture)."""
+    from ..operators.lsm import index_ok
     from ..sources.orc import write_orc_corpus
 
-    return _process_copy(
-        sf_dir, "orc_roundtrip_", "corpus",
+    return staged_fixture(
+        "orc_corpus", sf_dir, index_ok,
         lambda out: write_orc_corpus(
             load_table(spark, sf_dir, "documents"), out,
             ["doc_id", "text", "lang", "source", "n_chars"]))
@@ -1039,7 +1000,7 @@ def _orc_corpus_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-measures the text AFTER the roundtrip).
 
     Scale: columnar scan-stage until one groupBy(lang) shuffle; the
-    ORC copy is a session-cached input."""
+    ORC copy is a build-once input."""
     from ..sources.orc import read_orc_corpus
 
     out = _orc_corpus_dir(spark, sf_dir)

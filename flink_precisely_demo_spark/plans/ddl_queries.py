@@ -16,13 +16,11 @@ whole DDL -> insert -> scan round trip, not just the SELECT.
 
 from __future__ import annotations
 
-import os
 import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .queries import query
+from .queries import fixture_path, query
 
 
 def _slug(sf_dir: str) -> str:
@@ -44,7 +42,7 @@ def _slug(sf_dir: str) -> str:
 def _ddl_entry_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"ddl_orders_{_slug(sf_dir)}"
     sink = f"ddl_priority_sink_{_slug(sf_dir)}"
-    sink_loc = os.path.join(tempfile.gettempdir(), f"{sink}_data")
+    sink_loc = fixture_path("ddl_priority_sink", sf_dir)
     spark.sql(f"DROP TABLE IF EXISTS {src}")
     spark.sql(f"""
         CREATE TABLE {src}

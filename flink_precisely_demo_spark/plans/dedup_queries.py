@@ -19,7 +19,7 @@ from ..operators.dedup import (
     simhash_fingerprint,
     simhash_near_dup_pairs,
 )
-from ..scratch import scratch, scratch_dir
+from ..scratch import scratch
 from ..sources.parquet import load_table
 from ..streaming.replay_stage import open_feed, stage_feed
 from .queries import fixture_path, query, staged_fixture
@@ -471,24 +471,23 @@ def _streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart — extension scope)."""
     import os
 
-    from ..streaming.pipeline import drain
+    from ..streaming.pipeline import drain, replay_dir
     from ..streaming.streaming_dedup import (
         dedup_survivors,
         near_dup_dedup_sink,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = scratch_dir(prefix="stream_dedup_replay_")
+    work = replay_dir("stream_dedup")
     feed = stage_feed(docs, work, "feed", F.col("doc_id") % _REPLAY_BATCHES,
                       _REPLAY_BATCHES)
     drain(open_feed(spark, feed),
           near_dup_dedup_sink(os.path.join(work, "store"),
                               os.path.join(work, "out")),
           os.path.join(work, "ckpt"), "near-dup dedup")
-    # the returned DataFrame lazily reads work/out, so only the
-    # now-dead inputs are reclaimed: the feed (a full table copy),
-    # the bucket store and the checkpoint (r8 advisory — repeated
-    # bench/sweep invocations leaked multi-GB temp copies at sf10)
+    # the returned DataFrame lazily reads work/out, which lives until
+    # this label's next replay; the now-dead inputs go at once: the
+    # feed (a full table copy), the bucket store and the checkpoint
     import shutil
     for sub in ("feed", "store", "ckpt"):
         shutil.rmtree(os.path.join(work, sub), ignore_errors=True)

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet import load_table
-from .queries import query
+from .queries import query, staged_fixture
 
 _BITS = 16          # per-dimension key width; z fits in 32 bits
 _N_FILES = 16
@@ -152,32 +152,42 @@ def _zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_BUCKETS = 8
 
 
-def bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Per-process bucketed twins of orders and lineitem, hashed into
-    the same 8 buckets on the join key. Name/path carry the pid so
-    concurrent processes never fight over files; within a session the
-    catalog check makes this a one-time layout cost."""
+def _bucketed_twin(spark: SparkSession, sf_dir: str, tbl: str, key: str,
+                   cols: list[str]) -> str:
+    """Catalog name of ``tbl``'s bucketed twin (``cols``, 8 buckets on
+    ``key``). Its files are the staged fixture ``bkt_<tbl>``, shared
+    across processes; the table is registered over them once per
+    session, and again after this process rebuilt them. The name is
+    the fixture dir's, so an entry under it points at the fixture."""
     import os
     import re
-    import tempfile
 
-    from ..operators.bucketed import ensure_bucketed_table
+    from ..operators.bucketed import register_bucketed, write_bucketed
+    from ..operators.lsm import index_ok
 
-    slug = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-    pid = os.getpid()
-    names = []
-    for tbl, key, cols in (
-            ("orders", "o_orderkey",
-             ["o_orderkey", "o_orderpriority"]),
-            ("lineitem", "l_orderkey",
-             ["l_orderkey", "l_extendedprice", "l_discount"])):
-        name = f"bkt_{tbl}_{slug}_{pid}"
-        path = os.path.join(tempfile.gettempdir(), name)
-        ensure_bucketed_table(load_table(spark, sf_dir, tbl).select(cols),
-                              name, path, _N_BUCKETS, key,
-                              fingerprint=f"{sf_dir}:{tbl}")
-        names.append(name)
-    return names[0], names[1]
+    df = load_table(spark, sf_dir, tbl).select(cols)
+    built = []
+
+    def build(stage: str) -> None:
+        write_bucketed(df, stage, _N_BUCKETS, key)
+        built.append(stage)
+
+    path = staged_fixture(f"bkt_{tbl}", sf_dir, index_ok, build)
+    name = re.sub(r"\W", "_", os.path.basename(path))
+    if built or not spark.catalog.tableExists(name):
+        register_bucketed(spark, name, path, df.schema.toDDL(),
+                          _N_BUCKETS, key)
+    return name
+
+
+def bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Bucketed twins of orders and lineitem, hashed into the same 8
+    buckets on the join key."""
+    return (_bucketed_twin(spark, sf_dir, "orders", "o_orderkey",
+                           ["o_orderkey", "o_orderpriority"]),
+            _bucketed_twin(spark, sf_dir, "lineitem", "l_orderkey",
+                           ["l_orderkey", "l_extendedprice",
+                            "l_discount"]))
 
 
 @query(

@@ -21,6 +21,8 @@ just as much — distributed double addition is order-dependent):
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
 import re
 import tempfile
@@ -40,7 +42,7 @@ from ..functions.text import (
     tokens,
 )
 from ..operators.enrichment_join import enrich, latest_per_key
-from ..operators.lsm import new_base
+from ..operators.lsm import index_ok, new_base
 from ..operators.windowed_agg import avg_exact, sum_exact, tumbling_window_agg
 from ..sources.cdc_json import decode_envelope, flatten_after_image, synthesize_orders_envelope
 from ..sources.parquet import load_table
@@ -61,33 +63,54 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-_FIXTURES: dict[tuple[str, str], str] = {}
+_FIXTURES: set[str] = set()
+
+
+def _source_digest(sf_dir: str) -> str:
+    """Digest of the relative path, size and mtime_ns of every file
+    under each ``*.parquet`` in ``sf_dir``: a rewritten table changes
+    it, a re-read of the same bytes does not."""
+    h = hashlib.sha1()
+    for table in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        files = [table] if os.path.isfile(table) else sorted(
+            os.path.join(root, f)
+            for root, _, names in os.walk(table) for f in names)
+        for f in files:
+            st = os.stat(f)
+            h.update(f"{os.path.relpath(f, sf_dir)}\0{st.st_size}\0"
+                     f"{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:12]
 
 
 def fixture_path(name: str, sf_dir: str) -> str:
-    """``<tmp>/<name>_<sf_dir slug>``: where the build-once fixture
-    ``name`` of dataset ``sf_dir`` lives, shared across processes."""
+    """``<tmp>/<name>_<sf_dir slug>_<source digest>``: where the
+    build-once fixture ``name`` of dataset ``sf_dir`` lives, shared
+    across processes. The digest keys the path by the source's
+    content, so a fixture (with its deltas and companions) built from
+    other bytes is never served."""
     slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
-    return os.path.join(tempfile.gettempdir(), f"{name}_{slug}")
+    return os.path.join(tempfile.gettempdir(),
+                        f"{name}_{slug}_{_source_digest(sf_dir)}")
 
 
 def staged_fixture(name: str, sf_dir: str,
                    complete: Callable[[str], bool],
                    build: Callable[[str], None]) -> str:
-    """Path of the build-once index fixture ``name`` for ``sf_dir``
-    (memoized per process). A dir for which ``complete(path)`` holds
-    is reused; otherwise ``build(stage)`` fills one staged new base
-    that publishes atomically (operators/lsm.new_base), so a
-    concurrent process never sees a half-built fixture and a crashed
-    build leaves only a reapable stage."""
-    key = (name, sf_dir)
-    if key not in _FIXTURES:
-        path = fixture_path(name, sf_dir)
+    """Path of the build-once fixture ``name`` for ``sf_dir``: the one
+    way a query materializes a derived dataset that outlives a call.
+    A dir for which ``complete(path)`` holds is reused; otherwise
+    ``build(stage)`` fills one staged new base that publishes
+    atomically (operators/lsm.new_base), so a concurrent process never
+    sees a half-built fixture and a crashed build leaves only a
+    reapable stage. A per-process memo skips ``complete``, but only
+    while the published dir is still there."""
+    path = fixture_path(name, sf_dir)
+    if not (path in _FIXTURES and index_ok(path)):
         if not complete(path):
             with new_base(path) as stage:
                 build(stage)
-        _FIXTURES[key] = path
-    return _FIXTURES[key]
+        _FIXTURES.add(path)
+    return path
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -272,16 +272,16 @@ def _text_index_path(spark: SparkSession, sf_dir: str) -> str:
     delta (updates % 12 == 1 with re-defined text + adds % 6 == 3 +
     deletes % 12 == 2, tag u1) left unfolded — so the served queries
     reconcile base + tombstoned delta state, not a fresh build."""
-    from ..operators.lsm import applied_tags, index_ok
-    from ..operators.text_index import (_manifest, build_text_index,
+    from ..operators.lsm import applied_tags, index_ok, read_manifest
+    from ..operators.text_index import (build_text_index,
                                         compact_text_index,
                                         upsert_text_index)
 
     def complete(path: str) -> bool:
         return (index_ok(path)
                 and applied_tags(path) >= {"u0", "u1"}
-                and _manifest(path).get("positions", False)
-                and _manifest(path).get("store_text", False))
+                and read_manifest(path).get("positions", False)
+                and read_manifest(path).get("store_text", False))
 
     def build(stage: str) -> None:
         docs = (load_table(spark, sf_dir, "documents")

@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import assign_cells, brute_force_topk, ivf_topk
+from ..operators.similarity import (assign_cells, brute_force_topk,
+                                   collect_vectors, ivf_topk)
 from ..sources.parquet import load_table
 from .queries import query
 
@@ -86,7 +87,7 @@ def _similarity_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the ANN index (cell sizes are what balance the scale-out)."""
     emb = load_table(spark, sf_dir, "embeddings")
     cent = emb.filter(F.col("vec_id") < _N_CENTROIDS)
-    cells = assign_cells(emb, cent)
+    cells = assign_cells(emb, *collect_vectors(cent))
     return cells.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_vectors"))
 
 

@@ -27,6 +27,9 @@ window end are dropped, state evicted.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -108,19 +111,30 @@ def run_to_memory(df: DataFrame, name: str, spark: SparkSession,
     return spark.sql(f"SELECT * FROM {name}")
 
 
-# Parquet drain output dirs, one live dir per call-site label: a
-# label's next drain reclaims its previous dir (bench runs each
-# replay twice), and whatever is live at interpreter exit is removed
-# by the atexit hook — the crawl-queries temp-reclaim pattern.
+# One live replay dir per call-site label: a label's next call
+# reclaims its previous dir (bench runs each replay twice), and
+# whatever is live at interpreter exit is removed.
 _REPLAY_DRAIN_DIRS: dict[str, str] = {}
 
 
 def _cleanup_replay_drain_dirs() -> None:
-    import shutil
-
     for d in _REPLAY_DRAIN_DIRS.values():
         shutil.rmtree(d, ignore_errors=True)
     _REPLAY_DRAIN_DIRS.clear()
+
+
+atexit.register(_cleanup_replay_drain_dirs)
+
+
+def replay_dir(label: str) -> str:
+    """A fresh scratch dir for ``label`` that outlives the call, for a
+    replay whose returned DataFrame reads it lazily; it is removed on
+    ``label``'s next call and at interpreter exit."""
+    old = _REPLAY_DRAIN_DIRS.pop(label, None)
+    if old:
+        shutil.rmtree(old, ignore_errors=True)
+    _REPLAY_DRAIN_DIRS[label] = scratch_dir(prefix=f"replay_{label}_")
+    return _REPLAY_DRAIN_DIRS[label]
 
 
 def replay_to_parquet(df: DataFrame, spark: SparkSession, label: str,
@@ -145,17 +159,7 @@ def replay_to_parquet(df: DataFrame, spark: SparkSession, label: str,
     The read-back uses the stream's own schema, so a zero-row drain
     returns an empty DataFrame instead of failing schema inference.
     """
-    import atexit
-    import shutil
-
-    old = _REPLAY_DRAIN_DIRS.pop(label, None)
-    if old:
-        shutil.rmtree(old, ignore_errors=True)
-    if not _REPLAY_DRAIN_DIRS:
-        atexit.register(_cleanup_replay_drain_dirs)
-    out = scratch_dir(prefix=f"replay_drain_{label}_")
-    _REPLAY_DRAIN_DIRS[label] = out
-
+    out = replay_dir(label)
     drain(df, lambda batch, _id: batch.write.mode("append").parquet(out),
           checkpoint, label, timeout, output_mode)
     return spark.read.schema(df.schema).parquet(out)

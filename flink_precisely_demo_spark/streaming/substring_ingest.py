@@ -28,9 +28,8 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.dedup import sliding_window_hashes
-from ..operators.lsm import index_sink
+from ..operators.lsm import index_sink, read_manifest
 from ..operators.substring_index import (
-    _manifest,
     append_windows,
     compact_substring_index,
     ingest_substring_spans,
@@ -48,7 +47,7 @@ def substring_index_sink(index_path: str, text_col: str = "text",
 
     def apply(batch_df: DataFrame, batch_id: int, tag: str) -> None:
         spark = batch_df.sparkSession
-        k = _manifest(index_path)["k"]
+        k = read_manifest(index_path)["k"]
         w = sliding_window_hashes(batch_df, text_col, id_col,
                                   k).persist()
         try:

@@ -17,28 +17,39 @@ derived sf_dir whose documents table is deterministically sliced
 construction, so the FULL hash compare applies, just on bounded
 input. The artifact says exactly which pairs got which check.
 
-RESUMABLE (r11 verdict item 1: two 2h-budget overruns voided a full
-sf10 pass each time): every completed entry is checkpointed to a
-JSONL progress file AS IT FINISHES; a rerun with --resume carries
-those results over and only runs what is missing (failed/errored
-entries always re-run — resume must not fossilize a red row). A
-budget overrun now costs the tail, not the whole pass.
+One invocation sweeps one or several scale points, each in its own
+child process, and merges the per-entry outcomes into one
+SWEEP_r{N}.json keyed by entry -> {sf: status}, plus the per-SF
+summaries.
 
-Usage: python scripts/sweep_scale.py [sf_dir] [max_rows]
-                                     [--progress PATH] [--resume]
-Prints one JSON line; full per-pair detail to stderr.
+RESUMABLE (two 2h-budget overruns once voided a full sf10 pass each
+time): every completed entry is checkpointed to
+SWEEP_r{N}_{label}.progress.jsonl AS IT FINISHES, and a rerun
+carries those results over and only runs what is missing
+(failed/errored entries always re-run — resume must not fossilize a
+red row). A budget overrun now costs the tail of one scale point,
+not the whole pass. Delete a progress file to force a fresh run of
+that scale point.
+
+Usage: python scripts/sweep_scale.py <round> <sf_dir> [<sf_dir> ...]
+e.g.:  python scripts/sweep_scale.py 9 /tmp/sf1 /tmp/sf10
+Per-pair detail goes to stderr.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tests"))
+HERE = os.path.dirname(os.path.abspath(__file__))
+# pairs whose Spark output has more rows get the digest compare
+MAX_ROWS = 3_000_000
+
+sys.path.insert(0, os.path.join(HERE, ".."))
+sys.path.insert(0, os.path.join(HERE, "..", "tests"))
 
 
 def _bucket(status: str) -> str:
@@ -56,12 +67,12 @@ def _bucket(status: str) -> str:
     return "failed"
 
 
-def _load_progress(path: str | None, resume: bool) -> dict[str, dict]:
+def _load_progress(path: str) -> dict[str, dict]:
     """Completed entries from a prior run. Failed/errored rows are
     dropped so they re-run: resume continues a pass, it never
     launders a red row into the merged artifact."""
     carried: dict[str, dict] = {}
-    if not (resume and path and os.path.exists(path)):
+    if not os.path.exists(path):
         return carried
     with open(path) as f:
         for line in f:
@@ -76,22 +87,60 @@ def _load_progress(path: str | None, resume: bool) -> dict[str, dict]:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("sf_dir", nargs="?", default="/tmp/sf10")
-    ap.add_argument("max_rows", nargs="?", type=int, default=3_000_000)
-    ap.add_argument("--progress", default=None,
-                    help="per-entry checkpoint JSONL (appended as "
-                         "entries finish)")
-    ap.add_argument("--resume", action="store_true",
-                    help="carry over non-failed entries already in "
-                         "--progress instead of re-running them")
-    args = ap.parse_args()
-    sf_dir, max_rows = args.sf_dir, args.max_rows
+    args = sys.argv[1:]
+    if args[:1] == ["--point"]:
+        sweep_point(args[1], args[2])
+        return
+    if len(args) < 2:
+        sys.exit("usage: sweep_scale.py <round> <sf_dir> [<sf_dir> ...]")
+    rnd, sf_dirs = args[0], args[1:]
 
-    carried = _load_progress(args.progress, args.resume)
+    per_sf: dict[str, dict] = {}
+    entries: dict[str, dict] = {}
+    failed_any = False
+    for sf_dir in sf_dirs:
+        label = os.path.basename(sf_dir.rstrip("/"))
+        progress = os.path.join(
+            HERE, "..", f"SWEEP_r{rnd}_{label}.progress.jsonl")
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--point", sf_dir,
+             progress],
+            capture_output=True, text=True, check=False)
+        sys.stderr.write(proc.stderr)
+        lines = [ln for ln in proc.stdout.splitlines()
+                 if ln.startswith("{")]
+        if not lines:
+            # the child crashed before printing its JSON line: surface
+            # ITS diagnosis. The progress file keeps what completed.
+            sys.stderr.write(
+                f"the sweep of {sf_dir} produced no JSON "
+                f"(rc={proc.returncode}); stderr above is the real "
+                f"failure. Completed entries are checkpointed in "
+                f"{os.path.normpath(progress)} — rerun to resume.\n")
+            sys.exit(proc.returncode or 1)
+        res = json.loads(lines[-1])
+        detail = res.pop("detail", {})
+        per_sf[label] = res
+        failed_any = failed_any or res["n_failed"] > 0
+        for name, d in detail.items():
+            entries.setdefault(name, {})[label] = d["status"]
+
+    out = {"round": rnd, "scale_points": list(per_sf),
+           "summaries": per_sf, "entries": entries}
+    path = os.path.join(HERE, "..", f"SWEEP_r{rnd}.json")
+    with open(path, "w") as f:
+        json.dump(out, f, indent=1, sort_keys=True)
+    print(f"wrote {os.path.normpath(path)}; failed_any={failed_any}")
+    sys.exit(1 if failed_any else 0)
+
+
+def sweep_point(sf_dir: str, progress: str) -> None:
+    """Sweep every pair at ``sf_dir`` (resuming from ``progress``) and
+    print one JSON line with the summary and per-pair detail."""
+    carried = _load_progress(progress)
     if carried:
         print(f"# resume: carrying {len(carried)} completed entries "
-              f"from {args.progress}", file=sys.stderr, flush=True)
+              f"from {progress}", file=sys.stderr, flush=True)
 
     import __spark_entry__ as m
     from oracle_check import compare, digest_compare, duckdb_con
@@ -129,8 +178,8 @@ def main() -> None:
         tag = " (resumed)" if from_cache else ""
         print(f"# {name}: {status} [{sec:.1f}s]{tag}",
               file=sys.stderr, flush=True)
-        if args.progress and not from_cache:
-            with open(args.progress, "a") as f:
+        if not from_cache:
+            with open(progress, "a") as f:
                 f.write(json.dumps(
                     {"name": name, "status": status, "sec": sec}) + "\n")
                 f.flush()
@@ -157,7 +206,7 @@ def main() -> None:
             n_spark = df.count()
             if sql is None:
                 status = "no-oracle"
-            elif n_spark > max_rows:
+            elif n_spark > MAX_ROWS:
                 # the digest row carries row_cnt, so one aggregate
                 # pass per engine covers count AND values — no
                 # separate COUNT round trip over a billion-pair join
@@ -180,7 +229,7 @@ def main() -> None:
 
     print(json.dumps({
         "sf_dir": sf_dir,
-        "max_rows_for_full_compare": max_rows,
+        "max_rows_for_full_compare": MAX_ROWS,
         "n_full_hash_match": len(buckets["full"]),
         "n_digest_match": len(buckets["digest"]),
         "n_full_bounded_docs": len(buckets["bounded"]),

@@ -295,10 +295,10 @@ def test_one_profiler_source_guard():
     assert owners == ["bench.py"]
 
     scripts = os.path.join(_ROOT, "scripts")
-    for gone in ("profile_queries.py", "explain_query.py"):
+    for gone in ("profile_queries.py", "explain_query.py",
+                 "scale_trajectory.py"):
         assert not os.path.exists(os.path.join(scripts, gone))
-    for name in ("check_and_time.py", "scale_trajectory.py",
-                 "serving_bench.py"):
+    for name in ("check_and_time.py", "serving_bench.py"):
         with open(os.path.join(scripts, name)) as f:
             tree = ast.parse(f.read())
         assert any(isinstance(n, ast.ImportFrom) and n.module == "bench"

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_precisely_demo_spark.plans.layout_queries import bucketed_pair
+from flink_precisely_demo_spark.plans.queries import fixture_path
 from flink_precisely_demo_spark.sources.parquet import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -69,27 +70,21 @@ def _inventory(path):
 
 
 def test_cold_catalog_reregisters_without_rewrite(spark, no_broadcast):
-    """The 100 TB amortize-once contract (r12 verdict item 3): a
-    session whose catalog does NOT know the table — simulated by
-    dropping the external entry, which is exactly the state a fresh
-    metastore-less session starts in — must re-attach metadata over
-    the EXISTING bucketed files (CREATE TABLE … CLUSTERED BY …
-    LOCATION) and still get the zero-join-exchange plan, with the
-    file inventory (names, mtimes, sizes) untouched."""
-    import os
-    import tempfile
-
-    from flink_precisely_demo_spark.operators.bucketed import (
-        drop_bucketed_table)
-
+    """The 100 TB amortize-once contract: a session whose catalog does
+    NOT know the table — simulated by dropping the external entry,
+    which is exactly the state a fresh metastore-less session starts
+    in — must re-attach metadata over the EXISTING bucketed files
+    (CREATE TABLE … CLUSTERED BY … LOCATION) and still get the
+    zero-join-exchange plan, with the file inventory (names, mtimes,
+    sizes) untouched."""
     o_name, l_name = bucketed_pair(spark, SF)
-    o_path = os.path.join(tempfile.gettempdir(), o_name)
-    l_path = os.path.join(tempfile.gettempdir(), l_name)
+    o_path = fixture_path("bkt_orders", SF)
+    l_path = fixture_path("bkt_lineitem", SF)
     inv_before = _inventory(o_path), _inventory(l_path)
     assert inv_before[0] and inv_before[1]
 
-    drop_bucketed_table(spark, o_name)        # cold catalog
-    drop_bucketed_table(spark, l_name)
+    spark.sql(f"DROP TABLE `{o_name}`")        # cold catalog
+    spark.sql(f"DROP TABLE `{l_name}`")
     assert not spark.catalog.tableExists(o_name)
     assert _inventory(o_path) == inv_before[0]  # DROP left the files
 
@@ -110,37 +105,42 @@ def test_cold_catalog_reregisters_without_rewrite(spark, no_broadcast):
         sorted(map(tuple, want.collect()))
 
 
-def test_stale_catalog_entry_is_not_served(spark):
+def test_stale_catalog_entry_is_not_served(spark, tmp_path):
     """A catalog entry whose files were reclaimed (tempdir cleanup)
-    or whose requested contract changed must trigger a re-lay, not
-    silently serve the stale table (r12 advisory)."""
+    is re-laid, not served; a rewritten source lays new twins under
+    a new name instead of serving the old bytes."""
     import os
     import shutil
-    import tempfile
 
-    from flink_precisely_demo_spark.operators.bucketed import (
-        ensure_bucketed_table)
-
-    df = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_orderpriority")
-    name = "bkt_stale_probe"
-    path = os.path.join(tempfile.gettempdir(), f"bkt_stale_{os.getpid()}")
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for t in ("orders", "lineitem"):
+        shutil.copy(f"{SF}/{t}.parquet", f"{sf}/{t}.parquet")
+    n_orders = load_table(spark, sf, "orders").count()
+    names, paths = [], []
     try:
-        ensure_bucketed_table(df, name, path, 4, "o_orderkey",
-                              fingerprint="v1")
-        assert spark.catalog.tableExists(name)
-        shutil.rmtree(path)                   # files reclaimed
-        ensure_bucketed_table(df, name, path, 4, "o_orderkey",
-                              fingerprint="v1")
-        assert spark.table(name).count() == df.count()  # re-laid
-        # changed contract under the same name: fingerprint mismatch
-        # forces a re-lay instead of serving v1's bytes
-        ensure_bucketed_table(df.limit(10), name, path, 4, "o_orderkey",
-                              fingerprint="v2")
-        assert spark.table(name).count() == 10
+        names += bucketed_pair(spark, sf)
+        o_name = names[0]
+        paths += [fixture_path("bkt_orders", sf),
+                  fixture_path("bkt_lineitem", sf)]
+        shutil.rmtree(paths[0])                # files reclaimed
+        assert bucketed_pair(spark, sf)[0] == o_name
+        assert spark.table(o_name).count() == n_orders  # re-laid
+
+        load_table(spark, sf, "orders").limit(10).toPandas() \
+            .to_parquet(f"{sf}/orders.parquet.new")
+        os.replace(f"{sf}/orders.parquet.new", f"{sf}/orders.parquet")
+        names += bucketed_pair(spark, sf)
+        o_new = names[2]
+        paths += [fixture_path("bkt_orders", sf),
+                  fixture_path("bkt_lineitem", sf)]
+        assert o_new != o_name
+        assert spark.table(o_new).count() == 10
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-        shutil.rmtree(path, ignore_errors=True)
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+        for path in paths:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def test_one_file_per_bucket(spark):
@@ -149,9 +149,8 @@ def test_one_file_per_bucket(spark):
     side re-sort of every merged bucket."""
     import glob
     import os
-    import tempfile
 
-    o_name, _ = bucketed_pair(spark, SF)
-    path = os.path.join(tempfile.gettempdir(), o_name)
-    files = glob.glob(os.path.join(path, "part-*.parquet"))
+    bucketed_pair(spark, SF)
+    files = glob.glob(os.path.join(fixture_path("bkt_orders", SF),
+                                   "part-*.parquet"))
     assert 0 < len(files) <= 8, files

@@ -13,7 +13,9 @@ separate Spark processes; the second run is the assertion.
 
 Covered: ``reference_pipeline_verbatim`` (managed `output` sink —
 the r4 regression), ``ddl_entry_pipeline`` (DDL-created source+sink
-tables), ``ann_index_topk`` (served index directory under tempdir).
+tables), ``ann_index_topk`` (served index directory under tempdir),
+``bucketed_colocated_join`` (bucketed twins re-registered in a fresh
+catalog) and the three corpus-copy queries (staged fixtures).
 """
 
 from __future__ import annotations
@@ -52,21 +54,50 @@ def _run_in_fresh_process(query_names: list[str]) -> None:
         assert f"OK {name}" in proc.stdout
 
 
+def _fixture_files(path: str) -> list[tuple[str, int]]:
+    return sorted((os.path.relpath(os.path.join(root, f), path),
+                   os.stat(os.path.join(root, f)).st_mtime_ns)
+                  for root, _, files in os.walk(path) for f in files)
+
+
 @pytest.mark.slow
 def test_state_touching_queries_pass_in_two_separate_processes():
     """Process 1 creates the on-disk state (warehouse sink dir, DDL
-    table locations, ANN index dir); process 2 — a fresh catalog over
-    the same repo dir — must still pass. Both processes run all three
-    queries so each query sees its own prior on-disk state."""
+    table locations, ANN index dir, staged fixtures); process 2 — a
+    fresh catalog over the same repo dir — must still pass. Both
+    processes run all the queries so each query sees its own prior
+    on-disk state. Each staged fixture is one shared dir: no
+    per-process copy appears, and process 2 writes no fixture file
+    (a bucketed twin is re-registered over the existing files)."""
+    import tempfile
+
+    from flink_precisely_demo_spark.operators.lsm import index_ok
+    from flink_precisely_demo_spark.plans.queries import fixture_path
+
     names = ["reference_pipeline_verbatim", "ddl_entry_pipeline",
              "ann_index_topk",
-             # r15: the maintained-text-index fixture family — the
-             # second process must accept the published positional
-             # index + applied-tag manifest as done (never a
-             # half-rebuild over live state)
-             "search_index_topk", "streaming_search_index_replay"]
+             # the maintained-text-index fixture family: the second
+             # process must accept the published positional index +
+             # applied-tag manifest as done (never a half-rebuild over
+             # live state)
+             "search_index_topk", "streaming_search_index_replay",
+             "bucketed_colocated_join", "jsonl_corpus_roundtrip",
+             "csv_ingest_policy", "orc_corpus_roundtrip"]
+    fixtures = {kind: fixture_path(kind, SF_DIR) for kind in (
+        "bkt_orders", "bkt_lineitem", "ref_feed", "jsonl_corpus",
+        "csv_orders", "orc_corpus")}
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
     _run_in_fresh_process(names)   # seeds the on-disk state
+    seeded = {k: _fixture_files(p) for k, p in fixtures.items()}
     _run_in_fresh_process(names)   # fresh catalog + stale disk: the r4 bug
+    new = set(os.listdir(tmp)) - before
+    for kind, path in fixtures.items():
+        assert index_ok(path), kind
+        assert _fixture_files(path) == seeded[kind], kind
+        # one dir per fixture kind, whatever process made it
+        assert {n for n in new if n.startswith(kind + "_")} <= \
+            {os.path.basename(path)}, (kind, sorted(new))
 
 
 @pytest.mark.slow

@@ -80,40 +80,76 @@ def test_compacted_write_controls_file_count(spark, tmp_path):
     files = glob.glob(f"{out}/part-*.parquet")
     assert len(files) == 2
 
-def test_feed_cache_invalidated_by_source_fingerprint(spark, tmp_path):
-    """A regenerated sf_dir with the SAME row counts but different
-    content must rebuild the cached CDC feed — validation is a source
-    fingerprint (mtime+size marker written after a complete build),
-    not a row count."""
+
+def test_fixtures_rebuild_when_source_changes(spark, tmp_path):
+    """Every staged fixture is keyed by its source's bytes: after
+    ``orders`` and ``documents`` are rewritten with the same row
+    counts, the reference feed, an index fixture and a corpus copy
+    each rebuild from the new content, at new paths, so nothing of
+    the old build (generations, deltas, companions) is served. A
+    fixture whose dir was removed is rebuilt, not served from the
+    per-process memo."""
     import glob
     import os
     import shutil
+    import tempfile
 
+    from flink_precisely_demo_spark.operators.lsm import index_ok
+    from flink_precisely_demo_spark.plans import crawl_queries as cq
     from flink_precisely_demo_spark.plans import reference_sql as rs
+    from flink_precisely_demo_spark.plans.dedup_queries import (
+        _band_index_path)
+    from flink_precisely_demo_spark.plans.queries import fixture_path
 
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
-    for t in ("nation", "customer", "orders"):
+    for t in ("nation", "customer", "orders", "documents"):
         shutil.copy(f"{SF}/{t}.parquet", f"{sf}/{t}.parquet")
 
-    feed = rs.materialize_reference_feed(spark, sf)
-    first = {r["value"] for r in
-             spark.read.text(os.path.join(feed, "orders")).collect()}
+    def build_all():
+        return (rs.materialize_reference_feed(spark, sf),
+                _band_index_path(spark, sf),
+                cq._roundtrip_corpus_dir(spark, sf))
 
-    # regenerate orders with identical row count, shifted totalprice
-    new = load_table(spark, sf, "orders").withColumn(
-        "o_totalprice", F.col("o_totalprice") + 1.0)
-    new.toPandas().to_parquet(f"{sf}/orders.parquet.new")
-    os.replace(f"{sf}/orders.parquet.new", f"{sf}/orders.parquet")
+    def feed_lines(feed):
+        return {r["value"] for r in
+                spark.read.text(os.path.join(feed, "orders")).collect()}
 
-    rs._validated_feeds.discard(feed)   # simulate a fresh process
-    feed2 = rs.materialize_reference_feed(spark, sf)
-    second = {r["value"] for r in
-              spark.read.text(os.path.join(feed2, "orders")).collect()}
-    assert feed2 == feed
-    assert first != second          # rebuilt from the new content
-    assert len(first) == len(second)
-    assert not glob.glob(os.path.join(feed, "*.tmp-*"))  # swap cleaned up
+    def corpus_lines(corpus):
+        return {r["value"] for r in spark.read.text(corpus).collect()}
+
+    def rewrite(table, col, expr):
+        new = load_table(spark, sf, table).withColumn(col, expr)
+        new.toPandas().to_parquet(f"{sf}/{table}.parquet.new")
+        os.replace(f"{sf}/{table}.parquet.new", f"{sf}/{table}.parquet")
+
+    # "_<slug>" of every fixture of this sf_dir, whatever its digest
+    slug = os.path.basename(fixture_path("", sf)).rsplit("_", 1)[0]
+    try:
+        first = build_all()
+        old_feed, old_corpus = feed_lines(first[0]), corpus_lines(first[2])
+
+        # a removed fixture is rebuilt at the same path, not served
+        shutil.rmtree(first[2])
+        assert cq._roundtrip_corpus_dir(spark, sf) == first[2]
+        assert index_ok(first[2]) and corpus_lines(first[2]) == old_corpus
+
+        rewrite("orders", "o_totalprice", F.col("o_totalprice") + 1.0)
+        rewrite("documents", "text", F.concat("text", F.lit(" again")))
+        second = build_all()
+        for old, new in zip(first, second):
+            assert new != old and index_ok(new), (old, new)
+        new_feed, new_corpus = feed_lines(second[0]), corpus_lines(second[2])
+        assert new_feed != old_feed and len(new_feed) == len(old_feed)
+        assert new_corpus != old_corpus
+        assert len(new_corpus) == len(old_corpus)
+    finally:
+        for d in glob.glob(os.path.join(tempfile.gettempdir(),
+                                        f"*{slug}_*")):
+            if os.path.isdir(d):
+                shutil.rmtree(d, ignore_errors=True)
+            else:
+                os.remove(d)
 
 
 def test_decode_envelope_schema_evolution(spark):
@@ -295,50 +331,56 @@ def test_jsonl_corrupt_lines_preserve_raw_text(spark, tmp_path):
 
 
 def test_jsonl_roundtrip_corpus_copy_is_session_cached(spark):
-    """The r10 perf fix: repeated invocations must reuse ONE corpus
-    copy per (session, sf_dir) instead of writing (and deleting) a
-    fresh copy each call; rows stay identical either way."""
+    """Repeated invocations reuse ONE corpus copy per sf_dir (a staged
+    fixture, also across processes) instead of writing (and deleting)
+    a fresh copy each call; rows stay identical either way."""
     import os
 
     from flink_precisely_demo_spark.plans import crawl_queries as cq
     from flink_precisely_demo_spark.plans.queries import QUERIES
 
+    def inventory(d):
+        return sorted((f, os.stat(os.path.join(d, f)).st_mtime_ns)
+                      for f in os.listdir(d))
+
     fn = QUERIES["jsonl_corpus_roundtrip"]
-    r1 = {tuple(r) for r in fn(spark, "/root/testdata/sf0.001").collect()}
-    d1 = dict(cq._COPIES)
-    r2 = {tuple(r) for r in fn(spark, "/root/testdata/sf0.001").collect()}
-    d2 = dict(cq._COPIES)
+    r1 = {tuple(r) for r in fn(spark, SF).collect()}
+    d1 = cq._roundtrip_corpus_dir(spark, SF)
+    inv = inventory(d1)
+    r2 = {tuple(r) for r in fn(spark, SF).collect()}
     assert r1 == r2
-    key = (os.path.realpath(SF), "jsonl_roundtrip_")
-    assert d1[key] == d2[key], "second call must reuse the cached copy"
-    assert os.path.isdir(d1[key])
+    assert cq._roundtrip_corpus_dir(spark, SF) == d1
+    assert inventory(d1) == inv, "second call must reuse the copy"
     # distinct sf_dirs get distinct copies
-    fn(spark, "/root/testdata/sf0.01")
-    assert len({k for k in cq._COPIES if k[1] == key[1]}) >= 2
+    assert cq._roundtrip_corpus_dir(spark, "/root/testdata/sf0.01") != d1
 
 
-def test_jsonl_roundtrip_cleanup_reclaims_whole_temp_tree(tmp_path):
-    """The atexit handler must remove the mkdtemp PARENT dirs, not
-    just the `corpus` subdirectories (r10 advisory: the old lambda
-    left empty jsonl_roundtrip_* shells behind)."""
-    import os
+def test_plans_stage_derived_data_only_through_staged_fixture():
+    """In plans/, only queries.py makes a temp path (fixture_path /
+    staged_fixture); the private caches that staged_fixture replaced
+    are defined nowhere in the package."""
+    import ast
+    import re
+    from pathlib import Path
 
-    from flink_precisely_demo_spark.plans import crawl_queries as cq
-
-    parent = tmp_path / "jsonl_roundtrip_fake"
-    corpus = parent / "corpus"
-    corpus.mkdir(parents=True)
-    (corpus / "part-0.jsonl").write_text("{}\n")
-    saved = dict(cq._COPIES)
-    try:
-        cq._COPIES.clear()
-        cq._COPIES[("fake", "jsonl_roundtrip_")] = str(corpus)
-        cq._remove_copies()
-        assert not parent.exists(), "mkdtemp parent must be reclaimed"
-        assert not cq._COPIES
-    finally:
-        cq._COPIES.clear()
-        cq._COPIES.update(saved)
+    pkg = Path(__file__).resolve().parents[1] / "flink_precisely_demo_spark"
+    for f in sorted((pkg / "plans").glob("*.py")):
+        if f.name != "queries.py":
+            src = f.read_text()
+            assert not re.search(r"\b(gettempdir|mkdtemp|scratch_dir)\b",
+                                 src), f.name
+    gone = {"_validated_feeds", "_COPIES", "_process_copy",
+            "_assign_to_cells", "_layout_valid"}
+    for f in sorted(pkg.rglob("*.py")):
+        defined = set()
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                defined.add(node.name)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                defined |= {t.id for t in targets if isinstance(t, ast.Name)}
+        assert not defined & gone, (f, defined & gone)
 
 
 def test_orc_roundtrip_losslessness_and_pushdown(spark, tmp_path):

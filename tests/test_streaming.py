@@ -1359,3 +1359,22 @@ def test_replay_to_parquet_empty_drain_and_label_reclaim(spark, tmp_path):
     second_dir = _REPLAY_DRAIN_DIRS["pytest_replay_drain"]
     assert second_dir != first_dir
     assert not os.path.exists(first_dir)
+
+
+def test_near_dup_replay_keeps_one_live_dir(spark):
+    """The near-dup replay returns a frame that reads its output
+    lazily, so the output lives in a ``replay_dir``: the next call
+    reclaims the previous call's dir instead of leaving it in scratch."""
+    import os
+
+    import __spark_entry__ as entry_mod
+
+    from flink_precisely_demo_spark.streaming.pipeline import (
+        _REPLAY_DRAIN_DIRS)
+
+    replay = entry_mod.queries()["streaming_dedup_replay"]
+    n = replay(spark, "/root/testdata/sf0.001").count()
+    first_dir = _REPLAY_DRAIN_DIRS["stream_dedup"]
+    assert replay(spark, "/root/testdata/sf0.001").count() == n
+    assert not os.path.exists(first_dir)
+    assert os.path.isdir(_REPLAY_DRAIN_DIRS["stream_dedup"])
