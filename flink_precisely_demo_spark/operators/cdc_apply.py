@@ -11,57 +11,44 @@ the LATEST surviving row per primary key:
 
 which is the standard lakehouse "CDC compaction"/SCD1 shape (MERGE
 INTO emulated with window-dedup + filter — no Delta required). One
-shuffle on the primary key; at 100 TB this is the same
-latest-per-key pattern as the enrichment dim build, and it
-incrementalizes per partition of the change log.
+shuffle on the primary key; the pick is the enrichment dim build's
+own ``latest_per_key``, and it incrementalizes per partition of the
+change log.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import SV_MANIP, SV_ORDER
+from .enrichment_join import latest_per_key
 
-def flatten_envelope(envelopes: DataFrame, pk: str,
-                     ts_col: str = "sv_op_timestamp",
-                     manip_col: str = "sv_manip_type",
-                     seq_cols: tuple[str, ...] = ("sv_trans_id", "sv_trans_row_seq"),
-                     ) -> DataFrame:
-    """Envelope rows -> (__manip, __ts, __seq*, __pk, after_image):
-    the merge-ready shape shared by the batch snapshot and the
-    streaming upsert store (streaming/cdc_upsert.py)."""
+
+def flatten_envelope(envelopes: DataFrame, pk: str) -> DataFrame:
+    """Envelope rows -> (__manip, __ts, __seq0, __seq1, __pk,
+    after_image): the merge-ready shape shared by the batch snapshot
+    and the streaming upsert store (streaming/cdc_upsert.py), ordered
+    by (__ts, __seq0, __seq1) = ``schemas.SV_ORDER``."""
+    ts, *seq = SV_ORDER
     return envelopes.select(
-        F.col(manip_col).alias("__manip"),
-        F.col(ts_col).alias("__ts"),
-        *[F.col(c).alias(f"__seq{i}") for i, c in enumerate(seq_cols)],
+        F.col(SV_MANIP).alias("__manip"),
+        F.col(ts).alias("__ts"),
+        *[F.col(c).alias(f"__seq{i}") for i, c in enumerate(seq)],
         F.col(f"after_image.{pk}").alias("__pk"),
         "after_image")
 
 
-def latest_per_key(flat: DataFrame, n_seq: int = 2) -> DataFrame:
-    """Latest version per key by (ts, seq...) — tombstones (D rows)
-    INCLUDED, so out-of-order history arriving later cannot
-    resurrect a deleted key when states are merged incrementally."""
-    order = [F.col("__ts").desc()] + \
-        [F.col(f"__seq{i}").desc() for i in range(n_seq)]
-    w = Window.partitionBy("__pk").orderBy(*order)
-    return (flat.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn"))
-
-
-def apply_cdc_snapshot(envelopes: DataFrame, pk: str,
-                       ts_col: str = "sv_op_timestamp",
-                       manip_col: str = "sv_manip_type",
-                       seq_cols: tuple[str, ...] = ("sv_trans_id", "sv_trans_row_seq"),
-                       ) -> DataFrame:
+def apply_cdc_snapshot(envelopes: DataFrame, pk: str) -> DataFrame:
     """Envelope rows -> current state of the table.
 
     Output: after_image columns of the latest non-delete version per
-    key (a key whose latest op is D disappears entirely).
+    key (a key whose latest op is D disappears entirely). Tombstones
+    take part in the latest-per-key pick, so out-of-order history
+    arriving later cannot resurrect a deleted key.
     """
     payload_fields = envelopes.schema["after_image"].dataType.fieldNames()
-    flat = flatten_envelope(envelopes, pk, ts_col, manip_col, seq_cols)
-    latest = latest_per_key(flat, len(seq_cols)) \
+    flat = flatten_envelope(envelopes, pk)
+    latest = latest_per_key(flat, "__pk", "__ts", ["__seq0", "__seq1"]) \
         .filter(F.col("__manip") != "D")
     return latest.select(*[F.col(f"after_image.{c}") for c in payload_fields])

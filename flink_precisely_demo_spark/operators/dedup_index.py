@@ -70,8 +70,6 @@ from .lsm import (
     write_generation,
 )
 
-_DEFAULTS = dict(num_hashes=16, bands=4, shingle_n=3)
-
 
 def _star_edges(banded: DataFrame, id_col: str,
                 max_bucket_size: int = 1024) -> DataFrame:

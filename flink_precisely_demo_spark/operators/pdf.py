@@ -142,7 +142,6 @@ def encode_pdf(pages: list[str], flate: bool = True,
 # --------------------------------------------------------------- parser
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 _TOKEN_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 

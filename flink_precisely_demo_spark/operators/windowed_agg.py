@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import OUTPUT_SCHEMA
+
 
 def sum_exact(col: Column | str, scale: int = 6) -> Column:
     """Order-independent SUM for double columns: exact decimal
@@ -63,3 +65,16 @@ def tumbling_window_agg(df: DataFrame, time_col: str, duration: str,
            [F.col(k) for k in keys] + \
            [F.col(c) for c in grouped.columns if c not in {"window", *keys}]
     return grouped.select(*cols)
+
+
+def output_sql(df: DataFrame) -> DataFrame:
+    """sql/output.sql: the 10-minute tumbling ``SUM(TotalDue)`` by
+    ``Country`` and ``State`` of a frame with ``OrderAsOf``,
+    ``TotalDue``, ``Country`` and ``State``, with the window start as
+    ``OrderPeriod``, in the sink's column order (reference
+    StreamingJob.java:142-151). A streaming caller sets the
+    watermark on ``OrderAsOf`` first."""
+    return tumbling_window_agg(
+        df, "OrderAsOf", "10 minutes", ["Country", "State"],
+        [sum_exact("TotalDue").alias("TotalDue")],
+        window_start_alias="OrderPeriod").select(*OUTPUT_SCHEMA.names)

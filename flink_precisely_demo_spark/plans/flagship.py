@@ -28,12 +28,11 @@ from pyspark.sql import functions as F
 
 from ..operators.broadcast import hint_broadcast_if_small
 from ..operators.enrichment_join import enrich
-from ..operators.windowed_agg import sum_exact, tumbling_window_agg
+from ..operators.windowed_agg import output_sql
 from ..sources.parquet import load_table
 
 
-def flagship_query(spark: SparkSession, sf_dir: str,
-                   window: str = "10 minutes") -> DataFrame:
+def flagship_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders ⋈ customer ⋈ nation ⋈ region → tumbling SUM(TotalDue)."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer").select(
@@ -61,11 +60,4 @@ def flagship_query(spark: SparkSession, sf_dir: str,
     enriched = enrich(fact, hint_broadcast_if_small(dim), "c_custkey") \
         .withColumn("Country", F.col("r_name")) \
         .withColumn("State", F.col("n_name"))
-
-    out = tumbling_window_agg(
-        enriched, "OrderAsOf", window, ["Country", "State"],
-        [sum_exact("TotalDue").alias("TotalDue")],
-        window_start_alias="OrderPeriod",
-    )
-    # sink column order (reference StreamingJob.java:144-147)
-    return out.select("OrderPeriod", "TotalDue", "Country", "State")
+    return output_sql(enriched)

@@ -319,7 +319,6 @@ _AUDIT_SLOTS = [  # (first_slot, last_slot, label, meta_format, media_type)
     (97, 98, "mp4", "mp4", "video"),
     (99, 99, "au", "au", "audio"),
 ]
-_AUDIT_LOSSY = {"webp_lossy", "mp3", "aac", "mp4"}
 
 
 def _audit_label_case(prefix: str) -> str:

@@ -21,10 +21,12 @@ just as much — distributed double addition is order-dependent):
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import os
 import re
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -93,6 +95,28 @@ def fixture_path(name: str, sf_dir: str) -> str:
                         f"{name}_{slug}_{_source_digest(sf_dir)}")
 
 
+def _reap_superseded(path: str) -> None:
+    """Remove every other build of the fixture at ``path``:
+    ``<stem>_<digest>`` of another digest and the digest-less
+    ``<stem>`` of older builds, each with its ``<build>.<suffix>``
+    companions (the LSM tag manifest, a verdicts dir)."""
+    tmp, base = os.path.split(path)
+    stem, digest = base.rsplit("_", 1)
+    # a companion suffix has no "_", so another dataset's fixture
+    # (``<stem>.copy_<digest>``) never matches
+    build = re.compile(re.escape(stem)
+                       + r"(?:_([0-9a-f]{12}))?(?:\.[A-Za-z0-9.-]+)?")
+    for entry in os.listdir(tmp):
+        m = build.fullmatch(entry)
+        if m and m.group(1) != digest:
+            old = os.path.join(tmp, entry)
+            if os.path.isdir(old):
+                shutil.rmtree(old, ignore_errors=True)
+            else:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(old)
+
+
 def staged_fixture(name: str, sf_dir: str,
                    complete: Callable[[str], bool],
                    build: Callable[[str], None]) -> str:
@@ -102,13 +126,16 @@ def staged_fixture(name: str, sf_dir: str,
     ``build(stage)`` fills one staged new base that publishes
     atomically (operators/lsm.new_base), so a concurrent process never
     sees a half-built fixture and a crashed build leaves only a
-    reapable stage. A per-process memo skips ``complete``, but only
-    while the published dir is still there."""
+    reapable stage. Publishing a build removes every other build of
+    ``name`` for ``sf_dir`` (built from other source bytes). A
+    per-process memo skips ``complete``, but only while the published
+    dir is still there."""
     path = fixture_path(name, sf_dir)
     if not (path in _FIXTURES and index_ok(path)):
         if not complete(path):
             with new_base(path) as stage:
                 build(stage)
+            _reap_superseded(path)
         _FIXTURES.add(path)
     return path
 

@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import ORDERS_PAYLOAD
-from ..sources.cdc_json import (decode_envelope, fold_key,
-                                synthesize_orders_envelope)
+from ..sources.cdc_json import (decode_envelope, envelope, fold_key,
+                                synthesize_orders_envelope, widen_feed)
 from ..sources.parquet import load_table
 from .queries import query, staged_fixture
 
@@ -159,22 +159,6 @@ def translate_flink_tumble(sql: str) -> str:
     return _TUMBLE_RE.sub(repl, sql)
 
 
-def _envelope_json(df: DataFrame, payload, key_col: str,
-                   ts_string) -> DataFrame:
-    """Minimal envelope JSON lines (decode fills unlisted sv_* fields
-    with NULL — same tolerance as a real partial feed)."""
-    from ..sources.cdc_json import widen_feed
-    df = widen_feed(df)
-    envelope = F.struct(
-        F.lit("I").alias("sv_manip_type"),
-        F.col(key_col).cast("long").alias("sv_trans_id"),
-        F.lit(1).alias("sv_trans_row_seq"),
-        ts_string.alias("sv_op_timestamp"),
-        payload.alias("after_image"),
-    )
-    return df.select(F.to_json(envelope).alias("value"))
-
-
 #: Target data bytes per compacted feed file. 16 MB keeps a file
 #: above the 4 MB openCost split floor (so one file still fans out to
 #: ~4 read splits) while collapsing the encoder's parallelism-width
@@ -219,17 +203,23 @@ def _compact_text_dir(path: str) -> None:
 _FIXED_TS = "20200101000000"
 
 
+def _envelope_lines(df: DataFrame, key: str, payload, table: str) -> DataFrame:
+    """One insert envelope per row, keyed and timestamped alike."""
+    value = F.to_json(envelope(F.col(key), F.lit(_FIXED_TS), payload,
+                               table=table))
+    return widen_feed(df).select(value.alias("value"))
+
+
 def _states_feed_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = load_table(spark, sf_dir, "nation")
     payload = F.struct(
         F.col("n_nationkey").cast("int").alias("StateProvinceID"),
         F.lit("XX").alias("CountryRegionCode"),
         F.col("n_name").alias("Name"))
-    return _envelope_json(nation, payload, "n_nationkey", F.lit(_FIXED_TS))
+    return _envelope_lines(load_table(spark, sf_dir, "nation"),
+                           "n_nationkey", payload, "PERSON.STATEPROVINCE")
 
 
 def _address_feed_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
     payload = F.struct(
         fold_key(F.col("c_custkey")).alias("AddressID"),
         F.lit("1 Main St").alias("AddressLine1"),
@@ -237,7 +227,8 @@ def _address_feed_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").cast("int").alias("StateProvinceID"),
         F.lit("00000").alias("PostalCode"),
         F.lit(_FIXED_TS).alias("ModifiedDate"))
-    return _envelope_json(customer, payload, "c_custkey", F.lit(_FIXED_TS))
+    return _envelope_lines(load_table(spark, sf_dir, "customer"),
+                           "c_custkey", payload, "PERSON.ADDRESS")
 
 
 def _orders_feed_df(spark: SparkSession, sf_dir: str) -> DataFrame:

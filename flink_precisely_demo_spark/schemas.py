@@ -47,6 +47,14 @@ ORDERS_PAYLOAD = T.StructType([
     T.StructField("TotalDue", T.DoubleType()),
 ])
 
+#: after_image payload for a document-capture CDC feed: the envelope
+#: machinery is the reference's; only the payload row type differs
+#: (envelope_schema is payload-generic by design).
+DOCS_PAYLOAD = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("text", T.StringType()),
+])
+
 # --- envelope (reference StreamingJob.java:165-181) ---------------
 
 _SV_FIELDS = [
@@ -67,15 +75,16 @@ _SV_FIELDS = [
     T.StructField("sv_journal_seqno", T.StringType()),
 ]
 
+#: the change type, and the total order of changes: op timestamp, then
+#: transaction id and row sequence
+SV_MANIP = "sv_manip_type"
+SV_ORDER = ("sv_op_timestamp", "sv_trans_id", "sv_trans_row_seq")
+
 
 def envelope_schema(payload: T.StructType) -> T.StructType:
     """CDC envelope: 15 sv_* columns + nested after_image payload."""
     return T.StructType(_SV_FIELDS + [T.StructField("after_image", payload)])
 
-
-CDC_STATES_SCHEMA = envelope_schema(STATES_PAYLOAD)
-CDC_ADDRESS_SCHEMA = envelope_schema(ADDRESS_PAYLOAD)
-CDC_ORDERS_SCHEMA = envelope_schema(ORDERS_PAYLOAD)
 
 # Sink row shape (reference StreamingJob.java:142-151 / sql/output.sql)
 OUTPUT_SCHEMA = T.StructType([

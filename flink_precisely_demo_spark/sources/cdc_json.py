@@ -12,27 +12,66 @@ column — a batch DataFrame of JSON lines, or ``spark.readStream
 .format("kafka")``'s value column — so batch tests and the streaming
 pipeline share one code path.
 
-``synthesize_orders_envelope`` manufactures reference-shaped CDC rows
-from the driver's ``orders`` table so the literal reference pipeline
-can be exercised without a Kafka broker.
+``envelope_columns`` is the one encoder: it builds the envelope's
+columns from the same field list the decode reads
+(``schemas._SV_FIELDS``); ``envelope`` wraps them in the struct that
+``to_json`` writes. The synthesizers (``synthesize_orders_envelope``
+here, the document feed, the reference feeds and the I/U/D change
+logs) call them to manufacture reference-shaped CDC rows from the
+driver's tables, so the literal reference pipeline can be exercised
+without a Kafka broker.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.datetime_fns import format_ts
-from ..schemas import envelope_schema
+from ..schemas import _SV_FIELDS, envelope_schema
+
+#: The producer's constant envelope fields (every synthetic feed sets
+#: them alike); ``envelope_columns`` derives the other six from its
+#: arguments.
+_SV_LITERALS = {
+    "sv_trans_row_seq": 1, "sv_trans_username": "cdcuser",
+    "sv_program_name": "demo", "sv_job_name": "job",
+    "sv_job_user": "juser", "sv_job_number": "1", "sv_file_member": "m",
+    "sv_receiver_library": "lib", "sv_receiver_name": "recv",
+}
 
 
-def decode_envelope(raw: DataFrame, payload_schema: T.StructType,
-                    value_col: str = "value") -> DataFrame:
-    """JSON string -> envelope columns (15 sv_* + after_image struct)."""
+def envelope_columns(trans_id: Column, ts: Column, payload: Column,
+                     manip: str | Column = "I", table: str = "SALES.ORDERS"
+                     ) -> list[Column]:
+    """The envelope of one change as columns: the 15 sv_* fields in
+    declared order, each cast to its declared type, then
+    ``after_image``. ``ts`` (a yyyyMMddHHmmss+fraction string) is both
+    the transaction and the op timestamp; the journal sequence number
+    is ``trans_id`` as a string."""
+    cols = {k: F.lit(v) for k, v in _SV_LITERALS.items()}
+    cols.update(sv_manip_type=F.lit(manip), sv_trans_id=trans_id,
+                sv_sending_table=F.lit(table), sv_trans_timestamp=ts,
+                sv_op_timestamp=ts, sv_journal_seqno=trans_id)
+    return [cols[f.name].cast(f.dataType).alias(f.name) for f in _SV_FIELDS] \
+        + [payload.alias("after_image")]
+
+
+def envelope(trans_id: Column, ts: Column, payload: Column,
+             manip: str | Column = "I", table: str = "SALES.ORDERS"
+             ) -> Column:
+    """:func:`envelope_columns` as one struct, the shape ``to_json``
+    writes."""
+    return F.struct(*envelope_columns(trans_id, ts, payload, manip, table))
+
+
+def decode_envelope(raw: DataFrame, payload_schema: T.StructType) -> DataFrame:
+    """JSON ``value`` string -> envelope columns (15 sv_* + after_image
+    struct)."""
     schema = envelope_schema(payload_schema)
     return raw.select(
-        F.from_json(F.col(value_col).cast("string"), schema).alias("r")
+        F.from_json(F.col("value").cast("string"), schema).alias("r")
     ).select("r.*")
 
 
@@ -123,23 +162,5 @@ def synthesize_orders_envelope(orders: DataFrame, ts_col=None,
         F.lit(0.0).alias("Freight"),
         F.col("o_totalprice").alias("TotalDue"),
     )
-    envelope = F.struct(
-        F.lit("I").alias("sv_manip_type"),
-        F.col("o_orderkey").alias("sv_trans_id"),
-        F.lit(1).alias("sv_trans_row_seq"),
-        F.lit("SALES.ORDERS").alias("sv_sending_table"),
-        ts_str.alias("sv_trans_timestamp"),
-        F.lit("cdcuser").alias("sv_trans_username"),
-        F.lit("demo").alias("sv_program_name"),
-        F.lit("job").alias("sv_job_name"),
-        F.lit("juser").alias("sv_job_user"),
-        F.lit("1").alias("sv_job_number"),
-        ts_str.alias("sv_op_timestamp"),
-        F.lit("m").alias("sv_file_member"),
-        F.lit("lib").alias("sv_receiver_library"),
-        F.lit("recv").alias("sv_receiver_name"),
-        F.col("o_orderkey").cast("string").alias("sv_journal_seqno"),
-        payload.alias("after_image"),
-    )
-    return orders.select(F.to_json(envelope).alias("value"),
-                         *(extra_cols or []))
+    value = F.to_json(envelope(F.col("o_orderkey"), ts_str, payload))
+    return orders.select(value.alias("value"), *(extra_cols or []))

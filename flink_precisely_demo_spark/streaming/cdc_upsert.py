@@ -11,9 +11,9 @@ same semantics are built on plain parquet as an LSM generation store
 - batch N publishes its flattened envelope rows
   (operators/cdc_apply.flatten_envelope) as one delta tagged
   ``b<N>``; no trigger reads or rewrites the store;
-- the current state is the latest row per key over every
-  generation (operators/cdc_apply.latest_per_key). Tombstones stay in
-  the store, also through compaction: a delete wins over any older
+- the current state is the latest row per key over every generation
+  (operators/enrichment_join.latest_per_key). Tombstones stay in the
+  store, also through compaction: a delete wins over any older
   change that arrives later, across batch boundaries. Readers filter
   them out;
 - ``compact_every`` folds the generations into one latest-per-key
@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cdc_apply import flatten_envelope, latest_per_key
+from ..operators.cdc_apply import flatten_envelope
+from ..operators.enrichment_join import latest_per_key
 from ..operators.lsm import (
     all_generations,
     compact_generations,
@@ -41,10 +42,8 @@ from ..operators.lsm import (
 
 
 def _latest(store: DataFrame) -> DataFrame:
-    """Latest row per key, tombstones kept, ordered by the store's own
-    ``__seq<i>`` columns."""
-    return latest_per_key(
-        store, sum(c.startswith("__seq") for c in store.columns))
+    """Latest row per key, tombstones kept."""
+    return latest_per_key(store, "__pk", "__ts", ["__seq0", "__seq1"])
 
 
 def compact_store(spark: SparkSession, target_path: str) -> int:
@@ -53,17 +52,13 @@ def compact_store(spark: SparkSession, target_path: str) -> int:
     return compact_generations(spark, target_path, "state", _latest)
 
 
-def cdc_upsert_sink(target_path: str, pk: str,
-                    ts_col: str = "sv_op_timestamp",
-                    manip_col: str = "sv_manip_type",
-                    seq_cols: tuple[str, ...] = ("sv_trans_id", "sv_trans_row_seq"),
-                    compact_every: int = 16):
+def cdc_upsert_sink(target_path: str, pk: str, compact_every: int = 16):
     """Returns the ``foreachBatch`` function: publish each micro-batch
     of envelope rows into the store at ``target_path``, folding it
     every ``compact_every`` generations."""
 
     def apply(batch_df: DataFrame, batch_id: int, tag: str) -> None:
-        flat = flatten_envelope(batch_df, pk, ts_col, manip_col, seq_cols)
+        flat = flatten_envelope(batch_df, pk)
         ensure_base(target_path, "state", flat)
         with new_delta(target_path, tag) as (stage, _):
             flat.write.parquet(f"{stage}/state")

@@ -55,22 +55,14 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.text import language_id, quality_score
-from ..sources.cdc_json import decode_envelope, flatten_after_image
+from ..schemas import DOCS_PAYLOAD
+from ..sources.cdc_json import decode_envelope, envelope, flatten_after_image
 from .ann_upsert import ann_upsert_sink
 from .dedup_ingest import dedup_ingest_sink
 from .pipeline import drain
 from .text_index_ingest import text_index_sink
-
-#: after_image payload for a document-capture CDC feed: the envelope
-#: machinery is the reference's; only the payload row type differs
-#: (envelope_schema is payload-generic by design).
-DOCS_PAYLOAD = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("text", T.StringType()),
-])
 
 DEFAULT_QUALITY_GATE = 0.4
 
@@ -82,26 +74,10 @@ def synthesize_documents_envelope(docs: DataFrame,
     standing in for the Kafka capture topic (no broker in this
     environment). Deterministic: every field derives from the row."""
     payload = F.struct(F.col("doc_id"), F.col("text"))
-    envelope = F.struct(
-        F.lit("I").alias("sv_manip_type"),
-        F.col("doc_id").alias("sv_trans_id"),
-        F.lit(1).alias("sv_trans_row_seq"),
-        F.lit("CRAWL.DOCUMENTS").alias("sv_sending_table"),
-        F.lit("20240101000000.000001").alias("sv_trans_timestamp"),
-        F.lit("cdcuser").alias("sv_trans_username"),
-        F.lit("demo").alias("sv_program_name"),
-        F.lit("job").alias("sv_job_name"),
-        F.lit("juser").alias("sv_job_user"),
-        F.lit("1").alias("sv_job_number"),
-        F.lit("20240101000000.000001").alias("sv_op_timestamp"),
-        F.lit("m").alias("sv_file_member"),
-        F.lit("lib").alias("sv_receiver_library"),
-        F.lit("recv").alias("sv_receiver_name"),
-        F.col("doc_id").cast("string").alias("sv_journal_seqno"),
-        payload.alias("after_image"),
-    )
-    return docs.select(F.to_json(envelope).alias("value"),
-                       *(extra_cols or []))
+    value = F.to_json(envelope(
+        F.col("doc_id"), F.lit("20240101000000.000001"), payload,
+        table="CRAWL.DOCUMENTS"))
+    return docs.select(value.alias("value"), *(extra_cols or []))
 
 
 def corpus_ingest_sink(band_index_path: str, ann_index_path: str,

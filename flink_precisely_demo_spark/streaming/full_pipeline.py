@@ -29,25 +29,27 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..operators.windowed_agg import sum_exact
+from ..operators.windowed_agg import output_sql
 from .pipeline import drain_query
 from .replay_stage import feed_rows, shuffle_partitions, state_layout
 from .stateful_join import enrich_stream
 
 
 def _run_stage(spark: SparkSession, inputs: list[str], path: str,
-               timeout: int, *join, **join_kw) -> None:
+               timeout: int, *join, **join_kw) -> T.StructType:
     """Run ``enrich_stream(*join, **join_kw)`` as its own query into the
     JSON stage ``path`` (checkpoint ``path + "_ck"``), its state sized
-    from the rows of its ``inputs``."""
+    from the rows of its ``inputs``; returns the stage's schema."""
     with shuffle_partitions(spark, *state_layout(spark, feed_rows(*inputs))):
-        q = (enrich_stream(*join, **join_kw).writeStream.outputMode("append")
+        joined = enrich_stream(*join, **join_kw)
+        q = (joined.writeStream.outputMode("append")
              .format("json").option("path", path)
              .option("checkpointLocation", path + "_ck")
              .trigger(availableNow=True).start())
         drain_query(q, timeout, f"replay stage {os.path.basename(path)}")
+    return joined.schema
 
 
 def streaming_flagship_full(spark: SparkSession, orders_dir: str,
@@ -61,7 +63,8 @@ def streaming_flagship_full(spark: SparkSession, orders_dir: str,
     Inputs are JSON-lines directories of already-projected rows (the
     sql/{orders,address,states}.sql shapes); production would point
     q1/q2 at Kafka topics and leave all three queries running. Each
-    query sizes its state partitions and key groups from its own
+    stage is read back with the schema of the join that wrote it.
+    Each query sizes its state partitions and key groups from its own
     input (``replay_stage.state_layout``): q2 reads the orders plus
     stage1, q3 reads stage2.
     """
@@ -76,38 +79,27 @@ def streaming_flagship_full(spark: SparkSession, orders_dir: str,
         "AddressAsOf double").json(address_dir)
 
     # hop 1 (reference :112): address enriched with states
-    _run_stage(spark, [address_dir, states_dir], stage1, timeout, address,
-               states, "StateProvinceID", "AddressAsOf",
-               dim_order_col="StatesAsOf")
+    schema1 = _run_stage(spark, [address_dir, states_dir], stage1, timeout,
+                         address, states, "StateProvinceID", "AddressAsOf",
+                         dim_order_col="StatesAsOf")
 
     orders = spark.readStream.schema(
         "SalesOrderId int, AddressId int, TotalDue double, "
         "OrderAsOf timestamp").json(orders_dir)
-    stage1_stream = spark.readStream.schema(
-        "AddressID int, City string, StateProvinceID int, AddressAsOf double, "
-        "CountryRegionCode string, StateName string, StatesAsOf double"
-    ).json(stage1)
     # hop 2 (reference :113): orders ⋈ enriched address; the quirk-1
     # case mismatch (AddressId vs AddressID) is resolved by renaming
-    dim = stage1_stream.withColumnRenamed("AddressID", "AddressId")
-    _run_stage(spark, [orders_dir, stage1], stage2, timeout, orders, dim,
-               "AddressId", "OrderAsOf", dim_order_col="AddressAsOf")
+    dim = (spark.readStream.schema(schema1).json(stage1)
+           .withColumnRenamed("AddressID", "AddressId"))
+    schema2 = _run_stage(spark, [orders_dir, stage1], stage2, timeout,
+                         orders, dim, "AddressId", "OrderAsOf",
+                         dim_order_col="AddressAsOf")
 
     # final window agg (sql/output.sql) over the staged stream
-    stage2_stream = spark.readStream.schema(
-        "SalesOrderId int, AddressId int, TotalDue double, "
-        "OrderAsOf timestamp, City string, StateProvinceID int, "
-        "AddressAsOf double, CountryRegionCode string, StateName string, "
-        "StatesAsOf double").json(stage2)
-    agg = (stage2_stream
-           .withWatermark("OrderAsOf", "10 minutes")
-           .groupBy(F.window("OrderAsOf", "10 minutes"),
-                    "CountryRegionCode", "StateName")
-           .agg(sum_exact("TotalDue").alias("TotalDue"))
-           .select(F.col("window.start").alias("OrderPeriod"),
-                   "TotalDue",
-                   F.col("CountryRegionCode").alias("Country"),
-                   F.col("StateName").alias("State")))
+    agg = output_sql(
+        spark.readStream.schema(schema2).json(stage2)
+        .withWatermark("OrderAsOf", "10 minutes")
+        .withColumnsRenamed({"CountryRegionCode": "Country",
+                             "StateName": "State"}))
     with shuffle_partitions(spark, *state_layout(spark, feed_rows(stage2))):
         q = (agg.writeStream.outputMode("complete")
              .format("memory").queryName("flagship_full")

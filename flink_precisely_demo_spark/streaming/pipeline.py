@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..operators.broadcast import hint_broadcast_if_small
 
 from ..functions.datetime_fns import parse_ts
-from ..operators.windowed_agg import sum_exact
+from ..operators.windowed_agg import output_sql
 from ..schemas import ORDERS_PAYLOAD
 from ..sources.cdc_json import decode_envelope
 from ..scratch import scratch_dir
@@ -44,15 +44,13 @@ from ..scratch import scratch_dir
 
 def streaming_flagship(spark: SparkSession, envelope_dir: str,
                        address_dim: DataFrame, states_dim: DataFrame,
-                       window: str = "10 minutes",
-                       watermark: str = "10 minutes",
                        max_files_per_trigger: int | None = None) -> DataFrame:
     """File-streamed CDC orders -> enrich -> windowed SUM (append).
 
     ``envelope_dir``: directory of JSON-lines files, one envelope per
     line (the cdc-orders topic shape). ``address_dim`` /
     ``states_dim``: batch dimension snapshots (AddressID ->
-    StateProvinceID -> CountryRegionCode/StateName).
+    StateProvinceID -> CountryRegionCode/Name).
     """
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:
@@ -80,19 +78,11 @@ def streaming_flagship(spark: SparkSession, envelope_dir: str,
     enriched = (orders
                 .join(hint_broadcast_if_small(addr), "AddressId")
                 .join(F.broadcast(states), "StateProvinceID"))
-
-    agg = (enriched
-           .withWatermark("OrderAsOf", watermark)
-           .groupBy(F.window("OrderAsOf", window),
-                    "CountryRegionCode", "StateName")
-           .agg(sum_exact("TotalDue").alias("TotalDue")))
     # sink shape (reference sql/output.sql + StreamingJob.java:142-151)
-    return agg.select(
-        F.col("window.start").alias("OrderPeriod"),
-        F.col("TotalDue"),
-        F.col("CountryRegionCode").alias("Country"),
-        F.col("StateName").alias("State"),
-    )
+    return output_sql(
+        enriched.withWatermark("OrderAsOf", "10 minutes")
+        .withColumnsRenamed({"CountryRegionCode": "Country",
+                             "StateName": "State"}))
 
 
 def run_to_memory(df: DataFrame, name: str, spark: SparkSession,

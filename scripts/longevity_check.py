@@ -29,12 +29,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+
+from flink_precisely_demo_spark.scratch import scratch  # noqa: E402
 
 FLAT_FACTOR = 1.5
 
@@ -67,7 +67,6 @@ def _file_feed_run(spark, make_df, stream_fn, n_triggers: int,
     from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    from flink_precisely_demo_spark.scratch import scratch
     from flink_precisely_demo_spark.streaming.keyed_state import (
         count_members,
     )
@@ -181,11 +180,10 @@ def check_dedup(spark, n_triggers: int = 50,
     docs = (spark.read.parquet(
                 "/root/testdata/sf0.01/documents.parquet")
             .select("doc_id", "text").limit(batch_size).collect())
-    work = tempfile.mkdtemp(prefix="longevity_dedup_")
-    sink = near_dup_dedup_sink(f"{work}/store", f"{work}/out",
-                               compact_every=16)
-    times: list = []
-    try:
+    with scratch("longevity_dedup_") as work:
+        sink = near_dup_dedup_sink(f"{work}/store", f"{work}/out",
+                                   compact_every=16)
+        times: list = []
         for i in range(n_triggers):
             batch = spark.createDataFrame(
                 [(r["doc_id"] + i * 1_000_000, r["text"])
@@ -194,8 +192,6 @@ def check_dedup(spark, n_triggers: int = 50,
             t0 = time.monotonic()
             sink(batch, i)
             times.append(round((time.monotonic() - t0) * 1000, 1))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     violations: list = []
     stats = {"check": "dedup", "n_triggers": n_triggers,
              "batch_size": batch_size}
@@ -232,14 +228,13 @@ def check_dedup_ingest(spark, n_triggers: int = 50,
                .select("doc_id", "text"))
     hist = docs_df.limit(2000)
     feed = docs_df.limit(batch_size).collect()
-    work = tempfile.mkdtemp(prefix="longevity_dingest_")
-    idx = f"{work}/idx"
-    build_band_index(hist, idx, clusters=True)
-    sink = dedup_ingest_sink(idx, f"{work}/verd",
-                             compact_every=compact_every)
-    times: list = []
-    violations: list = []
-    try:
+    with scratch("longevity_dingest_") as work:
+        idx = f"{work}/idx"
+        build_band_index(hist, idx, clusters=True)
+        sink = dedup_ingest_sink(idx, f"{work}/verd",
+                                 compact_every=compact_every)
+        times: list = []
+        violations: list = []
         for i in range(n_triggers):
             batch = spark.createDataFrame(
                 [(r["doc_id"] + (i + 1) * 1_000_000, r["text"])
@@ -273,8 +268,6 @@ def check_dedup_ingest(spark, n_triggers: int = 50,
             violations.append(
                 f"{len(stray)} labeled ids never ingested "
                 f"(e.g. {sorted(stray)[:3]})")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     stats = {"check": "dedup_ingest", "n_triggers": n_triggers,
              "batch_size": batch_size}
     stats.update(_flatness(times, "batch_ms", violations))
@@ -301,20 +294,19 @@ def check_ann_upsert(spark, n_triggers: int = 50,
     emb = (spark.read.parquet(
                "/root/testdata/sf0.001/embeddings.parquet")
            .select("vec_id", "embedding"))
-    work = tempfile.mkdtemp(prefix="longevity_ann_")
-    idx = f"{work}/idx"
-    build_ann_index(emb, idx, k_cells=4, max_iter=2)
-    ups = (emb.filter(F.col("vec_id") < batch_size)
-           .select("vec_id", F.reverse("embedding").alias("embedding"),
-                   F.lit("U").alias("op"))
-           .unionByName(
-               emb.filter(F.col("vec_id").between(480, 489))
-               .select("vec_id", "embedding", F.lit("D").alias("op")))
-           .localCheckpoint())
-    sink = ann_upsert_sink(idx, compact_every=compact_every)
-    times: list = []
-    violations: list = []
-    try:
+    with scratch("longevity_ann_") as work:
+        idx = f"{work}/idx"
+        build_ann_index(emb, idx, k_cells=4, max_iter=2)
+        ups = (emb.filter(F.col("vec_id") < batch_size)
+               .select("vec_id", F.reverse("embedding").alias("embedding"),
+                       F.lit("U").alias("op"))
+               .unionByName(
+                   emb.filter(F.col("vec_id").between(480, 489))
+                   .select("vec_id", "embedding", F.lit("D").alias("op")))
+               .localCheckpoint())
+        sink = ann_upsert_sink(idx, compact_every=compact_every)
+        times: list = []
+        violations: list = []
         for i in range(n_triggers):
             t0 = time.monotonic()
             sink(ups, i)
@@ -333,8 +325,6 @@ def check_ann_upsert(spark, n_triggers: int = 50,
             violations.append(
                 f"dead rows {int(s.n_dead.sum())} exceed the "
                 f"one-compaction-window bound {bound}")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     stats = {"check": "ann_upsert", "n_triggers": n_triggers,
              "batch_size": batch_size}
     stats.update(_flatness(times, "batch_ms", violations))
@@ -354,7 +344,6 @@ def check_flagship_window(spark, n_triggers: int = 50,
     runs-forever claim from this measurement, not from the docs."""
     import datetime as dt
 
-    from flink_precisely_demo_spark.scratch import scratch
     from flink_precisely_demo_spark.streaming.pipeline import (
         drain_query,
         streaming_flagship,
@@ -444,13 +433,12 @@ def check_substring_ingest(spark, n_triggers: int = 50,
     hist = docs_df.limit(500)
     feed = docs_df.collect()
     hist_n = 500
-    work = tempfile.mkdtemp(prefix="longevity_substr_")
-    idx = f"{work}/idx"
-    build_substring_index(hist, idx)
-    times: list = []
-    violations: list = []
-    cum_rows = [(int(r["doc_id"]), r["text"]) for r in feed[:hist_n]]
-    try:
+    with scratch("longevity_substr_") as work:
+        idx = f"{work}/idx"
+        build_substring_index(hist, idx)
+        times: list = []
+        violations: list = []
+        cum_rows = [(int(r["doc_id"]), r["text"]) for r in feed[:hist_n]]
         for i in range(n_triggers):
             lo = hist_n + i * batch_size
             rows = [(int(r["doc_id"]), r["text"])
@@ -483,8 +471,6 @@ def check_substring_ingest(spark, n_triggers: int = 50,
                 f"absorbed spans diverge from from-scratch after "
                 f"{n_triggers} generations "
                 f"(+{len(got - want)}/-{len(want - got)})")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     stats = {"check": "substring_ingest", "n_triggers": n_triggers,
              "batch_size": batch_size}
     stats.update(_flatness(times, "batch_ms", violations))
@@ -518,16 +504,15 @@ def check_text_index(spark, n_triggers: int = 50,
                .filter("text IS NOT NULL"))
     feed = docs_df.collect()
     hist_n = 500
-    work = tempfile.mkdtemp(prefix="longevity_tix_")
-    idx = f"{work}/idx"
-    build_text_index(spark.createDataFrame(
-        [(int(r["doc_id"]), r["text"]) for r in feed[:hist_n]],
-        "doc_id long, text string"), idx)
-    times: list = []
-    violations: list = []
-    visible = {int(r["doc_id"]): r["text"] for r in feed[:hist_n]}
-    prev_rows: list = []
-    try:
+    with scratch("longevity_tix_") as work:
+        idx = f"{work}/idx"
+        build_text_index(spark.createDataFrame(
+            [(int(r["doc_id"]), r["text"]) for r in feed[:hist_n]],
+            "doc_id long, text string"), idx)
+        times: list = []
+        violations: list = []
+        visible = {int(r["doc_id"]): r["text"] for r in feed[:hist_n]}
+        prev_rows: list = []
         for i in range(n_triggers):
             lo = hist_n + i * batch_size
             rows = [(int(r["doc_id"]), r["text"])
@@ -562,18 +547,16 @@ def check_text_index(spark, n_triggers: int = 50,
                     f"compact_every={compact_every}")
         got = sorted(map(tuple, search_text_index(
             spark, idx, QUERY_TERMS, k=5).collect()))
-        scratch = f"{work}/scratch"
+        fresh = f"{work}/fresh"
         build_text_index(spark.createDataFrame(
             list(visible.items()), "doc_id long, text string"),
-            scratch)
+            fresh)
         want = sorted(map(tuple, search_text_index(
-            spark, scratch, QUERY_TERMS, k=5).collect()))
+            spark, fresh, QUERY_TERMS, k=5).collect()))
         if got != want:
             violations.append(
                 f"served top-k diverges from from-scratch after "
                 f"{n_triggers} generations")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     stats = {"check": "text_index", "n_triggers": n_triggers,
              "batch_size": batch_size}
     stats.update(_flatness(times, "batch_ms", violations))

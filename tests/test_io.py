@@ -86,7 +86,8 @@ def test_fixtures_rebuild_when_source_changes(spark, tmp_path):
     ``orders`` and ``documents`` are rewritten with the same row
     counts, the reference feed, an index fixture and a corpus copy
     each rebuild from the new content, at new paths, so nothing of
-    the old build (generations, deltas, companions) is served. A
+    the old build (generations, deltas, companions) is served, and
+    the old build is removed when the new one publishes. A
     fixture whose dir was removed is rebuilt, not served from the
     per-process memo."""
     import glob
@@ -139,6 +140,8 @@ def test_fixtures_rebuild_when_source_changes(spark, tmp_path):
         second = build_all()
         for old, new in zip(first, second):
             assert new != old and index_ok(new), (old, new)
+            # publishing the new build reaps the superseded one
+            assert not glob.glob(old + "*"), old
         new_feed, new_corpus = feed_lines(second[0]), corpus_lines(second[2])
         assert new_feed != old_feed and len(new_feed) == len(old_feed)
         assert new_corpus != old_corpus
@@ -412,3 +415,79 @@ def test_orc_roundtrip_losslessness_and_pushdown(spark, tmp_path):
     plan = filtered._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PushedFilters: \[[^\]]*GreaterThan\(n_chars,4\)", plan)
     assert m, f"ORC pushdown missing: {plan[:500]}"
+
+
+# The envelope JSON of the first ``orders`` and ``documents`` rows of
+# sf0.001: the encoder's output, byte for byte.
+_ORDERS_ENVELOPE = (
+    '{"sv_manip_type":"I","sv_trans_id":0,"sv_trans_row_seq":1,'
+    '"sv_sending_table":"SALES.ORDERS",'
+    '"sv_trans_timestamp":"19970115000000000000",'
+    '"sv_trans_username":"cdcuser","sv_program_name":"demo",'
+    '"sv_job_name":"job","sv_job_user":"juser","sv_job_number":"1",'
+    '"sv_op_timestamp":"19970115000000000000","sv_file_member":"m",'
+    '"sv_receiver_library":"lib","sv_receiver_name":"recv",'
+    '"sv_journal_seqno":"0","after_image":{"SalesOrderId":0,'
+    '"OrderDate":"19970115000000000000","DueDate":"19970115000000000000",'
+    '"ShipDate":"19970115000000000000","Status":5,"ShipToAddressId":85,'
+    '"SubTotal":144449.04,"TaxAmt":0.0,"Freight":0.0,'
+    '"TotalDue":144449.04}}')
+_DOCS_ENVELOPE = (
+    '{"sv_manip_type":"I","sv_trans_id":0,"sv_trans_row_seq":1,'
+    '"sv_sending_table":"CRAWL.DOCUMENTS",'
+    '"sv_trans_timestamp":"20240101000000.000001",'
+    '"sv_trans_username":"cdcuser","sv_program_name":"demo",'
+    '"sv_job_name":"job","sv_job_user":"juser","sv_job_number":"1",'
+    '"sv_op_timestamp":"20240101000000.000001","sv_file_member":"m",'
+    '"sv_receiver_library":"lib","sv_receiver_name":"recv",'
+    '"sv_journal_seqno":"0","after_image":{"doc_id":0,'
+    '"text":"the fast key order sort table scan merge part window small '
+    'hash scan join order batch batch batch stream spark window window '
+    'dup"}}')
+
+
+def test_envelope_json_is_pinned(spark):
+    from flink_precisely_demo_spark.streaming.corpus_pipeline import (
+        synthesize_documents_envelope)
+
+    orders = load_table(spark, SF, "orders").orderBy("o_orderkey").limit(1)
+    docs = load_table(spark, SF, "documents").select(
+        "doc_id", "text").orderBy("doc_id").limit(1)
+    assert synthesize_orders_envelope(orders).first()["value"] \
+        == _ORDERS_ENVELOPE
+    assert synthesize_documents_envelope(docs).first()["value"] \
+        == _DOCS_ENVELOPE
+
+
+def test_reference_rules_have_one_owner():
+    """One envelope encoder, one latest-per-key, one output.sql tail:
+    outside sources/cdc_json.py no module names a column after an
+    envelope field, ``latest_per_key`` is defined once, and only
+    operators/windowed_agg.py windows on ``OrderAsOf``."""
+    import ast
+    import pathlib
+
+    import flink_precisely_demo_spark
+
+    pkg = pathlib.Path(flink_precisely_demo_spark.__file__).parent
+    sv_names, latest_defs, order_windows = set(), [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.FunctionDef)
+                    and node.name == "latest_per_key"):
+                latest_defs.append(rel)
+            if not isinstance(node, ast.Call):
+                continue
+            fn = getattr(node.func, "attr", getattr(node.func, "id", None))
+            args = [a.value for a in node.args
+                    if isinstance(a, ast.Constant)]
+            names = args + [k.arg for k in node.keywords]
+            if (fn in ("alias", "withColumn", "withColumnRenamed", "update")
+                    and any(str(a).startswith("sv_") for a in names)):
+                sv_names.add(rel)
+            if fn in ("window", "tumbling_window_agg") and "OrderAsOf" in args:
+                order_windows.add(rel)
+    assert sv_names <= {"sources/cdc_json.py"}, sv_names
+    assert latest_defs == ["operators/enrichment_join.py"], latest_defs
+    assert order_windows == {"operators/windowed_agg.py"}, order_windows

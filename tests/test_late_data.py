@@ -11,6 +11,9 @@ from pyspark.sql import functions as F
 from flink_precisely_demo_spark.streaming.late_data import (
     run_with_late_capture,
 )
+from flink_precisely_demo_spark.streaming.pipeline import run_to_memory
+
+from .test_streaming import _staged
 
 SCHEMA = "user string, ts timestamp, value double"
 
@@ -90,24 +93,12 @@ def test_split_agrees_with_engine_watermark_drop(spark, tmp_path):
     # the watermark are kept by the engine's strict eviction; the
     # row-level splitter is the Flink ts<=wm notion and is
     # deliberately conservative there.)
-    import os
-    from flink_precisely_demo_spark.streaming.pipeline import run_to_memory
-    agg_src = tmp_path / "agg_src"
-    agg_src.mkdir()
-    _write_jsonl(agg_src / "b1.jsonl", [
-        {"user": "u1", "ts": "2024-01-01 10:00:00", "value": 1.0},
-        {"user": "u1", "ts": "2024-01-01 10:30:00", "value": 2.0},
-    ])
-    _write_jsonl(agg_src / "b2.jsonl", [
-        {"user": "u1", "ts": "2024-01-01 10:31:00", "value": 16.0},
-    ])
-    _write_jsonl(agg_src / "b3.jsonl", [
-        {"user": "u2", "ts": "2024-01-01 10:05:00", "value": 32.0},
-    ])
-    for i, f in enumerate(["b1.jsonl", "b2.jsonl", "b3.jsonl"]):
-        os.utime(agg_src / f, (1000000000 + i * 10,) * 2)
-    stream = spark.readStream.schema(SCHEMA) \
-        .option("maxFilesPerTrigger", 1).json(str(agg_src))
+    stream = _staged(spark, tmp_path, [
+        [{"user": "u1", "ts": "2024-01-01 10:00:00", "value": 1.0},
+         {"user": "u1", "ts": "2024-01-01 10:30:00", "value": 2.0}],
+        [{"user": "u1", "ts": "2024-01-01 10:31:00", "value": 16.0}],
+        [{"user": "u2", "ts": "2024-01-01 10:05:00", "value": 32.0}],
+    ], "user string, ts string, value double")
     agg = (stream.withWatermark("ts", "10 minutes")
            .groupBy(F.window("ts", "10 minutes")).agg(F.sum("value").alias("t")))
     out = run_to_memory(agg, "late_agg", spark, output_mode="append").collect()

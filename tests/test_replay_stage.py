@@ -169,12 +169,12 @@ def test_feed_rows_reads_footers_and_estimates_text(spark, tmp_path):
 # one-owner guard: the replay protocol lives in ONE module
 # ---------------------------------------------------------------------------
 
-def _sites(predicate) -> set[tuple[str, str]]:
-    """(package-relative file, enclosing top-level def or '<module>')
+def _sites(predicate, root=PKG) -> set[tuple[str, str]]:
+    """(``root``-relative file, enclosing top-level def or '<module>')
     of every AST node matching ``predicate``."""
     out = set()
-    for path in sorted(PKG.rglob("*.py")):
-        rel = str(path.relative_to(PKG))
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
         tree = ast.parse(path.read_text())
         for top in tree.body:
             scope = getattr(top, "name", "<module>")
@@ -205,6 +205,15 @@ def test_replay_protocol_has_one_owner():
     assert _sites(_const("spark.sql.shuffle.partitions")) == {
         ("session.py", "get_spark"),
         ("streaming/replay_stage.py", "shuffle_partitions"),
+    }
+    # tests stage their streams through the harness too, except a
+    # test that adds a file between two runs of one checkpoint (and
+    # this guard, which names what it looks for)
+    tests = pathlib.Path(__file__).resolve().parent
+    assert (_sites(_const("maxFilesPerTrigger"), tests)
+            | _sites(_attr("utime"), tests)) == {
+        ("test_streaming.py", "test_checkpoint_restart_preserves_state"),
+        ("test_replay_stage.py", "test_replay_protocol_has_one_owner"),
     }
 
 

@@ -18,6 +18,10 @@ from flink_precisely_demo_spark.streaming.pipeline import (
     run_to_memory,
     streaming_flagship,
 )
+from flink_precisely_demo_spark.streaming.replay_stage import (
+    open_feed,
+    stage_feed,
+)
 from flink_precisely_demo_spark.streaming.stateful_join import enrich_stream
 
 
@@ -27,22 +31,22 @@ def _write_jsonl(path, rows):
             f.write(json.dumps(r) + "\n")
 
 
-def _staged(spark, tmp_path, batches, ddl):
-    """Open ``batches`` (one list of row dicts per trigger) as a
-    one-file-per-trigger stream through the replay harness. A ``ts``
-    column given as ISO strings or epoch seconds becomes a timestamp."""
-    from flink_precisely_demo_spark.streaming.replay_stage import (
-        open_feed,
-        stage_feed,
-    )
-
+def _feed(spark, tmp_path, batches, ddl, name="feed"):
+    """Stage ``batches`` (one list of row dicts per trigger) as the
+    one-file-per-trigger feed ``name`` of the replay harness; returns
+    its directory. A ``ts`` column given as ISO strings or epoch
+    seconds becomes a timestamp."""
     df = spark.createDataFrame(
         [{**r, "b": k} for k, rows in enumerate(batches) for r in rows],
         ddl + ", b int")
     if "ts" in df.columns:
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return open_feed(spark, stage_feed(df, str(tmp_path / "work"), "feed",
-                                       "b", len(batches)))
+    return stage_feed(df, str(tmp_path / "work"), name, "b", len(batches))
+
+
+def _staged(spark, tmp_path, batches, ddl, name="feed"):
+    """:func:`_feed`, opened as a stream."""
+    return open_feed(spark, _feed(spark, tmp_path, batches, ddl, name))
 
 
 def _minutes(user_id, times_min):
@@ -118,23 +122,16 @@ def test_watermark_late_drop(spark, dims, tmp_path):
     final state is identical either way.
     """
     address, states = dims
-    env_dir = tmp_path / "orders_late"
-    env_dir.mkdir()
-    import os
-    _write_jsonl(env_dir / "b1.json",
-                 [_envelope(1, 1, 100.0, "20200402100100")])
-    _write_jsonl(env_dir / "b2.json",
-                 [_envelope(2, 1, 5.0, "20200402120000")])    # watermark -> 11:50
-    _write_jsonl(env_dir / "b3.json",
-                 [_envelope(3, 1, 7.0, "20200402120100")])    # propagate watermark
-    _write_jsonl(env_dir / "b4.json",
-                 [_envelope(4, 1, 999.0, "20200402100100")])  # late straggler
-    # the file source orders micro-batches by modification time —
-    # make the intended order unambiguous
-    for i, f in enumerate(["b1.json", "b2.json", "b3.json", "b4.json"]):
-        os.utime(env_dir / f, (1000000000 + i * 10, 1000000000 + i * 10))
-
-    out = streaming_flagship(spark, str(env_dir), address, states,
+    feed = _feed(spark, tmp_path, [
+        [{"value": json.dumps(_envelope(1, 1, 100.0, "20200402100100"))}],
+        # watermark -> 11:50
+        [{"value": json.dumps(_envelope(2, 1, 5.0, "20200402120000"))}],
+        # propagate watermark
+        [{"value": json.dumps(_envelope(3, 1, 7.0, "20200402120100"))}],
+        # late straggler
+        [{"value": json.dumps(_envelope(4, 1, 999.0, "20200402100100"))}],
+    ], "value string")
+    out = streaming_flagship(spark, feed, address, states,
                              max_files_per_trigger=1)
     res = run_to_memory(out, "late_stream", spark, output_mode="append")
     by_window = {r["OrderPeriod"].isoformat(): r["TotalDue"]
@@ -178,16 +175,12 @@ def test_stateful_enrich_buffer_and_flush(spark, tmp_path):
 def test_stateful_enrich_cross_batch_state(spark, tmp_path):
     """State survives micro-batches: dim arrives in batch 1, facts in
     batch 2 join against remembered state."""
-    src_dir = tmp_path / "union_src"
-    fact_dir = src_dir / "facts"; fact_dir.mkdir(parents=True)
-    dim_dir = src_dir / "dims"; dim_dir.mkdir(parents=True)
-    _write_jsonl(dim_dir / "d1.json", [{"k": 1, "ord": 1.0, "dval": "d-early"}])
-    _write_jsonl(fact_dir / "f1.json", [{"k": 1, "ord": 10.0, "fval": "late-fact"}])
-
-    fact = (spark.readStream.schema("k int, ord double, fval string")
-            .option("maxFilesPerTrigger", 1).json(str(fact_dir)))
-    dim = (spark.readStream.schema("k int, ord double, dval string")
-           .option("maxFilesPerTrigger", 1).json(str(dim_dir)))
+    dim = _staged(spark, tmp_path,
+                  [[{"k": 1, "ord": 1.0, "dval": "d-early"}], []],
+                  "k int, ord double, dval string", "dims")
+    fact = _staged(spark, tmp_path,
+                   [[], [{"k": 1, "ord": 10.0, "fval": "late-fact"}]],
+                   "k int, ord double, fval string", "facts")
     res = run_to_memory(enrich_stream(fact, dim, "k", "ord"),
                         "enrich_cross_batch", spark)
     rows = res.collect()
@@ -199,21 +192,12 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     dropDuplicatesWithinWatermark keeps the first occurrence per key
     with state bounded by the watermark instead of growing forever —
     the only dedup formulation that survives an unbounded stream."""
-    import os
-    d = tmp_path / "dups"
-    d.mkdir()
-    _write_jsonl(d / "b1.json", [
-        {"id": 1, "ts": "2020-01-01T10:00:00", "v": "first"},
-        {"id": 1, "ts": "2020-01-01T10:00:30", "v": "dup-same-batch"},
-        {"id": 2, "ts": "2020-01-01T10:01:00", "v": "other"},
-    ])
-    _write_jsonl(d / "b2.json", [
-        {"id": 1, "ts": "2020-01-01T10:02:00", "v": "dup-next-batch"},
-    ])
-    for i, f in enumerate(["b1.json", "b2.json"]):
-        os.utime(d / f, (1000000000 + i * 10,) * 2)
-    src = (spark.readStream.schema("id int, ts timestamp, v string")
-           .option("maxFilesPerTrigger", 1).json(str(d)))
+    src = _staged(spark, tmp_path, [
+        [{"id": 1, "ts": "2020-01-01T10:00:00", "v": "first"},
+         {"id": 1, "ts": "2020-01-01T10:00:30", "v": "dup-same-batch"},
+         {"id": 2, "ts": "2020-01-01T10:01:00", "v": "other"}],
+        [{"id": 1, "ts": "2020-01-01T10:02:00", "v": "dup-next-batch"}],
+    ], "id int, ts string, v string")
     deduped = (src.withWatermark("ts", "10 minutes")
                .dropDuplicatesWithinWatermark(["id"]))
     res = run_to_memory(deduped, "stream_dedup", spark)
@@ -417,29 +401,22 @@ def test_stateful_enrich_ttl_evicts_state(spark, tmp_path):
     spins no-data batches forever there, measured r9), so a later
     fact buffers (cold-start path) instead of joining — versus the
     faithful no-TTL default where it joins."""
-    import os
-    fact_dir = tmp_path / "facts"; fact_dir.mkdir()
-    dim_dir = tmp_path / "dims"; dim_dir.mkdir()
     # each trigger consumes one file from EACH source: batch1 dim
     # (k=1) stamps last_touch; batch2 (unrelated keys) lets the TTL
     # lapse; batch3's fact finds the state expired and buffers.
-    _write_jsonl(dim_dir / "d1.json", [{"k": 1, "ord": 1.0, "dval": "v1"}])
-    _write_jsonl(dim_dir / "d2.json", [{"k": 50, "ord": 2.0, "dval": "x"}])
-    _write_jsonl(dim_dir / "d3.json", [{"k": 51, "ord": 3.0, "dval": "x"}])
-    _write_jsonl(fact_dir / "f1.json", [{"k": 98, "ord": 1.0, "fval": "x"}])
-    _write_jsonl(fact_dir / "f2.json", [{"k": 99, "ord": 2.0, "fval": "x"}])
-    _write_jsonl(fact_dir / "f3.json", [{"k": 1, "ord": 10.0, "fval": "late"}])
-    for i, (d, f) in enumerate([(dim_dir, "d"), (fact_dir, "f")]):
-        for j in range(1, 4):
-            os.utime(d / f"{f}{j}.json", (1000000000 + j * 10,) * 2)
+    dims = _feed(spark, tmp_path, [[{"k": 1, "ord": 1.0, "dval": "v1"}],
+                                   [{"k": 50, "ord": 2.0, "dval": "x"}],
+                                   [{"k": 51, "ord": 3.0, "dval": "x"}]],
+                 "k int, ord double, dval string", "dims")
+    facts = _feed(spark, tmp_path, [[{"k": 98, "ord": 1.0, "fval": "x"}],
+                                    [{"k": 99, "ord": 2.0, "fval": "x"}],
+                                    [{"k": 1, "ord": 10.0, "fval": "late"}]],
+                  "k int, ord double, fval string", "facts")
 
     def run(name, ttl):
-        fact = (spark.readStream.schema("k int, ord double, fval string")
-                .option("maxFilesPerTrigger", 1).json(str(fact_dir)))
-        dim = (spark.readStream.schema("k int, ord double, dval string")
-               .option("maxFilesPerTrigger", 1).json(str(dim_dir)))
         return run_to_memory(
-            enrich_stream(fact, dim, "k", "ord", state_ttl_ms=ttl),
+            enrich_stream(open_feed(spark, facts), open_feed(spark, dims),
+                          "k", "ord", state_ttl_ms=ttl),
             name, spark).collect()
 
     with_ttl = run("enrich_ttl_1ms", 1)       # expires before the fact batch
@@ -575,23 +552,15 @@ def test_streaming_near_dup_dedup(spark, tmp_path):
                  "large rotating bodies of water across the planet with "
                  "salinity gradients driving deep water formation")
 
-    d = tmp_path / "docs"
-    d.mkdir()
-    _write_jsonl(d / "b1.json", [
-        {"doc_id": 1, "text": base},
-        {"doc_id": 2, "text": variant1},      # in-batch near-dup of 1
-        {"doc_id": 3, "text": distinct1},
-    ])
-    _write_jsonl(d / "b2.json", [
-        {"doc_id": 4, "text": variant2},      # cross-batch near-dup of 1
-        {"doc_id": 5, "text": distinct2},
-        {"doc_id": 6, "text": None},          # no signature: passes through
-    ])
-    for i, f in enumerate(["b1.json", "b2.json"]):
-        os.utime(d / f, (1000000000 + i * 10,) * 2)
-
-    src = (spark.readStream.schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", 1).json(str(d)))
+    feed = _feed(spark, tmp_path, [
+        [{"doc_id": 1, "text": base},
+         {"doc_id": 2, "text": variant1},      # in-batch near-dup of 1
+         {"doc_id": 3, "text": distinct1}],
+        [{"doc_id": 4, "text": variant2},      # cross-batch near-dup of 1
+         {"doc_id": 5, "text": distinct2},
+         {"doc_id": 6, "text": None}],         # no signature: passes through
+    ], "doc_id long, text string")
+    src = open_feed(spark, feed)
     store, out = str(tmp_path / "buckets"), str(tmp_path / "out")
     drain(src, near_dup_dedup_sink(store, out), str(tmp_path / "ckpt"),
           "near-dup dedup")
@@ -604,8 +573,7 @@ def test_streaming_near_dup_dedup(spark, tmp_path):
     from flink_precisely_demo_spark.streaming.streaming_dedup import (
         near_dup_dedup_sink,
     )
-    batch2 = spark.read.schema("doc_id long, text string") \
-        .json(str(d / "b2.json"))
+    batch2 = spark.read.parquet(os.path.join(feed, "b1.parquet"))
     near_dup_dedup_sink(store, out)(batch2, 1)
     got = sorted(r["doc_id"] for r in
                  dedup_survivors(spark, out).collect())
@@ -738,25 +706,14 @@ def test_streaming_session_window(spark, tmp_path):
     """Native session windows in STREAMING mode: a 10-minute gap
     splits sessions, the watermark closes them, and closed sessions
     emit exactly once in append mode."""
-    import os
-
-    d = tmp_path / "ev"
-    d.mkdir()
-    _write_jsonl(d / "b1.json", [
-        {"u": 1, "ts": "2024-01-01 10:00:00", "v": 1.0},
-        {"u": 1, "ts": "2024-01-01 10:05:00", "v": 2.0},   # same session
-        {"u": 1, "ts": "2024-01-01 10:30:00", "v": 4.0},   # new session
-        {"u": 2, "ts": "2024-01-01 10:00:00", "v": 8.0},
-    ])
-    _write_jsonl(d / "b2.json", [
+    src = _staged(spark, tmp_path, [
+        [{"u": 1, "ts": "2024-01-01 10:00:00", "v": 1.0},
+         {"u": 1, "ts": "2024-01-01 10:05:00", "v": 2.0},   # same session
+         {"u": 1, "ts": "2024-01-01 10:30:00", "v": 4.0},   # new session
+         {"u": 2, "ts": "2024-01-01 10:00:00", "v": 8.0}],
         # advances watermark far past every session's close
-        {"u": 9, "ts": "2024-01-01 12:00:00", "v": 0.0},
-    ])
-    for i, f in enumerate(["b1.json", "b2.json"]):
-        os.utime(d / f, (1000000000 + i * 10,) * 2)
-
-    src = (spark.readStream.schema("u int, ts timestamp, v double")
-           .option("maxFilesPerTrigger", 1).json(str(d)))
+        [{"u": 9, "ts": "2024-01-01 12:00:00", "v": 0.0}],
+    ], "u int, ts string, v double")
     agg = (src.withWatermark("ts", "1 minute")
               .groupBy("u", F.session_window("ts", "10 minutes"))
               .agg(F.sum("v").alias("total"),

@@ -13,65 +13,45 @@ changes them must fail HERE, not as a driver hash mismatch):
 
 from __future__ import annotations
 
-import datetime as dt
-import glob
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
-T = dt.datetime.fromisoformat
+from .test_streaming import _staged
 
 
-def _stage(spark, feed, work, rows, name, mtime):
-    df = spark.createDataFrame(rows, "ts timestamp, k string")
-    d = os.path.join(work, name + ".d")
-    df.coalesce(1).write.parquet(d)
-    src = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-    dst = os.path.join(feed, name + ".parquet")
-    shutil.move(src, dst)
-    shutil.rmtree(d)
-    os.utime(dst, (mtime, mtime))
-
-
-def _replay(spark, feed, work):
+def _replay(spark, tmp_path, batches):
+    """Drive ``batches`` (one list of (ts, k) pairs per trigger) through
+    a 10-minute watermarked tumbling window; returns the emitted
+    windows as (start, end) -> sorted keys."""
     from flink_precisely_demo_spark.streaming.pipeline import (
         replay_to_parquet)
 
-    s = (spark.readStream.schema("ts timestamp, k string")
-         .option("maxFilesPerTrigger", 1).parquet(feed)
+    s = (_staged(spark, tmp_path,
+                 [[{"ts": ts, "k": k} for ts, k in rows] for rows in batches],
+                 "ts string, k string")
          .withWatermark("ts", "10 minutes")
          .groupBy(F.window("ts", "10 minutes"))
          .agg(F.collect_set("k").alias("ks")))
     out = replay_to_parquet(s, spark, "wm_semantics",
-                            checkpoint=os.path.join(work, "ck"))
+                            checkpoint=str(tmp_path / "ck"))
     return {(r["window"]["start"].strftime("%H:%M"),
              r["window"]["end"].strftime("%H:%M")): sorted(r["ks"])
             for r in out.collect()}
 
 
 def test_late_filter_is_lagged_and_window_end_based(spark, tmp_path):
-    work = str(tmp_path)
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    # b0: max 00:22:30 -> wm after b0 (the LAG seen by b2) = 00:12:30
-    _stage(spark, feed, work, [(T("2020-01-01 00:22:30"), "a")],
-           "b0", 1_000_000_000)
-    # b1: max 00:35:30 -> current wm at b2 = 00:25:30. b1 itself is
-    # filtered against the pre-b0 watermark (-inf): nothing dropped.
-    _stage(spark, feed, work, [(T("2020-01-01 00:35:30"), "b"),
-                               (T("2020-01-01 00:04:00"), "b_late")],
-           "b1", 1_000_000_010)
-    # b2 rows:
-    #  drop:  end 00:10 <= lag 00:12:30
-    #  disc:  end 00:20 in (lag, current]: LAGGED filter keeps it
-    #  keep:  end 00:40 > current
-    _stage(spark, feed, work, [(T("2020-01-01 00:03:00"), "drop"),
-                               (T("2020-01-01 00:14:00"), "disc"),
-                               (T("2020-01-01 00:31:00"), "keep")],
-           "b2", 1_000_000_020)
-    got = _replay(spark, feed, work)
+    got = _replay(spark, tmp_path, [
+        # b0: max 00:22:30 -> wm after b0 (the LAG seen by b2) = 00:12:30
+        [("2020-01-01 00:22:30", "a")],
+        # b1: max 00:35:30 -> current wm at b2 = 00:25:30. b1 itself is
+        # filtered against the pre-b0 watermark (-inf): nothing dropped.
+        [("2020-01-01 00:35:30", "b"), ("2020-01-01 00:04:00", "b_late")],
+        # b2 rows:
+        #  drop:  end 00:10 <= lag 00:12:30
+        #  disc:  end 00:20 in (lag, current]: LAGGED filter keeps it
+        #  keep:  end 00:40 > current
+        [("2020-01-01 00:03:00", "drop"), ("2020-01-01 00:14:00", "disc"),
+         ("2020-01-01 00:31:00", "keep")],
+    ])
     # final wm = 00:35:30 - 10min = 00:25:30 -> emit ends <= that:
     assert got == {
         ("00:00", "00:10"): ["b_late"],   # b1 never filtered
@@ -85,17 +65,12 @@ def test_flush_batch_emits_after_last_trigger(spark, tmp_path):
     """availableNow must run the post-data flush batch: the last
     trigger's own max event time closes windows that only it can
     emit."""
-    work = str(tmp_path)
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    _stage(spark, feed, work, [(T("2020-01-01 00:02:00"), "a")],
-           "b0", 1_000_000_000)
-    # b1 advances wm to 00:50:30: [00:00,00:10) and its own
-    # [00:40,00:50) row close ONLY via the flush batch
-    _stage(spark, feed, work, [(T("2020-01-01 00:41:00"), "b"),
-                               (T("2020-01-01 01:00:30"), "c")],
-           "b1", 1_000_000_010)
-    got = _replay(spark, feed, work)
+    got = _replay(spark, tmp_path, [
+        [("2020-01-01 00:02:00", "a")],
+        # b1 advances wm to 00:50:30: [00:00,00:10) and its own
+        # [00:40,00:50) row close ONLY via the flush batch
+        [("2020-01-01 00:41:00", "b"), ("2020-01-01 01:00:30", "c")],
+    ])
     assert got == {
         ("00:00", "00:10"): ["a"],
         ("00:40", "00:50"): ["b"],
