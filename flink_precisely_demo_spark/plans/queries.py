@@ -126,16 +126,17 @@ def staged_fixture(name: str, sf_dir: str,
     ``build(stage)`` fills one staged new base that publishes
     atomically (operators/lsm.new_base), so a concurrent process never
     sees a half-built fixture and a crashed build leaves only a
-    reapable stage. Publishing a build removes every other build of
-    ``name`` for ``sf_dir`` (built from other source bytes). A
-    per-process memo skips ``complete``, but only while the published
-    dir is still there."""
+    reapable stage. The first use of a build in a process, reused or
+    just published, removes every other build of ``name`` for
+    ``sf_dir`` (built from other source bytes). A per-process memo
+    skips ``complete``, but only while the published dir is still
+    there."""
     path = fixture_path(name, sf_dir)
     if not (path in _FIXTURES and index_ok(path)):
         if not complete(path):
             with new_base(path) as stage:
                 build(stage)
-            _reap_superseded(path)
+        _reap_superseded(path)
         _FIXTURES.add(path)
     return path
 

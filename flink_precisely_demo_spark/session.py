@@ -18,6 +18,24 @@ Scale notes (100 TB design):
 - the local core count is ``SPARK_GRAFT_CPUS``, else the cores this
   process may run on; the driver heap is ``SPARK_DRIVER_MEMORY``,
   else half the host's memory, capped at 48g.
+- two settings apply to local masters only (``local[...]``); a cluster
+  master keeps Spark's defaults for both:
+  - ``spark.sql.streaming.checkpointFileManagerClass`` is the
+    FileSystem-based manager. The default FileContext manager's rename
+    asks ``RawLocalFileSystem.getFileLinkStatus``, which without
+    libhadoop forks ``readlink`` for the source and the destination of
+    every offsets/commits WAL file, state-store delta, file-sink
+    metadata file and their ``.crc`` files (28% of the stream thread's
+    samples on a warm ``streaming_flagship_full`` replay, 4 cores). The
+    FileSystem manager renames with ``File.renameTo``, an atomic POSIX
+    rename on one local disk. Hadoop's ``.crc`` files and Spark's
+    checkpoint checksums
+    (``spark.sql.streaming.checkpoint.fileChecksum.enabled``) stay on.
+  - ``spark.python.daemon.module`` is ``worker_daemon``, which stops
+    a Python worker from re-reading ``pyspark.zip``'s central
+    directory at the start of every task (see that module), and the
+    package root goes on ``spark.executorEnv.PYTHONPATH`` so the
+    daemon imports from any working directory.
 """
 
 from __future__ import annotations
@@ -25,6 +43,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
                    or len(os.sched_getaffinity(0)))
@@ -52,9 +72,10 @@ def get_spark(app_name: str = "flink_precisely_demo_spark",
     taken from the environment / spark-submit and this is ignored.
     """
     n = cpus or DEFAULT_CPUS
+    master = os.environ.get("SPARK_MASTER", f"local[{n}]")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_MASTER", f"local[{n}]"))
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -73,6 +94,17 @@ def get_spark(app_name: str = "flink_precisely_demo_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.spill.compress", "true")
     )
+    if master.startswith("local"):
+        # local-only fixed costs; see the scale notes above
+        builder = (
+            builder.config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
+            .config("spark.python.daemon.module",
+                    "flink_precisely_demo_spark.worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

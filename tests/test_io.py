@@ -155,6 +155,51 @@ def test_fixtures_rebuild_when_source_changes(spark, tmp_path):
                 os.remove(d)
 
 
+def test_reused_fixture_reaps_superseded_builds(tmp_path, monkeypatch):
+    """The first use of a complete build in a process removes the other
+    builds of its fixture and ``sf_dir`` (a digest-less build, a build
+    of another digest and that build's companion), not only a publish
+    does."""
+    import glob
+    import os
+    import shutil
+
+    from flink_precisely_demo_spark.operators.lsm import index_ok
+    from flink_precisely_demo_spark.plans import queries
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "t.parquet").write_bytes(b"source")
+    builds = []
+
+    def build(stage):
+        builds.append(stage)
+        os.makedirs(stage)
+        open(os.path.join(stage, "part"), "w").close()
+
+    path = queries.staged_fixture("reap_probe", str(sf), index_ok, build)
+    stem = path.rsplit("_", 1)[0]
+    try:
+        other = f"{stem}_{'0' * 12}"
+        assert other != path
+        planted = [stem, other, f"{other}.applied.json"]
+        os.makedirs(stem)
+        os.makedirs(other)
+        open(planted[2], "w").close()
+        monkeypatch.setattr(queries, "_FIXTURES", set())  # a new process
+        assert queries.staged_fixture(
+            "reap_probe", str(sf), index_ok, build) == path
+        assert len(builds) == 1, "a complete build is reused, not rebuilt"
+        assert index_ok(path)
+        assert [p for p in planted if os.path.exists(p)] == []
+    finally:
+        for p in glob.glob(stem + "*"):
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                os.remove(p)
+
+
 def test_decode_envelope_schema_evolution(spark):
     """Producer-side schema drift must never crash the consumer:
     - a NEW field the producer added (unknown to our declared
